@@ -427,8 +427,6 @@ def _chunk_matches(prev: dict, chunk: pa.Table,
     rewrite that changed non-key values. The key-range min/max check
     runs first as an O(1) negative screen; the CRC pass is
     memcpy-speed, ~100x cheaper than re-encoding."""
-    if prev.get("data_crc") is None:
-        return False  # pre-0.2 entry: no fingerprint → re-encode
     kc = key_cols[0]
     m = prev.get("columns", {}).get(kc)
     if m is not None and kc in chunk.column_names and chunk.num_rows:
@@ -437,7 +435,7 @@ def _chunk_matches(prev: dict, chunk: pa.Table,
         if (m.get("min") != manifest.stat_value(col[0].as_py())
                 or m.get("max") != manifest.stat_value(col[-1].as_py())):
             return False
-    return prev["data_crc"] == chunk_content_crc(chunk)
+    return prev.get("data_crc") == chunk_content_crc(chunk)
 
 
 def _encode_or_reuse(chunk: pa.Table, chunk_id: str, table_dir: str,

@@ -90,7 +90,7 @@ def make_transcripts(
     # the 32-bit string-offset ceiling
     woff = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(wc, out=woff[1:])
-    text_chunks = []
+    text_chunks = [pa.array([], type=pa.string())]  # n == 0 stays typed
     for r0 in range(0, n, _text_slice_rows):
         r1 = min(n, r0 + _text_slice_rows)
         w0 = int(woff[r0])

@@ -20,10 +20,13 @@ multi-worker scaling on shared-bus hosts (BENCH/BASELINE.md r4
 saturation analysis).
 
 Build model: compile-on-first-use with the system C compiler into a
-content-hashed shared object under $TMPDIR/pgs_native (atomic rename —
-concurrent Spark python workers race benignly; each loser just
-os.replace()s the identical file). Anything failing — no cc, no cffi,
-sandboxed /tmp — degrades silently to the numpy path. Set
+content-hashed shared object under $TMPDIR/pgs_native-<uid> (atomic
+rename — concurrent Spark python workers race benignly; each loser just
+os.replace()s the identical file). The cache directory is created with
+mode 0700, and the directory and the .so are only trusted for dlopen
+when this user owns them and no one else can write them. Anything
+failing — no cc, no cffi, sandboxed /tmp, a cache another user could
+have planted — degrades silently to the numpy path. Set
 PGS_NO_NATIVE=1 to force the numpy path (used by the identity tests).
 """
 
@@ -174,16 +177,27 @@ int64_t pgs_fsst_expand(
 """
 
 
+def _private(path: str) -> bool:
+    """``path`` itself (a symlink is not followed) belongs to this user
+    and is not group- or other-writable."""
+    st = os.lstat(path)
+    return st.st_uid == os.getuid() and not st.st_mode & 0o022
+
+
 def _build():
     if os.environ.get("PGS_NO_NATIVE"):
         return None, None
     import cffi
 
     h = hashlib.sha256((_CDEF + _SRC).encode()).hexdigest()[:16]
-    cdir = os.path.join(tempfile.gettempdir(), "pgs_native")
+    # per-user cache: in a shared world-writable directory another
+    # local user could plant the library this process dlopens
+    cdir = os.path.join(tempfile.gettempdir(), f"pgs_native-{os.getuid()}")
+    os.makedirs(cdir, mode=0o700, exist_ok=True)
+    if not _private(cdir):
+        return None, None
     so = os.path.join(cdir, f"pgs_{h}.so")
     if not os.path.exists(so):
-        os.makedirs(cdir, exist_ok=True)
         td = tempfile.mkdtemp(dir=cdir)
         try:
             csrc = os.path.join(td, "pgs.c")
@@ -207,6 +221,8 @@ def _build():
                 os.rmdir(td)
             except OSError:
                 pass
+    if not _private(so):
+        return None, None
     f = cffi.FFI()
     f.cdef(_CDEF)
     return f, f.dlopen(so)

@@ -24,10 +24,16 @@ Layout under a table dir:
     _manifests/snap-<n>.json             snapshot n's listing
                                          (shard refs + metadata)
     _manifest_list.json                  current snapshot pointer
+
+Every ref in a listing carries its shard's totals (n_chunks, n_rows,
+raw_bytes, enc_bytes). Tables from before 0.2 (one flat
+``manifest-<n>.json`` per snapshot, or refs without totals) are
+rejected by ``load_refs`` with IncompatibleTableError, not read.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import tempfile
@@ -47,6 +53,17 @@ ENGINE_VERSION = "parquet_go_spark-0.2.0"
 # of failing half-way through a scan (or silently mis-pruning on a
 # bloom whose hash scheme changed between layouts).
 MIN_READABLE_LAYOUT = (0, 2)
+
+# Above this many chunks the manifest plane goes DISTRIBUTED: commits
+# write shard files from executor tasks (driver sees O(shards)
+# summaries), and reads, column stats and expire_snapshots handle the
+# per-chunk entries inside tasks (the driver never materializes them).
+# Below it, the driver path is cheaper (no extra Spark stage) and
+# easier to debug. Every caller reads it at call time.
+DISTRIBUTED_MANIFEST_MIN_CHUNKS = 4096
+
+# per-shard totals every ref carries (listing totals are their sums)
+_TOTALS = ("n_chunks", "n_rows", "raw_bytes", "enc_bytes")
 
 
 class IncompatibleTableError(RuntimeError):
@@ -209,6 +226,18 @@ def _acquire_commit_lock(table_dir: str, timeout: float):
             pass
 
 
+@contextlib.contextmanager
+def _commit_lock(table_dir: str, timeout: float):
+    lock = _acquire_commit_lock(table_dir, timeout)
+    try:
+        yield
+    finally:
+        try:
+            os.unlink(lock)
+        except OSError:
+            pass
+
+
 def commit(table_dir: str, entries: list[dict], schema_ddl: str,
            extra: dict | None = None, append: bool = False,
            lock_timeout: float = 30.0) -> int:
@@ -217,17 +246,27 @@ def commit(table_dir: str, entries: list[dict], schema_ddl: str,
     (optimistic writers queue; a crashed writer's stale lock is
     broken after a timeout).
 
-    ``append=True`` merges into the parent snapshot's entries keyed by
-    chunk_id (same id overrides — idempotent batch replay); shards
-    without new entries reuse the parent's manifest file untouched."""
-    lock = _acquire_commit_lock(table_dir, lock_timeout)
-    try:
-        return _commit_locked(table_dir, entries, schema_ddl, extra, append)
-    finally:
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
+    Shard-incremental: only the shards this commit TOUCHES are read
+    and rewritten (see ``_merge_shard``). ``append=True`` merges into
+    the parent snapshot's entries keyed by chunk_id; untouched shards
+    carry their file AND their per-shard totals forward, so listing
+    totals are O(shards) sums and the driver never materializes the
+    full entry list. At the 10¹²-turn frame a streaming micro-batch
+    commit therefore reads O(batch) manifest bytes, not O(table)."""
+    with _commit_lock(table_dir, lock_timeout):
+        prev = load_refs(table_dir)
+        snapshot_id = (prev["snapshot_id"] + 1) if prev else 0
+        prev_refs = ({r["shard"]: r for r in prev["manifest_shards"]}
+                     if prev else {})
+        new_by_shard = _group_by_shard(entries)
+        refs = [r for s, r in prev_refs.items()
+                if append and s not in new_by_shard]
+        for shard, ents in new_by_shard.items():
+            refs.append(_merge_shard(
+                table_dir, shard, prev_refs.get(shard), ents,
+                f"manifest-{snapshot_id}-{shard or 'root'}.json", append,
+            ))
+        return _publish(table_dir, prev, refs, schema_ddl, extra)
 
 
 def _shard_totals(ents: list[dict]) -> dict:
@@ -244,80 +283,43 @@ def _read_shard(table_dir: str, ref: dict) -> list[dict]:
         return json.load(f)["entries"]
 
 
-def _commit_locked(table_dir: str, entries: list[dict], schema_ddl: str,
-                   extra: dict | None = None, append: bool = False) -> int:
-    """Shard-incremental commit: only the shards this commit TOUCHES
-    are read and rewritten. Untouched shards on append carry their
-    file AND their per-shard totals forward (refs store
-    n_rows/raw/enc, so listing totals are O(shards) sums) — the driver
-    never materializes the full entry list. At the 10¹²-turn frame a
-    streaming micro-batch commit therefore reads O(batch) manifest
-    bytes, not O(table); refs written before totals existed are
-    enriched lazily (one shard read each, once)."""
-    prev = load_refs(table_dir)
+def _merge_shard(table_dir: str, shard: str, parent_ref: dict | None,
+                 ents: list[dict], fname: str, append: bool = True) -> dict:
+    """The shard-merge rule, shared by the driver commit and the
+    distributed append's merge tasks. On append, ``ents`` override the
+    parent shard's entries by chunk_id (same id overrides — idempotent
+    batch replay). A shard whose resulting entry list equals its
+    parent's reuses the parent's file; otherwise ``_manifests/<fname>``
+    is written. Returns the shard's ref with its totals."""
+    file = None
+    if parent_ref is not None:
+        parent = _read_shard(table_dir, parent_ref)
+        if append:
+            by_id = {e["chunk_id"]: e for e in parent}
+            by_id.update((e["chunk_id"], e) for e in ents)
+            ents = sorted(by_id.values(), key=lambda e: e["chunk_id"])
+        if ents == parent:
+            file = parent_ref["file"]
+    if file is None:
+        file = os.path.join("_manifests", fname)
+        _atomic_write_json(os.path.join(table_dir, file), {"entries": ents})
+    return {"shard": shard, "file": file, **_shard_totals(ents)}
+
+
+def _publish(table_dir: str, prev: dict | None, refs: list[dict],
+             schema_ddl: str, extra: dict | None) -> int:
+    """Write snap-<n>.json listing ``refs`` (the FULL snapshot) and
+    swing _manifest_list.json to it. The caller holds the commit lock."""
     snapshot_id = (prev["snapshot_id"] + 1) if prev else 0
-    new_by_shard = _group_by_shard(entries)
-    prev_refs: dict[str, dict] = {}
-    if prev is not None and prev.get("manifest_shards") is not None:
-        prev_refs = {r["shard"]: dict(r) for r in prev["manifest_shards"]}
-    elif prev is not None and append:
-        # pre-0.2 single-file parent: merge its entries wholesale (no
-        # shard files to reuse) — one-time legacy cost
-        base = _group_by_shard(_read_entries(table_dir, prev))
-        for shard, ents in base.items():
-            cur = {e["chunk_id"]: e for e in ents}
-            for e in new_by_shard.get(shard, []):
-                cur[e["chunk_id"]] = e
-            new_by_shard[shard] = sorted(cur.values(),
-                                         key=lambda e: e["chunk_id"])
-
-    shard_refs: list[dict] = []
-    if append:
-        for shard, ref in prev_refs.items():
-            if shard in new_by_shard:
-                continue  # touched: merged below
-            if "n_rows" not in ref:  # pre-totals ref: enrich once
-                ref.update(_shard_totals(_read_shard(table_dir, ref)))
-            shard_refs.append(ref)
-    for shard in sorted(new_by_shard):
-        ents = new_by_shard[shard]
-        if not ents:
-            continue
-        reused = False
-        if shard in prev_refs:
-            parent_ents = _read_shard(table_dir, prev_refs[shard])
-            if append:
-                merged = {e["chunk_id"]: e for e in parent_ents}
-                for e in ents:
-                    merged[e["chunk_id"]] = e
-                ents = sorted(merged.values(),
-                              key=lambda e: e["chunk_id"])
-            if ents == parent_ents:  # idempotent replay / no-op shard
-                ref = dict(prev_refs[shard])
-                if "n_rows" not in ref:
-                    ref.update(_shard_totals(parent_ents))
-                shard_refs.append(ref)
-                reused = True
-        if not reused:
-            fname = f"manifest-{snapshot_id}-{shard or 'root'}.json"
-            fpath = os.path.join(table_dir, "_manifests", fname)
-            _atomic_write_json(fpath, {"entries": ents})
-            shard_refs.append({
-                "shard": shard,
-                "file": os.path.relpath(fpath, table_dir),
-                **_shard_totals(ents),
-            })
-
-    shard_refs.sort(key=lambda r: r["shard"])
+    refs = sorted(({"shard": r["shard"], "file": r["file"],
+                    **{k: r[k] for k in _TOTALS}} for r in refs),
+                  key=lambda r: r["shard"])
     listing = {
         "snapshot_id": snapshot_id,
         "engine": ENGINE_VERSION,
         "schema_ddl": schema_ddl,
-        "manifest_shards": shard_refs,
-        "n_chunks": sum(r["n_chunks"] for r in shard_refs),
-        "n_rows": sum(r["n_rows"] for r in shard_refs),
-        "raw_bytes": sum(r["raw_bytes"] for r in shard_refs),
-        "enc_bytes": sum(r["enc_bytes"] for r in shard_refs),
+        "manifest_shards": refs,
+        **{k: sum(r[k] for r in refs) for k in _TOTALS},
         "extra": extra or {},
         "parent_snapshot_id": prev["snapshot_id"] if prev else None,
     }
@@ -330,16 +332,11 @@ def _commit_locked(table_dir: str, entries: list[dict], schema_ddl: str,
 
 
 def _read_entries(table_dir: str, listing: dict) -> list[dict]:
-    if "manifest_shards" in listing:
-        entries: list[dict] = []
-        for ref in listing["manifest_shards"]:
-            with open(os.path.join(table_dir, ref["file"])) as f:
-                entries.extend(json.load(f)["entries"])
-        entries.sort(key=lambda e: e["chunk_id"])
-        return entries
-    # pre-0.2 format: one flat manifest file
-    with open(os.path.join(table_dir, listing["manifest"])) as f:
-        return json.load(f)["entries"]
+    entries: list[dict] = []
+    for ref in listing["manifest_shards"]:
+        entries.extend(_read_shard(table_dir, ref))
+    entries.sort(key=lambda e: e["chunk_id"])
+    return entries
 
 
 def load_refs(table_dir: str, snapshot_id: int | None = None) -> dict | None:
@@ -348,7 +345,12 @@ def load_refs(table_dir: str, snapshot_id: int | None = None) -> dict | None:
     10¹²-turn frame (~4M chunks) the entries are GBs of JSON that
     must stay in executor tasks (read_table's distributed pruning),
     never on the driver. ``load`` keeps the eager-entry contract for
-    small tables and internal rewrite ops."""
+    small tables and internal rewrite ops.
+
+    Every table operation reaches the listing through here, so this is
+    the manifest-format gate: a pre-0.2 listing (no ``manifest_shards``,
+    or a ref without per-shard totals) raises IncompatibleTableError
+    before anything is read, written or deleted."""
     lpath = os.path.join(table_dir, "_manifest_list.json")
     if not os.path.exists(lpath):
         return None
@@ -357,32 +359,21 @@ def load_refs(table_dir: str, snapshot_id: int | None = None) -> dict | None:
     if snapshot_id is not None and snapshot_id != listing["snapshot_id"]:
         spath = os.path.join(table_dir, "_manifests",
                              f"snap-{snapshot_id}.json")
-        mpath = os.path.join(table_dir, "_manifests",
-                             f"manifest-{snapshot_id}.json")
-        if os.path.exists(spath):
-            with open(spath) as f:
-                listing = json.load(f)
-        elif os.path.exists(mpath):  # pre-0.2 snapshot
-            listing = {k: v for k, v in listing.items()
-                       if k != "manifest_shards"}
-            listing.update(snapshot_id=snapshot_id,
-                           manifest=os.path.relpath(mpath, table_dir))
-            # the copied totals are the CURRENT snapshot's — recompute
-            # from the legacy manifest so count_rows() on a pre-0.2
-            # snapshot id is historical, not silently current (legacy
-            # single-file manifests are small; one read, this path only)
-            with open(mpath) as f:
-                ents = json.load(f)["entries"]
-            listing.update(
-                n_chunks=len(ents),
-                n_rows=sum(e["n_rows"] for e in ents),
-                raw_bytes=sum(e["raw_bytes"] for e in ents),
-                enc_bytes=sum(e["enc_bytes"] for e in ents),
-            )
-        else:
+        if not os.path.exists(spath):
             raise FileNotFoundError(
                 f"snapshot {snapshot_id} not found in {table_dir}"
             )
+        with open(spath) as f:
+            listing = json.load(f)
+    refs = listing.get("manifest_shards")
+    if refs is None or any(k not in r for r in refs for k in _TOTALS):
+        raise IncompatibleTableError(
+            f"snapshot {listing.get('snapshot_id')} of {table_dir} uses "
+            "the pre-0.2 manifest format (a single-file manifest, or "
+            "shard refs without per-shard totals); this engine reads "
+            "format 0.2 only. Migrate by decoding the table with the "
+            "matching engine version and re-encoding with write_table()."
+        )
     return listing
 
 
@@ -419,8 +410,7 @@ def commit_shards(table_dir: str, shard_refs: list[dict],
     ``expect_parent``: if the current snapshot is no longer the one the
     refs were prepared against, StaleParent is raised so the caller can
     re-merge and retry (optimistic concurrency)."""
-    lock = _acquire_commit_lock(table_dir, lock_timeout)
-    try:
+    with _commit_lock(table_dir, lock_timeout):
         prev = load_refs(table_dir)
         if expect_parent is not _EXPECT_ANY:
             cur = prev["snapshot_id"] if prev else None
@@ -429,51 +419,12 @@ def commit_shards(table_dir: str, shard_refs: list[dict],
                     f"prepared against snapshot {expect_parent}, "
                     f"current is {cur}"
                 )
-        snapshot_id = (prev["snapshot_id"] + 1) if prev else 0
-        # refs keep per-shard totals: later APPEND commits carry
-        # untouched shards forward without reading their files
-        refs = [
-            {"shard": r["shard"], "file": r["file"],
-             "n_chunks": r["n_chunks"], "n_rows": r["n_rows"],
-             "raw_bytes": r["raw_bytes"], "enc_bytes": r["enc_bytes"]}
-            for r in sorted(shard_refs, key=lambda r: r["shard"])
-        ]
-        listing = {
-            "snapshot_id": snapshot_id,
-            "engine": ENGINE_VERSION,
-            "schema_ddl": schema_ddl,
-            "manifest_shards": refs,
-            "n_chunks": sum(r["n_chunks"] for r in shard_refs),
-            "n_rows": sum(r["n_rows"] for r in shard_refs),
-            "raw_bytes": sum(r["raw_bytes"] for r in shard_refs),
-            "enc_bytes": sum(r["enc_bytes"] for r in shard_refs),
-            "extra": extra or {},
-            "parent_snapshot_id": prev["snapshot_id"] if prev else None,
-        }
-        _atomic_write_json(
-            os.path.join(table_dir, "_manifests",
-                         f"snap-{snapshot_id}.json"),
-            listing,
-        )
-        _atomic_write_json(
-            os.path.join(table_dir, "_manifest_list.json"), listing
-        )
-        return snapshot_id
-    finally:
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
+        return _publish(table_dir, prev, shard_refs, schema_ddl, extra)
 
 
 def _snapshot_ids_on_disk(mdir: str) -> set[int]:
-    """Every snapshot id present in the manifest dir: snap-<n>.json
-    (0.2 format) AND pre-0.2 single-file manifest-<n>.json snapshots
-    (exactly one dash — shard files are manifest-<n>-<shard>.json).
-    Missing the pre-0.2 ids would make ``retained`` empty on a legacy
-    table and expire would delete EVERY chunk of a live table."""
-    import re
-
+    """Every snapshot id with a snap-<n>.json listing in the manifest
+    dir (shard files are manifest-<token>-<shard>.json)."""
     ids: set[int] = set()
     for fn in os.listdir(mdir):
         if fn.startswith("snap-") and fn.endswith(".json"):
@@ -481,10 +432,6 @@ def _snapshot_ids_on_disk(mdir: str) -> set[int]:
                 ids.add(int(fn[len("snap-"):-len(".json")]))
             except ValueError:
                 pass
-        else:
-            m = re.fullmatch(r"manifest-(\d+)\.json", fn)
-            if m:
-                ids.add(int(m.group(1)))
     return ids
 
 
@@ -570,11 +517,6 @@ def _inflight_floor(table_dir: str) -> float:
     return floor
 
 
-# above this many chunks expire goes distributed (keep-sets built inside
-# Spark tasks); mirrors table.DISTRIBUTED_MANIFEST_MIN_CHUNKS
-_DISTRIBUTED_EXPIRE_MIN_CHUNKS = 4096
-
-
 def expire_snapshots(table_dir: str, keep: int = 2,
                      lock_timeout: float = 30.0, spark=None) -> dict:
     """Iceberg expire_snapshots parity: retain the latest ``keep``
@@ -589,25 +531,17 @@ def expire_snapshots(table_dir: str, keep: int = 2,
     marker (see begin_inflight) or the current commit — those belong to
     an encode job that has not committed yet (resume checkpoint files).
 
-    Pass ``spark`` to let large tables (≥ _DISTRIBUTED_EXPIRE_MIN_CHUNKS
+    Pass ``spark`` to let large tables (≥ DISTRIBUTED_MANIFEST_MIN_CHUNKS
     chunks) build their keep-sets INSIDE Spark tasks: shard files are
     read and the disk listing anti-joined task-side, so the driver
     handles only O(shards) refs and the final unlink list — never the
     per-chunk entry JSON (GBs at the 10¹²-turn frame)."""
-    lock = _acquire_commit_lock(table_dir, lock_timeout)
-    try:
+    with _commit_lock(table_dir, lock_timeout):
         refs = load_refs(table_dir)
         if (spark is not None and refs is not None
-                and refs.get("manifest_shards") is not None
-                and refs.get("n_chunks", 0)
-                >= _DISTRIBUTED_EXPIRE_MIN_CHUNKS):
+                and refs["n_chunks"] >= DISTRIBUTED_MANIFEST_MIN_CHUNKS):
             return _expire_locked_distributed(spark, table_dir, keep)
         return _expire_locked(table_dir, keep)
-    finally:
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
 
 
 def _retained_expired(table_dir: str, current_id: int,
@@ -677,12 +611,7 @@ def _expire_locked_distributed(spark, table_dir: str, keep: int) -> dict:
     keep_shards: set[str] = set()
     shard_files: set[str] = set()
     for s in retained:
-        listing = load_refs(table_dir, snapshot_id=s)
-        if listing.get("manifest_shards") is None:
-            # a retained pre-0.2 snapshot: legacy single-file manifests
-            # predate the scale this path exists for — driver walk
-            return _expire_locked(table_dir, keep)
-        for ref in listing["manifest_shards"]:
+        for ref in load_refs(table_dir, snapshot_id=s)["manifest_shards"]:
             keep_shards.add(os.path.basename(ref["file"]))
             shard_files.add(ref["file"])
     floor = _gc_floor(table_dir)
@@ -774,10 +703,8 @@ def _expire_locked(table_dir: str, keep: int) -> dict:
     keep_files: set[str] = set()
     for s in retained:
         listing = load(table_dir, snapshot_id=s)
-        for ref in listing.get("manifest_shards", []):
+        for ref in listing["manifest_shards"]:
             keep_shards.add(os.path.basename(ref["file"]))
-        if listing.get("manifest"):  # pre-0.2 single-file snapshot
-            keep_shards.add(os.path.basename(listing["manifest"]))
         for e in listing["entries"]:
             keep_files.add(os.path.basename(e["file"]))
     # in-flight protection: chunk files written at/after the oldest

@@ -206,12 +206,7 @@ def choose_codec(st: ColumnStats) -> tuple[str, str]:
         if (st.sorted_frac >= SORTED_FRAC_FOR_DELTA
                 and st.extras.get("prefix_frac", 0.0) >= 0.4):
             return "prefix", "zstd"
-        try:  # FSST for high-cardinality text when the kernel is available
-            from .kernels import fsst  # noqa: F401
-
-            return "fsst", "zstd"
-        except ImportError:
-            return "plain", "zstd"
+        return "fsst", "zstd"
 
     if t in ("float", "double", "halffloat"):
         return "bss", "zstd"

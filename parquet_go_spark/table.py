@@ -36,13 +36,6 @@ __all__ = ["write_table", "write_table_direct", "read_table", "compact",
 DEFAULT_ROWS_PER_CHUNK = 262_144
 DEFAULT_SALT_BLOCK = 65_536
 
-# Above this many chunks the manifest plane goes DISTRIBUTED: commits
-# write shard files from executor tasks (driver sees O(shards)
-# summaries) and reads prune entries inside tasks (driver never
-# materializes per-chunk JSON). Below it, the driver path is cheaper
-# (no extra Spark stage) and easier to debug.
-DISTRIBUTED_MANIFEST_MIN_CHUNKS = 4096
-
 # upsert_table's contract is O(touched batch) on the driver; above this
 # many touched chunks it is a de-facto full-table rewrite and the
 # driver-side touched-set collect/decode bookkeeping stops being cheap.
@@ -65,7 +58,10 @@ def _inflight_guard(pos: int):
     thread refreshes the marker's liveness every INFLIGHT_HEARTBEAT_S
     so jobs longer than INFLIGHT_TTL_S — the design target is
     multi-hour 10¹²-row backfills — keep protection for their whole
-    run. ``pos`` = positional index of table_dir."""
+    run. ``pos`` = positional index of table_dir.
+
+    The table's listing is loaded first, so an incompatible (pre-0.2)
+    table raises before any marker or chunk file is written."""
     import functools
     import threading
 
@@ -73,6 +69,7 @@ def _inflight_guard(pos: int):
         @functools.wraps(fn)
         def wrapper(*args, **kwargs):
             table_dir = kwargs.get("table_dir") or args[pos]
+            manifest.load_refs(table_dir)
             marker = manifest.begin_inflight(table_dir)
             stop = threading.Event()
 
@@ -296,7 +293,6 @@ def write_table(
     shuffle: bool = True,
     bloom_cols: tuple[str, ...] = (),
     token_bloom_cols: tuple[str, ...] = (),
-    distributed_commit: bool | None = None,
 ) -> dict:
     """Encode ``df`` into an Iceberg-style encoded-chunk table.
 
@@ -320,12 +316,11 @@ def write_table(
     re-encode case at scale — but note chunk ids then follow the scan's
     partition ordinals, so resume requires a stable input listing.
 
-    ``distributed_commit`` (default: auto above
-    DISTRIBUTED_MANIFEST_MIN_CHUNKS, fresh commits only): manifest
-    shard files are written by a second Spark stage grouped by shard;
-    the driver collects only O(shards) summaries instead of one JSON
-    row per chunk — at the 10¹²-turn frame (~4M chunks) the per-chunk
-    path would push GBs of JSON through the driver.
+    The manifest commit picks its plane from ``num_chunks`` (see
+    ``_commit``): at or above manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS,
+    shard files are written by a second Spark stage and the driver
+    handles only O(shards) summaries. Locality-mode writes always
+    commit on the driver.
     """
     df, orig_schema_json = _lower_interval_df(df)
     schema_json = orig_schema_json or df.schema.json()
@@ -334,42 +329,41 @@ def write_table(
         overrides, resume, chunk_expr, chunk_prefix, bloom_cols, shuffle,
         token_bloom_cols,
     )
-    if distributed_commit is None:
-        distributed_commit = (
-            (extra.get("num_chunks") or 0) >= DISTRIBUTED_MANIFEST_MIN_CHUNKS
-        )
-    if distributed_commit:
+    return _commit(entries_df, table_dir, schema_json, extra, append,
+                   extra.get("num_chunks") or 0)
+
+
+def _commit(entries_df: DataFrame, table_dir: str, schema_ddl: str,
+            extra: dict, append: bool, n_chunks: int) -> dict:
+    """Commit an encode job's (chunk_id, entry_json) rows — the one
+    commit path of both writers. Below
+    manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS chunks the entries are
+    collected and committed on the driver. At or above it a second
+    Spark stage writes one shard file per manifest shard and the
+    driver commits O(shards) refs; at the 10¹²-turn frame (~4M chunks)
+    the per-chunk path would push GBs of JSON through the driver."""
+    if n_chunks >= manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS:
         refs = _write_shards_distributed(entries_df, table_dir)
         if append:
             snapshot = _commit_append_distributed(
-                df.sparkSession, table_dir, refs,
-                schema_ddl=schema_json, extra=extra,
+                entries_df.sparkSession, table_dir, refs,
+                schema_ddl=schema_ddl, extra=extra,
             )
         else:
             snapshot = manifest.commit_shards(
-                table_dir, refs, schema_ddl=schema_json, extra=extra,
+                table_dir, refs, schema_ddl=schema_ddl, extra=extra,
             )
-        return {
-            "snapshot_id": snapshot,
-            "n_chunks": sum(r["n_chunks"] for r in refs),
-            "n_rows": sum(r["n_rows"] for r in refs),
-            "raw_bytes": sum(r["raw_bytes"] for r in refs),
-            "enc_bytes": sum(r["enc_bytes"] for r in refs),
-            "reused_chunks": sum(r["reused_chunks"] for r in refs),
-        }
-    entries = [json.loads(r.entry_json) for r in entries_df.collect()]
-    snapshot = manifest.commit(
-        table_dir, entries, schema_ddl=schema_json,
-        extra=extra, append=append,
-    )
-    return {
-        "snapshot_id": snapshot,
-        "n_chunks": len(entries),
-        "n_rows": sum(e["n_rows"] for e in entries),
-        "raw_bytes": sum(e["raw_bytes"] for e in entries),
-        "enc_bytes": sum(e["enc_bytes"] for e in entries),
-        "reused_chunks": sum(1 for e in entries if e.get("reused")),
-    }
+    else:
+        entries = [json.loads(r.entry_json) for r in entries_df.collect()]
+        snapshot = manifest.commit(
+            table_dir, entries, schema_ddl=schema_ddl, extra=extra,
+            append=append,
+        )
+        refs = [{**manifest._shard_totals(entries),
+                 "reused_chunks": sum(1 for e in entries if e.get("reused"))}]
+    return {"snapshot_id": snapshot,
+            **{k: sum(r[k] for r in refs) for k in manifest._TOTALS},
+            "reused_chunks": sum(r["reused_chunks"] for r in refs)}
 
 
 def _stage_encode(
@@ -509,10 +503,7 @@ def _write_shards_distributed(entries_df: DataFrame,
         return pd.DataFrame([{
             "shard": shard,
             "file": _os.path.join("_manifests", fname),
-            "n_chunks": len(entries),
-            "n_rows": sum(e["n_rows"] for e in entries),
-            "raw_bytes": sum(e["raw_bytes"] for e in entries),
-            "enc_bytes": sum(e["enc_bytes"] for e in entries),
+            **M._shard_totals(entries),
             "reused_chunks": sum(1 for e in entries if e.get("reused")),
         }])
 
@@ -543,13 +534,12 @@ def _commit_append_distributed(
 ) -> int:
     """APPEND commit at manifest scale: the batch's shard files are
     already on disk (written by encode tasks); shards the batch shares
-    with the parent are merged INSIDE Spark tasks (read parent shard +
-    batch shard, merge by chunk_id — same-id overrides, the idempotent
-    replay contract — write one immutable merged file); untouched
-    parent refs carry forward, pre-totals refs are enriched task-side.
-    The driver only ever holds O(shards) summaries — a million-chunk
-    backfill append no longer funnels per-chunk entry JSON through
-    ``manifest.commit(append=True)``.
+    with the parent are merged INSIDE Spark tasks by
+    ``manifest._merge_shard`` (the same rule as the driver commit:
+    same-id overrides, an unchanged shard keeps the parent's file), and
+    untouched parent refs carry forward. The driver only ever holds
+    O(shards) summaries — a million-chunk backfill append never funnels
+    per-chunk entry JSON through ``manifest.commit(append=True)``.
 
     Optimistic concurrency: the merge runs against a parent read
     OUTSIDE the commit lock; ``commit_shards(expect_parent=...)``
@@ -557,68 +547,29 @@ def _commit_append_distributed(
     landed, in which case the merge re-runs against the new parent."""
     import uuid
 
+    new_by_shard = {r["shard"]: r for r in new_refs}
     for _attempt in range(max_retries):
         prev = manifest.load_refs(table_dir)
-        if prev is not None and prev.get("manifest_shards") is None:
-            # pre-0.2 single-file parent: every entry lives in one flat
-            # file — there is nothing shard-incremental to preserve, and
-            # legacy tables predate the scale this path exists for
-            raise ValueError(
-                "distributed append onto a pre-0.2 single-file manifest "
-                "is not supported; compact() or rewrite the table first"
-            )
         parent_id = prev["snapshot_id"] if prev else None
-        prev_refs = {r["shard"]: dict(r)
-                     for r in (prev["manifest_shards"] if prev else [])}
-        new_by_shard = {r["shard"]: r for r in new_refs}
+        final = {r["shard"]: r
+                 for r in (prev["manifest_shards"] if prev else [])}
+        work = [(s, final[s]["file"], new_by_shard[s]["file"])
+                for s in sorted(set(final) & set(new_by_shard))]
         token = uuid.uuid4().hex[:12]
-        work = []
-        for s in sorted(set(prev_refs) & set(new_by_shard)):
-            work.append((s, prev_refs[s]["file"], new_by_shard[s]["file"]))
-        for s, r in prev_refs.items():
-            if s not in new_by_shard and "n_rows" not in r:
-                work.append((s, r["file"], None))  # enrich totals only
 
         def merge_shards(pdfs):
-            import json as _json
-            import os as _os
-
             from . import manifest as M
 
             for pdf in pdfs:
-                out = []
-                for shard, pfile, nfile in pdf.itertuples(index=False):
-                    with open(_os.path.join(table_dir, pfile)) as f:
-                        parent_ents = _json.load(f)["entries"]
-                    if not isinstance(nfile, str):  # null → enrich-only
-                        ents = parent_ents
-                        file_rel = pfile
-                    else:
-                        merged = {e["chunk_id"]: e for e in parent_ents}
-                        with open(_os.path.join(table_dir, nfile)) as f:
-                            for e in _json.load(f)["entries"]:
-                                merged[e["chunk_id"]] = e
-                        ents = sorted(merged.values(),
-                                      key=lambda e: e["chunk_id"])
-                        if ents == parent_ents:  # idempotent replay
-                            file_rel = pfile
-                        else:
-                            fname = (f"manifest-{token}-m-"
-                                     f"{shard or 'root'}.json")
-                            fpath = _os.path.join(table_dir, "_manifests",
-                                                  fname)
-                            M._atomic_write_json(fpath, {"entries": ents})
-                            file_rel = _os.path.join("_manifests", fname)
-                    out.append({
-                        "shard": shard, "file": file_rel,
-                        "n_chunks": len(ents),
-                        "n_rows": sum(e["n_rows"] for e in ents),
-                        "raw_bytes": sum(e["raw_bytes"] for e in ents),
-                        "enc_bytes": sum(e["enc_bytes"] for e in ents),
-                    })
-                yield pd.DataFrame(out)
+                yield pd.DataFrame([
+                    M._merge_shard(
+                        table_dir, shard, {"file": pfile},
+                        M._read_shard(table_dir, {"file": nfile}),
+                        f"manifest-{token}-m-{shard or 'root'}.json",
+                    )
+                    for shard, pfile, nfile in pdf.itertuples(index=False)
+                ])
 
-        merged_refs: dict[str, dict] = {}
         if work:
             par = min(len(work), spark.sparkContext.defaultParallelism) or 1
             wdf = spark.createDataFrame(
@@ -631,23 +582,13 @@ def _commit_append_distributed(
                 "shard string, file string, n_chunks long, n_rows long, "
                 "raw_bytes long, enc_bytes long",
             ).collect()
-            merged_refs = {r["shard"]: r.asDict() for r in rows}
-
-        final: list[dict] = []
-        for s, r in prev_refs.items():
-            if s in new_by_shard:
-                final.append(merged_refs[s])
-            else:
-                final.append(merged_refs.get(s, r))
+            final.update((r["shard"], r.asDict()) for r in rows)
         for s, r in new_by_shard.items():
-            if s not in prev_refs:
-                final.append({k: r[k] for k in
-                              ("shard", "file", "n_chunks", "n_rows",
-                               "raw_bytes", "enc_bytes")})
+            final.setdefault(s, r)
         try:
             return manifest.commit_shards(
-                table_dir, final, schema_ddl=schema_ddl, extra=extra,
-                expect_parent=parent_id,
+                table_dir, list(final.values()), schema_ddl=schema_ddl,
+                extra=extra, expect_parent=parent_id,
             )
         except manifest.StaleParent:
             continue  # another commit landed: re-merge against it
@@ -683,9 +624,7 @@ def read_table(
     # executor tasks (one task per shard file) — the driver handles
     # only shard refs, so the read path scales to any chunk count
     distributed = (
-        refs.get("manifest_shards") is not None
-        and refs.get("n_chunks", 0) >= DISTRIBUTED_MANIFEST_MIN_CHUNKS
-    )
+        refs["n_chunks"] >= manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS)
     listing = refs
     if not distributed:
         listing = manifest.load(table_dir, snapshot_id=snapshot_id)
@@ -910,7 +849,6 @@ def write_table_direct(
     chunk_prefix: str = "",
     append: bool = False,
     bloom_cols: tuple[str, ...] = (),
-    distributed_commit: bool | None = None,
 ) -> dict:
     """Direct-path encode for pre-grouped input: each chunk = one group
     of input parquet files, read INSIDE the task with pyarrow (no JVM
@@ -918,9 +856,9 @@ def write_table_direct(
     cross the boundary). Chunk ids follow the sorted input listing, so
     resume requires a stable listing (same caveat as locality mode).
 
-    ``distributed_commit``: same semantics as write_table — manifest
-    shards written by tasks, driver commits O(shards) summaries; auto
-    above DISTRIBUTED_MANIFEST_MIN_CHUNKS for fresh commits."""
+    Commits through the same ``_commit`` as write_table: the manifest
+    plane goes distributed at manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS
+    chunks."""
     from .encode import make_direct_encode_fn
 
     files = sorted(input_files)
@@ -928,19 +866,21 @@ def write_table_direct(
               for i in range(0, len(files), files_per_chunk)]
     rows = [(f"{chunk_prefix}{i:06d}", json.dumps(g))
             for i, g in enumerate(groups)]
-    par = min(len(rows), spark.sparkContext.defaultParallelism) or 1
-    # repartitionByRange, not repartition(par): round-robin starts at a
-    # RANDOM bucket per input partition, so the chunk->task grouping —
-    # and with it the per-task FSST symbol-table reuse groups, hence
-    # the encoded bytes — changed run to run (r5: two identical 4-core
-    # direct runs produced 121327330 vs 120661853 B). Range partitioning
-    # on the zero-padded chunk_id is deterministic for a fixed input
-    # listing AND keeps consecutive chunks in one task, which is what
-    # the reuse ratio-guard wants (neighboring chunks share vocabulary).
-    files_df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["chunk_id", "files"]),
-        "chunk_id string, files string",
-    ).repartitionByRange(par, "chunk_id")
+    n = len(rows)
+    par = min(n, spark.sparkContext.defaultParallelism) or 1
+    # explicit chunk->task assignment: contiguous blocks, chunk i goes
+    # to task i*par//n, placed by an identity partitioner on the task
+    # index and ordered by i inside the task. The grouping decides the
+    # per-task FSST symbol-table reuse groups, hence the encoded bytes,
+    # so it is a pure function of the input listing and parallelism —
+    # no random round-robin start, no sampled range bounds. Contiguous
+    # blocks keep neighboring chunks (shared vocabulary) in one task,
+    # which is what the reuse ratio-guard wants.
+    placed = spark.sparkContext.parallelize(
+        [((i * par // n, i), row) for i, row in enumerate(rows)]
+    ).repartitionAndSortWithinPartitions(par, lambda k: k[0])
+    files_df = spark.createDataFrame(placed.values(),
+                                     "chunk_id string, files string")
     fn = make_direct_encode_fn(table_dir, key_cols, overrides, resume,
                                bloom_cols)
     entries_df = files_df.mapInArrow(
@@ -948,39 +888,7 @@ def write_table_direct(
     )
     schema_ddl = spark.read.parquet(files[0]).schema.json()
     extra = {"mode": "direct", "key_cols": list(key_cols)}
-    if distributed_commit is None:
-        distributed_commit = len(groups) >= DISTRIBUTED_MANIFEST_MIN_CHUNKS
-    if distributed_commit:
-        refs = _write_shards_distributed(entries_df, table_dir)
-        if append:
-            snapshot = _commit_append_distributed(
-                spark, table_dir, refs, schema_ddl=schema_ddl, extra=extra,
-            )
-        else:
-            snapshot = manifest.commit_shards(
-                table_dir, refs, schema_ddl=schema_ddl, extra=extra,
-            )
-        return {
-            "snapshot_id": snapshot,
-            "n_chunks": sum(r["n_chunks"] for r in refs),
-            "n_rows": sum(r["n_rows"] for r in refs),
-            "raw_bytes": sum(r["raw_bytes"] for r in refs),
-            "enc_bytes": sum(r["enc_bytes"] for r in refs),
-            "reused_chunks": sum(r["reused_chunks"] for r in refs),
-        }
-    entries = [json.loads(r.entry_json) for r in entries_df.collect()]
-    snapshot = manifest.commit(
-        table_dir, entries, schema_ddl=schema_ddl, extra=extra,
-        append=append,
-    )
-    return {
-        "snapshot_id": snapshot,
-        "n_chunks": len(entries),
-        "n_rows": sum(e["n_rows"] for e in entries),
-        "raw_bytes": sum(e["raw_bytes"] for e in entries),
-        "enc_bytes": sum(e["enc_bytes"] for e in entries),
-        "reused_chunks": sum(1 for e in entries if e.get("reused")),
-    }
+    return _commit(entries_df, table_dir, schema_ddl, extra, append, n)
 
 
 def _manifest_files_df(spark, table_dir: str, refs: dict,
@@ -1241,8 +1149,7 @@ def search_text(
          for f in schema.fields if f.name in set(sel + [column])]
     )
     sub = StructType(sub_fields)
-    if (refs.get("manifest_shards") is not None
-            and refs.get("n_chunks", 0) >= DISTRIBUTED_MANIFEST_MIN_CHUNKS):
+    if refs["n_chunks"] >= manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS:
         # distributed: token-bloom check runs in the shard-scan tasks
         import os
 
@@ -1354,14 +1261,13 @@ def column_stats(table_dir: str, column: str,
     None fields when a chunk lacks the stat (conservative).
 
     Pass ``spark`` to compute shard partials in executor tasks above
-    DISTRIBUTED_MANIFEST_MIN_CHUNKS — the driver then merges O(shards)
-    partials instead of walking every entry."""
+    manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS — the driver then merges
+    O(shards) partials instead of walking every entry."""
     refs = manifest.load_refs(table_dir, snapshot_id=snapshot_id)
     if refs is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     if (spark is not None
-            and refs.get("manifest_shards") is not None
-            and refs.get("n_chunks", 0) >= DISTRIBUTED_MANIFEST_MIN_CHUNKS):
+            and refs["n_chunks"] >= manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS):
         import os
 
         shard_files = [os.path.join(table_dir, r["file"])

@@ -41,14 +41,16 @@ if not os.path.isdir(d) or not os.listdir(d):
     # >60 GB of intermediates) while the shards stay deterministic and
     # content-diverse (seed 42+k, not 8 copies of the same 200k convs)
     n_shards = max(1, n_conv // 400000)
-    files_per_shard = 64 // n_shards
+    files_per_shard = max(1, 64 // n_shards)
     total = 0
     for k in range(n_shards):
         # per-shard conv-id prefix: colliding ids across shards would
         # interleave unrelated conversations under the (conv_id,
         # turn_idx) sort and randomize ts deltas (r5: ratio 8.35 -> 5.46)
-        t = make_transcripts(n_conv // n_shards, seed=42 + k,
-                             conv_prefix=f"c{k}-")
+        n_k = n_conv // n_shards
+        if k == n_shards - 1:
+            n_k += n_conv % n_shards  # remainder: shards sum to N_CONV
+        t = make_transcripts(n_k, seed=42 + k, conv_prefix=f"c{k}-")
         total += t.num_rows
         step = (t.num_rows + files_per_shard - 1) // files_per_shard
         for i in range(0, t.num_rows, step):

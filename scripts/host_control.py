@@ -64,8 +64,8 @@ def _run_slice(args) -> tuple[int, int]:
 def _level(groups, procs: int, out_root: str) -> tuple[float, int]:
     out_dir = os.path.join(out_root, f"p{procs}")
     shutil.rmtree(out_dir, ignore_errors=True)
-    # same contiguous grouping the direct path's repartitionByRange
-    # produces: consecutive chunks stay in one worker (table reuse).
+    # contiguous grouping like the direct path's chunk->task blocks:
+    # consecutive chunks stay in one worker (table reuse).
     per = (len(groups) + procs - 1) // procs
     slices = [
         (groups[k * per : (k + 1) * per], out_dir, k) for k in range(procs)

@@ -152,3 +152,10 @@ def test_fixture_text_slicing_invariant():
     b = make_transcripts(500, seed=7, _text_slice_rows=13)
     assert b.column("text").num_chunks > 1
     assert a.to_pydict() == b.to_pydict()
+
+
+def test_fixture_zero_conversations():
+    """Zero conversations give a 0-row table with the usual schema."""
+    empty = make_transcripts(0, seed=7)
+    assert empty.num_rows == 0
+    assert empty.schema == make_transcripts(3, seed=7).schema

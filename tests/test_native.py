@@ -129,3 +129,34 @@ def test_cache_reuse_identity():
     finally:
         native.lib = saved
     assert blobs_c == blobs_np
+
+
+def test_build_refuses_cache_others_can_write(tmp_path, monkeypatch):
+    """The compiled library is only dlopened from a per-user cache dir
+    that nobody else can write: a planted world-writable cache dir falls
+    back to numpy, a fresh one is created 0700 and used."""
+    import os
+    import stat
+    import tempfile
+
+    pytest.importorskip("cffi")
+    monkeypatch.delenv("PGS_NO_NATIVE", raising=False)
+    planted = tmp_path / "planted"
+    cdir = planted / f"pgs_native-{os.getuid()}"
+    cdir.mkdir(parents=True)
+    os.chmod(cdir, 0o777)
+    monkeypatch.setenv("TMPDIR", str(planted))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    assert native._build() == (None, None)
+    assert os.listdir(cdir) == []  # nothing compiled into it either
+
+    if native.lib is None:
+        return  # no C toolchain: the build half cannot run here
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    monkeypatch.setenv("TMPDIR", str(fresh))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    ffi, lib = native._build()
+    assert lib is not None
+    mode = os.stat(fresh / f"pgs_native-{os.getuid()}").st_mode
+    assert stat.S_IMODE(mode) == 0o700

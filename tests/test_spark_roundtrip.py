@@ -698,10 +698,13 @@ def test_token_bloom_text_search(spark, transcripts, tmp_path):
     assert table.search_text(spark, out, "text", "xylophone").count() == 0
 
 
-def _fake_pre02_table(root, n_chunks=3):
-    """Materialize a table exactly as the 0.1 engine committed it: one
-    flat manifest-<n>.json, a _manifest_list.json with a `manifest` key
-    (no manifest_shards, no snap files), and chunk files on disk."""
+def _fake_pre02_table(root, n_chunks=3, sharded=False):
+    """Materialize a table whose entries were written by the 0.1 engine
+    (row-per-blob chunk layout), with chunk files on disk. By default
+    the listing is the 0.1 one too: one flat manifest-<n>.json and a
+    _manifest_list.json with a `manifest` key (no manifest_shards, no
+    snap files). ``sharded=True`` lists the same entries in the 0.2
+    sharded format, so only the chunk-layout gate can reject them."""
     import time
 
     tdir = str(root)
@@ -721,15 +724,26 @@ def _fake_pre02_table(root, n_chunks=3):
             "engine": "parquet_go_spark-0.1.0",
             "columns": {"conv_id": {"n": 10, "nulls": 0, "crc32": 0}},
         })
-    with open(os.path.join(mdir, "manifest-0.json"), "w") as f:
-        json.dump({"entries": entries}, f)
     listing = {
         "snapshot_id": 0, "engine": "parquet_go_spark-0.1.0",
-        "schema_ddl": "{}", "manifest": "_manifests/manifest-0.json",
+        "schema_ddl": "{}",
         "n_chunks": n_chunks, "n_rows": 10 * n_chunks,
         "raw_bytes": 100 * n_chunks, "enc_bytes": 50 * n_chunks,
         "extra": {}, "parent_snapshot_id": None,
     }
+    if sharded:
+        mfile = "_manifests/manifest-0-root.json"
+        listing["manifest_shards"] = [{
+            "shard": "", "file": mfile,
+            **manifest._shard_totals(entries),
+        }]
+        with open(os.path.join(mdir, "snap-0.json"), "w") as f:
+            json.dump(listing, f)
+    else:
+        mfile = "_manifests/manifest-0.json"
+        listing["manifest"] = mfile
+    with open(os.path.join(tdir, mfile), "w") as f:
+        json.dump({"entries": entries}, f)
     with open(os.path.join(tdir, "_manifest_list.json"), "w") as f:
         json.dump(listing, f)
     # commit mtimes in the past so nothing looks "in-flight"
@@ -739,30 +753,62 @@ def _fake_pre02_table(root, n_chunks=3):
     return tdir
 
 
-def test_expire_never_destroys_pre02_table(tmp_path):
-    """ADVICE r2 (high): on a table whose CURRENT snapshot predates the
-    0.2 shard format (no snap-*.json anywhere), expire_snapshots used
-    to compute an empty retained set and delete every chunk + manifest
-    of a live table. It must retain the current snapshot and delete
-    nothing."""
-    tdir = _fake_pre02_table(tmp_path / "legacy")
-    before_chunks = sorted(os.listdir(os.path.join(tdir, "chunks")))
-    res = manifest.expire_snapshots(tdir, keep=2)
-    assert res["deleted_chunks"] == 0
-    assert 0 in res["retained_snapshots"]
-    assert sorted(os.listdir(os.path.join(tdir, "chunks"))) == before_chunks
-    assert os.path.exists(
-        os.path.join(tdir, "_manifests", "manifest-0.json")
-    )
-    # the listing is still loadable afterwards
-    assert manifest.load(tdir)["n_chunks"] == 3
+def _tree_state(root):
+    """Every path under ``root`` with its bytes and mtime (files) —
+    equal before and after means nothing was created, changed or
+    deleted."""
+    out = {}
+    for d, dirs, files in os.walk(root):
+        for name in dirs:
+            out[os.path.join(d, name)] = None
+        for name in files:
+            p = os.path.join(d, name)
+            with open(p, "rb") as f:
+                out[p] = (f.read(), os.stat(p).st_mtime_ns)
+    return out
+
+
+def test_expire_never_destroys_pre02_table(spark, tmp_path):
+    """A pre-0.2 listing — a single-file manifest, or shard refs
+    without per-shard totals — is refused, not read: expire_snapshots,
+    read_table, an append and count_rows each raise
+    IncompatibleTableError, and none of them creates, changes or
+    deletes a single file of the table (expire once deleted every chunk
+    of such a table)."""
+    flat = _fake_pre02_table(tmp_path / "flat")
+    no_totals = _fake_pre02_table(tmp_path / "no-totals", sharded=True)
+    lpath = os.path.join(no_totals, "_manifest_list.json")
+    with open(lpath) as f:
+        listing = json.load(f)
+    listing["manifest_shards"] = [{"shard": r["shard"], "file": r["file"]}
+                                  for r in listing["manifest_shards"]]
+    with open(lpath, "w") as f:
+        json.dump(listing, f)
+    batch = make_transcripts_df(spark, n_conv=5, seed=1)
+    for tdir in (flat, no_totals):
+        before = _tree_state(tdir)
+        with pytest.raises(manifest.IncompatibleTableError,
+                           match="pre-0.2"):
+            manifest.expire_snapshots(tdir, keep=2)
+        with pytest.raises(manifest.IncompatibleTableError):
+            manifest.expire_snapshots(tdir, keep=1, spark=spark)
+        with pytest.raises(manifest.IncompatibleTableError):
+            table.read_table(spark, tdir)
+        with pytest.raises(manifest.IncompatibleTableError):
+            table.write_table(batch, tdir, num_chunks=1, append=True)
+        with pytest.raises(manifest.IncompatibleTableError):
+            table.count_rows(tdir)
+        assert _tree_state(tdir) == before
 
 
 def test_pre02_chunk_layout_is_version_gated(spark, tmp_path):
     """Reading (or compacting/deleting from) a table with 0.1-layout
     chunk files must fail with a clear migration error instead of an
-    opaque parquet column error mid-scan."""
-    tdir = _fake_pre02_table(tmp_path / "legacy")
+    opaque parquet column error mid-scan. The listing itself is in the
+    0.2 format, so this exercises the chunk-layout gate, not the
+    listing-format guard."""
+    tdir = _fake_pre02_table(tmp_path / "legacy", sharded=True)
+    assert table.count_rows(tdir) == 30  # the listing loads fine
     with pytest.raises(manifest.IncompatibleTableError, match="0.2"):
         table.read_table(spark, tdir)
     with pytest.raises(manifest.IncompatibleTableError):
@@ -848,17 +894,24 @@ def test_list_struct_shredding_projects_child_bytes(spark, transcripts,
     assert got_nulls > 0
 
 
-def test_distributed_commit_matches_driver_commit(spark, tmp_path):
-    """write_table(distributed_commit=True): shard files are written by
-    executor tasks and the driver commits only O(shards) summaries —
-    the resulting snapshot must be indistinguishable from the driver
-    commit path (same entries, same decode)."""
+def _force_distributed(monkeypatch):
+    """Every table op from here on takes the distributed manifest plane
+    (the one threshold, lowered to a single chunk)."""
+    monkeypatch.setattr(manifest, "DISTRIBUTED_MANIFEST_MIN_CHUNKS", 1)
+
+
+def test_distributed_commit_matches_driver_commit(spark, tmp_path,
+                                                  monkeypatch):
+    """Distributed commit: shard files are written by executor tasks
+    and the driver commits only O(shards) summaries — the resulting
+    snapshot must be indistinguishable from the driver commit path
+    (same entries, same decode)."""
     df = make_transcripts_df(spark, n_conv=60, seed=13)
     out_a = str(tmp_path / "driver")
     out_b = str(tmp_path / "dist")
     ia = table.write_table(df, out_a, num_chunks=4)
-    ib = table.write_table(df, out_b, num_chunks=4,
-                           distributed_commit=True)
+    _force_distributed(monkeypatch)
+    ib = table.write_table(df, out_b, num_chunks=4)
     assert ib["n_chunks"] == ia["n_chunks"]
     assert ib["n_rows"] == ia["n_rows"]
     assert ib["enc_bytes"] == ia["enc_bytes"]
@@ -873,8 +926,7 @@ def test_distributed_commit_matches_driver_commit(spark, tmp_path):
     # appends ride the distributed path too (r4): totals stay exact
     before = table.count_rows(out_b)
     table.write_table(df.limit(10), out_b, num_chunks=1,
-                      chunk_prefix="x-", append=True,
-                      distributed_commit=True)
+                      chunk_prefix="x-", append=True)
     assert table.count_rows(out_b) == before + 10
 
 
@@ -915,15 +967,13 @@ def _synthesize_big_manifest(spark, tmp_path, n_fake=100_000,
         )
         refs.append({"shard": shard,
                      "file": os.path.join("_manifests", fname),
-                     "n_chunks": len(ents)})
+                     **manifest._shard_totals(ents)})
     big = {
         "snapshot_id": 9,
         "engine": manifest.ENGINE_VERSION,
         "schema_ddl": listing["schema_ddl"],
         "manifest_shards": refs,
-        "n_chunks": n_fake + len(real_entries),
-        "n_rows": 10 * n_fake + listing["n_rows"],
-        "raw_bytes": 0, "enc_bytes": 0,
+        **{k: sum(r[k] for r in refs) for k in manifest._TOTALS},
         "extra": listing["extra"], "parent_snapshot_id": None,
     }
     manifest._atomic_write_json(
@@ -970,8 +1020,8 @@ def test_distributed_column_stats_matches_driver(spark, tmp_path):
     assert via_tasks["count"] == 20_000 * 10 + df.count()
 
 
-def test_direct_path_distributed_commit(spark, tmp_path):
-    """write_table_direct with distributed_commit: shard files written
+def test_direct_path_distributed_commit(spark, tmp_path, monkeypatch):
+    """write_table_direct on the distributed plane: shard files written
     by tasks, snapshot equivalent to the driver commit, round-trip
     intact."""
     import pyarrow.parquet as pq
@@ -988,8 +1038,8 @@ def test_direct_path_distributed_commit(spark, tmp_path):
     out_a = str(tmp_path / "a")
     out_b = str(tmp_path / "b")
     ia = table.write_table_direct(spark, files, out_a)
-    ib = table.write_table_direct(spark, files, out_b,
-                                  distributed_commit=True)
+    _force_distributed(monkeypatch)
+    ib = table.write_table_direct(spark, files, out_b)
     assert (ia["n_chunks"], ia["n_rows"], ia["enc_bytes"]) == \
         (ib["n_chunks"], ib["n_rows"], ib["enc_bytes"])
     la, lb = manifest.load(out_a), manifest.load(out_b)
@@ -1208,22 +1258,6 @@ def test_expire_spares_pending_shard_manifests(spark, tmp_path):
     assert table.read_table(spark, out).count() == df.count() + 5
 
 
-def test_count_rows_historical_pre02_snapshot(spark, tmp_path):
-    """count_rows(snapshot_id=<pre-0.2 id>) must return the HISTORICAL
-    total, not silently copy the current snapshot's (ADVICE r3): the
-    legacy load_refs branch now recomputes totals from the legacy
-    manifest's entries."""
-    tdir = _fake_pre02_table(tmp_path / "legacy")  # snap 0: 30 rows
-    listing = manifest.load(tdir)
-    bigger = listing["entries"] + [
-        {**listing["entries"][0], "chunk_id": "900000",
-         "file": "chunks/chunk-900000.parquet", "n_rows": 1000}
-    ]
-    manifest.commit(tdir, bigger, schema_ddl="{}")  # snap 1: 1030 rows
-    assert table.count_rows(tdir) == 1030
-    assert table.count_rows(tdir, snapshot_id=0) == 30
-
-
 def test_commit_lock_timeout_enforced_under_churn(tmp_path):
     """A vanishing/reappearing lock (churn) must still honor the
     caller's timeout instead of busy-spinning forever (ADVICE r3: the
@@ -1257,7 +1291,8 @@ def test_commit_lock_timeout_enforced_under_churn(tmp_path):
     assert elapsed < 5.0, elapsed
 
 
-def test_distributed_append_matches_driver_append(spark, tmp_path):
+def test_distributed_append_matches_driver_append(spark, tmp_path,
+                                                  monkeypatch):
     """The distributed append commit must produce a snapshot identical
     to the driver merge: same-id overrides, untouched shards carried
     forward, new shard namespaces added."""
@@ -1266,16 +1301,15 @@ def test_distributed_append_matches_driver_append(spark, tmp_path):
     out_b = str(tmp_path / "b")
     for out in (out_a, out_b):
         table.write_table(df, out, num_chunks=2, chunk_prefix="aa-")
-    batch = df.limit(100)
-    table.write_table(batch, out_a, num_chunks=2, chunk_prefix="aa-",
-                      append=True)  # driver merge
-    table.write_table(batch, out_b, num_chunks=2, chunk_prefix="aa-",
-                      append=True, distributed_commit=True)
-    fresh = df.limit(30)
-    table.write_table(fresh, out_a, num_chunks=1, chunk_prefix="bb-",
-                      append=True)
-    table.write_table(fresh, out_b, num_chunks=1, chunk_prefix="bb-",
-                      append=True, distributed_commit=True)
+    batch, fresh = df.limit(100), df.limit(30)
+    for out in (out_a, out_b):
+        if out == out_b:  # driver merge first, then the task merge
+            _force_distributed(monkeypatch)
+        table.write_table(batch, out, num_chunks=2, chunk_prefix="aa-",
+                          append=True)
+        table.write_table(fresh, out, num_chunks=1, chunk_prefix="bb-",
+                          append=True)
+    monkeypatch.undo()
     la, lb = manifest.load(out_a), manifest.load(out_b)
     assert {e["chunk_id"]: e["data_crc"] for e in la["entries"]} == \
         {e["chunk_id"]: e["data_crc"] for e in lb["entries"]}
@@ -1286,12 +1320,12 @@ def test_distributed_append_matches_driver_append(spark, tmp_path):
 def test_distributed_append_never_materializes_entries(spark, tmp_path,
                                                        monkeypatch):
     """An append onto a 100k-chunk table must stay O(batch)+O(shards)
-    on the driver: shard merges/enrichment run inside tasks and
+    on the driver: shard merges run inside tasks and
     manifest.load / _read_entries are never called."""
     out, df = _synthesize_big_manifest(spark, tmp_path)
     batch = make_transcripts_df(spark, n_conv=10, seed=5)
     n_batch = batch.count()
-    monkeypatch.setattr(table, "DISTRIBUTED_MANIFEST_MIN_CHUNKS", 4)
+    monkeypatch.setattr(manifest, "DISTRIBUTED_MANIFEST_MIN_CHUNKS", 4)
 
     def boom(*a, **k):
         raise AssertionError("driver materialized manifest entries")
