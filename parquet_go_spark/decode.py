@@ -107,8 +107,9 @@ def make_decode_fn(columns: list[str], verify_crc: bool = True,
     decodes as nulls of the declared type instead of erroring.
 
     If the input batches carry ``chunk_id``/``data_crc``/``enc_bytes``
-    columns (read_table sends the manifest's expectations along with
-    each file path — no driver-side dict, scales to any chunk count),
+    columns (every table-level decode sends the manifest's
+    expectations along with each file path — no driver-side dict,
+    scales to any chunk count),
     the file's embedded manifest entry is checked against them before
     decoding: a chunk file rewritten in place after the snapshot was
     taken (compaction GC, un-prefixed rewrite) fails loudly instead of

@@ -29,6 +29,14 @@ Every ref in a listing carries its shard's totals (n_chunks, n_rows,
 raw_bytes, enc_bytes). Tables from before 0.2 (one flat
 ``manifest-<n>.json`` per snapshot, or refs without totals) are
 rejected by ``load_refs`` with IncompatibleTableError, not read.
+
+Two manifest planes, one per-entry logic: every reader of chunk
+entries (read_table's pruning, search_text's token blooms,
+column_stats, expire_snapshots' keep-set) is one ``fn(entries) ->
+rows``. On the driver plane it runs over the loaded entry list; on the
+task plane ``scan_shards`` runs it inside Spark tasks, shard file by
+shard file, and returns the rows as a DataFrame. ``_task_plane`` is the
+one test that picks the plane, for commits and reads alike.
 """
 
 from __future__ import annotations
@@ -39,7 +47,7 @@ import os
 import tempfile
 from typing import Any
 
-__all__ = ["commit", "commit_shards", "load", "load_refs",
+__all__ = ["commit", "commit_shards", "load", "load_refs", "scan_shards",
            "expire_snapshots", "list_chunk_files", "stat_value",
            "check_chunk_layout", "ENGINE_VERSION",
            "IncompatibleTableError"]
@@ -57,9 +65,10 @@ MIN_READABLE_LAYOUT = (0, 2)
 # Above this many chunks the manifest plane goes DISTRIBUTED: commits
 # write shard files from executor tasks (driver sees O(shards)
 # summaries), and reads, column stats and expire_snapshots handle the
-# per-chunk entries inside tasks (the driver never materializes them).
-# Below it, the driver path is cheaper (no extra Spark stage) and
-# easier to debug. Every caller reads it at call time.
+# per-chunk entries inside tasks through ``scan_shards`` (the driver
+# never materializes them). Below it, the driver path is cheaper (no
+# extra Spark stage) and easier to debug. Only ``_task_plane`` reads
+# it, at call time.
 DISTRIBUTED_MANIFEST_MIN_CHUNKS = 4096
 
 # per-shard totals every ref carries (listing totals are their sums)
@@ -281,6 +290,42 @@ def _shard_totals(ents: list[dict]) -> dict:
 def _read_shard(table_dir: str, ref: dict) -> list[dict]:
     with open(os.path.join(table_dir, ref["file"])) as f:
         return json.load(f)["entries"]
+
+
+def _task_plane(spark, n_chunks: int) -> bool:
+    """The plane test: per-chunk entries of a table with ``n_chunks``
+    chunks are handled inside Spark tasks (shard-writing commits,
+    ``scan_shards`` reads) at or above DISTRIBUTED_MANIFEST_MIN_CHUNKS,
+    and only when there is a session to run them (``spark`` is None for
+    driver-only calls of column_stats and expire_snapshots)."""
+    return spark is not None and n_chunks >= DISTRIBUTED_MANIFEST_MIN_CHUNKS
+
+
+def scan_shards(spark, table_dir: str, shard_files: list[str], fn,
+                ddl: str):
+    """The task plane of every manifest reader: each task reads whole
+    shard files (``shard_files``, relative to ``table_dir``) with
+    ``_read_shard``, applies ``fn(entries) -> rows`` to each, and yields
+    the rows (dicts keyed by the ``ddl`` column names) as Arrow batches.
+    The driver plane applies the same ``fn`` to the loaded entry list,
+    so a reader writes its per-entry logic once. Returns the lazy
+    DataFrame of all rows; the driver never sees a chunk entry."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    arrow_schema = to_arrow_schema(schema)
+
+    def scan(batches):
+        for b in batches:
+            for f in b.column("file").to_pylist():
+                rows = fn(_read_shard(table_dir, {"file": f}))
+                yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    par = min(len(shard_files), spark.sparkContext.defaultParallelism) or 1
+    return (spark.createDataFrame([(f,) for f in shard_files], "file string")
+            .repartition(par).mapInArrow(scan, schema))
 
 
 def _merge_shard(table_dir: str, shard: str, parent_ref: dict | None,
@@ -532,16 +577,58 @@ def expire_snapshots(table_dir: str, keep: int = 2,
     an encode job that has not committed yet (resume checkpoint files).
 
     Pass ``spark`` to let large tables (≥ DISTRIBUTED_MANIFEST_MIN_CHUNKS
-    chunks) build their keep-sets INSIDE Spark tasks: shard files are
-    read and the disk listing anti-joined task-side, so the driver
-    handles only O(shards) refs and the final unlink list — never the
-    per-chunk entry JSON (GBs at the 10¹²-turn frame)."""
+    chunks) build their keep-sets INSIDE Spark tasks (``scan_shards``)
+    and list and unlink the chunks dir there too, so the driver handles
+    only O(shards) refs — never the per-chunk entry JSON (GBs at the
+    10¹²-turn frame) or the unlink list."""
     with _commit_lock(table_dir, lock_timeout):
-        refs = load_refs(table_dir)
-        if (spark is not None and refs is not None
-                and refs["n_chunks"] >= DISTRIBUTED_MANIFEST_MIN_CHUNKS):
-            return _expire_locked_distributed(spark, table_dir, keep)
-        return _expire_locked(table_dir, keep)
+        current = load_refs(table_dir)
+        if current is None:
+            return {"expired_snapshots": 0, "deleted_chunks": 0}
+        mdir = os.path.join(table_dir, "_manifests")
+        retained, expired = _retained_expired(
+            table_dir, current["snapshot_id"], keep)
+        shard_files = sorted({
+            ref["file"] for s in retained
+            for ref in load_refs(table_dir, snapshot_id=s)["manifest_shards"]
+        })
+        keep_shards = {os.path.basename(f) for f in shard_files}
+
+        def referenced(entries):
+            return [{"name": os.path.basename(e["file"])} for e in entries]
+
+        # in-flight protection: chunk files written at/after the oldest
+        # ACTIVE in-flight marker belong to a running encode job (see
+        # begin_inflight); failing that, the last commit is the floor
+        floor = _gc_floor(table_dir)
+        cdir = os.path.join(table_dir, "chunks")
+        if _task_plane(spark, current["n_chunks"]):
+            keep_df = scan_shards(spark, table_dir, shard_files, referenced,
+                                  "name string")
+            deleted_chunks = _unlink_unreferenced_in_tasks(
+                spark, cdir, keep_df, floor)
+        else:
+            keep_files = {r["name"] for f in shard_files
+                          for r in referenced(_read_shard(table_dir,
+                                                          {"file": f}))}
+            deleted_chunks = 0
+            for fn in (os.listdir(cdir) if os.path.isdir(cdir) else ()):
+                if not fn.endswith(".parquet") or fn in keep_files:
+                    continue
+                fpath = os.path.join(cdir, fn)
+                try:
+                    if os.path.getmtime(fpath) >= floor:
+                        continue  # in-flight, uncommitted
+                    os.unlink(fpath)
+                    deleted_chunks += 1
+                except OSError:
+                    pass
+        _cleanup_manifest_files(mdir, expired, keep_shards, floor)
+        return {
+            "expired_snapshots": len(expired),
+            "retained_snapshots": retained,
+            "deleted_chunks": deleted_chunks,
+        }
 
 
 def _retained_expired(table_dir: str, current_id: int,
@@ -595,39 +682,16 @@ def _cleanup_manifest_files(mdir: str, expired: list[int],
                 pass
 
 
-def _expire_locked_distributed(spark, table_dir: str, keep: int) -> dict:
-    """Distributed expire: the driver touches only snapshot listings
-    (O(shards) refs each) and the deletable-file list; referenced-chunk
-    keep-sets come from shard files read INSIDE tasks, and the chunks
-    dir is listed executor-side too (object stores list in parallel by
-    prefix; the local-FS stand-in is one streaming task)."""
+def _unlink_unreferenced_in_tasks(spark, cdir: str, keep_df,
+                                  floor: float) -> int:
+    """Task-plane chunk GC: the chunks dir is listed executor-side
+    (object stores list in parallel by prefix; the local-FS stand-in is
+    one streaming task), anti-joined with ``keep_df`` (referenced chunk
+    names) and the unreferenced files older than ``floor`` are unlinked
+    INSIDE tasks (a mass-crash can leave O(millions) orphans — a
+    driver-side list would balloon). Returns the number deleted."""
     import pandas as _pd
     from pyspark.sql import functions as F
-
-    current = load_refs(table_dir)
-    mdir = os.path.join(table_dir, "_manifests")
-    retained, expired = _retained_expired(
-        table_dir, current["snapshot_id"], keep)
-    keep_shards: set[str] = set()
-    shard_files: set[str] = set()
-    for s in retained:
-        for ref in load_refs(table_dir, snapshot_id=s)["manifest_shards"]:
-            keep_shards.add(os.path.basename(ref["file"]))
-            shard_files.add(ref["file"])
-    floor = _gc_floor(table_dir)
-    cdir = os.path.join(table_dir, "chunks")
-
-    def referenced(pdfs):
-        import json as _json
-        import os as _os
-
-        for pdf in pdfs:
-            names = []
-            for f in pdf["f"]:
-                with open(_os.path.join(table_dir, f)) as fh:
-                    names.extend(_os.path.basename(e["file"])
-                                 for e in _json.load(fh)["entries"])
-            yield _pd.DataFrame({"name": names})
 
     def list_chunks(pdfs):
         import os as _os
@@ -652,14 +716,6 @@ def _expire_locked_distributed(spark, table_dir: str, keep: int) -> dict:
                 if batch:
                     yield _pd.DataFrame(batch, columns=["name", "mtime"])
 
-    par = min(len(shard_files),
-              spark.sparkContext.defaultParallelism) or 1
-    keep_df = spark.createDataFrame(
-        _pd.DataFrame({"f": sorted(shard_files)}), "f string"
-    ).repartition(par).mapInPandas(referenced, "name string")
-    disk_df = spark.createDataFrame(
-        _pd.DataFrame({"d": [cdir]}), "d string"
-    ).mapInPandas(list_chunks, "name string, mtime double")
     def unlink_chunks(pdfs):
         import os as _os
 
@@ -673,9 +729,10 @@ def _expire_locked_distributed(spark, table_dir: str, keep: int) -> dict:
                     pass
             yield _pd.DataFrame({"n": [n]})
 
-    # the unlink happens INSIDE tasks (r4 VERDICT: a mass-crash can
-    # leave O(millions) orphans — a driver-side list would balloon);
-    # only the scalar per-task counts come back
+    disk_df = spark.createDataFrame(
+        _pd.DataFrame({"d": [cdir]}), "d string"
+    ).mapInPandas(list_chunks, "name string, mtime double")
+    # only the scalar per-task counts come back to the driver
     row = (
         disk_df.filter(F.col("mtime") < F.lit(floor))
         .join(keep_df, "name", "left_anti")
@@ -683,55 +740,7 @@ def _expire_locked_distributed(spark, table_dir: str, keep: int) -> dict:
         .mapInPandas(unlink_chunks, "n long")
         .agg(F.sum("n").alias("n")).collect()
     )
-    deleted_chunks = int(row[0]["n"] or 0)
-    _cleanup_manifest_files(mdir, expired, keep_shards, floor)
-    return {
-        "expired_snapshots": len(expired),
-        "retained_snapshots": retained,
-        "deleted_chunks": deleted_chunks,
-    }
-
-
-def _expire_locked(table_dir: str, keep: int) -> dict:
-    current = load_refs(table_dir)
-    if current is None:
-        return {"expired_snapshots": 0, "deleted_chunks": 0}
-    mdir = os.path.join(table_dir, "_manifests")
-    retained, expired = _retained_expired(
-        table_dir, current["snapshot_id"], keep)
-    keep_shards: set[str] = set()
-    keep_files: set[str] = set()
-    for s in retained:
-        listing = load(table_dir, snapshot_id=s)
-        for ref in listing["manifest_shards"]:
-            keep_shards.add(os.path.basename(ref["file"]))
-        for e in listing["entries"]:
-            keep_files.add(os.path.basename(e["file"]))
-    # in-flight protection: chunk files written at/after the oldest
-    # ACTIVE in-flight marker belong to a running encode job (see
-    # begin_inflight). The last-commit mtime stays as a secondary
-    # floor for writers predating the marker protocol.
-    floor = _gc_floor(table_dir)
-    deleted_chunks = 0
-    cdir = os.path.join(table_dir, "chunks")
-    if os.path.isdir(cdir):
-        for fn in os.listdir(cdir):
-            if not fn.endswith(".parquet") or fn in keep_files:
-                continue
-            fpath = os.path.join(cdir, fn)
-            try:
-                if os.path.getmtime(fpath) >= floor:
-                    continue  # in-flight, uncommitted
-                os.unlink(fpath)
-                deleted_chunks += 1
-            except OSError:
-                pass
-    _cleanup_manifest_files(mdir, expired, keep_shards, floor)
-    return {
-        "expired_snapshots": len(expired),
-        "retained_snapshots": retained,
-        "deleted_chunks": deleted_chunks,
-    }
+    return int(row[0]["n"] or 0)
 
 
 def list_chunk_files(table_dir: str) -> dict[str, str]:

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import math
+import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -316,11 +317,10 @@ def write_table(
     re-encode case at scale — but note chunk ids then follow the scan's
     partition ordinals, so resume requires a stable input listing.
 
-    The manifest commit picks its plane from ``num_chunks`` (see
-    ``_commit``): at or above manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS,
-    shard files are written by a second Spark stage and the driver
-    handles only O(shards) summaries. Locality-mode writes always
-    commit on the driver.
+    The manifest commit picks its plane from the chunk count (see
+    ``_commit``): ``num_chunks``, or in locality mode the input
+    partition count. On the task plane shard files are written by a
+    second Spark stage and the driver handles only O(shards) summaries.
     """
     df, orig_schema_json = _lower_interval_df(df)
     schema_json = orig_schema_json or df.schema.json()
@@ -329,20 +329,22 @@ def write_table(
         overrides, resume, chunk_expr, chunk_prefix, bloom_cols, shuffle,
         token_bloom_cols,
     )
+    # locality mode: each non-empty input partition is one chunk
+    n_chunks = extra["num_chunks"] if shuffle else df.rdd.getNumPartitions()
     return _commit(entries_df, table_dir, schema_json, extra, append,
-                   extra.get("num_chunks") or 0)
+                   n_chunks)
 
 
 def _commit(entries_df: DataFrame, table_dir: str, schema_ddl: str,
             extra: dict, append: bool, n_chunks: int) -> dict:
     """Commit an encode job's (chunk_id, entry_json) rows — the one
-    commit path of both writers. Below
-    manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS chunks the entries are
-    collected and committed on the driver. At or above it a second
-    Spark stage writes one shard file per manifest shard and the
-    driver commits O(shards) refs; at the 10¹²-turn frame (~4M chunks)
-    the per-chunk path would push GBs of JSON through the driver."""
-    if n_chunks >= manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS:
+    commit path of both writers. On the driver plane (see
+    manifest._task_plane) the entries are collected and committed on
+    the driver. On the task plane a second Spark stage writes one shard
+    file per manifest shard and the driver commits O(shards) refs; at
+    the 10¹²-turn frame (~4M chunks) the per-chunk path would push GBs
+    of JSON through the driver."""
+    if manifest._task_plane(entries_df.sparkSession, n_chunks):
         refs = _write_shards_distributed(entries_df, table_dir)
         if append:
             snapshot = _commit_append_distributed(
@@ -619,17 +621,7 @@ def read_table(
     refs = manifest.load_refs(table_dir, snapshot_id=snapshot_id)
     if refs is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    # distributed manifest plane: above the threshold the per-chunk
-    # entries are parsed, layout-checked and stats/bloom-pruned INSIDE
-    # executor tasks (one task per shard file) — the driver handles
-    # only shard refs, so the read path scales to any chunk count
-    distributed = (
-        refs["n_chunks"] >= manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS)
-    listing = refs
-    if not distributed:
-        listing = manifest.load(table_dir, snapshot_id=snapshot_id)
-        manifest.check_chunk_layout(listing["entries"])
-    schema = StructType.fromJson(json.loads(listing["schema_ddl"]))
+    schema = StructType.fromJson(json.loads(refs["schema_ddl"]))
     by_name = {f.name: f for f in schema.fields}
     all_cols = list(by_name)
     columns = columns or all_cols
@@ -688,39 +680,16 @@ def read_table(
     sub_schema = StructType(fields)
     udf_schema = StructType(udf_fields)
 
-    if distributed:
-        par = parallelism or spark.sparkContext.defaultParallelism
-        files_df = _manifest_files_df(
-            spark, table_dir, refs, predicates
-        ).repartition(par)
-    else:
-        entries = prune_entries(listing["entries"], predicates)
-        if not entries:
-            return spark.createDataFrame([], sub_schema)
-        import os
+    def surviving(entries):
+        # the layout gate comes first: pre-0.2 blooms use another hash
+        # scheme, so pruning on them could skip live chunks
+        manifest.check_chunk_layout(entries)
+        return _chunk_rows(table_dir, prune_entries(entries, predicates))
 
-        # expectation columns travel WITH each file path (no driver-side
-        # dict in the closure): the decoder checks the file's embedded
-        # entry against the snapshot's, so a chunk file rewritten in
-        # place after this snapshot fails loudly instead of silently
-        # decoding newer data (time-travel integrity).
-        files_pdf = pd.DataFrame(
-            {
-                "file": [os.path.join(table_dir, e["file"])
-                         for e in entries],
-                "chunk_id": [e["chunk_id"] for e in entries],
-                "data_crc": pd.array([e.get("data_crc") for e in entries],
-                                     dtype="Int64"),
-                "enc_bytes": pd.array([e.get("enc_bytes") for e in entries],
-                                      dtype="Int64"),
-            }
-        )
-        par = parallelism or min(len(entries),
-                                 spark.sparkContext.defaultParallelism)
-        files_df = spark.createDataFrame(
-            files_pdf,
-            "file string, chunk_id string, data_crc long, enc_bytes long",
-        ).repartition(par)
+    files_df = _chunk_files_df(spark, table_dir, refs, surviving,
+                               snapshot_id, parallelism)
+    if files_df is None:
+        return spark.createDataFrame([], sub_schema)
     if push_row_filter and predicates:
         from .decode import normalize_predicate
 
@@ -729,17 +698,7 @@ def read_table(
         }
     else:
         row_filter = None
-    try:  # schema evolution: null-fill columns missing from old chunks
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        column_types = {f.name: f.type for f in to_arrow_schema(udf_schema)}
-    except Exception:
-        column_types = {}
-    out = files_df.mapInArrow(
-        make_decode_fn(columns, row_filter=row_filter,
-                       column_types=column_types),
-        udf_schema,
-    )
+    out = _decode_df(files_df, udf_schema, row_filter)
     if iv_restore:
         out = out.select([
             iv_restore[f.name] if f.name in iv_restore
@@ -766,8 +725,6 @@ def compact(
 
     At scale this is a normal Spark job over only the small chunks —
     the large ones are untouched (no read amplification)."""
-    import os
-
     listing = manifest.load(table_dir)
     if listing is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
@@ -779,34 +736,8 @@ def compact(
     keep = [e for e in entries if e["n_rows"] >= min_rows]
     key_cols = tuple(listing["extra"].get("key_cols")
                      or ["conv_id", "turn_idx"])
-
-    # all fields nullable: schema-evolution null-fills columns that
-    # predate a chunk (same forcing read_table applies). Interval
-    # columns decode/re-encode in their lowered int form (chunk bytes
-    # store ints; the commit keeps the original interval DDL).
-    schema = StructType(_udf_safe_fields(
-        [
-            StructField(f.name, f.dataType, nullable=True, metadata=f.metadata)
-            for f in StructType.fromJson(json.loads(listing["schema_ddl"])).fields
-        ]
-    )[0])
-    cols = [f.name for f in schema.fields]
-    files = [os.path.join(table_dir, e["file"]) for e in small]
-    par = min(len(files), spark.sparkContext.defaultParallelism)
-    files_df = spark.createDataFrame(
-        pd.DataFrame({"file": files}), "file string"
-    ).repartition(par)
-    # same null-fill mapping read_table uses: small chunks written
-    # before a schema-evolution append may predate newer columns
-    try:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        column_types = {f.name: f.type for f in to_arrow_schema(schema)}
-    except Exception:
-        column_types = {}
-    small_df = files_df.mapInArrow(
-        make_decode_fn(cols, column_types=column_types), schema
-    )
+    small_df = _decode_entries_df(spark, table_dir, small,
+                                  _rewrite_schema(listing))
 
     prefix = f"c{listing['snapshot_id'] + 1:04d}-"
     n_small_rows = sum(e["n_rows"] for e in small)
@@ -856,12 +787,14 @@ def write_table_direct(
     cross the boundary). Chunk ids follow the sorted input listing, so
     resume requires a stable listing (same caveat as locality mode).
 
-    Commits through the same ``_commit`` as write_table: the manifest
-    plane goes distributed at manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS
-    chunks."""
+    Commits through the same ``_commit`` as write_table, which picks
+    the manifest plane from the chunk count."""
     from .encode import make_direct_encode_fn
 
     files = sorted(input_files)
+    if not files:
+        raise ValueError("write_table_direct: input_files is empty; "
+                         "there is nothing to encode")
     groups = [files[i : i + files_per_chunk]
               for i in range(0, len(files), files_per_chunk)]
     rows = [(f"{chunk_prefix}{i:06d}", json.dumps(g))
@@ -891,73 +824,88 @@ def write_table_direct(
     return _commit(entries_df, table_dir, schema_ddl, extra, append, n)
 
 
-def _manifest_files_df(spark, table_dir: str, refs: dict,
-                       predicates: dict | None) -> DataFrame:
-    """Distributed manifest scan: one task per shard file parses its
-    entries, applies the EXACT driver pruning logic (prune_entries —
-    JSON-typed stat compares + blooms, conservative on incomparable
-    stats) and the chunk-layout gate, and emits the surviving
-    (file, chunk_id, data_crc, enc_bytes) rows. The driver never sees
-    a chunk entry."""
-    import os
+_CHUNK_FILES_DDL = ("file string, chunk_id string, data_crc long, "
+                    "enc_bytes long")
 
-    shard_files = [os.path.join(table_dir, r["file"])
-                   for r in refs["manifest_shards"]]
-    par = min(len(shard_files),
-              spark.sparkContext.defaultParallelism) or 1
-    sdf = spark.createDataFrame(
-        pd.DataFrame({"shard_file": shard_files}), "shard_file string"
-    ).repartition(par)
 
-    def parse_shards(pdfs):
-        import json as _json
+def _chunk_rows(table_dir: str, entries) -> list[dict]:
+    """One decode row per entry: the chunk file's path with the
+    snapshot's expectations for it. The decoder checks the file's
+    embedded entry against them, so a chunk file replaced after the
+    snapshot (same id, other bytes) fails loudly instead of decoding
+    the wrong data."""
+    return [{"file": os.path.join(table_dir, e["file"]),
+             "chunk_id": e["chunk_id"], "data_crc": e.get("data_crc"),
+             "enc_bytes": e.get("enc_bytes")} for e in entries]
 
-        from . import manifest as M
-        from .decode import prune_entries as _prune
 
-        for pdf in pdfs:
-            files, cids, crcs, encs = [], [], [], []
-            for sf in pdf["shard_file"]:
-                with open(sf) as f:
-                    entries = _json.load(f)["entries"]
-                M.check_chunk_layout(entries)
-                for e in _prune(entries, predicates):
-                    files.append(os.path.join(table_dir, e["file"]))
-                    cids.append(e["chunk_id"])
-                    crcs.append(e.get("data_crc"))
-                    encs.append(e.get("enc_bytes"))
-            yield pd.DataFrame({
-                "file": files, "chunk_id": cids,
-                "data_crc": pd.array(crcs, dtype="Int64"),
-                "enc_bytes": pd.array(encs, dtype="Int64"),
-            })
+def _rows_files_df(spark, rows: list[dict],
+                   parallelism: int | None = None) -> DataFrame:
+    """Driver-held decode rows → the files DataFrame the decoder reads."""
+    pdf = pd.DataFrame(rows, columns=["file", "chunk_id", "data_crc",
+                                      "enc_bytes"])
+    pdf = pdf.astype({"data_crc": "Int64", "enc_bytes": "Int64"})
+    par = parallelism or min(len(rows), spark.sparkContext.defaultParallelism)
+    return spark.createDataFrame(pdf, _CHUNK_FILES_DDL).repartition(par)
 
-    return sdf.mapInPandas(
-        parse_shards,
-        "file string, chunk_id string, data_crc long, enc_bytes long",
+
+def _chunk_files_df(spark, table_dir: str, refs: dict, fn,
+                    snapshot_id: int | None = None,
+                    parallelism: int | None = None) -> DataFrame | None:
+    """The decode rows ``fn(entries)`` picks from a snapshot, as a files
+    DataFrame. On the task plane ``manifest.scan_shards`` runs ``fn``
+    per shard file and the driver never sees an entry; on the driver
+    plane ``fn`` runs over the loaded entry list. None when no chunk
+    survives on the driver plane (no Spark job to run)."""
+    if manifest._task_plane(spark, refs["n_chunks"]):
+        files_df = manifest.scan_shards(
+            spark, table_dir, [r["file"] for r in refs["manifest_shards"]],
+            fn, _CHUNK_FILES_DDL)
+        return files_df.repartition(
+            parallelism or spark.sparkContext.defaultParallelism)
+    rows = fn(manifest.load(table_dir, snapshot_id=snapshot_id)["entries"])
+    return _rows_files_df(spark, rows, parallelism) if rows else None
+
+
+def _arrow_types(schema: StructType) -> dict:
+    """{column: arrow type} of ``schema``, for the decoder's
+    schema-evolution null-fill (columns missing from older chunks)."""
+    try:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return {f.name: f.type for f in to_arrow_schema(schema)}
+    except Exception:
+        return {}
+
+
+def _decode_df(files_df: DataFrame, schema: StructType,
+               row_filter: dict | None = None) -> DataFrame:
+    """Decode the chunks named by ``files_df``'s decode rows into the
+    columns of ``schema``."""
+    return files_df.mapInArrow(
+        make_decode_fn([f.name for f in schema.fields],
+                       row_filter=row_filter,
+                       column_types=_arrow_types(schema)),
+        schema,
     )
+
+
+def _rewrite_schema(listing: dict) -> StructType:
+    """The schema compact/delete/upsert decode and re-encode in: all
+    fields nullable (schema evolution null-fills columns that predate
+    a chunk, as in read_table), interval columns in their lowered int
+    form (chunk bytes store ints; the commit keeps the original DDL)."""
+    return StructType(_udf_safe_fields([
+        StructField(f.name, f.dataType, True, f.metadata)
+        for f in StructType.fromJson(json.loads(listing["schema_ddl"])).fields
+    ])[0])
 
 
 def _decode_entries_df(spark, table_dir, entries, schema) -> DataFrame:
     """Decode a specific entry subset (internal: delete/upsert/compact)."""
-    import os
-
     manifest.check_chunk_layout(entries)
-    files = [os.path.join(table_dir, e["file"]) for e in entries]
-    par = min(len(files), spark.sparkContext.defaultParallelism)
-    files_df = spark.createDataFrame(
-        pd.DataFrame({"file": files}), "file string"
-    ).repartition(par)
-    try:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        column_types = {f.name: f.type for f in to_arrow_schema(schema)}
-    except Exception:
-        column_types = {}
-    cols = [f.name for f in schema.fields]
-    return files_df.mapInArrow(
-        make_decode_fn(cols, column_types=column_types), schema
-    )
+    return _decode_df(
+        _rows_files_df(spark, _chunk_rows(table_dir, entries)), schema)
 
 
 def _predicate_cond(predicates: dict):
@@ -989,11 +937,11 @@ def delete_rows(spark: SparkSession, table_dir: str,
     re-encoded under a fresh namespace, and ONE snapshot commits
     keep + rewritten — untouched chunks (the overwhelming majority at
     scale, thanks to manifest pruning) are not read at all."""
-    import os
-
     listing = manifest.load(table_dir)
     if listing is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    # gate before pruning: pre-0.2 blooms use another hash scheme
+    manifest.check_chunk_layout(listing["entries"])
     affected = prune_entries(listing["entries"], predicates)
     affected_ids = {e["chunk_id"] for e in affected}
     keep = [e for e in listing["entries"]
@@ -1002,11 +950,8 @@ def delete_rows(spark: SparkSession, table_dir: str,
         return {"snapshot_id": listing["snapshot_id"],
                 "rewritten_chunks": 0, "untouched_chunks": len(keep),
                 "n_chunks": len(keep)}
-    schema = StructType(_udf_safe_fields(
-        [StructField(f.name, f.dataType, True, f.metadata)
-         for f in StructType.fromJson(json.loads(listing["schema_ddl"])).fields]
-    )[0])
-    decoded = _decode_entries_df(spark, table_dir, affected, schema)
+    decoded = _decode_entries_df(spark, table_dir, affected,
+                                 _rewrite_schema(listing))
     # NULL predicate values are "unknown" → NOT deleted (keep the row)
     remaining = decoded.filter(
         ~F.coalesce(_predicate_cond(predicates), F.lit(False))
@@ -1094,10 +1039,7 @@ def upsert_table(spark: SparkSession, table_dir: str,
     # interval columns merge in their lowered int form (both the stored
     # chunks and the incoming batch), original DDL stays in the commit
     df, _ = _lower_interval_df(df)
-    schema = StructType(_udf_safe_fields(
-        [StructField(f.name, f.dataType, True, f.metadata)
-         for f in StructType.fromJson(json.loads(listing["schema_ddl"])).fields]
-    )[0])
+    schema = _rewrite_schema(listing)
     old = (
         _decode_entries_df(spark, table_dir, affected, schema)
         if affected else spark.createDataFrame([], schema)
@@ -1149,64 +1091,19 @@ def search_text(
          for f in schema.fields if f.name in set(sel + [column])]
     )
     sub = StructType(sub_fields)
-    if refs["n_chunks"] >= manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS:
-        # distributed: token-bloom check runs in the shard-scan tasks
-        import os
 
-        shard_files = [os.path.join(table_dir, r["file"])
-                       for r in refs["manifest_shards"]]
-        par = min(len(shard_files),
-                  spark.sparkContext.defaultParallelism) or 1
-        sdf = spark.createDataFrame(
-            pd.DataFrame({"shard_file": shard_files}), "shard_file string"
-        ).repartition(par)
+    def may_hold(e):
+        tb = e["columns"].get(column, {}).get("token_bloom")
+        return tb is None or bloom_contains(tb, token)
 
-        def bloom_scan(pdfs):
-            import json as _json
+    def surviving(entries):
+        # gate first: pre-0.2 blooms use another hash scheme
+        manifest.check_chunk_layout(entries)
+        return _chunk_rows(table_dir, filter(may_hold, entries))
 
-            from . import manifest as M
-            from .kernels.bloom import bloom_contains as _bc
-
-            for pdf in pdfs:
-                files = []
-                for sf in pdf["shard_file"]:
-                    with open(sf) as f:
-                        entries = _json.load(f)["entries"]
-                    M.check_chunk_layout(entries)
-                    for e in entries:
-                        tb = e["columns"].get(column, {}) \
-                            .get("token_bloom")
-                        if tb is None or _bc(tb, token):
-                            files.append(
-                                os.path.join(table_dir, e["file"])
-                            )
-                yield pd.DataFrame({"file": files})
-
-        files_df = sdf.mapInPandas(bloom_scan, "file string") \
-            .repartition(spark.sparkContext.defaultParallelism)
-        from .decode import make_decode_fn
-
-        try:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            column_types = {f.name: f.type for f in to_arrow_schema(sub)}
-        except Exception:
-            column_types = {}
-        cols = [f.name for f in sub.fields]
-        decoded = files_df.mapInArrow(
-            make_decode_fn(cols, column_types=column_types), sub
-        )
-    else:
-        listing = manifest.load(table_dir)
-        kept = []
-        for e in listing["entries"]:
-            tb = e["columns"].get(column, {}).get("token_bloom")
-            if tb is None or bloom_contains(tb, token):
-                kept.append(e)
-        if not kept:
-            return spark.createDataFrame([], sub).select(
-                [iv_restore.get(c, F.col(f"`{c}`")) for c in sel])
-        decoded = _decode_entries_df(spark, table_dir, kept, sub)
+    files_df = _chunk_files_df(spark, table_dir, refs, surviving)
+    decoded = (spark.createDataFrame([], sub) if files_df is None
+               else _decode_df(files_df, sub))
     return decoded.filter(
         F.array_contains(F.split(F.col(column), " "), token)
     ).select([iv_restore.get(c, F.col(f"`{c}`")) for c in sel])
@@ -1260,44 +1157,25 @@ def column_stats(table_dir: str, column: str,
     way Parquet readers answer these from RowGroup statistics. Returns
     None fields when a chunk lacks the stat (conservative).
 
-    Pass ``spark`` to compute shard partials in executor tasks above
-    manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS — the driver then merges
+    Pass ``spark`` to compute shard partials in executor tasks on the
+    task plane (manifest._task_plane) — the driver then merges
     O(shards) partials instead of walking every entry."""
     refs = manifest.load_refs(table_dir, snapshot_id=snapshot_id)
     if refs is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    if (spark is not None
-            and refs["n_chunks"] >= manifest.DISTRIBUTED_MANIFEST_MIN_CHUNKS):
-        import os
 
-        shard_files = [os.path.join(table_dir, r["file"])
-                       for r in refs["manifest_shards"]]
-        par = min(len(shard_files),
-                  spark.sparkContext.defaultParallelism) or 1
-        sdf = spark.createDataFrame(
-            pd.DataFrame({"shard_file": shard_files}), "shard_file string"
-        ).repartition(par)
+    def partial(entries):
+        return [{"part": json.dumps(_accumulate_column_stats(entries,
+                                                             column))}]
 
-        def shard_stats(pdfs):
-            import json as _json
-
-            for pdf in pdfs:
-                outs = []
-                for sf in pdf["shard_file"]:
-                    with open(sf) as f:
-                        entries = _json.load(f)["entries"]
-                    outs.append(_json.dumps(
-                        _accumulate_column_stats(entries, column)
-                    ))
-                yield pd.DataFrame({"part": outs})
-
-        parts = [json.loads(r.part)
-                 for r in sdf.mapInPandas(shard_stats,
-                                          "part string").collect()]
-        st = _merge_column_stats(parts)
+    if manifest._task_plane(spark, refs["n_chunks"]):
+        rows = manifest.scan_shards(
+            spark, table_dir, [r["file"] for r in refs["manifest_shards"]],
+            partial, "part string").collect()
     else:
-        listing = manifest.load(table_dir, snapshot_id=snapshot_id)
-        st = _accumulate_column_stats(listing["entries"], column)
+        rows = partial(
+            manifest.load(table_dir, snapshot_id=snapshot_id)["entries"])
+    st = _merge_column_stats([json.loads(r["part"]) for r in rows])
     return {
         "count": st["count"],
         "null_count": st["null_count"],

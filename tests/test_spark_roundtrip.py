@@ -698,15 +698,30 @@ def test_token_bloom_text_search(spark, transcripts, tmp_path):
     assert table.search_text(spark, out, "text", "xylophone").count() == 0
 
 
+_PRE02_PROBE = "conv-00000005"
+
+
 def _fake_pre02_table(root, n_chunks=3, sharded=False):
     """Materialize a table whose entries were written by the 0.1 engine
     (row-per-blob chunk layout), with chunk files on disk. By default
     the listing is the 0.1 one too: one flat manifest-<n>.json and a
     _manifest_list.json with a `manifest` key (no manifest_shards, no
     snap files). ``sharded=True`` lists the same entries in the 0.2
-    sharded format, so only the chunk-layout gate can reject them."""
+    sharded format, so only the chunk-layout gate can reject them.
+
+    The schema is valid, conv_id stats bracket ``_PRE02_PROBE``, and
+    the conv_id bloom and text token bloom both miss it: a reader that
+    trusts these blooms before the layout gate skips every chunk."""
     import time
 
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from parquet_go_spark.kernels.bloom import bloom_build, bloom_contains
+
+    miss = bloom_build(["conv-00000001", "conv-00000009"])
+    assert not bloom_contains(miss, _PRE02_PROBE)
+    schema_ddl = StructType([StructField("conv_id", StringType()),
+                             StructField("text", StringType())]).json()
     tdir = str(root)
     cdir = os.path.join(tdir, "chunks")
     mdir = os.path.join(tdir, "_manifests")
@@ -722,11 +737,17 @@ def _fake_pre02_table(root, n_chunks=3, sharded=False):
             "chunk_id": cid, "file": f"chunks/{fn}", "n_rows": 10,
             "raw_bytes": 100, "enc_bytes": 50,
             "engine": "parquet_go_spark-0.1.0",
-            "columns": {"conv_id": {"n": 10, "nulls": 0, "crc32": 0}},
+            "columns": {
+                "conv_id": {"n": 10, "nulls": 0, "crc32": 0,
+                            "min": "conv-00000000", "max": "conv-99999999",
+                            "bloom": miss},
+                "text": {"n": 10, "nulls": 0, "crc32": 0,
+                         "token_bloom": miss},
+            },
         })
     listing = {
         "snapshot_id": 0, "engine": "parquet_go_spark-0.1.0",
-        "schema_ddl": "{}",
+        "schema_ddl": schema_ddl,
         "n_chunks": n_chunks, "n_rows": 10 * n_chunks,
         "raw_bytes": 100 * n_chunks, "enc_bytes": 50 * n_chunks,
         "extra": {}, "parent_snapshot_id": None,
@@ -806,13 +827,22 @@ def test_pre02_chunk_layout_is_version_gated(spark, tmp_path):
     chunk files must fail with a clear migration error instead of an
     opaque parquet column error mid-scan. The listing itself is in the
     0.2 format, so this exercises the chunk-layout gate, not the
-    listing-format guard."""
+    listing-format guard. The gate comes before any bloom is trusted:
+    pre-0.2 blooms use another hash scheme, so pruning on them first
+    would return no rows (search_text) or delete nothing (delete_rows)
+    instead of raising."""
     tdir = _fake_pre02_table(tmp_path / "legacy", sharded=True)
     assert table.count_rows(tdir) == 30  # the listing loads fine
     with pytest.raises(manifest.IncompatibleTableError, match="0.2"):
         table.read_table(spark, tdir)
     with pytest.raises(manifest.IncompatibleTableError):
+        table.read_table(spark, tdir, predicates={"conv_id": _PRE02_PROBE})
+    with pytest.raises(manifest.IncompatibleTableError):
         table.compact(spark, tdir, min_rows=1 << 20)
+    with pytest.raises(manifest.IncompatibleTableError):
+        table.search_text(spark, tdir, "text", _PRE02_PROBE)
+    with pytest.raises(manifest.IncompatibleTableError):
+        table.delete_rows(spark, tdir, predicates={"conv_id": _PRE02_PROBE})
 
 
 def test_expire_protects_inflight_uncommitted_chunks(spark, tmp_path):
@@ -1439,3 +1469,95 @@ def test_map_shredding_projects_key_bytes(spark, transcripts, tmp_path):
     got_nulls = proj.filter(F.col("`attrs.role`").isNull()).count()
     assert got_nulls == df.filter(F.col("attrs").isNull()).count()
     assert got_nulls > 0
+
+
+def test_search_text_detects_replaced_chunk(spark, tmp_path):
+    """Every decode checks each chunk file against its manifest entry,
+    not only read_table's: a chunk file replaced by another table's
+    chunk with the same id fails search_text too, instead of returning
+    the other table's rows."""
+    import shutil
+
+    out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
+    table.write_table(make_transcripts_df(spark, n_conv=30, seed=3), out_a,
+                      num_chunks=2)
+    table.write_table(make_transcripts_df(spark, n_conv=30, seed=4), out_b,
+                      num_chunks=2)
+    name = os.path.basename(manifest.load(out_a)["entries"][0]["file"])
+    shutil.copyfile(os.path.join(out_b, "chunks", name),
+                    os.path.join(out_a, "chunks", name))
+    with pytest.raises(Exception, match="rewritten after this snapshot"):
+        table.read_table(spark, out_a).count()
+    with pytest.raises(Exception, match="rewritten after this snapshot"):
+        table.search_text(spark, out_a, "text", "the").collect()
+
+
+def test_locality_write_picks_plane_from_partition_count(spark, tmp_path,
+                                                         monkeypatch):
+    """A shuffle=False write passes its input partition count (one
+    chunk per non-empty partition) to the plane test, so at the
+    threshold it commits through the shard-writing task plane, not
+    manifest.commit on the driver."""
+    df = make_transcripts_df(spark, n_conv=40, seed=17).repartition(3)
+    _force_distributed(monkeypatch)
+
+    def boom(*a, **k):
+        raise AssertionError("locality write committed on the driver")
+
+    monkeypatch.setattr(manifest, "commit", boom)
+    out = str(tmp_path / "tbl")
+    info = table.write_table(df, out, shuffle=False)
+    assert info["n_chunks"] == 3
+    back = table.read_table(spark, out)
+    assert table.verify_roundtrip(df, back, ("conv_id", "turn_idx"))[
+        "identical"
+    ]
+
+
+def test_direct_path_rejects_empty_input(spark, tmp_path):
+    """An empty input list is a clean ValueError naming it, and nothing
+    is committed."""
+    out = str(tmp_path / "tbl")
+    with pytest.raises(ValueError, match="input_files is empty"):
+        table.write_table_direct(spark, [], out)
+    assert not os.path.exists(os.path.join(out, "_manifest_list.json"))
+
+
+def test_task_plane_readers_match_driver_plane(spark, transcripts, tmp_path,
+                                               monkeypatch):
+    """search_text, column_stats and a bloom-pruned point read give the
+    same answers on the task plane (manifest.scan_shards) as on the
+    driver plane, and the task plane never loads the entries on the
+    driver."""
+    import pyspark.sql.functions as F
+
+    df = transcripts.withColumn(
+        "text",
+        F.when((F.col("conv_id") == "conv-00000003")
+               & (F.col("turn_idx") == 0),
+               F.concat(F.col("text"), F.lit(" zanzibar")))
+        .otherwise(F.col("text")),
+    )
+    out = str(tmp_path / "tbl")
+    table.write_table(df, out, num_chunks=12, token_bloom_cols=("text",),
+                      bloom_cols=("conv_id",))
+
+    def results():
+        found = table.search_text(spark, out, "text", "zanzibar",
+                                  columns=["conv_id", "turn_idx"])
+        stats = {c: table.column_stats(out, c, spark=spark)
+                 for c in ("conv_id", "turn_idx", "ts")}
+        point = table.read_table(spark, out,
+                                 predicates={"conv_id": "conv-00000007"})
+        return sorted(found.collect()), stats, sorted(point.collect())
+
+    on_driver = results()
+    assert on_driver[0] == [("conv-00000003", 0)]
+    assert on_driver[2]
+    _force_distributed(monkeypatch)
+
+    def boom(*a, **k):
+        raise AssertionError("driver materialized manifest entries")
+
+    monkeypatch.setattr(manifest, "load", boom)
+    assert results() == on_driver
