@@ -17,7 +17,9 @@ re-expressed Spark-first (SURVEY.md):
   chunking → ``sortWithinPartitions`` → ``mapInArrow`` vectorized
   kernels → encoded-chunk files + lineage manifests (``manifest.py``)
   with atomic snapshot commits, checkpoint resume, time travel,
-  per-chunk bloom filters, and blob-level projection/filter pushdown.
+  per-chunk bloom filters, and blob-level projection/filter pushdown;
+  struct, list<struct> and map columns are shredded per child
+  (``shred.py``).
 - ``streaming.py`` (exactly-once micro-batch ingest, windowed
   aggregation, applyInPandasWithState sessionization), ``table.py``
   (write_table / write_table_direct / read_table / compact /

@@ -16,6 +16,9 @@ payload:
 
     u8 has_nulls | [u64 n_valid | u32 mask_len | rle(validity bits)]
     codec body over the non-null values
+
+The null section is written only by ``validity_section`` and parsed only
+by ``read_validity``; the shredded nested shells (``shred.py``) reuse it.
 """
 
 from __future__ import annotations
@@ -39,7 +42,8 @@ from .kernels.plain import (
 )
 from .kernels.rle import rle_decode, rle_encode
 
-__all__ = ["encode_array", "decode_array", "content_crc", "CODECS", "ENTROPIES"]
+__all__ = ["encode_array", "decode_array", "content_crc", "validity_section",
+           "read_validity", "expand_nulls", "CODECS", "ENTROPIES"]
 
 _HDR = struct.Struct("<BBBBQQ")
 
@@ -579,6 +583,43 @@ def _decode_values(body: memoryview, dt: int, codec: int, n: int) -> pa.Array:
     return pa.array(v, type=atype)
 
 
+def validity_section(arr: pa.Array) -> bytes:
+    """The null section of a blob payload (and of every shred shell):
+    ``u8 0`` when ``arr`` has no nulls, else
+    ``u8 1 | u64 n_valid | u32 mask_len | rle(validity bits)``."""
+    if not arr.null_count:
+        return b"\x00"
+    valid = arr.is_valid().to_numpy(zero_copy_only=False).astype(np.uint64)
+    mask = rle_encode(valid, 1)
+    return struct.pack("<BQI", 1, len(arr) - arr.null_count, len(mask)) + mask
+
+
+def read_validity(mv: memoryview, pos: int, n: int):
+    """Parse a :func:`validity_section` of ``n`` slots at ``pos`` →
+    (bool mask or None when there are no nulls, n_valid, end pos)."""
+    if not mv[pos]:
+        return None, n, pos + 1
+    n_valid, mask_len = struct.unpack_from("<QI", mv, pos + 1)
+    pos += 13
+    valid = rle_decode(mv[pos : pos + mask_len]).astype(bool)
+    if len(valid) != n:
+        raise ValueError(f"validity mask has {len(valid)} slots, expected {n}")
+    return valid, n_valid, pos + mask_len
+
+
+def expand_nulls(vals: pa.Array, valid) -> pa.Array:
+    """Scatter the non-null ``vals`` back over the slots of ``valid``
+    (None = no nulls). A take with a null index yields a null slot, so
+    this is type-universal (nested struct/map/list too)."""
+    if valid is None:
+        return vals
+    if len(vals) == 0:
+        return pa.nulls(len(valid), vals.type)
+    idx = np.zeros(len(valid), dtype=np.int64)
+    idx[valid] = np.arange(len(vals))
+    return vals.take(pa.array(idx, type=pa.int64(), mask=~valid))
+
+
 def encode_array(arr: pa.Array, codec: str, entropy: str = "none",
                  cache: dict | None = None,
                  name: str | None = None) -> bytes:
@@ -593,14 +634,7 @@ def encode_array(arr: pa.Array, codec: str, entropy: str = "none",
         cid = _C_BOOL
     n = len(arr)
 
-    if arr.null_count:
-        valid = arr.is_valid().to_numpy(zero_copy_only=False).astype(np.uint64)
-        mask_blob = rle_encode(valid, 1)
-        null_sec = struct.pack("<BQI", 1, n - arr.null_count, len(mask_blob)) + mask_blob
-    else:
-        null_sec = struct.pack("<B", 0)
-
-    payload = null_sec + _encode_values(arr, dt, cid, cache, name)
+    payload = validity_section(arr) + _encode_values(arr, dt, cid, cache, name)
     eid = ENTROPIES[entropy]
     raw_len = len(payload)
     if eid == 1:
@@ -623,19 +657,8 @@ def decode_array(blob: bytes | memoryview) -> pa.Array:
     elif eid == 2:
         payload = _zstd.decompress(payload, raw_len, asbytes=True)
     mv = memoryview(payload)
-    (has_nulls,) = struct.unpack_from("<B", mv, 0)
-    if not has_nulls:
-        return _decode_values(mv[1:], dt, cid, n)
-    n_valid, mask_len = struct.unpack_from("<QI", mv, 1)
-    valid = rle_decode(mv[13 : 13 + mask_len]).astype(bool)
-    vals = _decode_values(mv[13 + mask_len :], dt, cid, n_valid)
-    if n_valid == 0:
-        return pa.nulls(n, vals.type)
-    # re-expand with nulls: take with a null index yields a null slot —
-    # type-universal (works for nested struct/map/list too)
-    idx = np.zeros(n, dtype=np.int64)
-    idx[valid] = np.arange(n_valid)
-    return vals.take(pa.array(idx, type=pa.int64(), mask=~valid))
+    valid, n_valid, pos = read_validity(mv, 0, n)
+    return expand_nulls(_decode_values(mv[pos:], dt, cid, n_valid), valid)
 
 
 def content_crc(arr: pa.Array, crc: int = 0) -> int:

@@ -14,7 +14,9 @@ import zlib
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from . import shred
 from .codec import decode_array
+from .encode import BLOB_COL_PREFIX, embedded_entry
 
 __all__ = ["make_decode_fn", "prune_entries", "normalize_predicate"]
 
@@ -89,8 +91,7 @@ def prune_entries(entries: list[dict], column_predicates: dict | None):
     return kept
 
 
-def make_decode_fn(columns: list[str], verify_crc: bool = True,
-                   row_filter: dict | None = None,
+def make_decode_fn(columns: list[str], row_filter: dict | None = None,
                    column_types: dict | None = None):
     """Build the mapInArrow UDF: iterator[RecordBatch of file paths] →
     decoded RecordBatches in the requested column order.
@@ -118,13 +119,6 @@ def make_decode_fn(columns: list[str], verify_crc: bool = True,
     fetch_cols = list(dict.fromkeys(filter_cols + columns))
     column_types = column_types or {}
 
-    def _read_entry(pf) -> dict:
-        import json
-
-        meta = pf.schema_arrow.metadata or {}
-        raw = meta.get(b"pgs_manifest_entry")
-        return json.loads(raw) if raw else {}
-
     def _verify_entry(entry: dict, fpath: str, expect: dict) -> None:
         for k, want in expect.items():
             if want is None:
@@ -137,96 +131,8 @@ def make_decode_fn(columns: list[str], verify_crc: bool = True,
                     f"snapshot was taken"
                 )
 
-    def _parse_shell(shell):
-        import struct as _s
-
-        from .codec import _type_from_bytes
-        from .kernels.rle import rle_decode
-
-        ver, n, has_nulls = _s.unpack_from("<BQB", shell, 0)
-        pos = 10
-        if has_nulls:
-            n_valid, mask_len = _s.unpack_from("<QI", shell, pos)
-            pos += 12
-            valid = rle_decode(
-                memoryview(shell)[pos : pos + mask_len]
-            ).astype(bool)
-            pos += mask_len
-        else:
-            n_valid, valid = n, None
-        (tlen,) = _s.unpack_from("<I", shell, pos)
-        typ = _type_from_bytes(memoryview(shell)[pos + 4 : pos + 4 + tlen])
-        return n, n_valid, valid, typ, pos + 4 + tlen
-
-    def _parse_list_shell(shell):
-        """v2 shell (list<struct> shred): list validity + arrow type +
-        PFOR-coded offsets over ALL n lists + element validity."""
-        import struct as _s
-
-        from .kernels.rle import rle_decode
-
-        n, n_valid, valid, typ, pos = _parse_shell(shell)
-        (olen,) = _s.unpack_from("<I", shell, pos)
-        pos += 4
-        offs = decode_array(bytes(memoryview(shell)[pos : pos + olen])) \
-            .to_numpy(zero_copy_only=False)
-        pos += olen
-        (has_enulls,) = _s.unpack_from("<B", shell, pos)
-        pos += 1
-        if has_enulls:
-            _, emask_len = _s.unpack_from("<QI", shell, pos)
-            pos += 12
-            evalid = rle_decode(
-                memoryview(shell)[pos : pos + emask_len]
-            ).astype(bool)
-        else:
-            evalid = None
-        return n, valid, typ, offs, evalid
-
-    def _parse_map_shell(shell):
-        """v3 shell (map<string,V> shred): map validity + arrow type +
-        PFOR-coded kv offsets over ALL n rows + key dictionary + the
-        dict-coded per-position key-index stream."""
-        import struct as _s
-
-        n, n_valid, valid, typ, pos = _parse_shell(shell)
-        (olen,) = _s.unpack_from("<I", shell, pos)
-        pos += 4
-        offs = decode_array(bytes(memoryview(shell)[pos : pos + olen])) \
-            .to_numpy(zero_copy_only=False)
-        pos += olen
-        n_keys, kdlen = _s.unpack_from("<HI", shell, pos)
-        pos += 6
-        key_names = []
-        kd = memoryview(shell)[pos : pos + kdlen]
-        kpos = 0
-        for _ in range(n_keys):
-            (klen,) = _s.unpack_from("<H", kd, kpos)
-            key_names.append(bytes(kd[kpos + 2 : kpos + 2 + klen]).decode())
-            kpos += 2 + klen
-        pos += kdlen
-        (ilen,) = _s.unpack_from("<I", shell, pos)
-        pos += 4
-        kidx = decode_array(bytes(memoryview(shell)[pos : pos + ilen])) \
-            .to_numpy(zero_copy_only=False)
-        return n, valid, typ, offs, key_names, kidx
-
-    def _expand_nulls(arr, n, valid):
-        if valid is None:
-            return arr
-        import numpy as np
-
-        n_valid = len(arr)
-        if n_valid == 0:
-            return pa.nulls(n, arr.type)
-        idx = np.zeros(n, dtype=np.int64)
-        idx[valid] = np.arange(n_valid)
-        return arr.take(pa.array(idx, type=pa.int64(), mask=~valid))
-
     def decode_partition(batches):
         import pyarrow.compute as pc
-
-        from .encode import BLOB_COL_PREFIX
 
         for b in batches:
             names = set(b.schema.names)
@@ -240,7 +146,7 @@ def make_decode_fn(columns: list[str], verify_crc: bool = True,
                 # (the old read_schema + read_table pair opened and
                 # footer-parsed every file twice)
                 pf = pq.ParquetFile(fpath)
-                entry = _read_entry(pf)
+                entry = embedded_entry(pf.schema_arrow) or {}
                 if expect_cols:
                     _verify_entry(
                         entry, fpath,
@@ -262,38 +168,20 @@ def make_decode_fn(columns: list[str], verify_crc: bool = True,
                 file_cols = []
                 for c in present:
                     base, _, sub = c.partition(".")
-                    m = ecols[base]
-                    if m.get("codec") in ("struct_shred", "list_shred",
-                                          "map_shred"):
-                        file_cols.append(BLOB_COL_PREFIX + base)  # shell
-                        kids = [sub] if sub else list(m["children"])
-                        if m["codec"] == "map_shred" and sub:
-                            # a key absent from this chunk is simply an
-                            # all-null projection, not a missing column
-                            kids = [k for k in kids if k in m["children"]]
-                        file_cols += [
-                            BLOB_COL_PREFIX + f"{base}.{k}" for k in kids
-                        ]
-                    else:
-                        file_cols.append(BLOB_COL_PREFIX + base)
+                    file_cols.append(BLOB_COL_PREFIX + base)
+                    file_cols += [BLOB_COL_PREFIX + f"{base}.{k}" for k in
+                                  shred.child_columns(ecols[base], sub) or ()]
                 t = (
                     pf.read(columns=list(dict.fromkeys(file_cols)))
                     if file_cols
                     else None
                 )
 
-                def _child(base, fname):
-                    blob = t.column(
-                        BLOB_COL_PREFIX + f"{base}.{fname}"
-                    )[0].as_py()
-                    if verify_crc:
-                        want = ecols[base]["children"][fname]["crc32"]
-                        if zlib.crc32(blob) != want:
-                            raise IOError(
-                                f"CRC mismatch for {base}.{fname} "
-                                f"in {fpath}"
-                            )
-                    return decode_array(blob)
+                def _blob(key, crc):
+                    blob = t.column(BLOB_COL_PREFIX + key)[0].as_py()
+                    if zlib.crc32(blob) != crc:
+                        raise IOError(f"CRC mismatch for {key} in {fpath}")
+                    return blob
 
                 def _decode_blob(name):
                     if name in absent:
@@ -301,131 +189,14 @@ def make_decode_fn(columns: list[str], verify_crc: bool = True,
                                         column_types[name])
                     base, _, sub = name.partition(".")
                     m = ecols[base]
-                    if m.get("codec") == "struct_shred":
-                        shell = t.column(BLOB_COL_PREFIX + base)[0].as_py()
-                        if verify_crc and zlib.crc32(shell) != m["crc32"]:
-                            raise IOError(
-                                f"CRC mismatch for {base} shell in {fpath}"
-                            )
-                        n, n_valid, valid, typ, _ = _parse_shell(shell)
-                        if sub:  # flat child projection
-                            return _expand_nulls(_child(base, sub), n, valid)
-                        kids = list(m["children"])
-                        children = [_child(base, k) for k in kids]
-                        fields = [typ.field(typ.get_field_index(k))
-                                  for k in kids]
-                        if n_valid == 0:
-                            return pa.nulls(n, pa.struct(fields)).cast(typ)
-                        st_arr = pa.StructArray.from_arrays(
-                            children, fields=fields
-                        )
-                        return _expand_nulls(st_arr, n, valid).cast(typ)
-                    if m.get("codec") == "list_shred":
-                        import numpy as np
-
-                        shell = t.column(BLOB_COL_PREFIX + base)[0].as_py()
-                        if verify_crc and zlib.crc32(shell) != m["crc32"]:
-                            raise IOError(
-                                f"CRC mismatch for {base} shell in {fpath}"
-                            )
-                        n, valid, typ, offs, evalid = _parse_list_shell(shell)
-                        n_elems = int(offs[-1]) if len(offs) else 0
-
-                        def _as_list(values):
-                            omask = (np.concatenate([~valid, [False]])
-                                     if valid is not None else None)
-                            off_pa = pa.array(offs, type=pa.int64(),
-                                              mask=omask)
-                            return pa.LargeListArray.from_arrays(
-                                off_pa, values
-                            )
-
-                        if sub:  # flat child projection: array<childT>
-                            child = _expand_nulls(
-                                _child(base, sub), n_elems, evalid
-                            )
-                            la = _as_list(child)
-                            want = column_types.get(name)
-                            return (la.cast(want)
-                                    if want is not None and la.type != want
-                                    else la)
-                        st = typ.value_type
-                        kids = list(m["children"])
-                        fields = [st.field(st.get_field_index(k))
-                                  for k in kids]
-                        children = [_child(base, k) for k in kids]
-                        if n_elems == 0 or (evalid is not None
-                                            and not evalid.any()):
-                            st_arr = pa.nulls(n_elems, pa.struct(fields))
-                        else:
-                            st_arr = _expand_nulls(
-                                pa.StructArray.from_arrays(children,
-                                                           fields=fields),
-                                n_elems, evalid,
-                            )
-                        return _as_list(st_arr).cast(typ)
-                    if m.get("codec") == "map_shred":
-                        import numpy as np
-
-                        shell = t.column(BLOB_COL_PREFIX + base)[0].as_py()
-                        if verify_crc and zlib.crc32(shell) != m["crc32"]:
-                            raise IOError(
-                                f"CRC mismatch for {base} shell in {fpath}"
-                            )
-                        n, valid, typ, offs, key_names, kidx = \
-                            _parse_map_shell(shell)
-
-                        if sub:  # per-key projection: value of FIRST
-                            # occurrence per row (pc.map_lookup parity),
-                            # null where the key is absent
-                            if sub not in key_names:
-                                want = column_types.get(name, typ.item_type)
-                                return pa.nulls(n, want)
-                            vals = _child(base, sub)
-                            i = key_names.index(sub)
-                            pos = np.flatnonzero(kidx == i)
-                            rows = np.searchsorted(offs, pos,
-                                                   side="right") - 1
-                            hit_rows, first = np.unique(rows,
-                                                        return_index=True)
-                            idx = np.zeros(n, dtype=np.int64)
-                            idx[hit_rows] = first
-                            present = np.zeros(n, dtype=bool)
-                            present[hit_rows] = True
-                            out = vals.take(pa.array(
-                                idx, type=pa.int64(), mask=~present
-                            ))
-                            want = column_types.get(name)
-                            return (out.cast(want)
-                                    if want is not None and out.type != want
-                                    else out)
-                        # full reconstruction: keys from the index
-                        # stream, items scattered back from per-key
-                        # blobs (stream order within each key)
-                        total = len(kidx)
-                        keys_arr = (
-                            pc.take(pa.array(key_names, typ.key_type),
-                                    pa.array(kidx, pa.int64()))
-                            if total else pa.array([], typ.key_type)
-                        )
-                        children = [_child(base, k) for k in key_names]
-                        if total:
-                            order = np.argsort(kidx, kind="stable")
-                            rank = np.empty(total, np.int64)
-                            rank[order] = np.arange(total)
-                            src = (pa.concat_arrays(children)
-                                   if children else
-                                   pa.array([], typ.item_type))
-                            items_arr = src.take(pa.array(rank, pa.int64()))
-                        else:
-                            items_arr = pa.array([], typ.item_type)
-                        omask = (np.concatenate([~valid, [False]])
-                                 if valid is not None else None)
-                        off_pa = pa.array(offs.astype(np.int32),
-                                          type=pa.int32(), mask=omask)
-                        return pa.MapArray.from_arrays(
-                            off_pa, keys_arr, items_arr
-                        ).cast(typ)
+                    want = column_types.get(name)
+                    if shred.child_columns(m) is not None:
+                        kids = m["children"]
+                        return shred.unshred(
+                            m, _blob(base, m["crc32"]),
+                            lambda k: decode_array(_blob(f"{base}.{k}",
+                                                         kids[k]["crc32"])),
+                            sub, want)
                     if sub:  # non-shredded nested: decode + prune
                         full = _decode_blob(base)
                         if pa.types.is_map(full.type):
@@ -434,15 +205,7 @@ def make_decode_fn(columns: list[str], verify_crc: bool = True,
                             return pc.map_lookup(full, query_key=sub,
                                                  occurrence="first")
                         return pc.struct_field(full, sub)
-                    blob = t.column(BLOB_COL_PREFIX + name)[0].as_py()
-                    if verify_crc:
-                        expect_crc = m["crc32"]
-                        if zlib.crc32(blob) != expect_crc:
-                            raise IOError(
-                                f"CRC mismatch for {name} in {fpath}"
-                            )
-                    arr = decode_array(blob)
-                    want = column_types.get(name)
+                    arr = decode_array(_blob(name, m["crc32"]))
                     if want is not None and arr.type != want:
                         # type-widening schema evolution (int32 chunks
                         # under an int64 schema); cast raises on any

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import tempfile
 import time
 import zlib
@@ -30,7 +29,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from . import manifest
+from . import manifest, shred
 from .codec import content_crc, encode_array
 from .plan import choose_codec, profile_array
 
@@ -46,262 +45,6 @@ __all__ = ["make_encode_fn", "BLOB_COL_PREFIX"]
 
 _MANIFEST_META_KEY = b"pgs_manifest_entry"
 BLOB_COL_PREFIX = "b_"
-
-
-def _encode_struct_shredded(arr: pa.Array) -> tuple[dict, dict]:
-    """Shred a TOP-LEVEL struct column Dremel-style: one self-
-    describing blob per child (stored as its own parquet column →
-    nested projection reads only that child's bytes) plus a tiny shell
-    blob carrying the struct type + validity. Children under a null
-    parent are dropped; decode re-expands from the shell mask.
-    Returns ({suffix: blob} with "" = shell, column meta)."""
-    import struct as _s
-
-    from .codec import _type_bytes, encode_array
-    from .plan import choose_codec, profile_array
-
-    n = len(arr)
-    a = arr.drop_null() if arr.null_count else arr
-    tb = _type_bytes(arr.type)
-    if arr.null_count:
-        from .kernels.rle import rle_encode
-
-        valid = arr.is_valid().to_numpy(zero_copy_only=False).astype(np.uint64)
-        mask = rle_encode(valid, 1)
-        shell = (_s.pack("<BQB", 1, n, 1)
-                 + _s.pack("<QI", n - arr.null_count, len(mask)) + mask
-                 + _s.pack("<I", len(tb)) + tb)
-    else:
-        shell = _s.pack("<BQB", 1, n, 0) + _s.pack("<I", len(tb)) + tb
-    blobs = {"": shell}
-    children_meta = {}
-    children = a.flatten() if len(a) else [
-        pa.array([], arr.type.field(i).type)
-        for i in range(arr.type.num_fields)
-    ]
-    for i, child in enumerate(children):
-        child = (child.combine_chunks()
-                 if isinstance(child, pa.ChunkedArray) else child)
-        fname = arr.type.field(i).name
-        c, e = choose_codec(profile_array(child, fname))
-        blob = encode_array(child, c, e)
-        blobs[fname] = blob
-        children_meta[fname] = {
-            "codec": c, "entropy": e, "enc_bytes": len(blob),
-            "crc32": zlib.crc32(blob),
-        }
-    meta = {
-        "codec": "struct_shred",
-        "entropy": "none",
-        "n": n,
-        "nulls": arr.null_count,
-        "min": None,
-        "max": None,
-        "raw_bytes": int(arr.nbytes),
-        "enc_bytes": sum(len(b) for b in blobs.values()),
-        "crc32": zlib.crc32(shell),
-        "children": children_meta,
-    }
-    return blobs, meta
-
-
-def _encode_list_struct_shredded(arr: pa.Array) -> tuple[dict, dict]:
-    """Shred a list<struct<...>> column (the realistic tool-call shape:
-    one transcript turn carries a variable-length list of typed call
-    records). Dremel-style: per struct-child blob over the FLATTENED
-    elements (so ``read_table(columns=["tool_calls.name"])`` reads and
-    decodes only that child's bytes) plus a shell carrying the list
-    offsets, list validity, element validity and the arrow type.
-    Returns ({suffix: blob} with "" = shell, column meta)."""
-    import struct as _s
-
-    import pyarrow.compute as pc
-
-    from .codec import _type_bytes, encode_array
-    from .kernels.rle import rle_encode
-    from .plan import choose_codec, profile_array
-
-    n = len(arr)
-    tb = _type_bytes(arr.type)
-    if arr.null_count:
-        valid = arr.is_valid().to_numpy(zero_copy_only=False).astype(np.uint64)
-        mask = rle_encode(valid, 1)
-        shell = (_s.pack("<BQB", 2, n, 1)
-                 + _s.pack("<QI", n - arr.null_count, len(mask)) + mask)
-    else:
-        shell = _s.pack("<BQB", 2, n, 0)
-    shell += _s.pack("<I", len(tb)) + tb
-    # offsets over ALL n lists (null list → 0 elements) — decoupled
-    # from validity so decode can rebuild either child or full column
-    lens = pc.list_value_length(arr).cast(pa.int64())
-    if lens.null_count:
-        lens = lens.fill_null(0)
-    lens_np = lens.to_numpy(zero_copy_only=False)
-    offs = np.zeros(n + 1, np.int64)
-    np.cumsum(lens_np, out=offs[1:])
-    off_blob = encode_array(pa.array(offs, pa.int64()), "pfor", "none")
-    shell += _s.pack("<I", len(off_blob)) + off_blob
-    elems = pc.list_flatten(arr)
-    if isinstance(elems, pa.ChunkedArray):
-        elems = elems.combine_chunks()
-    if elems.null_count:  # null struct ELEMENTS inside lists
-        evalid = elems.is_valid().to_numpy(zero_copy_only=False) \
-            .astype(np.uint64)
-        emask = rle_encode(evalid, 1)
-        shell += _s.pack("<BQI", 1, len(elems) - elems.null_count,
-                         len(emask)) + emask
-        elems_nn = elems.drop_null()
-    else:
-        shell += _s.pack("<B", 0)
-        elems_nn = elems
-    blobs = {"": shell}
-    children_meta = {}
-    st = arr.type.value_type
-    children = elems_nn.flatten() if len(elems_nn) else [
-        pa.array([], st.field(i).type) for i in range(st.num_fields)
-    ]
-    for i, child in enumerate(children):
-        child = (child.combine_chunks()
-                 if isinstance(child, pa.ChunkedArray) else child)
-        fname = st.field(i).name
-        c, e = choose_codec(profile_array(child, fname))
-        blob = encode_array(child, c, e)
-        blobs[fname] = blob
-        children_meta[fname] = {
-            "codec": c, "entropy": e, "enc_bytes": len(blob),
-            "crc32": zlib.crc32(blob),
-        }
-    meta = {
-        "codec": "list_shred",
-        "entropy": "none",
-        "n": n,
-        "nulls": arr.null_count,
-        "min": None,
-        "max": None,
-        "raw_bytes": int(arr.nbytes),
-        "enc_bytes": sum(len(b) for b in blobs.values()),
-        "crc32": zlib.crc32(shell),
-        "children": children_meta,
-    }
-    return blobs, meta
-
-
-# Map shredding guard: per-key value blobs only make sense for the
-# bounded-key-set telemetry shape (attrs maps with a handful of fixed
-# keys). High-cardinality or unruly keys fall back to the generic
-# nested codec — correctness is identical, only projection I/O differs.
-MAP_SHRED_MAX_KEYS = 32
-_MAP_KEY_OK = re.compile(r"[A-Za-z0-9_\-]{1,64}\Z")
-
-
-def _encode_map_shredded(arr: pa.Array) -> tuple[dict, dict] | None:
-    """Shred a map<string,V> column per KEY: one self-describing value
-    blob per distinct key (stored as its own parquet column) plus a
-    shell carrying validity, arrow type, per-row kv offsets and the
-    dict-coded key stream. ``read_table(columns=["attrs.k"])`` then
-    reads the shell + ONE key's value bytes (SURVEY §1.2 MAP row) —
-    other keys' values are never touched on disk.
-
-    Exact reconstruction: the key stream remembers each row's key order
-    (duplicates included), and per-key blobs hold that key's values in
-    stream order, so the full map round-trips bit-identically.
-
-    Returns None when the chunk's keys are unsuitable (non-string keys,
-    null keys, > MAP_SHRED_MAX_KEYS distinct, or names that don't fit a
-    parquet column) — the caller falls back to the generic path."""
-    import struct as _s
-
-    import pyarrow.compute as pc
-
-    from .codec import _type_bytes, encode_array
-    from .kernels.rle import rle_encode
-    from .plan import choose_codec, profile_array
-
-    if not (pa.types.is_string(arr.type.key_type)
-            or pa.types.is_large_string(arr.type.key_type)):
-        return None
-    n = len(arr)
-    a = arr.drop_null() if arr.null_count else arr
-    if len(a):
-        off = np.frombuffer(a.buffers()[1], np.int32, len(a) + 1,
-                            offset=a.offset * 4).astype(np.int64)
-        lo, hi = int(off[0]), int(off[-1])
-        keys = a.keys.slice(lo, hi - lo)
-        items = a.items.slice(lo, hi - lo)
-    else:
-        keys = pa.array([], arr.type.key_type)
-        items = pa.array([], arr.type.item_type)
-    if keys.null_count:
-        return None
-    uk = pc.unique(keys)
-    if len(uk) > MAP_SHRED_MAX_KEYS:
-        return None
-    key_names = sorted(uk.to_pylist())
-    if any(not _MAP_KEY_OK.match(k) for k in key_names):
-        return None
-
-    tb = _type_bytes(arr.type)
-    if arr.null_count:
-        valid = arr.is_valid().to_numpy(zero_copy_only=False) \
-            .astype(np.uint64)
-        mask = rle_encode(valid, 1)
-        shell = (_s.pack("<BQB", 3, n, 1)
-                 + _s.pack("<QI", n - arr.null_count, len(mask)) + mask)
-    else:
-        shell = _s.pack("<BQB", 3, n, 0)
-    shell += _s.pack("<I", len(tb)) + tb
-    # per-row kv counts over ALL n rows (null map → 0), like list shred
-    # (pyarrow has no list_value_length kernel for maps — use the
-    # offsets buffer; null slots may span garbage extents, zero them)
-    if n:
-        off_all = np.frombuffer(arr.buffers()[1], np.int32, n + 1,
-                                offset=arr.offset * 4).astype(np.int64)
-        lens_np = np.diff(off_all)
-        if arr.null_count:
-            vmask = arr.is_valid().to_numpy(zero_copy_only=False)
-            lens_np = np.where(vmask, lens_np, 0)
-    else:
-        lens_np = np.zeros(0, np.int64)
-    offs = np.zeros(n + 1, np.int64)
-    np.cumsum(lens_np, out=offs[1:])
-    off_blob = encode_array(pa.array(offs, pa.int64()), "pfor", "none")
-    shell += _s.pack("<I", len(off_blob)) + off_blob
-    # key dictionary (sorted) + per-position key indices (dict/RLE'd)
-    kd = b"".join(_s.pack("<H", len(k.encode())) + k.encode()
-                  for k in key_names)
-    shell += _s.pack("<HI", len(key_names), len(kd)) + kd
-    kidx = pc.index_in(keys, value_set=pa.array(key_names, keys.type)) \
-        .cast(pa.int32())
-    kidx_blob = encode_array(kidx, "dict", "none")
-    shell += _s.pack("<I", len(kidx_blob)) + kidx_blob
-
-    blobs = {"": shell}
-    children_meta = {}
-    ki = kidx.to_numpy(zero_copy_only=False)
-    for i, kname in enumerate(key_names):
-        vals = items.filter(pa.array(ki == i))
-        vals = (vals.combine_chunks()
-                if isinstance(vals, pa.ChunkedArray) else vals)
-        c, e = choose_codec(profile_array(vals, kname))
-        blob = encode_array(vals, c, e)
-        blobs[kname] = blob
-        children_meta[kname] = {
-            "codec": c, "entropy": e, "enc_bytes": len(blob),
-            "crc32": zlib.crc32(blob),
-        }
-    meta = {
-        "codec": "map_shred",
-        "entropy": "none",
-        "n": n,
-        "nulls": arr.null_count,
-        "min": None,
-        "max": None,
-        "raw_bytes": int(arr.nbytes),
-        "enc_bytes": sum(len(b) for b in blobs.values()),
-        "crc32": zlib.crc32(shell),
-        "children": children_meta,
-    }
-    return blobs, meta
 
 
 def _encode_one_column(arr: pa.Array, name: str,
@@ -396,12 +139,16 @@ def _write_chunk_file(path: str, tbl: pa.Table, entry: dict) -> None:
             os.unlink(tmp)
 
 
+def embedded_entry(schema: pa.Schema) -> dict | None:
+    """Manifest entry embedded in a chunk file's schema metadata."""
+    raw = (schema.metadata or {}).get(_MANIFEST_META_KEY)
+    return json.loads(raw) if raw else None
+
+
 def read_chunk_entry(path: str) -> dict | None:
     """Manifest entry embedded in an existing chunk file (resume path)."""
     try:
-        meta = pq.read_schema(path).metadata or {}
-        raw = meta.get(_MANIFEST_META_KEY)
-        return json.loads(raw) if raw else None
+        return embedded_entry(pq.read_schema(path))
     except Exception:
         return None  # unreadable/partial file → re-encode
 
@@ -458,23 +205,13 @@ def _encode_or_reuse(chunk: pa.Table, chunk_id: str, table_dir: str,
     blobs, columns_meta = {}, {}
     for name in chunk.column_names:
         arr = chunk.column(name).combine_chunks()
-        shredder = None
-        if pa.types.is_struct(arr.type):
-            shredder = _encode_struct_shredded
-        elif ((pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type))
-                and pa.types.is_struct(arr.type.value_type)):
-            shredder = _encode_list_struct_shredded
-        elif pa.types.is_map(arr.type):
-            shredder = _encode_map_shredded  # may decline (None)
-        if shredder is not None and name not in overrides:
-            shredded = shredder(arr)
-            if shredded is not None:
-                parts, meta = shredded
-                columns_meta[name] = meta
-                for suffix, blob in parts.items():
-                    key = name if suffix == "" else f"{name}.{suffix}"
-                    blobs[BLOB_COL_PREFIX + key] = blob
-                continue
+        shredded = None if name in overrides else shred.shred(arr)
+        if shredded is not None:
+            parts, columns_meta[name] = shredded
+            for suffix, blob in parts.items():
+                key = f"{name}.{suffix}" if suffix else name
+                blobs[BLOB_COL_PREFIX + key] = blob
+            continue
         blob, meta = _encode_one_column(
             arr, name, overrides.get(name),
             with_bloom=name in bloom_cols,

@@ -422,6 +422,7 @@ def test_map_shred_kernel_roundtrip_and_projection(tmp_path):
     import os
 
     from parquet_go_spark import encode as E
+    from parquet_go_spark import shred
     from parquet_go_spark.decode import make_decode_fn
 
     t = pa.map_(pa.string(), pa.int64())
@@ -454,10 +455,10 @@ def test_map_shred_kernel_roundtrip_and_projection(tmp_path):
     assert out.column("attrs.zz").to_pylist() == [None] * 6
 
     # guards: >MAP_SHRED_MAX_KEYS distinct or parquet-unsafe key names
-    assert E._encode_map_shredded(
+    assert shred.shred(
         pa.array([[(f"k{j}", j)] for j in range(40)], type=t)
     ) is None
-    assert E._encode_map_shredded(
+    assert shred.shred(
         pa.array([[("a.b", 1)]], type=t)
     ) is None
 
@@ -491,3 +492,196 @@ def test_selector_sampled_distinct_not_diluted_by_chunk_size():
     # and a genuinely low-cardinality column of the same size keeps dict
     lowcard = pa.array(["user", "assistant", "tool", "system"] * 75_000)
     assert choose_codec(profile_array(lowcard, "role"))[0] == "dict"
+
+
+def _nested_wire_table() -> pa.Table:
+    """Fixed chunk covering every shredded shell shape and its edges."""
+    n = 12
+    st_t = pa.struct([("u", pa.int64()), ("tags", pa.list_(pa.string())),
+                      ("s", pa.string())])
+    ev_t = pa.struct([("name", pa.string()), ("v", pa.float64())])
+    meta = pa.array(
+        [None if i % 4 == 1 else
+         {"u": i * 7 - 20, "tags": None if i % 5 == 0 else
+          [f"t{j}" for j in range(i % 3)], "s": f"row-{i}"}
+         for i in range(n)], st_t)
+
+    def calls(i):
+        if i % 6 == 2:
+            return None
+        if i % 6 == 4:
+            return []
+        return [None if (i + j) % 4 == 3 else
+                {"name": ("read", "write", None)[(i + j) % 3], "v": i + j / 8}
+                for j in range(1 + i % 3)]
+
+    rows = [calls(i) for i in range(n)]
+    attrs = [None if i % 5 == 3 else
+             [("lat", i / 4), ("ok", None if i % 2 else 1.5)]
+             + ([("lat", -1.0)] if i % 4 == 0 else [])
+             for i in range(n)]
+    dotted = [None if i % 7 == 6 else [("a.b", float(i)), ("c", i / 2)]
+              for i in range(n)]
+    return pa.table({
+        "id": pa.array(range(n), pa.int64()),
+        "meta": meta,
+        "calls": pa.array(rows, pa.list_(ev_t)),
+        "calls_l": pa.array(rows, pa.large_list(ev_t)),
+        "attrs": pa.array(attrs, pa.map_(pa.string(), pa.float64())),
+        "dotted": pa.array(dotted, pa.map_(pa.string(), pa.float64())),
+        "note": pa.array([None if i % 3 == 0 else f"note {i}"
+                          for i in range(n)], pa.string()),
+    })
+
+
+def _nested_wire_digests(tmp_path, chunk: pa.Table, chunk_id: str):
+    import hashlib
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark import encode as E
+
+    os.makedirs(os.path.join(tmp_path, "chunks"), exist_ok=True)
+    entry = E._encode_or_reuse(chunk, chunk_id, str(tmp_path), ("id",), {},
+                               False, (), "a0")
+    entry.pop("encode_s")
+    blobs = pq.read_table(os.path.join(tmp_path, entry["file"]))
+    return ({c: hashlib.sha256(blobs.column(c)[0].as_py()).hexdigest()
+             for c in blobs.column_names},
+            hashlib.sha256(json.dumps(entry, sort_keys=True).encode())
+            .hexdigest())
+
+
+# SHA-256 of every blob column, then of the manifest entry without
+# encode_s (JSON, sorted keys). Any change here is a wire-format change.
+_NESTED_WIRE_PINS = {
+    "full": ({
+        "b_id": "7bc77629670d02c39d1096938df1afe705d898dde34d437f9a6df36a68acf225",
+        "b_meta": "2cd2c8bb651700edd9b32bdae12f2f3dc7b0880c34566a39d5e5c18bd7349f4a",
+        "b_meta.u": "3832375abfd603de75a47ac3050238941a4f372f0510243dadc751ec2dcee8fa",
+        "b_meta.tags": "2d27006d0a02b3adda2447cc6c3be3ff88c29c4a83f530524931c4916f16997c",
+        "b_meta.s": "cda00bf21a854eab2c32b3415008acb3ab85d56cf6f901047a8e987052c04d0e",
+        "b_calls": "bdfd8b2bf55abe09c57c99aa9ee709d895ea247a88941763a153b8dcdc67ca16",
+        "b_calls.name": "e3339401aadc280e4a088814f8967066d2bf93b0cc6d14d2d6310198fc441d59",
+        "b_calls.v": "ed6142f75713a4ed7a4ac8edede25b004219d8c3f5543d2ee4488508f49a42b3",
+        "b_calls_l": "077677c53ffee9b515ca68c12ab77e05191c422f2784428364624039bc25f6e6",
+        "b_calls_l.name": "e3339401aadc280e4a088814f8967066d2bf93b0cc6d14d2d6310198fc441d59",
+        "b_calls_l.v": "ed6142f75713a4ed7a4ac8edede25b004219d8c3f5543d2ee4488508f49a42b3",
+        "b_attrs": "dcb4375efcbcc4152f38eda0f4cdf6cc788732174ebdf1295c207c1459786e58",
+        "b_attrs.lat": "857e7cbb08a636b6b2b9b82bdfc52510746bb9e1b06d55ed26a4f584c8c316df",
+        "b_attrs.ok": "7af7aaba9c93c76c7085d049dca28c83b76a2ff32ff66cb458e53345364114dc",
+        "b_dotted": "6551cb984abfecb53340687c80de19aac25e566149255b0395a666f4d91aa280",
+        "b_note": "611755cce410640d11712b139b9b7092d34b7f1c6a0d9bffa6a54e6cdd71d1ed",
+    }, "9b083deaa3be70ad09981e1984c21e273edb712ae451ffb685fc8ede13206adb"),
+    "sliced": ({
+        "b_id": "53fa34378d91c463911577c457cb26c31b389aa5b1481ffb6cdb924da74a09d3",
+        "b_meta": "3da748df6f4a1fa45e6c63de1f0b31fe7eaf61c360a4eff0ff567975d9452c28",
+        "b_meta.u": "bd9ece73150ff6a895fb457350553e5fb4919589fd4fb20dc38d643be6fe4f21",
+        "b_meta.tags": "1af49a3c1cc0e7dfb58caa9cb1da3a605aa2a84eb16a844f9134fd3822e39eba",
+        "b_meta.s": "ec54873c012f7645f382a74df38f7dfb23d7235e9dbfa189065acedb834c018e",
+        "b_calls": "08113aaba60079d542f3a57297d1bd6b727df6def1b405d3895396a560ebef1c",
+        "b_calls.name": "648766a861345f9230a9f0e380f3bbfc3dc8409cd3e9dff7de7775f47a098218",
+        "b_calls.v": "fe24c5b79c7ac767a4ffe5b6cba95e2c98869c98af3cdb230ea809bfdbc85379",
+        "b_calls_l": "42f0edade74556eeac57ba7ef7461c4973bb80ad7356735b246829d973b695bb",
+        "b_calls_l.name": "648766a861345f9230a9f0e380f3bbfc3dc8409cd3e9dff7de7775f47a098218",
+        "b_calls_l.v": "fe24c5b79c7ac767a4ffe5b6cba95e2c98869c98af3cdb230ea809bfdbc85379",
+        "b_attrs": "893b9031dba5543861477fa84345eef8621af08b3836b2ae8cd940f16053ec92",
+        "b_attrs.lat": "0f2138789ffa9287fda87a634e61fa887e57564356453d0d338aba53e36005e6",
+        "b_attrs.ok": "10d7eadac139c7b3028397551ef4c70fc30fe9da83785be06ee137a16d1f4cbf",
+        "b_dotted": "3ac7a56bd135e901e550957da0aa39e3e7ae7305a394c09ec76fed0b7643942c",
+        "b_note": "5dc402df80456ba9d04104920b3dbab0f255fb2b3927663201acf32d75a5f9c8",
+    }, "c0d91e61bfe8adb4e5896ad37445bc6b56a7ea264004732554c03a6f1644e25e"),
+    "allnull": ({
+        "b_id": "b9bba4ba37bc0e0cd0bac4581a3e0d39046b075f2dd850598ef2909b9f18f35f",
+        "b_meta": "198076eeafcee6e24deb3760ee39c94b98d653f92980656c3ee556dc5ccad4ee",
+        "b_meta.u": "a70525b2857daaeb0b509f2143a227b8b5a88344b4a024b1cb80523db6fd7602",
+        "b_meta.tags": "165b6cd8df32b5e014bf86b8aa8808a08de957339ccf99ac5ac9db46440b3821",
+        "b_meta.s": "6e36c61772cdad187dab51a168e031464a44b71cdeaaa6099e041512c5d6061b",
+        "b_calls": "39fafa649a624e3ffcbdcb024e1d94497c60ee0699ba304629f4c2c360003d23",
+        "b_calls.name": "6e36c61772cdad187dab51a168e031464a44b71cdeaaa6099e041512c5d6061b",
+        "b_calls.v": "c5b162b890d5a34d16a2ceecc92cd15492744695dc8ecc3e55880821615c8248",
+        "b_calls_l": "475644851d966cb3608d8c52539a693257eaa88b75f6ffe2fff0a5269699a743",
+        "b_calls_l.name": "6e36c61772cdad187dab51a168e031464a44b71cdeaaa6099e041512c5d6061b",
+        "b_calls_l.v": "c5b162b890d5a34d16a2ceecc92cd15492744695dc8ecc3e55880821615c8248",
+        "b_attrs": "939554e20e13128f55a80db9c4cb5554ca6ce821b59657f8d0a065f9ac22040d",
+        "b_dotted": "939554e20e13128f55a80db9c4cb5554ca6ce821b59657f8d0a065f9ac22040d",
+        "b_note": "d7156a444e02d6b5047513e8f0c2e1e79a0a8f1a2c4ee39185a74e25074a0d0b",
+    }, "634ee72d831154893031772ef09741477f3e96ba776db811f8f6f3a0e0872912"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_NESTED_WIRE_PINS))
+def test_nested_wire_format_pinned(case, tmp_path):
+    """Shredded struct, list<struct>, large_list<struct> and map shells,
+    their child blobs, a declined (dotted-key) map and a nullable string
+    encode to fixed bytes and a fixed manifest entry — whole, sliced at
+    a non-zero offset, and all-null — and decode back to the input."""
+    import os
+
+    from parquet_go_spark.decode import make_decode_fn
+
+    t = _nested_wire_table()
+    chunk = {
+        "full": t,
+        "sliced": t.slice(5),
+        "allnull": pa.table({c: pa.nulls(5, t.schema.field(c).type)
+                             for c in t.column_names}),
+    }[case]
+    chunk_id = {"full": "w00001", "sliced": "w00002", "allnull": "w00003"}[case]
+    blobs, entry = _nested_wire_digests(tmp_path, chunk, chunk_id)
+    assert (blobs, entry) == _NESTED_WIRE_PINS[case]
+    path = os.path.join(tmp_path, "chunks", f"chunk-{chunk_id}.parquet")
+    batch = pa.RecordBatch.from_pydict({"file": pa.array([path])})
+    out = pa.Table.from_batches(
+        list(make_decode_fn(chunk.column_names)(iter([batch])))
+    )
+    assert out.equals(chunk.combine_chunks())
+
+
+def test_shred_null_rows_spanning_child_values(tmp_path):
+    """A null list or map row may span child values in the arrow
+    buffers (Arrow producers need not zero its extent). Shredding must
+    treat it as 0 entries: the whole column and each projection decode
+    to the logical values."""
+    import os
+
+    from parquet_go_spark import encode as E
+    from parquet_go_spark.decode import make_decode_fn
+
+    st_t = pa.struct([("name", pa.string()), ("v", pa.int64())])
+    offs = np.array([0, 2, 4, 6], np.int32)
+    mask = pa.array([False, True, False])
+    calls = pa.ListArray.from_arrays(
+        pa.array(offs), pa.array([{"name": f"n{i}", "v": i}
+                                  for i in range(6)], st_t), mask=mask)
+    mt = pa.map_(pa.string(), pa.float64())
+    entries = pa.StructArray.from_arrays(
+        [pa.array(list("abcabc")), pa.array([1.0, 2, 3, 4, 5, 6])],
+        fields=[mt.key_field, mt.item_field])
+    attrs = pa.Array.from_buffers(
+        mt, 3, [pa.compute.invert(mask).buffers()[1], pa.py_buffer(offs)],
+        children=[entries], null_count=1)
+    chunk = pa.table({"id": pa.array([0, 1, 2], pa.int64()),
+                      "calls": calls, "attrs": attrs})
+    os.makedirs(os.path.join(tmp_path, "chunks"))
+    entry = E._encode_or_reuse(chunk, "z00001", str(tmp_path), ("id",), {},
+                               False, (), "a0")
+    assert entry["columns"]["calls"]["codec"] == "list_shred"
+    assert entry["columns"]["attrs"]["codec"] == "map_shred"
+    batch = pa.RecordBatch.from_pydict(
+        {"file": pa.array([os.path.join(tmp_path, entry["file"])])})
+
+    def read(cols, types=None):
+        fn = make_decode_fn(cols, column_types=types)
+        return pa.Table.from_batches(list(fn(iter([batch]))))
+
+    full = read(["calls", "attrs"])
+    assert full.column("calls").to_pylist() == calls.to_pylist()
+    assert full.column("attrs").to_pylist() == attrs.to_pylist()
+    got = read(["calls.name", "attrs.c"],
+               {"calls.name": pa.list_(pa.string()), "attrs.c": pa.float64()})
+    assert got.column("calls.name").to_pylist() == [["n0", "n1"], None,
+                                                    ["n4", "n5"]]
+    assert got.column("attrs.c").to_pylist() == [None, None, 6.0]
