@@ -19,11 +19,16 @@ micro-batch commit stays O(batch), not O(table).
 Layout under a table dir:
 
     chunks/chunk-<key>.parquet           one file per chunk (blob rows)
-    _manifests/manifest-<n>-<shard>.json entries for one shard,
-                                         written by snapshot n
+    _manifests/manifest-<token>-[m-]<shard>.json
+                                         entries for one shard
     _manifests/snap-<n>.json             snapshot n's listing
                                          (shard refs + metadata)
     _manifest_list.json                  current snapshot pointer
+
+``_shard_file`` names every shard file: ``<shard>`` is the shard key
+(``root`` if empty), ``<token>`` the snapshot id on the driver plane or
+a random per-commit token on the task plane, ``m-`` marks a shard a
+task-plane append merged.
 
 Every ref in a listing carries its shard's totals (n_chunks, n_rows,
 raw_bytes, enc_bytes). Tables from before 0.2 (one flat
@@ -37,20 +42,29 @@ rows``. On the driver plane it runs over the loaded entry list; on the
 task plane ``scan_shards`` runs it inside Spark tasks, shard file by
 shard file, and returns the rows as a DataFrame. ``_task_plane`` is the
 one test that picks the plane, for commits and reads alike.
+
+Every task-plane job is one ``fn(rows) -> rows`` run by ``_run_tasks``
+(``mapInArrow``): the ``scan_shards`` shard scan; the shard-file write
+and the append merge of ``commit_in_tasks``; and the chunk-dir listing
+(``_list_chunks``) and chunk unlink (``_unlink_chunks``) of
+expire_snapshots, whose driver plane applies the same two functions.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
+import itertools
 import json
 import os
 import tempfile
+import uuid
 from typing import Any
 
-__all__ = ["commit", "commit_shards", "load", "load_refs", "scan_shards",
-           "expire_snapshots", "list_chunk_files", "stat_value",
-           "check_chunk_layout", "ENGINE_VERSION",
-           "IncompatibleTableError"]
+__all__ = ["commit", "commit_shards", "commit_in_tasks", "load",
+           "load_refs", "scan_shards", "expire_snapshots",
+           "list_chunk_files", "stat_value", "check_chunk_layout",
+           "ENGINE_VERSION", "IncompatibleTableError"]
 
 ENGINE_VERSION = "parquet_go_spark-0.2.0"
 
@@ -158,10 +172,11 @@ _LOCK_TIMEOUT_S = 120.0
 
 
 class CommitConflict(RuntimeError):
-    """Another writer holds the table's commit lock."""
+    """Another writer holds the table's commit lock, or (StaleParent)
+    committed after this commit's parent was read."""
 
 
-class StaleParent(RuntimeError):
+class StaleParent(CommitConflict):
     """The snapshot this commit was prepared against is no longer
     current (optimistic concurrency: re-prepare against the new parent
     and retry)."""
@@ -247,9 +262,23 @@ def _commit_lock(table_dir: str, timeout: float):
             pass
 
 
+@contextlib.contextmanager
+def _locked_parent(table_dir: str, timeout: float, expect_parent):
+    """Hold the commit lock and yield the current listing (the parent
+    of the snapshot being committed). StaleParent if ``expect_parent``
+    is given and is no longer the current snapshot id."""
+    with _commit_lock(table_dir, timeout):
+        prev = load_refs(table_dir)
+        cur = prev["snapshot_id"] if prev else None
+        if expect_parent is not _EXPECT_ANY and cur != expect_parent:
+            raise StaleParent(f"prepared against snapshot {expect_parent}, "
+                              f"current is {cur}")
+        yield prev
+
+
 def commit(table_dir: str, entries: list[dict], schema_ddl: str,
            extra: dict | None = None, append: bool = False,
-           lock_timeout: float = 30.0) -> int:
+           lock_timeout: float = 30.0, expect_parent=_EXPECT_ANY) -> int:
     """Write changed manifest shards + snap-<n>.json, then atomically
     swing _manifest_list.json — all under the table's commit lock
     (optimistic writers queue; a crashed writer's stale lock is
@@ -261,9 +290,12 @@ def commit(table_dir: str, entries: list[dict], schema_ddl: str,
     carry their file AND their per-shard totals forward, so listing
     totals are O(shards) sums and the driver never materializes the
     full entry list. At the 10¹²-turn frame a streaming micro-batch
-    commit therefore reads O(batch) manifest bytes, not O(table)."""
-    with _commit_lock(table_dir, lock_timeout):
-        prev = load_refs(table_dir)
+    commit therefore reads O(batch) manifest bytes, not O(table).
+
+    ``append=False`` drops every parent shard the entries do not touch,
+    so a rewrite built from an earlier listing passes its id as
+    ``expect_parent``: StaleParent (a CommitConflict) if it moved."""
+    with _locked_parent(table_dir, lock_timeout, expect_parent) as prev:
         snapshot_id = (prev["snapshot_id"] + 1) if prev else 0
         prev_refs = ({r["shard"]: r for r in prev["manifest_shards"]}
                      if prev else {})
@@ -273,9 +305,14 @@ def commit(table_dir: str, entries: list[dict], schema_ddl: str,
         for shard, ents in new_by_shard.items():
             refs.append(_merge_shard(
                 table_dir, shard, prev_refs.get(shard), ents,
-                f"manifest-{snapshot_id}-{shard or 'root'}.json", append,
+                _shard_file(snapshot_id, shard), append,
             ))
         return _publish(table_dir, prev, refs, schema_ddl, extra)
+
+
+def _shard_file(token, shard: str, merged: bool = False) -> str:
+    """The one shard file name rule (see the module docstring)."""
+    return f"manifest-{token}-{'m-' if merged else ''}{shard or 'root'}.json"
 
 
 def _shard_totals(ents: list[dict]) -> dict:
@@ -301,15 +338,12 @@ def _task_plane(spark, n_chunks: int) -> bool:
     return spark is not None and n_chunks >= DISTRIBUTED_MANIFEST_MIN_CHUNKS
 
 
-def scan_shards(spark, table_dir: str, shard_files: list[str], fn,
-                ddl: str):
-    """The task plane of every manifest reader: each task reads whole
-    shard files (``shard_files``, relative to ``table_dir``) with
-    ``_read_shard``, applies ``fn(entries) -> rows`` to each, and yields
-    the rows (dicts keyed by the ``ddl`` column names) as Arrow batches.
-    The driver plane applies the same ``fn`` to the loaded entry list,
-    so a reader writes its per-entry logic once. Returns the lazy
-    DataFrame of all rows; the driver never sees a chunk entry."""
+def _run_tasks(df, fn, ddl: str):
+    """The one task runner of every task-plane manifest job: each task
+    hands its input rows (dicts keyed by ``df``'s columns) to
+    ``fn(rows) -> rows`` and yields the output rows (dicts keyed by the
+    ``ddl`` column names) as Arrow batches of at most 65,536 rows
+    (``mapInArrow``). Returns the lazy output DataFrame."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
@@ -317,15 +351,37 @@ def scan_shards(spark, table_dir: str, shard_files: list[str], fn,
     schema = _parse_datatype_string(ddl)
     arrow_schema = to_arrow_schema(schema)
 
-    def scan(batches):
-        for b in batches:
-            for f in b.column("file").to_pylist():
-                rows = fn(_read_shard(table_dir, {"file": f}))
-                yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+    def run(batches):
+        out = iter(fn(r for b in batches for r in b.to_pylist()))
+        while rows := list(itertools.islice(out, 65_536)):
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-    par = min(len(shard_files), spark.sparkContext.defaultParallelism) or 1
-    return (spark.createDataFrame([(f,) for f in shard_files], "file string")
-            .repartition(par).mapInArrow(scan, schema))
+    return df.mapInArrow(run, schema)
+
+
+def _rows_df(spark, rows: list[tuple], ddl: str):
+    """Driver-held job rows spread over up to defaultParallelism tasks."""
+    par = min(len(rows), spark.sparkContext.defaultParallelism) or 1
+    return spark.createDataFrame(rows, ddl).repartition(par)
+
+
+def scan_shards(spark, table_dir: str, shard_files: list[str], fn,
+                ddl: str):
+    """The task plane of every manifest reader: each task reads whole
+    shard files (``shard_files``, relative to ``table_dir``) with
+    ``_read_shard`` and applies ``fn(entries) -> rows`` (``ddl``
+    columns) to each. The driver plane applies the same ``fn`` to the
+    loaded entry list, so a reader writes its per-entry logic once.
+    Returns the lazy DataFrame of all rows; the driver never sees a
+    chunk entry."""
+
+    def scan(rows):
+        for r in rows:
+            yield from fn(_read_shard(table_dir, r))
+
+    return _run_tasks(
+        _rows_df(spark, [(f,) for f in shard_files], "file string"),
+        scan, ddl)
 
 
 def _merge_shard(table_dir: str, shard: str, parent_ref: dict | None,
@@ -450,21 +506,85 @@ def commit_shards(table_dir: str, shard_refs: list[dict],
 
     Each ref: {shard, file (relative), n_chunks, n_rows, raw_bytes,
     enc_bytes}. The ref list must describe the FULL snapshot — append
-    merges are prepared by the caller (table._commit_append_distributed
-    merges overlapping shards task-side) and validated here via
+    merges are prepared by the caller (``commit_in_tasks`` merges
+    overlapping shards task-side) and validated here via
     ``expect_parent``: if the current snapshot is no longer the one the
     refs were prepared against, StaleParent is raised so the caller can
     re-merge and retry (optimistic concurrency)."""
-    with _commit_lock(table_dir, lock_timeout):
-        prev = load_refs(table_dir)
-        if expect_parent is not _EXPECT_ANY:
-            cur = prev["snapshot_id"] if prev else None
-            if cur != expect_parent:
-                raise StaleParent(
-                    f"prepared against snapshot {expect_parent}, "
-                    f"current is {cur}"
-                )
+    with _locked_parent(table_dir, lock_timeout, expect_parent) as prev:
         return _publish(table_dir, prev, shard_refs, schema_ddl, extra)
+
+
+_REF_DDL = ("shard string, file string, n_chunks long, n_rows long, "
+            "raw_bytes long, enc_bytes long")
+
+
+def commit_in_tasks(entries_df, table_dir: str, schema_ddl: str,
+                    extra: dict | None = None,
+                    append: bool = False) -> tuple[int, list[dict]]:
+    """Task-plane commit of an encode job's (chunk_id, entry_json) rows;
+    returns (snapshot id, the batch's shard refs with totals and
+    ``reused_chunks``). The driver handles only O(shards) refs.
+
+    Rows are exchanged on their ``_shard_of`` key and each task writes
+    whole shard files (``_merge_shard`` with no parent) before the lock
+    is taken; expire_snapshots spares them via the GC floor (see
+    ``_cleanup_manifest_files``). An append then merges every shard it
+    shares with the parent inside tasks by the driver commit's rule
+    (``_merge_shard``) and carries untouched parent refs forward. That
+    parent is read outside the lock: on StaleParent from
+    ``commit_shards(expect_parent=...)`` the merge re-runs."""
+    spark = entries_df.sparkSession
+    token = uuid.uuid4().hex[:12]
+
+    def write(rows):
+        by_shard = _group_by_shard(json.loads(r["entry_json"]) for r in rows)
+        for shard, ents in by_shard.items():
+            yield {**_merge_shard(table_dir, shard, None, ents,
+                                  _shard_file(token, shard)),
+                   "reused_chunks": sum(1 for e in ents if e.get("reused"))}
+
+    keyed = _run_tasks(
+        entries_df,
+        lambda rows: ({**r, "shard": _shard_of(r["chunk_id"])} for r in rows),
+        "chunk_id string, entry_json string, shard string")
+    new_refs = [r.asDict() for r in _run_tasks(
+        keyed.repartition("shard"), write,
+        _REF_DDL + ", reused_chunks long").collect()]
+    if not append:
+        return commit_shards(table_dir, new_refs, schema_ddl,
+                             extra=extra), new_refs
+    new_by_shard = {r["shard"]: r for r in new_refs}
+    for _attempt in range(10):
+        prev = load_refs(table_dir)
+        final = {r["shard"]: r
+                 for r in (prev["manifest_shards"] if prev else [])}
+        work = [(s, final[s]["file"], new_by_shard[s]["file"])
+                for s in sorted(set(final) & set(new_by_shard))]
+        mtoken = uuid.uuid4().hex[:12]
+
+        def merge(rows):
+            for r in rows:
+                yield _merge_shard(
+                    table_dir, r["shard"], {"file": r["parent_file"]},
+                    _read_shard(table_dir, {"file": r["new_file"]}),
+                    _shard_file(mtoken, r["shard"], merged=True))
+
+        if work:
+            wdf = _rows_df(spark, work, "shard string, parent_file string, "
+                                        "new_file string")
+            final.update((r["shard"], r.asDict())
+                         for r in _run_tasks(wdf, merge, _REF_DDL).collect())
+        for s, r in new_by_shard.items():
+            final.setdefault(s, r)
+        try:
+            return commit_shards(
+                table_dir, list(final.values()), schema_ddl, extra=extra,
+                expect_parent=prev["snapshot_id"] if prev else None,
+            ), new_refs
+        except StaleParent:
+            continue  # another commit landed: re-merge against it
+    raise CommitConflict("append commit lost the parent race 10 times")
 
 
 def _snapshot_ids_on_disk(mdir: str) -> set[int]:
@@ -602,32 +722,35 @@ def expire_snapshots(table_dir: str, keep: int = 2,
         # begin_inflight); failing that, the last commit is the floor
         floor = _gc_floor(table_dir)
         cdir = os.path.join(table_dir, "chunks")
+        unlink = functools.partial(_unlink_chunks, cdir)
         if _task_plane(spark, current["n_chunks"]):
-            keep_df = scan_shards(spark, table_dir, shard_files, referenced,
-                                  "name string")
-            deleted_chunks = _unlink_unreferenced_in_tasks(
-                spark, cdir, keep_df, floor)
+            # list, anti-join and unlink inside tasks (object stores list
+            # in parallel by prefix; the local-FS stand-in is one task):
+            # a mass crash can leave O(millions) orphans, too many for a
+            # driver-side list. Only the per-task counts come back.
+            from pyspark.sql import functions as F
+
+            doomed = (_run_tasks(spark.createDataFrame([(cdir,)], "d string"),
+                                 _list_chunks, "name string, mtime double")
+                      .filter(F.col("mtime") < F.lit(floor))
+                      .join(scan_shards(spark, table_dir, shard_files,
+                                        referenced, "name string"),
+                            "name", "left_anti"))
+            counts = _run_tasks(
+                doomed.repartition(spark.sparkContext.defaultParallelism),
+                unlink, "n long").collect()
         else:
             keep_files = {r["name"] for f in shard_files
                           for r in referenced(_read_shard(table_dir,
                                                           {"file": f}))}
-            deleted_chunks = 0
-            for fn in (os.listdir(cdir) if os.path.isdir(cdir) else ()):
-                if not fn.endswith(".parquet") or fn in keep_files:
-                    continue
-                fpath = os.path.join(cdir, fn)
-                try:
-                    if os.path.getmtime(fpath) >= floor:
-                        continue  # in-flight, uncommitted
-                    os.unlink(fpath)
-                    deleted_chunks += 1
-                except OSError:
-                    pass
+            counts = unlink(r for r in _list_chunks([{"d": cdir}])
+                            if r["mtime"] < floor
+                            and r["name"] not in keep_files)
         _cleanup_manifest_files(mdir, expired, keep_shards, floor)
         return {
             "expired_snapshots": len(expired),
             "retained_snapshots": retained,
-            "deleted_chunks": deleted_chunks,
+            "deleted_chunks": sum(r["n"] for r in counts),
         }
 
 
@@ -657,10 +780,9 @@ def _cleanup_manifest_files(mdir: str, expired: list[int],
                             floor: float = float("inf")) -> None:
     """Delete expired snapshot listings and unreferenced shard files —
     EXCEPT shard files at/after ``floor`` (the GC floor): an encode
-    job's _write_shards_distributed / _commit_append_distributed merge
-    tasks write manifest-* files BEFORE taking the commit lock, so a
-    concurrent expire racing that window must spare them exactly like
-    uncommitted chunk files. Crashed attempts' orphan shards lose
+    job's ``commit_in_tasks`` write and merge tasks write manifest-*
+    files BEFORE taking the commit lock, so a concurrent expire racing
+    that window must spare them exactly like uncommitted chunk files. Crashed attempts' orphan shards lose
     protection when their in-flight marker passes INFLIGHT_TTL_S and
     are swept by the next expire."""
     expired_set = set(expired)
@@ -682,65 +804,32 @@ def _cleanup_manifest_files(mdir: str, expired: list[int],
                 pass
 
 
-def _unlink_unreferenced_in_tasks(spark, cdir: str, keep_df,
-                                  floor: float) -> int:
-    """Task-plane chunk GC: the chunks dir is listed executor-side
-    (object stores list in parallel by prefix; the local-FS stand-in is
-    one streaming task), anti-joined with ``keep_df`` (referenced chunk
-    names) and the unreferenced files older than ``floor`` are unlinked
-    INSIDE tasks (a mass-crash can leave O(millions) orphans — a
-    driver-side list would balloon). Returns the number deleted."""
-    import pandas as _pd
-    from pyspark.sql import functions as F
+def _list_chunks(rows):
+    """Chunk-dir listing job: ``{"d": chunks dir}`` rows → one
+    ``{"name", "mtime"}`` row per chunk file present."""
+    for r in rows:
+        d = r["d"]
+        for fn in (os.listdir(d) if os.path.isdir(d) else ()):
+            if not fn.endswith(".parquet"):
+                continue
+            try:
+                yield {"name": fn,
+                       "mtime": os.path.getmtime(os.path.join(d, fn))}
+            except OSError:
+                pass
 
-    def list_chunks(pdfs):
-        import os as _os
 
-        for pdf in pdfs:
-            for d in pdf["d"]:
-                if not _os.path.isdir(d):
-                    continue
-                batch = []
-                for fn in _os.listdir(d):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    try:
-                        m = _os.path.getmtime(_os.path.join(d, fn))
-                    except OSError:
-                        continue
-                    batch.append((fn, m))
-                    if len(batch) >= 65536:
-                        yield _pd.DataFrame(batch,
-                                            columns=["name", "mtime"])
-                        batch = []
-                if batch:
-                    yield _pd.DataFrame(batch, columns=["name", "mtime"])
-
-    def unlink_chunks(pdfs):
-        import os as _os
-
-        for pdf in pdfs:
-            n = 0
-            for name in pdf["name"]:
-                try:
-                    _os.unlink(_os.path.join(cdir, name))
-                    n += 1
-                except OSError:
-                    pass
-            yield _pd.DataFrame({"n": [n]})
-
-    disk_df = spark.createDataFrame(
-        _pd.DataFrame({"d": [cdir]}), "d string"
-    ).mapInPandas(list_chunks, "name string, mtime double")
-    # only the scalar per-task counts come back to the driver
-    row = (
-        disk_df.filter(F.col("mtime") < F.lit(floor))
-        .join(keep_df, "name", "left_anti")
-        .repartition(max(spark.sparkContext.defaultParallelism, 1))
-        .mapInPandas(unlink_chunks, "n long")
-        .agg(F.sum("n").alias("n")).collect()
-    )
-    return int(row[0]["n"] or 0)
+def _unlink_chunks(cdir: str, rows):
+    """Chunk unlink job: unlink ``cdir/<name>`` for each ``{"name"}``
+    row; yields one ``{"n": files unlinked}`` row."""
+    n = 0
+    for r in rows:
+        try:
+            os.unlink(os.path.join(cdir, r["name"]))
+            n += 1
+        except OSError:
+            pass
+    yield {"n": n}
 
 
 def list_chunk_files(table_dir: str) -> dict[str, str]:

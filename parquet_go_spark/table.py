@@ -117,7 +117,7 @@ def validate_schema(df: DataFrame, ddl: str = TRANSCRIPT_DDL) -> None:
 # ANSI interval support (parquet.thrift:165-177 INTERVAL converted
 # type; Spark: DayTimeIntervalType / YearMonthIntervalType). Spark's
 # Arrow UDF channel rejects interval types outright — at ANY nesting
-# depth (PySparkNotImplementedError from mapInArrow/mapInPandas) — so
+# depth (PySparkNotImplementedError from every Arrow UDF) — so
 # the engine lowers interval leaves to their internal integer form
 # JVM-side before the encode UDF: day-time = int64 microseconds,
 # year-month = int32 months, both exact by definition. Nested
@@ -338,23 +338,14 @@ def write_table(
 def _commit(entries_df: DataFrame, table_dir: str, schema_ddl: str,
             extra: dict, append: bool, n_chunks: int) -> dict:
     """Commit an encode job's (chunk_id, entry_json) rows — the one
-    commit path of both writers. On the driver plane (see
-    manifest._task_plane) the entries are collected and committed on
-    the driver. On the task plane a second Spark stage writes one shard
-    file per manifest shard and the driver commits O(shards) refs; at
-    the 10¹²-turn frame (~4M chunks) the per-chunk path would push GBs
-    of JSON through the driver."""
+    commit path of both writers. It only picks the manifest plane
+    (manifest._task_plane) and sums the refs the commit returns: the
+    driver plane collects the entries into ``manifest.commit``, the task
+    plane hands the DataFrame to ``manifest.commit_in_tasks``."""
     if manifest._task_plane(entries_df.sparkSession, n_chunks):
-        refs = _write_shards_distributed(entries_df, table_dir)
-        if append:
-            snapshot = _commit_append_distributed(
-                entries_df.sparkSession, table_dir, refs,
-                schema_ddl=schema_ddl, extra=extra,
-            )
-        else:
-            snapshot = manifest.commit_shards(
-                table_dir, refs, schema_ddl=schema_ddl, extra=extra,
-            )
+        snapshot, refs = manifest.commit_in_tasks(
+            entries_df, table_dir, schema_ddl, extra=extra, append=append,
+        )
     else:
         entries = [json.loads(r.entry_json) for r in entries_df.collect()]
         snapshot = manifest.commit(
@@ -473,138 +464,11 @@ def _encode_entries(*args, **kwargs) -> tuple[list[dict], dict]:
     return [json.loads(r.entry_json) for r in entries_df.collect()], extra
 
 
-def _write_shards_distributed(entries_df: DataFrame,
-                              table_dir: str) -> list[dict]:
-    """Second encode stage: group entry rows by manifest shard and let
-    each task write ONE immutable shard file; return O(shards)
-    summaries. Shard files carry a per-commit token (not the snapshot
-    id — that is assigned later under the commit lock). Pending shards
-    written before the commit are spared by a concurrent
-    expire_snapshots via the GC floor (the caller's in-flight marker,
-    see manifest._cleanup_manifest_files); crashed attempts' orphan
-    shards lose protection when the marker passes INFLIGHT_TTL_S and
-    the next expire sweeps them, exactly like Iceberg orphan files."""
-    import uuid
-
-    token = uuid.uuid4().hex[:12]
-
-    def write_shard(key, pdf):
-        import json as _json
-        import os as _os
-
-        from . import manifest as M
-
-        shard = key[0]
-        entries = sorted(
-            (_json.loads(s) for s in pdf["entry_json"]),
-            key=lambda e: e["chunk_id"],
-        )
-        fname = f"manifest-{token}-{shard or 'root'}.json"
-        fpath = _os.path.join(table_dir, "_manifests", fname)
-        M._atomic_write_json(fpath, {"entries": entries})
-        return pd.DataFrame([{
-            "shard": shard,
-            "file": _os.path.join("_manifests", fname),
-            **M._shard_totals(entries),
-            "reused_chunks": sum(1 for e in entries if e.get("reused")),
-        }])
-
-    shard = F.when(
-        F.length("chunk_id") > 4,
-        F.expr("substring(chunk_id, 1, length(chunk_id) - 4)"),
-    ).otherwise(F.lit(""))
-    rows = (
-        entries_df.withColumn("shard", shard)
-        .groupBy("shard")
-        .applyInPandas(
-            write_shard,
-            "shard string, file string, n_chunks long, n_rows long, "
-            "raw_bytes long, enc_bytes long, reused_chunks long",
-        )
-        .collect()
-    )
-    return [r.asDict() for r in rows]
-
-
-def _commit_append_distributed(
-    spark: SparkSession,
-    table_dir: str,
-    new_refs: list[dict],
-    schema_ddl: str,
-    extra: dict | None,
-    max_retries: int = 10,
-) -> int:
-    """APPEND commit at manifest scale: the batch's shard files are
-    already on disk (written by encode tasks); shards the batch shares
-    with the parent are merged INSIDE Spark tasks by
-    ``manifest._merge_shard`` (the same rule as the driver commit:
-    same-id overrides, an unchanged shard keeps the parent's file), and
-    untouched parent refs carry forward. The driver only ever holds
-    O(shards) summaries — a million-chunk backfill append never funnels
-    per-chunk entry JSON through ``manifest.commit(append=True)``.
-
-    Optimistic concurrency: the merge runs against a parent read
-    OUTSIDE the commit lock; ``commit_shards(expect_parent=...)``
-    re-checks under the lock and raises StaleParent if another commit
-    landed, in which case the merge re-runs against the new parent."""
-    import uuid
-
-    new_by_shard = {r["shard"]: r for r in new_refs}
-    for _attempt in range(max_retries):
-        prev = manifest.load_refs(table_dir)
-        parent_id = prev["snapshot_id"] if prev else None
-        final = {r["shard"]: r
-                 for r in (prev["manifest_shards"] if prev else [])}
-        work = [(s, final[s]["file"], new_by_shard[s]["file"])
-                for s in sorted(set(final) & set(new_by_shard))]
-        token = uuid.uuid4().hex[:12]
-
-        def merge_shards(pdfs):
-            from . import manifest as M
-
-            for pdf in pdfs:
-                yield pd.DataFrame([
-                    M._merge_shard(
-                        table_dir, shard, {"file": pfile},
-                        M._read_shard(table_dir, {"file": nfile}),
-                        f"manifest-{token}-m-{shard or 'root'}.json",
-                    )
-                    for shard, pfile, nfile in pdf.itertuples(index=False)
-                ])
-
-        if work:
-            par = min(len(work), spark.sparkContext.defaultParallelism) or 1
-            wdf = spark.createDataFrame(
-                pd.DataFrame(work,
-                             columns=["shard", "parent_file", "new_file"]),
-                "shard string, parent_file string, new_file string",
-            ).repartition(par)
-            rows = wdf.mapInPandas(
-                merge_shards,
-                "shard string, file string, n_chunks long, n_rows long, "
-                "raw_bytes long, enc_bytes long",
-            ).collect()
-            final.update((r["shard"], r.asDict()) for r in rows)
-        for s, r in new_by_shard.items():
-            final.setdefault(s, r)
-        try:
-            return manifest.commit_shards(
-                table_dir, list(final.values()), schema_ddl=schema_ddl,
-                extra=extra, expect_parent=parent_id,
-            )
-        except manifest.StaleParent:
-            continue  # another commit landed: re-merge against it
-    raise manifest.CommitConflict(
-        f"append commit lost the parent race {max_retries} times"
-    )
-
-
 def read_table(
     spark: SparkSession,
     table_dir: str,
     columns: list[str] | None = None,
     predicates: dict | None = None,
-    parallelism: int | None = None,
     push_row_filter: bool = False,
     snapshot_id: int | None = None,
 ) -> DataFrame:
@@ -687,7 +551,7 @@ def read_table(
         return _chunk_rows(table_dir, prune_entries(entries, predicates))
 
     files_df = _chunk_files_df(spark, table_dir, refs, surviving,
-                               snapshot_id, parallelism)
+                               snapshot_id)
     if files_df is None:
         return spark.createDataFrame([], sub_schema)
     if push_row_filter and predicates:
@@ -724,7 +588,10 @@ def compact(
     the retry), never an intermediate snapshot with duplicate rows.
 
     At scale this is a normal Spark job over only the small chunks —
-    the large ones are untouched (no read amplification)."""
+    the large ones are untouched (no read amplification). A commit
+    landing between the listing read and this op's commit makes it
+    raise CommitConflict before any chunk is unlinked; its new chunk
+    files are left for expire_snapshots."""
     listing = manifest.load(table_dir)
     if listing is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
@@ -753,6 +620,7 @@ def compact(
     snap = manifest.commit(
         table_dir, final_entries, schema_ddl=listing["schema_ddl"],
         extra={**listing["extra"], "compacted_from": sorted(small_ids)},
+        expect_parent=listing["snapshot_id"],
     )
     for e in small:
         try:
@@ -839,19 +707,17 @@ def _chunk_rows(table_dir: str, entries) -> list[dict]:
              "enc_bytes": e.get("enc_bytes")} for e in entries]
 
 
-def _rows_files_df(spark, rows: list[dict],
-                   parallelism: int | None = None) -> DataFrame:
+def _rows_files_df(spark, rows: list[dict]) -> DataFrame:
     """Driver-held decode rows → the files DataFrame the decoder reads."""
     pdf = pd.DataFrame(rows, columns=["file", "chunk_id", "data_crc",
                                       "enc_bytes"])
     pdf = pdf.astype({"data_crc": "Int64", "enc_bytes": "Int64"})
-    par = parallelism or min(len(rows), spark.sparkContext.defaultParallelism)
+    par = min(len(rows), spark.sparkContext.defaultParallelism)
     return spark.createDataFrame(pdf, _CHUNK_FILES_DDL).repartition(par)
 
 
 def _chunk_files_df(spark, table_dir: str, refs: dict, fn,
-                    snapshot_id: int | None = None,
-                    parallelism: int | None = None) -> DataFrame | None:
+                    snapshot_id: int | None = None) -> DataFrame | None:
     """The decode rows ``fn(entries)`` picks from a snapshot, as a files
     DataFrame. On the task plane ``manifest.scan_shards`` runs ``fn``
     per shard file and the driver never sees an entry; on the driver
@@ -861,10 +727,9 @@ def _chunk_files_df(spark, table_dir: str, refs: dict, fn,
         files_df = manifest.scan_shards(
             spark, table_dir, [r["file"] for r in refs["manifest_shards"]],
             fn, _CHUNK_FILES_DDL)
-        return files_df.repartition(
-            parallelism or spark.sparkContext.defaultParallelism)
+        return files_df.repartition(spark.sparkContext.defaultParallelism)
     rows = fn(manifest.load(table_dir, snapshot_id=snapshot_id)["entries"])
-    return _rows_files_df(spark, rows, parallelism) if rows else None
+    return _rows_files_df(spark, rows) if rows else None
 
 
 def _arrow_types(schema: StructType) -> dict:
@@ -936,7 +801,8 @@ def delete_rows(spark: SparkSession, table_dir: str,
     whose stats overlap the predicate are decoded, surviving rows
     re-encoded under a fresh namespace, and ONE snapshot commits
     keep + rewritten — untouched chunks (the overwhelming majority at
-    scale, thanks to manifest pruning) are not read at all."""
+    scale, thanks to manifest pruning) are not read at all. Raises
+    CommitConflict, as compact does, if another commit lands first."""
     listing = manifest.load(table_dir)
     if listing is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
@@ -971,6 +837,7 @@ def delete_rows(spark: SparkSession, table_dir: str,
         table_dir, keep + new_entries, schema_ddl=listing["schema_ddl"],
         extra={**listing["extra"],
                "deleted_from": sorted(affected_ids)},
+        expect_parent=listing["snapshot_id"],
     )
     for e in affected:
         try:

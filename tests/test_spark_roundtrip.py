@@ -1258,10 +1258,10 @@ def test_inflight_heartbeat_outlives_ttl(spark, tmp_path):
 
 
 def test_expire_spares_pending_shard_manifests(spark, tmp_path):
-    """_write_shards_distributed / the distributed APPEND merge write
-    manifest-* shard files into _manifests/ BEFORE taking the commit
-    lock; a concurrent expire must spare them via the GC floor exactly
-    like uncommitted chunk files, else the commit lands referencing
+    """The task-plane commit (manifest.commit_in_tasks: shard write and
+    APPEND merge) writes manifest-* shard files into _manifests/ BEFORE
+    taking the commit lock; a concurrent expire must spare them via the
+    GC floor exactly like uncommitted chunk files, else the commit lands referencing
     deleted shards (ADVICE r4 medium). Crashed attempts' orphans (no
     live marker, mtime below the floor) are still swept."""
     import time
@@ -1561,3 +1561,113 @@ def test_task_plane_readers_match_driver_plane(spark, transcripts, tmp_path,
 
     monkeypatch.setattr(manifest, "load", boom)
     assert results() == on_driver
+
+
+@pytest.mark.parametrize("op", ["compact", "delete_rows"])
+def test_rewrite_op_refuses_to_drop_a_concurrent_append(spark, tmp_path,
+                                                        monkeypatch, op):
+    """compact and delete_rows commit keep + rewritten with
+    append=False: an append landing between their listing read and
+    their commit must make them raise CommitConflict (nothing dropped,
+    nothing unlinked), not vanish from the table."""
+    df = make_transcripts_df(spark, n_conv=30, seed=41)
+    out = str(tmp_path / "tbl")
+    table.write_table(df, out, num_chunks=4)
+    n0 = df.count()
+    batch = make_transcripts_df(spark, n_conv=8, seed=43)
+    orig = table._encode_entries
+
+    def encode_then_race(*a, **k):
+        res = orig(*a, **k)
+        table.write_table(batch, out, num_chunks=1, chunk_prefix="race-",
+                          append=True)
+        return res
+
+    monkeypatch.setattr(table, "_encode_entries", encode_then_race)
+    with pytest.raises(manifest.CommitConflict):
+        if op == "compact":
+            table.compact(spark, out)
+        else:
+            table.delete_rows(spark, out, {"conv_id": ("conv-00000001",
+                                                       "conv-00000004")})
+    monkeypatch.undo()
+    want = n0 + batch.count()
+    assert table.count_rows(out) == want
+    assert table.read_table(spark, out).count() == want
+
+
+def test_task_plane_resume_reports_reused_chunks(spark, tmp_path,
+                                                 monkeypatch):
+    """A resume rerun on the task plane reuses every chunk file and says
+    so in its commit info, as the driver plane does."""
+    df = make_transcripts_df(spark, n_conv=40, seed=47)
+    for plane in ("driver", "task"):
+        if plane == "task":
+            _force_distributed(monkeypatch)
+        out = str(tmp_path / plane)
+        first = table.write_table(df, out, num_chunks=4)
+        again = table.write_table(df, out, num_chunks=4)
+        assert first["reused_chunks"] == 0, plane
+        assert again["reused_chunks"] == again["n_chunks"] == \
+            first["n_chunks"], plane
+
+
+def test_task_plane_append_remerges_on_stale_parent(spark, tmp_path,
+                                                    monkeypatch):
+    """A commit landing between a task-plane append's shard merge and
+    its commit_shards call is not lost: the stale commit is refused and
+    the append re-merges against the new parent, so both batches land
+    in the shard they share with the table."""
+    import pyspark.sql.functions as F
+
+    df = make_transcripts_df(spark, n_conv=30, seed=53)
+    out = str(tmp_path / "tbl")
+    table.write_table(df, out, num_chunks=2, chunk_prefix="aa-")
+    mine = make_transcripts_df(spark, n_conv=6, seed=54)
+    theirs = make_transcripts_df(spark, n_conv=5, seed=55)
+    _force_distributed(monkeypatch)
+    orig = manifest.commit_shards
+    calls = []
+
+    def race_first_append_commit(*a, **k):
+        calls.append(k.get("expect_parent"))
+        if len(calls) == 1:  # the other writer lands first
+            table.write_table(theirs, out, num_chunks=8, chunk_prefix="aa-",
+                              chunk_expr=F.lit(5), append=True)
+        return orig(*a, **k)
+
+    monkeypatch.setattr(manifest, "commit_shards", race_first_append_commit)
+    table.write_table(mine, out, num_chunks=8, chunk_prefix="aa-",
+                      chunk_expr=F.lit(6), append=True)
+    monkeypatch.undo()
+    assert len(calls) == 3  # ours, theirs, our re-merged retry
+    ids = {e["chunk_id"] for e in manifest.load(out)["entries"]}
+    assert {"aa-000005", "aa-000006"} <= ids
+    want = df.count() + mine.count() + theirs.count()
+    assert table.count_rows(out) == want
+    assert table.read_table(spark, out).count() == want
+
+
+def test_shard_refs_match_across_planes(spark, tmp_path, monkeypatch):
+    """The shard key decides which shard file holds each entry; both
+    planes must produce the same shards with the same totals, for a
+    write whose chunk ids span two shards and a prefixed append."""
+    import pyspark.sql.functions as F
+
+    df = make_transcripts_df(spark, n_conv=40, seed=59)
+    # chunks 0-2 in shard "00", chunks 10000-10002 in shard "01"
+    two_shards = (F.col("turn_idx") % 2) * 10_000 + F.col("turn_idx") % 3
+    refs = {}
+    for plane, threshold in (("driver", 10**9), ("task", 1)):
+        monkeypatch.setattr(manifest, "DISTRIBUTED_MANIFEST_MIN_CHUNKS",
+                            threshold)
+        out = str(tmp_path / plane)
+        table.write_table(df, out, num_chunks=20_000, chunk_expr=two_shards)
+        table.write_table(df.limit(30), out, num_chunks=1,
+                          chunk_prefix="x-", append=True)
+        refs[plane] = [
+            {k: r[k] for k in ("shard", "n_chunks", "n_rows", "raw_bytes",
+                               "enc_bytes")}
+            for r in manifest.load_refs(out)["manifest_shards"]]
+    assert [r["shard"] for r in refs["driver"]] == ["00", "01", "x-00"]
+    assert refs["task"] == refs["driver"]
