@@ -1,4 +1,4 @@
-"""Distributed decode path: manifest → chunk files → DataFrame.
+"""Decode path: manifest → chunk files → DataFrame.
 
 Spark-first re-expression of the reference's read path
 (⟨ref⟩ reader.go; SURVEY.md §3.2): projection pushdown (only requested
@@ -93,8 +93,11 @@ def prune_entries(entries: list[dict], column_predicates: dict | None):
 
 def make_decode_fn(columns: list[str], row_filter: dict | None = None,
                    column_types: dict | None = None):
-    """Build the mapInArrow UDF: iterator[RecordBatch of file paths] →
-    decoded RecordBatches in the requested column order.
+    """Build the decoder: iterator[RecordBatch of file paths] →
+    decoded RecordBatches in the requested column order. It is the one
+    decoder of every table read, run either as a Spark job's mapInArrow
+    function or by the driver over the same batches in process (a
+    small read's driver site, ``table._decode_local``).
 
     ``row_filter`` {col: (lo, hi)} is blob-level late materialization
     (P2 beyond the reference): the predicate columns are decoded FIRST,

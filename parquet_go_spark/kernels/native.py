@@ -26,8 +26,10 @@ os.replace()s the identical file). The cache directory is created with
 mode 0700, and the directory and the .so are only trusted for dlopen
 when this user owns them and no one else can write them. Anything
 failing — no cc, no cffi, sandboxed /tmp, a cache another user could
-have planted — degrades silently to the numpy path. Set
-PGS_NO_NATIVE=1 to force the numpy path (used by the identity tests).
+have planted — degrades to the numpy path (~6x slower FSST): the
+module keeps the cause in ``reason`` and emits one RuntimeWarning per
+process. Set PGS_NO_NATIVE=1 to force the numpy path on purpose (used
+by the identity tests); that sets ``reason`` but warns nothing.
 """
 
 from __future__ import annotations
@@ -36,8 +38,9 @@ import hashlib
 import os
 import subprocess
 import tempfile
+import warnings
 
-__all__ = ["lib", "ffi", "available"]
+__all__ = ["lib", "ffi", "available", "reason"]
 
 _CDEF = r"""
 int64_t pgs_fsst_parse(
@@ -184,9 +187,11 @@ def _private(path: str) -> bool:
     return st.st_uid == os.getuid() and not st.st_mode & 0o022
 
 
+class _Refused(RuntimeError):
+    """A cache path this process must not dlopen from."""
+
+
 def _build():
-    if os.environ.get("PGS_NO_NATIVE"):
-        return None, None
     import cffi
 
     h = hashlib.sha256((_CDEF + _SRC).encode()).hexdigest()[:16]
@@ -195,7 +200,7 @@ def _build():
     cdir = os.path.join(tempfile.gettempdir(), f"pgs_native-{os.getuid()}")
     os.makedirs(cdir, mode=0o700, exist_ok=True)
     if not _private(cdir):
-        return None, None
+        raise _Refused(f"cache dir {cdir} is not private to this user")
     so = os.path.join(cdir, f"pgs_{h}.so")
     if not os.path.exists(so):
         td = tempfile.mkdtemp(dir=cdir)
@@ -205,11 +210,16 @@ def _build():
                 f.write(_SRC)
             tmp = os.path.join(td, "pgs.so")
             cc = os.environ.get("CC", "cc")
-            subprocess.run(
+            run = subprocess.run(
                 [cc, "-O3", "-fno-strict-aliasing", "-shared", "-fPIC",
                  "-o", tmp, csrc],
-                check=True, capture_output=True, timeout=120,
+                capture_output=True, timeout=120,
             )
+            if run.returncode:
+                err = run.stderr.decode(errors="replace").strip()
+                raise RuntimeError(
+                    f"{cc} exited with status {run.returncode}"
+                    + (f": {err[-500:]}" if err else ""))
             os.replace(tmp, so)  # atomic: concurrent builders converge
         finally:
             for fn in os.listdir(td):
@@ -222,16 +232,25 @@ def _build():
             except OSError:
                 pass
     if not _private(so):
-        return None, None
+        raise _Refused(f"{so} is not private to this user")
     f = cffi.FFI()
     f.cdef(_CDEF)
     return f, f.dlopen(so)
 
 
-try:
-    ffi, lib = _build()
-except Exception:  # no cc / no cffi / sandboxed tmp → numpy fallback
-    ffi, lib = None, None
+# Why the numpy path is in use (None while the native path is).
+reason: str | None = None
+ffi = lib = None
+if os.environ.get("PGS_NO_NATIVE"):
+    reason = "PGS_NO_NATIVE is set"
+else:
+    try:
+        ffi, lib = _build()
+    except Exception as e:  # no cc / no cffi / sandboxed tmp / refused
+        reason = f"{type(e).__name__}: {e}"
+        warnings.warn(
+            f"native FSST kernels unavailable, using the ~6x slower numpy "
+            f"path: {reason}", RuntimeWarning, stacklevel=2)
 
 
 def available() -> bool:

@@ -85,6 +85,17 @@ MIN_READABLE_LAYOUT = (0, 2)
 # it, at call time.
 DISTRIBUTED_MANIFEST_MIN_CHUNKS = 4096
 
+# A driver-plane read whose surviving chunks hold at most this many raw
+# bytes in the columns it decodes runs the decoder in the driver process
+# and hands Spark a local relation; larger reads (and every task-plane
+# read) decode in a Spark job. A point lookup then skips the job launch,
+# which costs several times its ~60 KB decode. The worst case for the
+# driver is an unfiltered read, which ships every decoded row to the
+# JVM: on a 4-core host at local[4] both sites took ~0.85 s for one of
+# ~16.5 MB raw, so the bound sits below half that. Only
+# ``_driver_decode`` reads it, at call time.
+DRIVER_DECODE_MAX_RAW_BYTES = 6 << 20
+
 # per-shard totals every ref carries (listing totals are their sums)
 _TOTALS = ("n_chunks", "n_rows", "raw_bytes", "enc_bytes")
 
@@ -336,6 +347,14 @@ def _task_plane(spark, n_chunks: int) -> bool:
     and only when there is a session to run them (``spark`` is None for
     driver-only calls of column_stats and expire_snapshots)."""
     return spark is not None and n_chunks >= DISTRIBUTED_MANIFEST_MIN_CHUNKS
+
+
+def _driver_decode(raw_bytes: int) -> bool:
+    """The decode-site test of a driver-plane read: chunks whose decoded
+    columns hold ``raw_bytes`` raw bytes in total decode on the driver
+    at or below DRIVER_DECODE_MAX_RAW_BYTES, and in a Spark job above
+    it."""
+    return raw_bytes <= DRIVER_DECODE_MAX_RAW_BYTES
 
 
 def _run_tasks(df, fn, ddl: str):

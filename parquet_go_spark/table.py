@@ -481,6 +481,16 @@ def read_table(
     predicate columns decode first, non-matching rows are dropped
     before the other blobs are touched, so the returned DataFrame
     contains exactly the matching rows (no residual filter needed).
+
+    The decoder runs on one of two sites. When the surviving chunks'
+    raw bytes in the decoded columns are at most
+    ``manifest.DRIVER_DECODE_MAX_RAW_BYTES`` (driver-plane tables only),
+    it runs in this process before read_table returns: the result is a
+    local relation, so a point lookup launches no decode job, and a
+    chunk that fails its checks raises here. Larger reads, and every
+    read of a task-plane table, return a lazy DataFrame whose Spark job
+    decodes; errors then raise when it runs. Both sites give the same
+    rows and schema.
     """
     refs = manifest.load_refs(table_dir, snapshot_id=snapshot_id)
     if refs is None:
@@ -544,16 +554,6 @@ def read_table(
     sub_schema = StructType(fields)
     udf_schema = StructType(udf_fields)
 
-    def surviving(entries):
-        # the layout gate comes first: pre-0.2 blooms use another hash
-        # scheme, so pruning on them could skip live chunks
-        manifest.check_chunk_layout(entries)
-        return _chunk_rows(table_dir, prune_entries(entries, predicates))
-
-    files_df = _chunk_files_df(spark, table_dir, refs, surviving,
-                               snapshot_id)
-    if files_df is None:
-        return spark.createDataFrame([], sub_schema)
     if push_row_filter and predicates:
         from .decode import normalize_predicate
 
@@ -562,7 +562,16 @@ def read_table(
         }
     else:
         row_filter = None
-    out = _decode_df(files_df, udf_schema, row_filter)
+
+    def surviving(entries):
+        # the layout gate comes first: pre-0.2 blooms use another hash
+        # scheme, so pruning on them could skip live chunks
+        manifest.check_chunk_layout(entries)
+        return _chunk_rows(table_dir, prune_entries(entries, predicates),
+                           [*columns, *(row_filter or ())])
+
+    out = _decode_snapshot(spark, table_dir, refs, surviving, udf_schema,
+                           row_filter, snapshot_id)
     if iv_restore:
         out = out.select([
             iv_restore[f.name] if f.name in iv_restore
@@ -696,15 +705,22 @@ _CHUNK_FILES_DDL = ("file string, chunk_id string, data_crc long, "
                     "enc_bytes long")
 
 
-def _chunk_rows(table_dir: str, entries) -> list[dict]:
+def _chunk_rows(table_dir: str, entries, columns) -> list[dict]:
     """One decode row per entry: the chunk file's path with the
-    snapshot's expectations for it. The decoder checks the file's
-    embedded entry against them, so a chunk file replaced after the
+    snapshot's expectations for it, and the raw bytes of the chunk's
+    ``columns`` that the decode-site rule sums (a "base.child" column
+    counts its base column; a column without its own raw_bytes counts
+    the whole entry's). The decoder checks the file's embedded entry
+    against the expectations, so a chunk file replaced after the
     snapshot (same id, other bytes) fails loudly instead of decoding
     the wrong data."""
+    bases = {c.partition(".")[0] for c in columns}
     return [{"file": os.path.join(table_dir, e["file"]),
              "chunk_id": e["chunk_id"], "data_crc": e.get("data_crc"),
-             "enc_bytes": e.get("enc_bytes")} for e in entries]
+             "enc_bytes": e.get("enc_bytes"),
+             "raw_bytes": sum(e["columns"].get(b, {}).get(
+                 "raw_bytes", e["raw_bytes"]) for b in bases)}
+            for e in entries]
 
 
 def _rows_files_df(spark, rows: list[dict]) -> DataFrame:
@@ -716,20 +732,31 @@ def _rows_files_df(spark, rows: list[dict]) -> DataFrame:
     return spark.createDataFrame(pdf, _CHUNK_FILES_DDL).repartition(par)
 
 
-def _chunk_files_df(spark, table_dir: str, refs: dict, fn,
-                    snapshot_id: int | None = None) -> DataFrame | None:
-    """The decode rows ``fn(entries)`` picks from a snapshot, as a files
-    DataFrame. On the task plane ``manifest.scan_shards`` runs ``fn``
-    per shard file and the driver never sees an entry; on the driver
-    plane ``fn`` runs over the loaded entry list. None when no chunk
-    survives on the driver plane (no Spark job to run)."""
+def _decode_snapshot(spark, table_dir: str, refs: dict, fn,
+                     schema: StructType, row_filter: dict | None = None,
+                     snapshot_id: int | None = None) -> DataFrame:
+    """Decode the chunks ``fn(entries)`` picks from a snapshot into the
+    columns of ``schema``, choosing where the decoder runs. On the task
+    plane ``manifest.scan_shards`` runs ``fn`` per shard file and a
+    Spark job decodes its rows; the driver never sees an entry. On the
+    driver plane ``fn`` runs over the loaded entry list: no surviving
+    chunk → an empty DataFrame; surviving raw bytes that pass
+    ``manifest._driver_decode`` → the decoder runs here, eagerly, and
+    the result is a local relation; otherwise a Spark job decodes them.
+    Every site runs the same decoder over the same decode rows."""
     if manifest._task_plane(spark, refs["n_chunks"]):
         files_df = manifest.scan_shards(
             spark, table_dir, [r["file"] for r in refs["manifest_shards"]],
             fn, _CHUNK_FILES_DDL)
-        return files_df.repartition(spark.sparkContext.defaultParallelism)
+        return _decode_df(
+            files_df.repartition(spark.sparkContext.defaultParallelism),
+            schema, row_filter)
     rows = fn(manifest.load(table_dir, snapshot_id=snapshot_id)["entries"])
-    return _rows_files_df(spark, rows) if rows else None
+    if not rows:
+        return spark.createDataFrame([], schema)
+    if manifest._driver_decode(sum(r["raw_bytes"] for r in rows)):
+        return _decode_local(spark, rows, schema, row_filter)
+    return _decode_df(_rows_files_df(spark, rows), schema, row_filter)
 
 
 def _arrow_types(schema: StructType) -> dict:
@@ -743,16 +770,41 @@ def _arrow_types(schema: StructType) -> dict:
         return {}
 
 
+def _decode_fn(schema: StructType, row_filter: dict | None):
+    """The decoder both sites run, for the columns of ``schema``."""
+    return make_decode_fn([f.name for f in schema.fields],
+                          row_filter=row_filter,
+                          column_types=_arrow_types(schema))
+
+
 def _decode_df(files_df: DataFrame, schema: StructType,
                row_filter: dict | None = None) -> DataFrame:
     """Decode the chunks named by ``files_df``'s decode rows into the
-    columns of ``schema``."""
-    return files_df.mapInArrow(
-        make_decode_fn([f.name for f in schema.fields],
-                       row_filter=row_filter,
-                       column_types=_arrow_types(schema)),
-        schema,
-    )
+    columns of ``schema`` in a Spark job."""
+    return files_df.mapInArrow(_decode_fn(schema, row_filter), schema)
+
+
+def _decode_local(spark, rows: list[dict], schema: StructType,
+                  row_filter: dict | None) -> DataFrame:
+    """Decode the chunks named by the decode ``rows`` into the columns
+    of ``schema`` in this process; the result is a local relation.
+    Each batch is cast to the schema's Arrow form, which is what the
+    JVM reads from the Spark job's output."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    files = pa.RecordBatch.from_pylist(rows, schema=to_arrow_schema(
+        _parse_datatype_string(_CHUNK_FILES_DDL)))
+    target = to_arrow_schema(schema)
+    batches = [b.cast(target)
+               for b in _decode_fn(schema, row_filter)(iter([files]))]
+    if not batches:
+        # the row filter dropped every row; createDataFrame rejects an
+        # Arrow table whose nested columns have no chunks at all
+        return spark.createDataFrame([], schema)
+    return spark.createDataFrame(
+        pa.Table.from_batches(batches, schema=target), schema)
 
 
 def _rewrite_schema(listing: dict) -> StructType:
@@ -769,8 +821,8 @@ def _rewrite_schema(listing: dict) -> StructType:
 def _decode_entries_df(spark, table_dir, entries, schema) -> DataFrame:
     """Decode a specific entry subset (internal: delete/upsert/compact)."""
     manifest.check_chunk_layout(entries)
-    return _decode_df(
-        _rows_files_df(spark, _chunk_rows(table_dir, entries)), schema)
+    return _decode_df(_rows_files_df(spark, _chunk_rows(
+        table_dir, entries, [f.name for f in schema.fields])), schema)
 
 
 def _predicate_cond(predicates: dict):
@@ -943,7 +995,11 @@ def search_text(
     ``write_table(token_bloom_cols=(column,))``); survivors decode and
     the exact whitespace-token match filters residually. At the
     10^12-turn frame this turns "find conversations mentioning X" into
-    a handful of chunk decodes instead of a corpus scan."""
+    a handful of chunk decodes instead of a corpus scan.
+
+    Decodes on the same two sites as read_table: small surviving chunk
+    sets decode in this process before search_text returns (errors
+    raise here), larger ones in the returned DataFrame's Spark job."""
     from .kernels.bloom import bloom_contains
 
     refs = manifest.load_refs(table_dir)
@@ -966,11 +1022,10 @@ def search_text(
     def surviving(entries):
         # gate first: pre-0.2 blooms use another hash scheme
         manifest.check_chunk_layout(entries)
-        return _chunk_rows(table_dir, filter(may_hold, entries))
+        return _chunk_rows(table_dir, filter(may_hold, entries),
+                           sub.fieldNames())
 
-    files_df = _chunk_files_df(spark, table_dir, refs, surviving)
-    decoded = (spark.createDataFrame([], sub) if files_df is None
-               else _decode_df(files_df, sub))
+    decoded = _decode_snapshot(spark, table_dir, refs, surviving, sub)
     return decoded.filter(
         F.array_contains(F.split(F.col(column), " "), token)
     ).select([iv_restore.get(c, F.col(f"`{c}`")) for c in sel])

@@ -24,3 +24,18 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def decode_site(monkeypatch):
+    """``decode_site(name)`` forces every later read_table / search_text
+    of a driver-plane table onto one decode site: "driver" (decode in
+    this process, local relation) or "job" (mapInArrow Spark job), by
+    moving the one bound the site rule reads."""
+    from parquet_go_spark import manifest
+
+    def force(site: str) -> None:
+        monkeypatch.setattr(manifest, "DRIVER_DECODE_MAX_RAW_BYTES",
+                            {"job": 0, "driver": 1 << 62}[site])
+
+    return force

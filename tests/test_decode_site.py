@@ -1,0 +1,253 @@
+"""The two decode sites of read_table and search_text.
+
+A driver-plane read whose surviving chunks are small decodes in the
+driver process and returns a local relation; a larger one decodes in a
+mapInArrow Spark job (``manifest._driver_decode``). Both sites run the
+same decoder over the same decode rows, so every read here must give
+the same Arrow table (values and schema) on both, and a faulty chunk
+must fail on both.
+"""
+
+from __future__ import annotations
+
+import datetime
+import os
+
+import pyarrow as pa
+import pytest
+from pyspark.sql import functions as F
+
+from parquet_go_spark import manifest, table
+from parquet_go_spark.fixtures import make_transcripts_df
+
+
+def _sorted(t: pa.Table) -> pa.Table:
+    """``t``'s rows in a site-independent order: by every flat column."""
+    return t.sort_by([(f.name, "ascending") for f in t.schema
+                      if not pa.types.is_nested(f.type)])
+
+
+@pytest.fixture(scope="module")
+def nested(spark, tmp_path_factory):
+    """A bloom + token-bloom table with struct, list<struct> and map
+    columns; its first snapshot holds a 100-row prefix, the second
+    appends the rest under another chunk namespace."""
+    df = make_transcripts_df(spark, n_conv=120, seed=9).withColumn(
+        "meta", F.struct(F.col("turn_idx").cast("long").alias("u"),
+                         F.col("role").alias("r")),
+    ).withColumn(
+        "calls", F.when(F.col("turn_idx") % 4 == 0, F.lit(None)).otherwise(
+            F.array(F.struct(F.col("tool").alias("name"),
+                             (F.col("turn_idx") * 0.5).alias("v")))),
+    ).withColumn(
+        "attrs", F.create_map(F.lit("k"), F.col("role"),
+                              F.lit("p"), F.col("tool")),
+    ).cache()
+    out = str(tmp_path_factory.mktemp("site") / "tbl")
+    head = df.orderBy("conv_id", "turn_idx").limit(100)
+    table.write_table(head, out, num_chunks=2, chunk_prefix="v1-",
+                      bloom_cols=("conv_id",), token_bloom_cols=("text",))
+    rest = df.join(head.select("conv_id", "turn_idx"),
+                   ["conv_id", "turn_idx"], "left_anti")
+    table.write_table(rest, out, num_chunks=6, chunk_prefix="v2-",
+                      append=True, bloom_cols=("conv_id",),
+                      token_bloom_cols=("text",))
+    return out
+
+
+def _job_calls(monkeypatch) -> list:
+    """A list that grows by one each time a read launches the decode
+    job (``table._decode_df``)."""
+    calls = []
+    orig = table._decode_df
+
+    def spy(*a, **k):
+        calls.append(1)
+        return orig(*a, **k)
+
+    monkeypatch.setattr(table, "_decode_df", spy)
+    return calls
+
+
+def _on_both_sites(decode_site, monkeypatch, read) -> pa.Table:
+    """``read()``'s Arrow result, which must be identical (values and
+    schema, rows sorted) whether the driver or a Spark job decodes;
+    asserts each forced site really ran."""
+    calls = _job_calls(monkeypatch)
+    got = {}
+    for site in ("job", "driver"):
+        decode_site(site)
+        calls.clear()
+        t = read().toArrow()
+        got[site] = _sorted(t)
+        if t.num_rows:
+            assert bool(calls) == (site == "job"), site
+    assert got["job"].schema == got["driver"].schema
+    assert got["job"].equals(got["driver"])
+    return got["job"]
+
+
+def test_point_lookup_same_on_both_sites(spark, nested, decode_site,
+                                         monkeypatch):
+    got = _on_both_sites(decode_site, monkeypatch, lambda: table.read_table(
+        spark, nested, predicates={"conv_id": "conv-00000007"},
+        push_row_filter=True))
+    assert got.num_rows > 0
+    assert set(got.column("conv_id").to_pylist()) == {"conv-00000007"}
+    assert got.column_names[-3:] == ["meta", "calls", "attrs"]
+
+
+def test_range_read_same_on_both_sites(spark, nested, decode_site,
+                                       monkeypatch):
+    lo, hi = 2, 5
+    got = _on_both_sites(decode_site, monkeypatch, lambda: table.read_table(
+        spark, nested, columns=["conv_id", "turn_idx", "ts"],
+        predicates={"turn_idx": (lo, hi)}, push_row_filter=True))
+    assert got.num_rows > 0
+    assert all(lo <= v <= hi for v in got.column("turn_idx").to_pylist())
+
+
+def test_child_projections_same_on_both_sites(spark, nested, decode_site,
+                                              monkeypatch):
+    cols = ["conv_id", "turn_idx", "meta.u", "calls.name", "attrs.k"]
+    got = _on_both_sites(decode_site, monkeypatch, lambda: table.read_table(
+        spark, nested, columns=cols))
+    assert got.column_names == cols
+    assert got.column("meta.u").to_pylist() == \
+        got.column("turn_idx").to_pylist()
+    assert pa.types.is_list(got.schema.field("calls.name").type)
+    assert got.column("calls.name").null_count > 0
+
+
+def test_time_travel_same_on_both_sites(spark, nested, decode_site,
+                                        monkeypatch):
+    got = _on_both_sites(decode_site, monkeypatch, lambda: table.read_table(
+        spark, nested, snapshot_id=0))
+    assert got.num_rows == 100
+
+
+def test_search_text_same_on_both_sites(spark, nested, decode_site,
+                                        monkeypatch):
+    got = _on_both_sites(decode_site, monkeypatch, lambda: table.search_text(
+        spark, nested, "text", "the", columns=["conv_id", "turn_idx",
+                                               "meta"]))
+    assert got.num_rows > 0
+    assert got.column_names == ["conv_id", "turn_idx", "meta"]
+
+
+def test_fully_pruned_read_same_on_both_sites(spark, nested, decode_site,
+                                              monkeypatch):
+    got = _on_both_sites(decode_site, monkeypatch, lambda: table.read_table(
+        spark, nested, predicates={"conv_id": "no-such-conv"}))
+    assert got.num_rows == 0
+    full = table.read_table(spark, nested,
+                            predicates={"conv_id": "conv-00000007"})
+    assert got.schema == full.toArrow().schema
+    # chunks survive pruning, but the row filter drops every row
+    gap = {"conv_id": ("conv-00000007a", "conv-00000007b")}
+    assert table.prune_entries(manifest.load(nested)["entries"], gap)
+    none = _on_both_sites(decode_site, monkeypatch, lambda: table.read_table(
+        spark, nested, predicates=gap, push_row_filter=True))
+    assert none.num_rows == 0 and none.schema == got.schema
+
+
+def test_schema_evolution_same_on_both_sites(spark, tmp_path, decode_site,
+                                             monkeypatch):
+    out = str(tmp_path / "tbl")
+    table.write_table(make_transcripts_df(spark, n_conv=20, seed=11), out,
+                      num_chunks=2, chunk_prefix="v1-")
+    table.write_table(make_transcripts_df(spark, n_conv=20, seed=12)
+                      .withColumn("model", F.lit("m-1")), out,
+                      num_chunks=2, chunk_prefix="v2-", append=True)
+    got = _on_both_sites(decode_site, monkeypatch,
+                         lambda: table.read_table(spark, out))
+    assert got.column("model").null_count > 0
+    assert set(got.column("model").drop_null().to_pylist()) == {"m-1"}
+
+
+def test_intervals_same_on_both_sites(spark, tmp_path, decode_site,
+                                      monkeypatch):
+    src = spark.sql("""
+        SELECT CAST(id % 5 AS STRING) AS conv_id, CAST(id AS INT) AS turn_idx,
+               CASE WHEN id % 7 = 0 THEN NULL
+                    ELSE make_dt_interval(CAST(id % 3 AS INT), 1, 2,
+                                          0.000001 * CAST(id AS DOUBLE))
+               END AS dur,
+               CASE WHEN id % 11 = 0 THEN NULL
+                    ELSE make_ym_interval(CAST(id % 5 AS INT), 1)
+               END AS age
+        FROM range(60)
+    """)
+    out = str(tmp_path / "iv")
+    table.write_table(src, out, num_chunks=2)
+    schemas = []
+
+    def read():
+        df = table.read_table(spark, out)
+        schemas.append(df.schema)
+        # PySpark cannot collect year-month intervals: compare their
+        # string form next to the restored day-time values
+        return df.withColumn("age", F.col("age").cast("string"))
+
+    got = _on_both_sites(decode_site, monkeypatch, read)
+    assert schemas[0] == schemas[1]
+    assert [f.dataType for f in schemas[0].fields[2:]] == \
+        [f.dataType for f in src.schema.fields[2:]]
+    assert got.column("dur").type == pa.duration("us")
+    want = src.withColumn("age", F.col("age").cast("string")).toArrow()
+    assert got.to_pylist() == _sorted(want).to_pylist()
+
+
+def test_timestamps_same_on_both_sites_in_non_utc_session(
+        spark, nested, decode_site):
+    """The driver site hands Spark the decoder's Arrow output through
+    createDataFrame, which localizes tz-naive timestamps to the session
+    zone; the decoder emits UTC-zoned ones, so ts must collect to the
+    same datetimes as the Spark job's in any session zone."""
+    from parquet_go_spark.decode import make_decode_fn
+
+    f = os.path.join(nested, manifest.load(nested)["entries"][0]["file"])
+    (b,) = make_decode_fn(["ts"])(iter([pa.record_batch({"file": [f]})]))
+    assert b.schema.field("ts").type == pa.timestamp("us", tz="UTC")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        got = {}
+        for site in ("job", "driver"):
+            decode_site(site)
+            got[site] = sorted(table.read_table(
+                spark, nested, columns=["conv_id", "turn_idx", "ts"],
+                predicates={"conv_id": ("conv-00000000", "conv-00000030")},
+            ).collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert got["job"] and got["job"] == got["driver"]
+    assert isinstance(got["job"][0]["ts"], datetime.datetime)
+
+
+def test_point_lookup_skips_the_spark_job(spark, tmp_path, monkeypatch):
+    """The site rule at its real bound: a bloom point lookup on a
+    50-chunk table decodes on the driver, and a read whose decoded raw
+    bytes exceed the bound launches the decode job."""
+    out = str(tmp_path / "tbl")
+    # range chunks of 4 conversations each
+    ck = F.floor(F.substring("conv_id", 6, 8).cast("long") / F.lit(4))
+    table.write_table(make_transcripts_df(spark, n_conv=200, seed=5), out,
+                      chunk_expr=ck, num_chunks=50, bloom_cols=("conv_id",))
+    entries = manifest.load(out)["entries"]
+    assert len(entries) == 50
+    calls = _job_calls(monkeypatch)
+    point = table.read_table(spark, out, predicates={"conv_id":
+                                                     "conv-00000007"},
+                             push_row_filter=True)
+    assert not calls
+    assert point.count() > 0
+    # a bound above one chunk's raw bytes and below the whole table's
+    total = sum(e["raw_bytes"] for e in entries)
+    assert max(e["raw_bytes"] for e in entries) < total // 2
+    monkeypatch.setattr(manifest, "DRIVER_DECODE_MAX_RAW_BYTES", total // 2)
+    table.read_table(spark, out, predicates={"conv_id": "conv-00000007"})
+    assert not calls
+    full = table.read_table(spark, out)
+    assert len(calls) == 1
+    assert full.count() == sum(e["n_rows"] for e in entries)

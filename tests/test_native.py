@@ -133,8 +133,9 @@ def test_cache_reuse_identity():
 
 def test_build_refuses_cache_others_can_write(tmp_path, monkeypatch):
     """The compiled library is only dlopened from a per-user cache dir
-    that nobody else can write: a planted world-writable cache dir falls
-    back to numpy, a fresh one is created 0700 and used."""
+    that nobody else can write: a planted world-writable cache dir is
+    refused (the module then falls back to numpy), a fresh one is
+    created 0700 and used."""
     import os
     import stat
     import tempfile
@@ -147,7 +148,8 @@ def test_build_refuses_cache_others_can_write(tmp_path, monkeypatch):
     os.chmod(cdir, 0o777)
     monkeypatch.setenv("TMPDIR", str(planted))
     monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
-    assert native._build() == (None, None)
+    with pytest.raises(native._Refused, match="not private"):
+        native._build()
     assert os.listdir(cdir) == []  # nothing compiled into it either
 
     if native.lib is None:
@@ -160,3 +162,67 @@ def test_build_refuses_cache_others_can_write(tmp_path, monkeypatch):
     assert lib is not None
     mode = os.stat(fresh / f"pgs_native-{os.getuid()}").st_mode
     assert stat.S_IMODE(mode) == 0o700
+
+
+def _import_native(tmp_path, **env) -> dict:
+    """Import the module in a fresh interpreter with a fresh TMPDIR and
+    ``env``; returns its lib state, reason and RuntimeWarning texts."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir(exist_ok=True)
+    run_env = {k: v for k, v in os.environ.items() if k != "PGS_NO_NATIVE"}
+    run_env.update(TMPDIR=str(tmp), **env)
+    code = (
+        "import json, warnings\n"
+        "with warnings.catch_warnings(record=True) as w:\n"
+        "    warnings.simplefilter('always')\n"
+        "    from parquet_go_spark.kernels import native\n"
+        "print(json.dumps({'lib': native.lib is not None,\n"
+        "                  'reason': native.reason,\n"
+        "                  'warnings': [str(x.message) for x in w\n"
+        "                               if x.category is RuntimeWarning]}))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], env=run_env,
+                         cwd=root, capture_output=True, text=True,
+                         check=True, timeout=120)
+    return json.loads(out.stdout.splitlines()[-1])
+
+
+def test_failed_build_is_visible(tmp_path):
+    """A compiler that fails leaves the numpy path in use, with the
+    cause in ``native.reason`` and exactly one RuntimeWarning."""
+    pytest.importorskip("cffi")
+    got = _import_native(tmp_path, CC="/bin/false")
+    assert not got["lib"]
+    assert "/bin/false" in got["reason"]
+    assert len(got["warnings"]) == 1
+    assert "numpy" in got["warnings"][0]
+    assert got["reason"] in got["warnings"][0]
+
+
+def test_no_native_on_purpose_is_silent(tmp_path):
+    """PGS_NO_NATIVE=1 picks the numpy path on purpose: a reason, no
+    warning, and no build attempt (the failing compiler never runs)."""
+    got = _import_native(tmp_path, CC="/bin/false", PGS_NO_NATIVE="1")
+    assert not got["lib"]
+    assert got["reason"] == "PGS_NO_NATIVE is set"
+    assert got["warnings"] == []
+
+
+def test_refused_cache_is_visible(tmp_path):
+    """A cache dir others can write is refused the same visible way."""
+    import os
+
+    pytest.importorskip("cffi")
+    cdir = tmp_path / "tmp" / f"pgs_native-{os.getuid()}"
+    cdir.mkdir(parents=True)
+    os.chmod(cdir, 0o777)
+    got = _import_native(tmp_path)
+    assert not got["lib"]
+    assert "not private" in got["reason"]
+    assert len(got["warnings"]) == 1

@@ -236,9 +236,11 @@ def test_time_travel_snapshot(spark, transcripts, tmp_path):
     assert new.count() == transcripts.count()
 
 
-def test_corrupted_chunk_detected(spark, transcripts, tmp_path):
+def test_corrupted_chunk_detected(spark, transcripts, tmp_path,
+                                  decode_site):
     """A flipped byte in a chunk file must surface as a CRC error at
-    decode, not as silent wrong data (M7, parquet.thrift:807-824)."""
+    decode, not as silent wrong data (M7, parquet.thrift:807-824), on
+    both decode sites."""
     import pyarrow.parquet as pq
 
     out = str(tmp_path / "tbl")
@@ -256,8 +258,10 @@ def test_corrupted_chunk_detected(spark, transcripts, tmp_path):
         pa.table(cols).replace_schema_metadata(t.schema.metadata),
         victim, compression="none",
     )
-    with pytest.raises(Exception, match="CRC mismatch"):
-        table.read_table(spark, out).count()
+    for site in ("job", "driver"):
+        decode_site(site)
+        with pytest.raises(Exception, match="CRC mismatch"):
+            table.read_table(spark, out).count()
 
 
 def test_schema_evolution_null_fills_old_chunks(spark, tmp_path):
@@ -322,16 +326,21 @@ def test_resume_rejects_stale_values_same_keys(spark, transcripts, tmp_path):
     ]
 
 
-def test_time_travel_detects_rewritten_chunk(spark, transcripts, tmp_path):
+def test_time_travel_detects_rewritten_chunk(spark, transcripts, tmp_path,
+                                             decode_site):
     """A historical snapshot whose chunk file was rewritten in place
-    (same id, no prefix) must fail loudly at decode, not silently
-    return the NEW data (ADVICE r1: per-chunk fingerprint verify)."""
+    (same id, no prefix) must fail loudly at decode, on both decode
+    sites, not silently return the NEW data (ADVICE r1: per-chunk
+    fingerprint verify)."""
     out = str(tmp_path / "tbl")
     table.write_table(transcripts.limit(200), out, num_chunks=2)
     # un-prefixed rewrite: same chunk ids → files replaced in place
     table.write_table(transcripts, out, num_chunks=2, resume=False)
-    with pytest.raises(Exception, match="rewritten after this snapshot"):
-        table.read_table(spark, out, snapshot_id=0).count()
+    for site in ("job", "driver"):
+        decode_site(site)
+        with pytest.raises(Exception,
+                           match="rewritten after this snapshot"):
+            table.read_table(spark, out, snapshot_id=0).count()
     # the current snapshot still decodes fine
     assert table.read_table(spark, out).count() == transcripts.count()
 
@@ -1471,11 +1480,11 @@ def test_map_shredding_projects_key_bytes(spark, transcripts, tmp_path):
     assert got_nulls > 0
 
 
-def test_search_text_detects_replaced_chunk(spark, tmp_path):
+def test_search_text_detects_replaced_chunk(spark, tmp_path, decode_site):
     """Every decode checks each chunk file against its manifest entry,
     not only read_table's: a chunk file replaced by another table's
     chunk with the same id fails search_text too, instead of returning
-    the other table's rows."""
+    the other table's rows, on both decode sites."""
     import shutil
 
     out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
@@ -1486,10 +1495,14 @@ def test_search_text_detects_replaced_chunk(spark, tmp_path):
     name = os.path.basename(manifest.load(out_a)["entries"][0]["file"])
     shutil.copyfile(os.path.join(out_b, "chunks", name),
                     os.path.join(out_a, "chunks", name))
-    with pytest.raises(Exception, match="rewritten after this snapshot"):
-        table.read_table(spark, out_a).count()
-    with pytest.raises(Exception, match="rewritten after this snapshot"):
-        table.search_text(spark, out_a, "text", "the").collect()
+    for site in ("job", "driver"):
+        decode_site(site)
+        with pytest.raises(Exception,
+                           match="rewritten after this snapshot"):
+            table.read_table(spark, out_a).count()
+        with pytest.raises(Exception,
+                           match="rewritten after this snapshot"):
+            table.search_text(spark, out_a, "text", "the").collect()
 
 
 def test_locality_write_picks_plane_from_partition_count(spark, tmp_path,
