@@ -247,19 +247,6 @@ def main() -> int:
             from parquet_go_spark import queries as Q
             from parquet_go_spark import table as T
 
-            sdf = spark.read.parquet(src)
-            best_loc = None
-            for rep in range(repeats):
-                t0 = time.time()
-                T.write_table(
-                    sdf, os.path.join(workdir, f"enc_loc_{rep}"),
-                    key_cols=("conv_id", "turn_idx"), shuffle=False,
-                )
-                best_loc = min(best_loc or 1e9, time.time() - t0)
-            queries[f"transcript_encode_local{cpus}_noshuffle"] = round(
-                best_loc, 3
-            )
-
             # direct path: tasks read their own input files (no JVM
             # scan / shuffle / Arrow transfer) — the pre-grouped-input
             # plan; measured at full parallelism here, at 1 core below
@@ -356,7 +343,6 @@ def main() -> int:
                     "encode_mb_s_local%d" % lvl: round(mb / runs[lvl]["enc_s"], 2)
                     for lvl in levels
                 },
-                "encode_mb_s_local%d_noshuffle" % cpus: round(mb / best_loc, 2),
                 "encode_mb_s_local1_direct": round(mb / best_dir1, 2),
                 "encode_mb_s_local%d_direct" % cpus: round(mb / best_dir, 2),
                 "scaling_pair": "local[%d] -> local[%d]" % (lo_lvl, mid_lvl),

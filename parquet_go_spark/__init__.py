@@ -13,13 +13,13 @@ re-expressed Spark-first (SURVEY.md):
   parquet-go's PLAIN / RLE_DICTIONARY / DELTA encoding choices, with
   size-verified fallbacks.
 - a Spark encode/decode path (``encode.py`` / ``decode.py``):
-  hash+turn-block-salted (or value-range, or shuffle-free locality)
-  chunking → ``sortWithinPartitions`` → ``mapInArrow`` vectorized
-  kernels → encoded-chunk files + lineage manifests (``manifest.py``)
-  with atomic snapshot commits, checkpoint resume, time travel,
-  per-chunk bloom filters, and blob-level projection/filter pushdown;
-  struct, list<struct> and map columns are shredded per child
-  (``shred.py``).
+  hash+turn-block-salted (or value-range) chunking → ``mapInArrow``
+  vectorized kernels (or, for pre-grouped input, the direct path: one
+  chunk per input file group, read inside its task) → encoded-chunk
+  files + lineage manifests (``manifest.py``) with atomic snapshot
+  commits, checkpoint resume, time travel, per-chunk bloom filters, and
+  blob-level projection/filter pushdown; struct, list<struct> and map
+  columns are shredded per child (``shred.py``).
 - ``streaming.py`` (exactly-once micro-batch ingest, windowed
   aggregation, applyInPandasWithState sessionization), ``table.py``
   (write_table / write_table_direct / read_table / compact /

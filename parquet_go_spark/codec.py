@@ -79,12 +79,8 @@ CODECS = {
     "for": _C_FOR, "bss": _C_BSS, "fsst": _C_FSST, "prefix": _C_PREFIX,
     "pfor": _C_PFOR, "deltap": _C_DELTAP, "alp": _C_ALP,
 }
-_CODEC_NAMES = {v: k for k, v in CODECS.items()}
-_CODEC_NAMES[_C_PLAIN_STR] = "plain"
-_CODEC_NAMES[_C_BOOL] = "plain"
 
 ENTROPIES = {"none": 0, "zlib": 1, "zstd": 2}
-_ENTROPY_NAMES = {v: k for k, v in ENTROPIES.items()}
 
 # level 9: ~8% smaller than pyarrow's default level 1 on FSST output at
 # ~25 ms/MB — negligible next to the encode kernels; decode speed is
@@ -722,15 +718,3 @@ def content_crc(arr: pa.Array, crc: int = 0) -> int:
     v = _num_values(arr)
     return zlib.crc32(np.ascontiguousarray(v), crc)
 
-
-def blob_info(blob: bytes | memoryview) -> dict:
-    """Introspect a blob header (codec/entropy names, counts, sizes)."""
-    _, dt, cid, eid, n, raw_len = _HDR.unpack_from(blob, 0)
-    return {
-        "dtype": str(_ARROW_TYPES[dt]),
-        "codec": _CODEC_NAMES[cid],
-        "entropy": _ENTROPY_NAMES[eid],
-        "n_values": n,
-        "raw_payload": raw_len,
-        "blob_bytes": len(blob),
-    }

@@ -5,16 +5,16 @@ The Spark-first re-expression of the reference's write path
 ``Writer.Write`` + row-group flushes, the whole table is
 
     withColumn(_ck = pmod(xxhash64(part_key, turn_block), num_chunks))
-      .repartition(num_chunks, _ck)          # the one shuffle
-      .sortWithinPartitions(_ck, *key_cols)  # M8 sorting invariant
-      .mapInArrow(encode_partition)          # vectorized numpy kernels
+      .repartition(n_parts, _ck)             # the one shuffle
+      .mapInArrow(encode_task)               # sort (M8), numpy kernels
 
 Chunk assignment is *content-addressed* (hash of key + turn-block salt),
 not sampled ranges: deterministic across job restarts (checkpoint
 resume) and skew-bounded (a conversation longer than ``salt_block``
 turns is split across chunks at turn-block boundaries — explicit skew
 handling per north_rule). Each task writes its chunk files directly
-(atomic tmp+rename) and emits one manifest-entry JSON per chunk.
+(atomic tmp+rename) and emits one manifest-entry JSON per chunk. The
+direct path runs the same task body over pre-grouped input files.
 """
 
 from __future__ import annotations
@@ -33,7 +33,8 @@ from . import manifest, shred
 from .codec import content_crc, encode_array
 from .plan import choose_codec, profile_array
 
-__all__ = ["make_encode_fn", "BLOB_COL_PREFIX"]
+__all__ = ["make_encode_fn", "partition_chunks", "file_chunks",
+           "BLOB_COL_PREFIX"]
 
 # Chunk file layout: ONE row, one parquet COLUMN per encoded blob
 # (named b_<column>). Parquet's columnar projection then means reading
@@ -45,6 +46,12 @@ __all__ = ["make_encode_fn", "BLOB_COL_PREFIX"]
 
 _MANIFEST_META_KEY = b"pgs_manifest_entry"
 BLOB_COL_PREFIX = "b_"
+
+
+def make_chunk_id(prefix: str, n: int) -> str:
+    """The id of chunk number ``n`` under ``prefix`` (the one spelling
+    of a chunk id; upsert finds a key's chunk by it)."""
+    return f"{prefix}{n:06d}"
 
 
 def _encode_one_column(arr: pa.Array, name: str,
@@ -242,22 +249,47 @@ def _encode_or_reuse(chunk: pa.Table, chunk_id: str, table_dir: str,
     return entry
 
 
-def make_encode_fn(table_dir: str, key_cols: tuple[str, ...],
+def make_encode_fn(chunks, table_dir: str, key_cols: tuple[str, ...],
                    overrides: dict[str, tuple[str, str]] | None = None,
-                   resume: bool = True, chunk_prefix: str = "",
-                   bloom_cols: tuple[str, ...] = (),
+                   resume: bool = True, bloom_cols: tuple[str, ...] = (),
                    token_bloom_cols: tuple[str, ...] = ()):
-    """Build the mapInArrow UDF: iterator[RecordBatch] → entry_json rows.
-
-    ``chunk_prefix`` namespaces chunk ids (streaming micro-batches use
-    one prefix per batch so appends never collide)."""
+    """Build the mapInArrow UDF both write paths run, the one encode
+    task body: iterator[RecordBatch] → (chunk_id, entry_json) rows.
+    ``chunks(batches)`` yields the task's ``(chunk_id, sorted table)``
+    pairs (``partition_chunks`` or ``file_chunks``); each is encoded in
+    that order."""
     overrides = overrides or {}
 
-    def encode_partition(batches):
+    def encode_task(batches):
         from pyspark import TaskContext
 
         tc = TaskContext.get()
         attempt = f"task{tc.taskAttemptId()}" if tc else "local"
+        # one symbol-table cache per TASK: consecutive chunks of a
+        # column share a trained FSST table (determinism: the cache
+        # never outlives the task, and chunk order in it is fixed)
+        enc_cache: dict = {}
+        for chunk_id, chunk in chunks(batches):
+            entry = _encode_or_reuse(
+                chunk, chunk_id, table_dir, key_cols, overrides, resume,
+                bloom_cols, attempt, token_bloom_cols, cache=enc_cache,
+            )
+            yield pa.RecordBatch.from_pydict(
+                {"chunk_id": pa.array([chunk_id]),
+                 "entry_json": pa.array([json.dumps(entry)])}
+            )
+
+    return encode_task
+
+
+def partition_chunks(key_cols: tuple[str, ...], chunk_prefix: str = ""):
+    """Shuffle-path chunks: the task's rows carry their chunk number in
+    ``_ck``; each ``_ck`` group, sorted on ``key_cols``, is one chunk.
+    ``chunk_prefix`` namespaces chunk ids (streaming micro-batches use
+    one prefix per batch so appends never collide)."""
+    sort_keys = [("_ck", "ascending")] + [(k, "ascending") for k in key_cols]
+
+    def chunks(batches):
         import pyarrow.compute as pc
 
         blist = list(batches)
@@ -270,82 +302,42 @@ def make_encode_fn(table_dir: str, key_cols: tuple[str, ...],
         # sortWithinPartitions: the keys are unique, so the total order
         # — and therefore every chunk's bytes and data_crc — is
         # identical, at ~1/20th the cost of Spark's row sorter
-        sort_keys = [(k, "ascending") for k in key_cols]
-        if "_ck" in tbl.column_names:
-            tbl = tbl.take(pc.sort_indices(
-                tbl, sort_keys=[("_ck", "ascending")] + sort_keys
-            )).combine_chunks()
-            ck = tbl.column("_ck").to_numpy(zero_copy_only=False)
-            data = tbl.drop_columns(["_ck"])
-        else:
-            # locality mode (write_table(shuffle=False)): the whole
-            # input partition is one chunk, id = partition ordinal
-            tbl = tbl.take(pc.sort_indices(tbl, sort_keys=sort_keys)) \
-                .combine_chunks()
-            pid = tc.partitionId() if tc else 0
-            ck = np.full(tbl.num_rows, pid, dtype=np.int64)
-            data = tbl
+        tbl = tbl.take(pc.sort_indices(tbl, sort_keys=sort_keys)) \
+            .combine_chunks()
+        ck = tbl.column("_ck").to_numpy(zero_copy_only=False)
+        data = tbl.drop_columns(["_ck"])
         # partition may hold several chunk keys (hash collisions) — rows
         # are sorted by _ck first, so each chunk is a contiguous slice.
         bounds = np.flatnonzero(np.diff(ck)) + 1
         starts = np.concatenate([[0], bounds, [len(ck)]])
-        # one symbol-table cache per TASK: consecutive chunks of a
-        # column share a trained FSST table (determinism: the cache
-        # never outlives the task, and chunk order in it is fixed)
-        enc_cache: dict = {}
         for i in range(len(starts) - 1):
             lo, hi = int(starts[i]), int(starts[i + 1])
-            chunk_id = f"{chunk_prefix}{int(ck[lo]):06d}"
-            entry = _encode_or_reuse(
-                data.slice(lo, hi - lo), chunk_id, table_dir, key_cols,
-                overrides, resume, bloom_cols, attempt, token_bloom_cols,
-                cache=enc_cache,
-            )
-            yield pa.RecordBatch.from_pydict(
-                {"chunk_id": pa.array([chunk_id]),
-                 "entry_json": pa.array([json.dumps(entry)])}
-            )
+            yield (make_chunk_id(chunk_prefix, int(ck[lo])),
+                   data.slice(lo, hi - lo))
 
-    return encode_partition
+    return chunks
 
 
-def make_direct_encode_fn(table_dir: str, key_cols: tuple[str, ...],
-                          overrides: dict | None = None,
-                          resume: bool = True,
-                          bloom_cols: tuple[str, ...] = ()):
-    """Direct-path encode: each task READS ITS OWN input parquet files
-    with pyarrow and encodes them as one chunk — no JVM scan, no
+def file_chunks(key_cols: tuple[str, ...]):
+    """Direct-path chunks: each task READS ITS OWN input parquet files
+    with pyarrow, one (chunk_id, files) row per chunk — no JVM scan, no
     shuffle, no Arrow JVM→Python transfer (only file paths cross the
     boundary). The right plan when the input is already
     conversation-grouped: at 1000 executors every task streams its
     shard straight from storage into the kernels."""
-    overrides = overrides or {}
+    sort_keys = [(k, "ascending") for k in key_cols]
 
-    def encode_files(batches):
+    def chunks(batches):
         import pyarrow.compute as pc
-        from pyspark import TaskContext
 
-        tc = TaskContext.get()
-        attempt = f"task{tc.taskAttemptId()}" if tc else "local"
-        enc_cache: dict = {}
         for b in batches:
             for row in range(b.num_rows):
-                chunk_id = b.column("chunk_id")[row].as_py()
                 files = json.loads(b.column("files")[row].as_py())
                 tbl = pa.concat_tables([pq.read_table(f) for f in files])
                 if tbl.num_rows == 0:
                     continue
-                idx = pc.sort_indices(
-                    tbl, sort_keys=[(k, "ascending") for k in key_cols]
-                )
-                tbl = tbl.take(idx).combine_chunks()
-                entry = _encode_or_reuse(
-                    tbl, chunk_id, table_dir, key_cols, overrides,
-                    resume, bloom_cols, attempt, cache=enc_cache,
-                )
-                yield pa.RecordBatch.from_pydict(
-                    {"chunk_id": pa.array([chunk_id]),
-                     "entry_json": pa.array([json.dumps(entry)])}
-                )
+                idx = pc.sort_indices(tbl, sort_keys=sort_keys)
+                yield (b.column("chunk_id")[row].as_py(),
+                       tbl.take(idx).combine_chunks())
 
-    return encode_files
+    return chunks

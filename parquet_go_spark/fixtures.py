@@ -136,11 +136,3 @@ def make_transcripts_df(spark, n_conv: int, seed: int = 42,
     ddl = ("conv_id string, turn_idx int, role string, text string, "
            "tool string, ts timestamp")
     return spark.createDataFrame(tbl.to_pandas(), schema=ddl)
-
-
-def write_transcripts_parquet(path: str, n_conv: int, seed: int = 42,
-                              giant_conv_turns: int = 0) -> str:
-    import pyarrow.parquet as pq
-
-    pq.write_table(make_transcripts(n_conv, seed, giant_conv_turns), path)
-    return path

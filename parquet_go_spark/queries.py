@@ -741,10 +741,12 @@ def q_zorder_cluster(spark, sf_dir):
 
 
 def q_locality_roundtrip(spark, sf_dir):
-    """Shuffle-free encode (input partition = chunk) → decode identity."""
+    """Shuffle-free encode (one input file = one chunk, read inside its
+    task by the direct path) → decode identity."""
     out = os.path.join(tempfile.mkdtemp(prefix="pgs_loc_"), "lineitem")
-    table.write_table(
-        _lineitem(spark, sf_dir), out, key_cols=LINEITEM_KEY, shuffle=False
+    table.write_table_direct(
+        spark, [os.path.join(sf_dir, "lineitem.parquet")], out,
+        key_cols=LINEITEM_KEY,
     )
     return table.read_table(spark, out)
 

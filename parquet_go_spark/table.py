@@ -28,7 +28,8 @@ from pyspark.sql.types import (
 
 from . import manifest
 from .decode import make_decode_fn, prune_entries
-from .encode import make_encode_fn
+from .encode import (file_chunks, make_chunk_id, make_encode_fn,
+                     partition_chunks)
 
 __all__ = ["write_table", "write_table_direct", "read_table", "compact",
            "count_rows", "column_stats", "search_text", "delete_rows", "upsert_table",
@@ -291,7 +292,6 @@ def write_table(
     chunk_expr=None,
     chunk_prefix: str = "",
     append: bool = False,
-    shuffle: bool = True,
     bloom_cols: tuple[str, ...] = (),
     token_bloom_cols: tuple[str, ...] = (),
 ) -> dict:
@@ -311,28 +311,21 @@ def write_table(
     micro-batch gives exactly-once streaming ingestion even when a
     batch is replayed).
 
-    ``shuffle=False`` (locality mode) skips the exchange entirely: each
-    input partition becomes one chunk (sorted locally on key_cols).
-    Use when the input is already conversation-grouped — the common
-    re-encode case at scale — but note chunk ids then follow the scan's
-    partition ordinals, so resume requires a stable input listing.
-
-    The manifest commit picks its plane from the chunk count (see
-    ``_commit``): ``num_chunks``, or in locality mode the input
-    partition count. On the task plane shard files are written by a
-    second Spark stage and the driver handles only O(shards) summaries.
+    The manifest commit picks its plane from ``num_chunks`` (see
+    ``_commit``). On the task plane shard files are written by a second
+    Spark stage and the driver handles only O(shards) summaries. For
+    input that is already conversation-grouped in parquet files,
+    ``write_table_direct`` skips the exchange.
     """
     df, orig_schema_json = _lower_interval_df(df)
     schema_json = orig_schema_json or df.schema.json()
     entries_df, extra = _stage_encode(
         df, table_dir, key_cols, num_chunks, rows_per_chunk, salt_block,
-        overrides, resume, chunk_expr, chunk_prefix, bloom_cols, shuffle,
+        overrides, resume, chunk_expr, chunk_prefix, bloom_cols,
         token_bloom_cols,
     )
-    # locality mode: each non-empty input partition is one chunk
-    n_chunks = extra["num_chunks"] if shuffle else df.rdd.getNumPartitions()
     return _commit(entries_df, table_dir, schema_json, extra, append,
-                   n_chunks)
+                   extra["num_chunks"])
 
 
 def _commit(entries_df: DataFrame, table_dir: str, schema_ddl: str,
@@ -359,6 +352,17 @@ def _commit(entries_df: DataFrame, table_dir: str, schema_ddl: str,
             "reused_chunks": sum(r["reused_chunks"] for r in refs)}
 
 
+def _hash_chunk(key_cols: tuple[str, ...], salt_block: int,
+                num_chunks: int):
+    """The hash chunk rule, as a Column: pmod(xxhash64(key_cols[0],
+    floor(key_cols[1] / salt_block)), num_chunks). Writes assign rows
+    to chunks by it and upsert finds a key's chunk by it, so both must
+    read it from here."""
+    salt = (F.floor(F.col(key_cols[1]) / F.lit(salt_block))
+            if len(key_cols) > 1 else F.lit(0))
+    return F.pmod(F.xxhash64(F.col(key_cols[0]), salt), F.lit(num_chunks))
+
+
 def _stage_encode(
     df: DataFrame,
     table_dir: str,
@@ -371,7 +375,6 @@ def _stage_encode(
     chunk_expr,
     chunk_prefix: str,
     bloom_cols: tuple[str, ...],
-    shuffle: bool,
     token_bloom_cols: tuple[str, ...] = (),
 ) -> tuple[DataFrame, dict]:
     """Build the (lazy) encode job: stage → mapInArrow → one
@@ -382,86 +385,131 @@ def _stage_encode(
     # partition with pyarrow (same total order on the unique keys, so
     # chunk bytes and data_crc are identical), which is ~20x cheaper
     # than Spark's row sorter on these payloads
-    if not shuffle:
-        staged = df
-        extra = {"mode": "locality", "key_cols": list(key_cols)}
-    else:
-        size = None
-        try:
-            est = (
-                df._jdf.queryExecution().optimizedPlan().stats()
-                .sizeInBytes()
-            )
-            # py4j returns java.math.BigInteger for huge "unknown"
-            # estimates but a plain int for normal ones — handle both
-            est = int(est.toString()) if hasattr(est, "toString") else int(est)
-            if 0 < est < (1 << 50):  # Catalyst "unknown" is huge
-                size = est
-        except Exception:
-            pass
-        n_rows = None
-        if num_chunks is None:
-            # prefer Catalyst's size estimate (no extra job); fall back
-            # to an exact count. Both are deterministic for the same
-            # input, which resume's chunk-id stability requires.
-            if size is not None:
-                # rows_per_chunk ≈ 64 MB of in-memory rows at the
-                # transcript shape (~250 B/row)
-                num_chunks = max(1, math.ceil(size / (64 << 20)))
-            else:
-                n_rows = df.count()
-                num_chunks = max(1, math.ceil(n_rows / rows_per_chunk))
-        if chunk_expr is not None:
-            ck = F.pmod(chunk_expr.cast("long"), F.lit(num_chunks))
-        else:
-            salt = (
-                F.floor(F.col(key_cols[1]) / F.lit(salt_block))
-                if len(key_cols) > 1
-                else F.lit(0)
-            )
-            ck = F.pmod(F.xxhash64(F.col(key_cols[0]), salt), F.lit(num_chunks))
-        # shuffle PARTITION count is decoupled from CHUNK count: chunk
-        # identity is the _ck value (the kernel sorts its partition and
-        # slices every _ck group it holds), so chunk bytes / resume /
-        # manifests are partition-count-independent. Tasks are sized
-        # for the cluster — ~4 waves per core (straggler overlap; 2
-        # waves measurably lost N→4N efficiency to the last-wave tail),
-        # at most ~128 MB of input per task (python-worker working set)
-        # — instead of one JVM↔Python round-trip per chunk (at
-        # one-chunk-per-task a 4M-chunk table would schedule 4M tiny
-        # tasks; at local[1] it made 64 round-trips for 204 MB)
-        par = df.sparkSession.sparkContext.defaultParallelism
-        floor_parts = 4 * max(par, 1)
+    size = None
+    try:
+        est = (
+            df._jdf.queryExecution().optimizedPlan().stats()
+            .sizeInBytes()
+        )
+        # py4j returns java.math.BigInteger for huge "unknown"
+        # estimates but a plain int for normal ones — handle both
+        est = int(est.toString()) if hasattr(est, "toString") else int(est)
+        if 0 < est < (1 << 50):  # Catalyst "unknown" is huge
+            size = est
+    except Exception:
+        pass
+    n_rows = None
+    if num_chunks is None:
+        # prefer Catalyst's size estimate (no extra job); fall back
+        # to an exact count. Both are deterministic for the same
+        # input, which resume's chunk-id stability requires.
         if size is not None:
-            floor_parts = max(floor_parts, math.ceil(size / (128 << 20)))
-        elif n_rows is not None:
-            # no Catalyst estimate (post-shuffle/UDF sources): bound the
-            # per-task working set from the exact count already taken
-            floor_parts = max(
-                floor_parts, math.ceil(n_rows * EST_ROW_BYTES / (128 << 20))
-            )
+            # rows_per_chunk ≈ 64 MB of in-memory rows at the
+            # transcript shape (~250 B/row)
+            num_chunks = max(1, math.ceil(size / (64 << 20)))
         else:
-            # explicit num_chunks AND no size info at all: fall back to
-            # one chunk per task so tasks stay bounded at chunk size
-            # (the kernel materializes its whole partition via Arrow)
-            floor_parts = max(floor_parts, num_chunks)
-        n_parts = max(1, min(num_chunks, floor_parts))
-        staged = df.withColumn("_ck", ck).repartition(n_parts, "_ck")
-        extra = {"num_chunks": num_chunks, "salt_block": salt_block,
-                 "key_cols": list(key_cols)}
-    encode_fn = make_encode_fn(table_dir, key_cols, overrides, resume,
-                               chunk_prefix, bloom_cols, token_bloom_cols)
+            n_rows = df.count()
+            num_chunks = max(1, math.ceil(n_rows / rows_per_chunk))
+    if chunk_expr is not None:
+        ck = F.pmod(chunk_expr.cast("long"), F.lit(num_chunks))
+    else:
+        ck = _hash_chunk(key_cols, salt_block, num_chunks)
+    # shuffle PARTITION count is decoupled from CHUNK count: chunk
+    # identity is the _ck value (the kernel sorts its partition and
+    # slices every _ck group it holds), so chunk bytes / resume /
+    # manifests are partition-count-independent. Tasks are sized
+    # for the cluster — ~4 waves per core (straggler overlap; 2
+    # waves measurably lost N→4N efficiency to the last-wave tail),
+    # at most ~128 MB of input per task (python-worker working set)
+    # — instead of one JVM↔Python round-trip per chunk (at
+    # one-chunk-per-task a 4M-chunk table would schedule 4M tiny
+    # tasks; at local[1] it made 64 round-trips for 204 MB)
+    par = df.sparkSession.sparkContext.defaultParallelism
+    floor_parts = 4 * max(par, 1)
+    if size is not None:
+        floor_parts = max(floor_parts, math.ceil(size / (128 << 20)))
+    elif n_rows is not None:
+        # no Catalyst estimate (post-shuffle/UDF sources): bound the
+        # per-task working set from the exact count already taken
+        floor_parts = max(
+            floor_parts, math.ceil(n_rows * EST_ROW_BYTES / (128 << 20))
+        )
+    else:
+        # explicit num_chunks AND no size info at all: fall back to
+        # one chunk per task so tasks stay bounded at chunk size
+        # (the kernel materializes its whole partition via Arrow)
+        floor_parts = max(floor_parts, num_chunks)
+    n_parts = max(1, min(num_chunks, floor_parts))
+    staged = df.withColumn("_ck", ck).repartition(n_parts, "_ck")
+    extra = {"num_chunks": num_chunks, "salt_block": salt_block,
+             "key_cols": list(key_cols)}
+    encode_fn = make_encode_fn(partition_chunks(key_cols, chunk_prefix),
+                               table_dir, key_cols, overrides, resume,
+                               bloom_cols, token_bloom_cols)
     entries_df = staged.mapInArrow(
         encode_fn, "chunk_id string, entry_json string"
     )
     return entries_df, extra
 
 
-def _encode_entries(*args, **kwargs) -> tuple[list[dict], dict]:
-    """Eager variant (driver-side entry list) for the internal rewrite
-    ops (compact/delete/upsert), whose touched-entry sets are O(batch)."""
-    entries_df, extra = _stage_encode(*args, **kwargs)
-    return [json.loads(r.entry_json) for r in entries_df.collect()], extra
+def _encode_entries(spark, table_dir: str, listing: dict,
+                    affected: list[dict], fn, num_chunks: int,
+                    chunk_prefix: str) -> list[dict]:
+    """The one re-encode of compact, delete_rows and upsert_table:
+    decode the ``affected`` entries (all fields nullable, as in
+    read_table; interval columns in the lowered int form chunk bytes
+    store), apply ``fn`` (DataFrame → DataFrame) and encode the result
+    into ``num_chunks`` hash chunks, collecting the new entries on the
+    driver (touched sets are O(batch)). Key columns and salt block come
+    from the listing; a column keeps its bloom or token bloom when an
+    affected entry (any entry, when none is affected) has one."""
+    extra = listing["extra"]
+    schema = StructType(_udf_safe_fields([
+        StructField(f.name, f.dataType, True, f.metadata)
+        for f in StructType.fromJson(json.loads(listing["schema_ddl"])).fields
+    ])[0])
+    if affected:
+        manifest.check_chunk_layout(affected)
+        old = _decode_df(_rows_files_df(spark, _chunk_rows(
+            table_dir, affected, schema.fieldNames())), schema)
+    else:
+        old = spark.createDataFrame([], schema)
+    metas = [m for e in (affected or listing["entries"])
+             for m in e["columns"].items()]
+
+    def carried(kind):
+        return tuple(sorted({c for c, m in metas if kind in m}))
+
+    entries_df, _ = _stage_encode(
+        fn(old), table_dir,
+        key_cols=tuple(extra.get("key_cols") or ["conv_id", "turn_idx"]),
+        num_chunks=num_chunks, rows_per_chunk=DEFAULT_ROWS_PER_CHUNK,
+        salt_block=extra.get("salt_block", DEFAULT_SALT_BLOCK),
+        overrides=None, resume=False, chunk_expr=None,
+        chunk_prefix=chunk_prefix, bloom_cols=carried("bloom"),
+        token_bloom_cols=carried("token_bloom"),
+    )
+    return [json.loads(r.entry_json) for r in entries_df.collect()]
+
+
+def _commit_rewrite(table_dir: str, listing: dict, keep: list[dict],
+                    new_entries: list[dict], replaced: list[dict],
+                    tag: str) -> int:
+    """Commit keep + new_entries over the listing's snapshot (raising
+    CommitConflict if another commit landed since), recording the
+    replaced chunk ids under ``tag``; then unlink the replaced files."""
+    snap = manifest.commit(
+        table_dir, keep + new_entries, schema_ddl=listing["schema_ddl"],
+        extra={**listing["extra"],
+               tag: sorted(e["chunk_id"] for e in replaced)},
+        expect_parent=listing["snapshot_id"],
+    )
+    for e in replaced:
+        try:
+            os.unlink(os.path.join(table_dir, e["file"]))
+        except OSError:
+            pass
+    return snap
 
 
 def read_table(
@@ -610,32 +658,15 @@ def compact(
     if len(small) < 2:
         return {"compacted_chunks": 0, "n_chunks": len(entries)}
     keep = [e for e in entries if e["n_rows"] >= min_rows]
-    key_cols = tuple(listing["extra"].get("key_cols")
-                     or ["conv_id", "turn_idx"])
-    small_df = _decode_entries_df(spark, table_dir, small,
-                                  _rewrite_schema(listing))
-
-    prefix = f"c{listing['snapshot_id'] + 1:04d}-"
     n_small_rows = sum(e["n_rows"] for e in small)
-    new_entries, _ = _encode_entries(
-        small_df, table_dir, key_cols=key_cols,
-        num_chunks=max(1, math.ceil(n_small_rows / rows_per_chunk)),
-        rows_per_chunk=rows_per_chunk, salt_block=DEFAULT_SALT_BLOCK,
-        overrides=None, resume=False, chunk_expr=None,
-        chunk_prefix=prefix, bloom_cols=(), shuffle=True,
+    new_entries = _encode_entries(
+        spark, table_dir, listing, small, lambda d: d,
+        max(1, math.ceil(n_small_rows / rows_per_chunk)),
+        f"c{listing['snapshot_id'] + 1:04d}-",
     )
-    small_ids = {e["chunk_id"] for e in small}
     final_entries = keep + new_entries
-    snap = manifest.commit(
-        table_dir, final_entries, schema_ddl=listing["schema_ddl"],
-        extra={**listing["extra"], "compacted_from": sorted(small_ids)},
-        expect_parent=listing["snapshot_id"],
-    )
-    for e in small:
-        try:
-            os.unlink(os.path.join(table_dir, e["file"]))
-        except OSError:
-            pass
+    snap = _commit_rewrite(table_dir, listing, keep, new_entries, small,
+                           "compacted_from")
     return {
         "snapshot_id": snap,
         "compacted_chunks": len(small),
@@ -662,37 +693,36 @@ def write_table_direct(
     of input parquet files, read INSIDE the task with pyarrow (no JVM
     scan, no shuffle, no Arrow JVM→Python transfer — only file paths
     cross the boundary). Chunk ids follow the sorted input listing, so
-    resume requires a stable listing (same caveat as locality mode).
+    resume requires a stable listing.
 
     Commits through the same ``_commit`` as write_table, which picks
     the manifest plane from the chunk count."""
-    from .encode import make_direct_encode_fn
-
     files = sorted(input_files)
     if not files:
         raise ValueError("write_table_direct: input_files is empty; "
                          "there is nothing to encode")
     groups = [files[i : i + files_per_chunk]
               for i in range(0, len(files), files_per_chunk)]
-    rows = [(f"{chunk_prefix}{i:06d}", json.dumps(g))
-            for i, g in enumerate(groups)]
-    n = len(rows)
-    par = min(n, spark.sparkContext.defaultParallelism) or 1
+    n = len(groups)
+    par = min(n, spark.sparkContext.defaultParallelism)
     # explicit chunk->task assignment: contiguous blocks, chunk i goes
-    # to task i*par//n, placed by an identity partitioner on the task
-    # index and ordered by i inside the task. The grouping decides the
-    # per-task FSST symbol-table reuse groups, hence the encoded bytes,
-    # so it is a pure function of the input listing and parallelism —
-    # no random round-robin start, no sampled range bounds. Contiguous
-    # blocks keep neighboring chunks (shared vocabulary) in one task,
-    # which is what the reuse ratio-guard wants.
-    placed = spark.sparkContext.parallelize(
-        [((i * par // n, i), row) for i, row in enumerate(rows)]
-    ).repartitionAndSortWithinPartitions(par, lambda k: k[0])
-    files_df = spark.createDataFrame(placed.values(),
-                                     "chunk_id string, files string")
-    fn = make_direct_encode_fn(table_dir, key_cols, overrides, resume,
-                               bloom_cols)
+    # to task i*par//n, in order of i inside the task. The grouping
+    # decides the per-task FSST symbol-table reuse groups, hence the
+    # encoded bytes, so it is a pure function of the input listing and
+    # parallelism — no random round-robin start, no sampled range
+    # bounds. Contiguous blocks keep neighboring chunks (shared
+    # vocabulary) in one task, which is what the reuse ratio-guard
+    # wants. ``par`` task lists in ``par`` slices: one list per task,
+    # and no shuffle.
+    tasks = [[] for _ in range(par)]
+    for i, g in enumerate(groups):
+        tasks[i * par // n].append((make_chunk_id(chunk_prefix, i),
+                                    json.dumps(g)))
+    files_df = spark.createDataFrame(
+        spark.sparkContext.parallelize(tasks, par).flatMap(lambda t: t),
+        "chunk_id string, files string")
+    fn = make_encode_fn(file_chunks(key_cols), table_dir, key_cols,
+                        overrides, resume, bloom_cols)
     entries_df = files_df.mapInArrow(
         fn, "chunk_id string, entry_json string"
     )
@@ -807,24 +837,6 @@ def _decode_local(spark, rows: list[dict], schema: StructType,
         pa.Table.from_batches(batches, schema=target), schema)
 
 
-def _rewrite_schema(listing: dict) -> StructType:
-    """The schema compact/delete/upsert decode and re-encode in: all
-    fields nullable (schema evolution null-fills columns that predate
-    a chunk, as in read_table), interval columns in their lowered int
-    form (chunk bytes store ints; the commit keeps the original DDL)."""
-    return StructType(_udf_safe_fields([
-        StructField(f.name, f.dataType, True, f.metadata)
-        for f in StructType.fromJson(json.loads(listing["schema_ddl"])).fields
-    ])[0])
-
-
-def _decode_entries_df(spark, table_dir, entries, schema) -> DataFrame:
-    """Decode a specific entry subset (internal: delete/upsert/compact)."""
-    manifest.check_chunk_layout(entries)
-    return _decode_df(_rows_files_df(spark, _chunk_rows(
-        table_dir, entries, [f.name for f in schema.fields])), schema)
-
-
 def _predicate_cond(predicates: dict):
     """{col: (lo, hi) | point} → Spark boolean Column (AND of ranges)."""
     from .decode import normalize_predicate
@@ -868,34 +880,16 @@ def delete_rows(spark: SparkSession, table_dir: str,
         return {"snapshot_id": listing["snapshot_id"],
                 "rewritten_chunks": 0, "untouched_chunks": len(keep),
                 "n_chunks": len(keep)}
-    decoded = _decode_entries_df(spark, table_dir, affected,
-                                 _rewrite_schema(listing))
     # NULL predicate values are "unknown" → NOT deleted (keep the row)
-    remaining = decoded.filter(
-        ~F.coalesce(_predicate_cond(predicates), F.lit(False))
-    )
-    key_cols = tuple(listing["extra"].get("key_cols")
-                     or ["conv_id", "turn_idx"])
-    prefix = f"d{listing['snapshot_id'] + 1:04d}-"
+    dropped = F.coalesce(_predicate_cond(predicates), F.lit(False))
     n_rows = sum(e["n_rows"] for e in affected)
-    new_entries, _ = _encode_entries(
-        remaining, table_dir, key_cols=key_cols,
-        num_chunks=max(1, math.ceil(n_rows / DEFAULT_ROWS_PER_CHUNK)),
-        rows_per_chunk=DEFAULT_ROWS_PER_CHUNK,
-        salt_block=DEFAULT_SALT_BLOCK, overrides=None, resume=False,
-        chunk_expr=None, chunk_prefix=prefix, bloom_cols=(), shuffle=True,
+    new_entries = _encode_entries(
+        spark, table_dir, listing, affected, lambda d: d.filter(~dropped),
+        max(1, math.ceil(n_rows / DEFAULT_ROWS_PER_CHUNK)),
+        f"d{listing['snapshot_id'] + 1:04d}-",
     )
-    snap = manifest.commit(
-        table_dir, keep + new_entries, schema_ddl=listing["schema_ddl"],
-        extra={**listing["extra"],
-               "deleted_from": sorted(affected_ids)},
-        expect_parent=listing["snapshot_id"],
-    )
-    for e in affected:
-        try:
-            os.unlink(os.path.join(table_dir, e["file"]))
-        except OSError:
-            pass
+    snap = _commit_rewrite(table_dir, listing, keep, new_entries, affected,
+                           "deleted_from")
     return {
         "snapshot_id": snap,
         "rewritten_chunks": len(affected),
@@ -933,15 +927,9 @@ def upsert_table(spark: SparkSession, table_dir: str,
             "or rewrite first"
         )
     num_chunks = extra["num_chunks"]
-    salt_block = extra.get("salt_block", DEFAULT_SALT_BLOCK)
     key_cols = tuple(extra.get("key_cols") or ["conv_id", "turn_idx"])
-
-    salt = (
-        F.floor(F.col(key_cols[1]) / F.lit(salt_block))
-        if len(key_cols) > 1
-        else F.lit(0)
-    )
-    ck = F.pmod(F.xxhash64(F.col(key_cols[0]), salt), F.lit(num_chunks))
+    ck = _hash_chunk(key_cols, extra.get("salt_block", DEFAULT_SALT_BLOCK),
+                     num_chunks)
     touched_df = df.select(ck.alias("_ck")).distinct()
     n_touched = touched_df.count()
     if n_touched > UPSERT_MAX_TOUCHED_CHUNKS:
@@ -953,24 +941,19 @@ def upsert_table(spark: SparkSession, table_dir: str,
             "with write_table() (distributed commit) or compact() instead, "
             "or raise UPSERT_MAX_TOUCHED_CHUNKS explicitly"
         )
-    touched = {f"{r[0]:06d}" for r in touched_df.collect()}
+    touched = {make_chunk_id("", r[0]) for r in touched_df.collect()}
     affected = [e for e in listing["entries"] if e["chunk_id"] in touched]
     # interval columns merge in their lowered int form (both the stored
     # chunks and the incoming batch), original DDL stays in the commit
     df, _ = _lower_interval_df(df)
-    schema = _rewrite_schema(listing)
-    old = (
-        _decode_entries_df(spark, table_dir, affected, schema)
-        if affected else spark.createDataFrame([], schema)
-    )
-    merged = old.join(df.select(*old.columns), on=list(key_cols),
-                      how="left_anti").unionByName(df.select(*old.columns))
-    new_entries, _ = _encode_entries(
-        merged, table_dir, key_cols=key_cols, num_chunks=num_chunks,
-        rows_per_chunk=DEFAULT_ROWS_PER_CHUNK, salt_block=salt_block,
-        overrides=None, resume=False, chunk_expr=None, chunk_prefix="",
-        bloom_cols=(), shuffle=True,
-    )
+
+    def merge(old):
+        new = df.select(*old.columns)
+        return old.join(new, on=list(key_cols), how="left_anti") \
+            .unionByName(new)
+
+    new_entries = _encode_entries(spark, table_dir, listing, affected,
+                                  merge, num_chunks, "")
     snap = manifest.commit(
         table_dir, new_entries, schema_ddl=listing["schema_ddl"],
         extra=extra, append=True,

@@ -1,12 +1,13 @@
 """No-Spark host-envelope control for the N->4N scaling evidence.
 
-Runs the EXACT direct-path encode kernel (pyarrow file read -> sort ->
-``encode._encode_or_reuse`` -> chunk write) over the same input files
-at 1 and then P OS processes — no JVM, no shuffle, no Arrow IPC, no
-scheduler. Whatever 1->P speedup THIS shows is the ceiling any
-single-box Spark pair can reach for the same byte stream: if the bare
-kernels in plain processes scale below 4x, the residual gap in the
-cluster cells is the host's shared memory/IO envelope, not the plan.
+Runs the EXACT direct-path encode task (``encode.make_encode_fn`` over
+``encode.file_chunks``: pyarrow file read -> sort -> encode -> chunk
+write) over the same input files at 1 and then P OS processes — no
+JVM, no shuffle, no Arrow IPC, no scheduler. Whatever 1->P speedup
+THIS shows is the ceiling any single-box Spark pair can reach for the
+same byte stream: if the bare kernels in plain processes scale below
+4x, the residual gap in the cluster cells is the host's shared
+memory/IO envelope, not the plan.
 
 Usage:
     python scripts/host_control.py <input_parquet_dir> [P] [files_per_chunk]
@@ -34,28 +35,23 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _run_slice(args) -> tuple[int, int]:
-    """Encode a contiguous slice of chunk groups in one process."""
-    groups, out_dir, slice_id = args
+    """Encode a contiguous slice of chunk groups in one process, through
+    the direct path's task function."""
+    groups, out_dir, _ = args
     import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    from parquet_go_spark.encode import _encode_or_reuse
+    from parquet_go_spark.encode import (file_chunks, make_chunk_id,
+                                         make_encode_fn)
 
-    os.makedirs(os.path.join(out_dir, "chunks"), exist_ok=True)
-    cache: dict = {}
+    key_cols = ("conv_id", "turn_idx")
+    fn = make_encode_fn(file_chunks(key_cols), out_dir, key_cols,
+                        resume=False)
+    batch = pa.RecordBatch.from_pydict({
+        "chunk_id": [make_chunk_id("", i) for i, _ in groups],
+        "files": [json.dumps(files) for _, files in groups]})
     raw = enc = 0
-    for i, files in groups:
-        tbl = pa.concat_tables([pq.read_table(f) for f in files])
-        idx = pc.sort_indices(
-            tbl, sort_keys=[("conv_id", "ascending"),
-                            ("turn_idx", "ascending")]
-        )
-        tbl = tbl.take(idx).combine_chunks()
-        entry = _encode_or_reuse(
-            tbl, f"{i:06d}", out_dir, ("conv_id", "turn_idx"), {},
-            False, (), f"proc{slice_id}", cache=cache,
-        )
+    for out in fn(iter([batch])):
+        entry = json.loads(out.column("entry_json")[0].as_py())
         raw += entry["raw_bytes"]
         enc += entry["enc_bytes"]
     return raw, enc

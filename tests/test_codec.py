@@ -6,7 +6,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from parquet_go_spark.codec import blob_info, decode_array, encode_array
+from parquet_go_spark.codec import decode_array, encode_array
 from parquet_go_spark.plan import choose_codec, profile_array
 
 RNG = np.random.default_rng(42)
@@ -80,13 +80,6 @@ def test_nulls():
 def test_all_null():
     a = pa.array([None] * 10, type=pa.int64())
     _rt(a, "plain")
-
-
-def test_blob_info():
-    blob = encode_array(SORTED, "delta", "zstd")
-    info = blob_info(blob)
-    assert info["codec"] == "delta" and info["entropy"] == "zstd"
-    assert info["n_values"] == 5000
 
 
 def test_dict_beats_plain_on_lowcard():

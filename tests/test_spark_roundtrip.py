@@ -116,34 +116,6 @@ def test_size_gate_vs_parquet_baseline(spark, tmp_path_factory):
     assert s["enc_bytes"] <= ref_size, (s["enc_bytes"], ref_size)
 
 
-def test_locality_mode_no_shuffle_roundtrip(spark, tmp_path):
-    """shuffle=False: each input partition becomes one chunk; decode
-    must still match the source exactly."""
-    import pyarrow.parquet as pq
-
-    from parquet_go_spark.fixtures import make_transcripts
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    t = make_transcripts(120, seed=5)
-    step = (t.num_rows + 3) // 4
-    for i in range(0, t.num_rows, step):
-        pq.write_table(t.slice(i, step), f"{src}/f{i//step}.parquet")
-
-    df = spark.read.parquet(src)
-    out = str(tmp_path / "tbl")
-    info = table.write_table(df, out, shuffle=False)
-    assert info["n_chunks"] >= 1
-    back = table.read_table(spark, out)
-    assert back.count() == t.num_rows
-    assert back.exceptAll(df).count() == 0
-    assert df.exceptAll(back).count() == 0
-    # plan must not contain an exchange
-    plan = df.sortWithinPartitions("conv_id", "turn_idx")._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
 def test_row_filter_pushdown(spark, transcripts, tmp_path):
     """push_row_filter=True must return exactly the matching rows,
     filtered inside the decode kernel (no residual filter)."""
@@ -219,6 +191,51 @@ def test_bloom_point_lookup_prunes_chunks(spark, transcripts, tmp_path):
     want = transcripts.filter(F.col("conv_id") == target)
     assert got.count() == want.count() > 0
     assert got.exceptAll(want).count() == 0
+
+
+@pytest.mark.parametrize("op", ["compact", "delete_rows", "upsert_table"])
+def test_rewrite_ops_keep_blooms(spark, tmp_path, op):
+    """compact, delete_rows and upsert_table re-encode chunks with the
+    blooms and token blooms of the chunks they replace, on the same
+    columns, so point lookups and search_text keep pruning them."""
+    import pyspark.sql.functions as F
+
+    from parquet_go_spark.decode import prune_entries
+
+    df = make_transcripts_df(spark, n_conv=60, seed=71)
+    out = str(tmp_path / "tbl")
+    blooms = {"bloom_cols": ("conv_id",), "token_bloom_cols": ("text",)}
+    target = "conv-00000007"
+    if op == "compact":
+        first = F.col("conv_id") < "conv-00000030"
+        table.write_table(df.filter(first), out, num_chunks=3,
+                          chunk_prefix="a-", append=True, **blooms)
+        table.write_table(df.filter(~first), out, num_chunks=3,
+                          chunk_prefix="b-", append=True, **blooms)
+        res = table.compact(spark, out, min_rows=10**6, rows_per_chunk=300)
+        assert res["new_chunks"] > 1
+    else:
+        table.write_table(df, out, num_chunks=4, **blooms)
+        if op == "delete_rows":
+            res = table.delete_rows(spark, out, {"conv_id": target})
+        else:
+            res = table.upsert_table(spark, out, df.filter(
+                F.col("conv_id") == target).withColumn("text", F.lit("x y")))
+        assert res["rewritten_chunks"] >= 1
+    entries = manifest.load(out)["entries"]
+    for e in entries:
+        assert {c for c, m in e["columns"].items() if "bloom" in m} \
+            == {"conv_id"}, e["chunk_id"]
+        assert {c for c, m in e["columns"].items() if "token_bloom" in m} \
+            == {"text"}, e["chunk_id"]
+    if op == "compact":
+        kept = prune_entries(entries, {"conv_id": target})
+        assert 1 <= len(kept) < len(entries)
+        got = table.read_table(spark, out, predicates={"conv_id": target},
+                               push_row_filter=True)
+        want = df.filter(F.col("conv_id") == target)
+        assert got.count() == want.count() > 0
+        assert got.exceptAll(want).count() == 0
 
 
 def test_time_travel_snapshot(spark, transcripts, tmp_path):
@@ -526,6 +543,40 @@ def test_upsert_replaces_and_appends(spark, transcripts, tmp_path):
     assert back.filter(F.col("conv_id") == "conv-99999999").count() \
         == new_rows.count()
     assert back.count() == transcripts.count() + new_rows.count()
+
+    # salt_block=4 spreads the fixed conversation over several chunks:
+    # upsert finds them only while it and the write share one hash
+    # chunk rule, so the fix must land once per turn and rewrite
+    # exactly the chunks that held the conversation
+    salted = str(tmp_path / "salted")
+    table.write_table(transcripts, salted, num_chunks=6, salt_block=4)
+    held = _chunks_holding(salted, "conv-00000001")
+    assert held > 1
+    info = table.upsert_table(spark, salted, fixes)
+    assert info["rewritten_chunks"] == held
+    got = table.read_table(spark, salted).filter(
+        F.col("conv_id") == "conv-00000001")
+    assert got.count() == fixes.count() \
+        == got.select("turn_idx").distinct().count()
+    assert {r["text"] for r in got.select("text").collect()} == {"REDACTED"}
+    assert table.count_rows(salted) == transcripts.count()
+
+
+def _chunks_holding(table_dir: str, conv_id: str) -> int:
+    """How many of the table's chunk files hold a row of ``conv_id``,
+    found by decoding each chunk's conv_id column."""
+    import pyarrow as pa
+
+    from parquet_go_spark.decode import make_decode_fn
+
+    held = 0
+    for e in manifest.load(table_dir)["entries"]:
+        b = pa.RecordBatch.from_pydict(
+            {"file": [os.path.join(table_dir, e["file"])]})
+        ids = {v for out in make_decode_fn(["conv_id"])(iter([b]))
+               for v in out.column(0).to_pylist()}
+        held += conv_id in ids
+    return held
 
 
 def test_expire_snapshots_gc(spark, tmp_path):
@@ -1505,26 +1556,36 @@ def test_search_text_detects_replaced_chunk(spark, tmp_path, decode_site):
             table.search_text(spark, out_a, "text", "the").collect()
 
 
-def test_locality_write_picks_plane_from_partition_count(spark, tmp_path,
-                                                         monkeypatch):
-    """A shuffle=False write passes its input partition count (one
-    chunk per non-empty partition) to the plane test, so at the
-    threshold it commits through the shard-writing task plane, not
-    manifest.commit on the driver."""
-    df = make_transcripts_df(spark, n_conv=40, seed=17).repartition(3)
+def test_direct_write_picks_plane_from_chunk_count(spark, tmp_path,
+                                                  monkeypatch):
+    """write_table_direct passes its chunk count (one chunk per input
+    file here) to the plane test, so at the threshold it commits
+    through the shard-writing task plane, not manifest.commit on the
+    driver."""
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark.fixtures import make_transcripts
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    t = make_transcripts(40, seed=17)
+    step = (t.num_rows + 2) // 3
+    for i in range(0, t.num_rows, step):
+        pq.write_table(t.slice(i, step), f"{src}/f{i//step}.parquet")
+    files = sorted(glob.glob(os.path.join(src, "*.parquet")))
+    assert len(files) == 3
     _force_distributed(monkeypatch)
 
     def boom(*a, **k):
-        raise AssertionError("locality write committed on the driver")
+        raise AssertionError("direct write committed on the driver")
 
     monkeypatch.setattr(manifest, "commit", boom)
     out = str(tmp_path / "tbl")
-    info = table.write_table(df, out, shuffle=False)
+    info = table.write_table_direct(spark, files, out)
     assert info["n_chunks"] == 3
     back = table.read_table(spark, out)
-    assert table.verify_roundtrip(df, back, ("conv_id", "turn_idx"))[
-        "identical"
-    ]
+    assert table.verify_roundtrip(spark.read.parquet(src), back,
+                                  ("conv_id", "turn_idx"))["identical"]
 
 
 def test_direct_path_rejects_empty_input(spark, tmp_path):
