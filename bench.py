@@ -125,10 +125,10 @@ def _encode_decode_reps(master: str, src: str, out_base: str,
         for rep in range(n_reps):
             out = f"{out_base}_{rep}"
             t0 = time.time()
-            # 64 chunks = 2 task waves at local[32]: stragglers overlap
-            # and the FSST decode working set stays cache-friendly (a
-            # 32-chunk experiment cut size 2.6% via bigger symbol
-            # tables but ran local[32] decode 3x slower — one
+            # 64 chunks = 2 per core at local[32]: the decode tasks
+            # balance and the FSST decode working set stays
+            # cache-friendly (a 32-chunk experiment cut size 2.6% via
+            # bigger symbol tables but ran local[32] decode 3x slower — one
             # straggler-exposed wave of bandwidth-heavy tasks)
             info = table.write_table(
                 df, out, key_cols=("conv_id", "turn_idx"), num_chunks=64

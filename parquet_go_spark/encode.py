@@ -5,7 +5,8 @@ The Spark-first re-expression of the reference's write path
 ``Writer.Write`` + row-group flushes, the whole table is
 
     withColumn(_ck = pmod(xxhash64(part_key, turn_block), num_chunks))
-      .repartition(n_parts, _ck)             # the one shuffle
+      .withColumn(_g = pmod(hash(_ck), n_groups))   # FSST reuse group
+      .repartition(n_tasks, _ck)             # the one shuffle
       .mapInArrow(encode_task)               # sort (M8), numpy kernels
 
 Chunk assignment is *content-addressed* (hash of key + turn-block salt),
@@ -255,24 +256,30 @@ def make_encode_fn(chunks, table_dir: str, key_cols: tuple[str, ...],
                    token_bloom_cols: tuple[str, ...] = ()):
     """Build the mapInArrow UDF both write paths run, the one encode
     task body: iterator[RecordBatch] → (chunk_id, entry_json) rows.
-    ``chunks(batches)`` yields the task's ``(chunk_id, sorted table)``
-    pairs (``partition_chunks`` or ``file_chunks``); each is encoded in
-    that order."""
+    ``chunks(batches)`` yields the task's ``(group, chunk_id, sorted
+    table)`` triples (``partition_chunks`` or ``file_chunks``), the
+    chunks of one FSST reuse group consecutive and in chunk-id order;
+    each is encoded in that order."""
     overrides = overrides or {}
 
     def encode_task(batches):
         from pyspark import TaskContext
 
         tc = TaskContext.get()
-        attempt = f"task{tc.taskAttemptId()}" if tc else "local"
-        # one symbol-table cache per TASK: consecutive chunks of a
-        # column share a trained FSST table (determinism: the cache
-        # never outlives the task, and chunk order in it is fixed)
-        enc_cache: dict = {}
-        for chunk_id, chunk in chunks(batches):
+        task = f"task{tc.taskAttemptId()}" if tc else "local"
+        group = enc_cache = None
+        for g, chunk_id, chunk in chunks(batches):
+            if g != group:
+                # one symbol-table cache per REUSE GROUP: consecutive
+                # chunks of a column share a trained FSST table
+                # (determinism: the cache never outlives the group,
+                # and chunk order in it is fixed). A task may run
+                # several groups; the entry's attempt names the group.
+                group, enc_cache = g, {}
             entry = _encode_or_reuse(
                 chunk, chunk_id, table_dir, key_cols, overrides, resume,
-                bloom_cols, attempt, token_bloom_cols, cache=enc_cache,
+                bloom_cols, f"{task}-g{g}", token_bloom_cols,
+                cache=enc_cache,
             )
             yield pa.RecordBatch.from_pydict(
                 {"chunk_id": pa.array([chunk_id]),
@@ -284,10 +291,12 @@ def make_encode_fn(chunks, table_dir: str, key_cols: tuple[str, ...],
 
 def partition_chunks(key_cols: tuple[str, ...], chunk_prefix: str = ""):
     """Shuffle-path chunks: the task's rows carry their chunk number in
-    ``_ck``; each ``_ck`` group, sorted on ``key_cols``, is one chunk.
+    ``_ck`` and their reuse group in ``_g``; each ``_ck`` group, sorted
+    on ``key_cols``, is one chunk, yielded in ``(_g, _ck)`` order.
     ``chunk_prefix`` namespaces chunk ids (streaming micro-batches use
     one prefix per batch so appends never collide)."""
-    sort_keys = [("_ck", "ascending")] + [(k, "ascending") for k in key_cols]
+    sort_keys = ([("_g", "ascending"), ("_ck", "ascending")]
+                 + [(k, "ascending") for k in key_cols])
 
     def chunks(batches):
         import pyarrow.compute as pc
@@ -304,15 +313,17 @@ def partition_chunks(key_cols: tuple[str, ...], chunk_prefix: str = ""):
         # identical, at ~1/20th the cost of Spark's row sorter
         tbl = tbl.take(pc.sort_indices(tbl, sort_keys=sort_keys)) \
             .combine_chunks()
+        g = tbl.column("_g").to_numpy(zero_copy_only=False)
         ck = tbl.column("_ck").to_numpy(zero_copy_only=False)
-        data = tbl.drop_columns(["_ck"])
-        # partition may hold several chunk keys (hash collisions) — rows
-        # are sorted by _ck first, so each chunk is a contiguous slice.
+        data = tbl.drop_columns(["_g", "_ck"])
+        # the task holds several chunk keys (and groups): rows are
+        # sorted by (_g, _ck) and _g is a function of _ck, so each
+        # chunk is a contiguous slice.
         bounds = np.flatnonzero(np.diff(ck)) + 1
         starts = np.concatenate([[0], bounds, [len(ck)]])
         for i in range(len(starts) - 1):
             lo, hi = int(starts[i]), int(starts[i + 1])
-            yield (make_chunk_id(chunk_prefix, int(ck[lo])),
+            yield (int(g[lo]), make_chunk_id(chunk_prefix, int(ck[lo])),
                    data.slice(lo, hi - lo))
 
     return chunks
@@ -320,24 +331,26 @@ def partition_chunks(key_cols: tuple[str, ...], chunk_prefix: str = ""):
 
 def file_chunks(key_cols: tuple[str, ...]):
     """Direct-path chunks: each task READS ITS OWN input parquet files
-    with pyarrow, one (chunk_id, files) row per chunk — no JVM scan, no
-    shuffle, no Arrow JVM→Python transfer (only file paths cross the
-    boundary). The right plan when the input is already
-    conversation-grouped: at 1000 executors every task streams its
-    shard straight from storage into the kernels."""
+    with pyarrow — no JVM scan, no shuffle, no Arrow JVM→Python
+    transfer (only file paths cross the boundary). One input row per
+    reuse group: ``group``, its ``chunk_id`` list and the matching
+    ``files`` list (one list of paths per chunk), in encode order. The
+    right plan when the input is already conversation-grouped: at 1000
+    executors every task streams its shard straight from storage into
+    the kernels."""
     sort_keys = [(k, "ascending") for k in key_cols]
 
     def chunks(batches):
         import pyarrow.compute as pc
 
         for b in batches:
-            for row in range(b.num_rows):
-                files = json.loads(b.column("files")[row].as_py())
-                tbl = pa.concat_tables([pq.read_table(f) for f in files])
-                if tbl.num_rows == 0:
-                    continue
-                idx = pc.sort_indices(tbl, sort_keys=sort_keys)
-                yield (b.column("chunk_id")[row].as_py(),
-                       tbl.take(idx).combine_chunks())
+            for row in b.to_pylist():
+                for chunk_id, files in zip(row["chunk_id"], row["files"]):
+                    tbl = pa.concat_tables([pq.read_table(f) for f in files])
+                    if tbl.num_rows == 0:
+                        continue
+                    idx = pc.sort_indices(tbl, sort_keys=sort_keys)
+                    yield (row["group"], chunk_id,
+                           tbl.take(idx).combine_chunks())
 
     return chunks

@@ -13,7 +13,7 @@ import json
 import math
 import os
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -363,6 +363,52 @@ def _hash_chunk(key_cols: tuple[str, ...], salt_block: int,
     return F.pmod(F.xxhash64(F.col(key_cols[0]), salt), F.lit(num_chunks))
 
 
+_PYTHON_MAPS = frozenset({
+    "MapInArrow", "MapInPandas", "FlatMapGroupsInArrow",
+    "FlatMapGroupsInPandas", "FlatMapCoGroupsInArrow",
+    "FlatMapCoGroupsInPandas"})
+
+
+def _python_mapped(plan) -> bool:
+    """Whether a logical plan (py4j) runs a Python map (mapInArrow,
+    applyInPandas, ...). Catalyst sizes a map's output from its input,
+    so a job-site decode (``_decode_df``) over a few-KB list of chunk
+    files reads as a few KB however many rows it yields; write
+    staging treats such a plan as one of unknown size."""
+    if plan.nodeName() in _PYTHON_MAPS:
+        return True
+    kids = plan.children()
+    return any(_python_mapped(kids.apply(i)) for i in range(kids.size()))
+
+
+def _reuse_group(n_groups: int):
+    """The FSST reuse group of a staged row, as a Column:
+    pmod(hash(_ck), n_groups), the Murmur3 partition id that
+    repartition(n_groups, "_ck") assigns. Staging with one group per
+    task gives the same groups, hence the same bytes."""
+    return F.pmod(F.hash(F.col("_ck")), F.lit(n_groups))
+
+
+def _encode_tasks(n_groups: int, par: int, by_size: int) -> int:
+    """The encode task count for ``n_groups`` reuse groups on ``par``
+    cores, for an input of about ``by_size`` × 128 MB.
+
+    Each PySpark task pays a fixed ~0.27 s (4-vCPU host, CPython 3.11,
+    PySpark 4.1: the worker re-reads the central directory of every
+    zip on its sys.path at task start), so an input smaller than one
+    128 MB task per core runs one wave: the fewest tasks, at least
+    ``par``, that divide ``n_groups``. Hashing _ck into a divisor of
+    n_groups puts each whole group in task ``_g % n_tasks``, so no
+    group straddles two tasks. Larger inputs keep one task per group:
+    there tasks are long, the fixed cost is noise, and several waves
+    per core absorb stragglers (two waves lost 1→4-core efficiency;
+    BENCH/BASELINE.md, Round 3)."""
+    if by_size >= par:
+        return n_groups
+    return next(d for d in range(min(par, n_groups), n_groups + 1)
+                if n_groups % d == 0)
+
+
 def _stage_encode(
     df: DataFrame,
     table_dir: str,
@@ -387,14 +433,14 @@ def _stage_encode(
     # than Spark's row sorter on these payloads
     size = None
     try:
-        est = (
-            df._jdf.queryExecution().optimizedPlan().stats()
-            .sizeInBytes()
-        )
+        plan = df._jdf.queryExecution().optimizedPlan()
+        est = plan.stats().sizeInBytes()
         # py4j returns java.math.BigInteger for huge "unknown"
         # estimates but a plain int for normal ones — handle both
         est = int(est.toString()) if hasattr(est, "toString") else int(est)
-        if 0 < est < (1 << 50):  # Catalyst "unknown" is huge
+        # Catalyst "unknown" is huge; a Python map's estimate is not a
+        # size either (see _python_mapped)
+        if 0 < est < (1 << 50) and not _python_mapped(plan):
             size = est
     except Exception:
         pass
@@ -414,33 +460,32 @@ def _stage_encode(
         ck = F.pmod(chunk_expr.cast("long"), F.lit(num_chunks))
     else:
         ck = _hash_chunk(key_cols, salt_block, num_chunks)
-    # shuffle PARTITION count is decoupled from CHUNK count: chunk
-    # identity is the _ck value (the kernel sorts its partition and
-    # slices every _ck group it holds), so chunk bytes / resume /
-    # manifests are partition-count-independent. Tasks are sized
-    # for the cluster — ~4 waves per core (straggler overlap; 2
-    # waves measurably lost N→4N efficiency to the last-wave tail),
-    # at most ~128 MB of input per task (python-worker working set)
-    # — instead of one JVM↔Python round-trip per chunk (at
-    # one-chunk-per-task a 4M-chunk table would schedule 4M tiny
-    # tasks; at local[1] it made 64 round-trips for 204 MB)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    floor_parts = 4 * max(par, 1)
-    if size is not None:
-        floor_parts = max(floor_parts, math.ceil(size / (128 << 20)))
-    elif n_rows is not None:
+    # Two counts, neither of them the CHUNK count (chunk identity is
+    # the _ck value, so resume and manifests depend on neither):
+    # - n_groups FSST reuse groups = min(num_chunks, max(4*cores,
+    #   input/128 MB)). A group shares one symbol-table cache, so the
+    #   groups decide the bytes (``_reuse_group``).
+    # - n_tasks encode tasks (``_encode_tasks``): one wave for a small
+    #   input, one task per group from one 128 MB task per core up, so
+    #   no task takes more than ~128 MB of input (python-worker
+    #   working set).
+    # With no size info at all (explicit num_chunks, no estimate) both
+    # are one per chunk, so a task stays bounded at chunk size (the
+    # kernel materializes its whole partition via Arrow).
+    par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
+    if size is None and n_rows is not None:
         # no Catalyst estimate (post-shuffle/UDF sources): bound the
         # per-task working set from the exact count already taken
-        floor_parts = max(
-            floor_parts, math.ceil(n_rows * EST_ROW_BYTES / (128 << 20))
-        )
+        size = n_rows * EST_ROW_BYTES
+    if size is not None:
+        by_size = math.ceil(size / (128 << 20))
+        n_groups = max(1, min(num_chunks, max(4 * par, by_size)))
+        n_tasks = _encode_tasks(n_groups, par, by_size)
     else:
-        # explicit num_chunks AND no size info at all: fall back to
-        # one chunk per task so tasks stay bounded at chunk size
-        # (the kernel materializes its whole partition via Arrow)
-        floor_parts = max(floor_parts, num_chunks)
-    n_parts = max(1, min(num_chunks, floor_parts))
-    staged = df.withColumn("_ck", ck).repartition(n_parts, "_ck")
+        n_groups = n_tasks = max(1, num_chunks)
+    staged = (df.withColumn("_ck", ck)
+              .withColumn("_g", _reuse_group(n_groups))
+              .repartition(n_tasks, "_ck"))
     extra = {"num_chunks": num_chunks, "salt_block": salt_block,
              "key_cols": list(key_cols)}
     encode_fn = make_encode_fn(partition_chunks(key_cols, chunk_prefix),
@@ -705,22 +750,27 @@ def write_table_direct(
               for i in range(0, len(files), files_per_chunk)]
     n = len(groups)
     par = min(n, spark.sparkContext.defaultParallelism)
-    # explicit chunk->task assignment: contiguous blocks, chunk i goes
-    # to task i*par//n, in order of i inside the task. The grouping
-    # decides the per-task FSST symbol-table reuse groups, hence the
-    # encoded bytes, so it is a pure function of the input listing and
+    # explicit chunk->group assignment: contiguous blocks, chunk i goes
+    # to reuse group i*par//n, in order of i inside the group. The
+    # grouping decides the FSST symbol-table reuse, hence the encoded
+    # bytes, so it is a pure function of the input listing and
     # parallelism — no random round-robin start, no sampled range
     # bounds. Contiguous blocks keep neighboring chunks (shared
-    # vocabulary) in one task, which is what the reuse ratio-guard
-    # wants. ``par`` task lists in ``par`` slices: one list per task,
-    # and no shuffle.
-    tasks = [[] for _ in range(par)]
+    # vocabulary) in one group, which is what the reuse ratio-guard
+    # wants. One group per row, each row its own Arrow batch: Spark
+    # scans a local relation of ``par`` rows as ``par`` one-row
+    # partitions, and above spark.sql.execution.arrow.
+    # localRelationThreshold makes each batch a partition, so either
+    # way each task runs one group in one Python session, with no
+    # shuffle.
+    ids, paths = [[] for _ in range(par)], [[] for _ in range(par)]
     for i, g in enumerate(groups):
-        tasks[i * par // n].append((make_chunk_id(chunk_prefix, i),
-                                    json.dumps(g)))
-    files_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, par).flatMap(lambda t: t),
-        "chunk_id string, files string")
+        ids[i * par // n].append(make_chunk_id(chunk_prefix, i))
+        paths[i * par // n].append(g)
+    files_df = spark.createDataFrame(pa.Table.from_batches([
+        pa.RecordBatch.from_pydict(
+            {"group": [k], "chunk_id": [ids[k]], "files": [paths[k]]})
+        for k in range(par)]))
     fn = make_encode_fn(file_chunks(key_cols), table_dir, key_cols,
                         overrides, resume, bloom_cols)
     entries_df = files_df.mapInArrow(
@@ -753,13 +803,25 @@ def _chunk_rows(table_dir: str, entries, columns) -> list[dict]:
             for e in entries]
 
 
+def _files_table(rows: list[dict]):
+    """Driver-held decode rows as the Arrow table of the decoder's
+    input (``_CHUNK_FILES_DDL``)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return pa.Table.from_pylist(rows, schema=to_arrow_schema(
+        _parse_datatype_string(_CHUNK_FILES_DDL)))
+
+
 def _rows_files_df(spark, rows: list[dict]) -> DataFrame:
-    """Driver-held decode rows → the files DataFrame the decoder reads."""
-    pdf = pd.DataFrame(rows, columns=["file", "chunk_id", "data_crc",
-                                      "enc_bytes"])
-    pdf = pdf.astype({"data_crc": "Int64", "enc_bytes": "Int64"})
-    par = min(len(rows), spark.sparkContext.defaultParallelism)
-    return spark.createDataFrame(pdf, _CHUNK_FILES_DDL).repartition(par)
+    """Driver-held decode rows → the files DataFrame the decoder reads:
+    a local relation, which Spark scans as min(rows, cores) contiguous
+    partitions feeding the decoder directly (no Python stage before
+    it). That split holds below spark.sql.execution.arrow.
+    localRelationThreshold (48 MB by default; the driver plane's
+    <4096 rows of ~200 B stay far below it); above it Spark makes one
+    partition per Arrow batch of up to maxRecordsPerBatch rows."""
+    return spark.createDataFrame(_files_table(rows), _CHUNK_FILES_DDL)
 
 
 def _decode_snapshot(spark, table_dir: str, refs: dict, fn,
@@ -820,15 +882,11 @@ def _decode_local(spark, rows: list[dict], schema: StructType,
     of ``schema`` in this process; the result is a local relation.
     Each batch is cast to the schema's Arrow form, which is what the
     JVM reads from the Spark job's output."""
-    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
 
-    files = pa.RecordBatch.from_pylist(rows, schema=to_arrow_schema(
-        _parse_datatype_string(_CHUNK_FILES_DDL)))
     target = to_arrow_schema(schema)
-    batches = [b.cast(target)
-               for b in _decode_fn(schema, row_filter)(iter([files]))]
+    batches = [b.cast(target) for b in _decode_fn(schema, row_filter)(
+        iter(_files_table(rows).to_batches()))]
     if not batches:
         # the row filter dropped every row; createDataFrame rejects an
         # Arrow table whose nested columns have no chunks at all

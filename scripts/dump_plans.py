@@ -14,24 +14,30 @@ sys.path.insert(0, ".")
 SF = "/root/testdata/sf0.01"
 
 NOTES = {
-    "encode_staged": """The encode path's one shuffle: `Exchange hashpartitioning(_ck, 64)`
+    "encode_staged": """The encode path's one shuffle: `Exchange hashpartitioning(_ck, 8)`
 feeding the Python/Arrow encode node (`MapInArrow`) directly — there is
 NO JVM Sort node: the kernel sorts each partition with pyarrow (same
 total order on the unique keys, ~1/20th the cost of Spark's row
 sorter). Everything upstream of the exchange is whole-stage codegen;
 the parquet scan reads all six columns because all are encoded (no
-waste). The exchange is sized for the CLUSTER, not the chunk count:
-partitions = min(num_chunks, max(4 waves/core, input/128 MB)) — at
-sf0.01 that resolves to the chunk count (8), while a 4M-chunk table
-schedules ~10⁵ right-sized tasks whose kernels each slice multiple
-`_ck` groups (chunk identity = the `_ck` value, so chunk bytes,
-resume and manifests stay partition-count-independent).""",
+waste). The Project tags each row with its chunk (`_ck`) and its FSST
+reuse group (`_g`, `table._reuse_group`); the bytes depend on the
+groups only. The exchange has fewer tasks than groups for a small
+input (`table._encode_tasks`), and every task runs whole groups —
+each PySpark task pays a fixed ~0.27 s on top of its work (4-vCPU
+host, PySpark 4.1).
+At sf0.01 on local[8] both counts resolve to the chunk count (8),
+while a 4M-chunk table schedules ~10⁵ right-sized tasks whose kernels
+each slice multiple `_ck` groups (chunk identity = the `_ck` value, so
+chunk bytes, resume and manifests stay partition-count-independent).""",
     "decode_read_table": """Decode is a parallelized local scan: the file list (one row per
-manifest-selected chunk) is repartitioned and each task `MapInArrow`s
-its chunk files back to rows. There is NO shuffle — chunk pruning and
-column projection happened before the plan was built (manifest
-min/max + blob selection), which is why nothing appears as
-PushedFilters here: the pushdown lives a level above Spark's scan.""",
+manifest-selected chunk) is a local relation, which `LocalTableScan`
+splits into min(chunks, cores) contiguous partitions, and each task
+`MapInArrow`s its chunk files back to rows — one Python stage. There
+is NO shuffle — chunk pruning and column projection happened before
+the plan was built (manifest min/max + blob selection), which is why
+nothing appears as PushedFilters here: the pushdown lives a level
+above Spark's scan.""",
     "chunk_skip_source": """The residual exact filter after manifest pruning. Catalyst pushes
 the comparison into the parquet scan of the decoded stream's source
 when reading raw parquet (see PushedFilters on the lineitem scan in
@@ -109,6 +115,11 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+
+    # the decode plan is the Spark job's: a read this small would
+    # otherwise decode on the driver (manifest._driver_decode)
+    from parquet_go_spark import manifest
+    manifest.DRIVER_DECODE_MAX_RAW_BYTES = 0
 
     df = spark.read.parquet(f"{SF}/lineitem.parquet")
     # the REAL staged plan (kernel-side sort, task/chunk decoupling)

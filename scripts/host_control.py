@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def _run_slice(args) -> tuple[int, int]:
     """Encode a contiguous slice of chunk groups in one process, through
     the direct path's task function."""
-    groups, out_dir, _ = args
+    groups, out_dir, k = args
     import pyarrow as pa
 
     from parquet_go_spark.encode import (file_chunks, make_chunk_id,
@@ -46,9 +46,11 @@ def _run_slice(args) -> tuple[int, int]:
     key_cols = ("conv_id", "turn_idx")
     fn = make_encode_fn(file_chunks(key_cols), out_dir, key_cols,
                         resume=False)
+    # one reuse group per process, as the direct path's one group per task
     batch = pa.RecordBatch.from_pydict({
-        "chunk_id": [make_chunk_id("", i) for i, _ in groups],
-        "files": [json.dumps(files) for _, files in groups]})
+        "group": [k],
+        "chunk_id": [[make_chunk_id("", i) for i, _ in groups]],
+        "files": [[files for _, files in groups]]})
     raw = enc = 0
     for out in fn(iter([batch])):
         entry = json.loads(out.column("entry_json")[0].as_py())
