@@ -251,7 +251,6 @@ def _encode_or_reuse(chunk: pa.Table, chunk_id: str, table_dir: str,
 
 
 def make_encode_fn(chunks, table_dir: str, key_cols: tuple[str, ...],
-                   overrides: dict[str, tuple[str, str]] | None = None,
                    resume: bool = True, bloom_cols: tuple[str, ...] = (),
                    token_bloom_cols: tuple[str, ...] = ()):
     """Build the mapInArrow UDF both write paths run, the one encode
@@ -260,7 +259,6 @@ def make_encode_fn(chunks, table_dir: str, key_cols: tuple[str, ...],
     table)`` triples (``partition_chunks`` or ``file_chunks``), the
     chunks of one FSST reuse group consecutive and in chunk-id order;
     each is encoded in that order."""
-    overrides = overrides or {}
 
     def encode_task(batches):
         from pyspark import TaskContext
@@ -277,7 +275,7 @@ def make_encode_fn(chunks, table_dir: str, key_cols: tuple[str, ...],
                 # several groups; the entry's attempt names the group.
                 group, enc_cache = g, {}
             entry = _encode_or_reuse(
-                chunk, chunk_id, table_dir, key_cols, overrides, resume,
+                chunk, chunk_id, table_dir, key_cols, {}, resume,
                 bloom_cols, f"{task}-g{g}", token_bloom_cols,
                 cache=enc_cache,
             )

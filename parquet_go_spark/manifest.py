@@ -48,6 +48,9 @@ Every task-plane job is one ``fn(rows) -> rows`` run by ``_run_tasks``
 and the append merge of ``commit_in_tasks``; and the chunk-dir listing
 (``_list_chunks``) and chunk unlink (``_unlink_chunks``) of
 expire_snapshots, whose driver plane applies the same two functions.
+Driver-held job input (shard file names, merge work, the chunks dir;
+table.py's decode rows and direct-path file groups too) reaches the
+tasks through ``_rows_df`` only.
 """
 
 from __future__ import annotations
@@ -357,6 +360,15 @@ def _driver_decode(raw_bytes: int) -> bool:
     return raw_bytes <= DRIVER_DECODE_MAX_RAW_BYTES
 
 
+def _schemas(ddl: str):
+    """``ddl``'s Spark schema and its Arrow form."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    return schema, to_arrow_schema(schema)
+
+
 def _run_tasks(df, fn, ddl: str):
     """The one task runner of every task-plane manifest job: each task
     hands its input rows (dicts keyed by ``df``'s columns) to
@@ -364,11 +376,8 @@ def _run_tasks(df, fn, ddl: str):
     ``ddl`` column names) as Arrow batches of at most 65,536 rows
     (``mapInArrow``). Returns the lazy output DataFrame."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
 
-    schema = _parse_datatype_string(ddl)
-    arrow_schema = to_arrow_schema(schema)
+    schema, arrow_schema = _schemas(ddl)
 
     def run(batches):
         out = iter(fn(r for b in batches for r in b.to_pylist()))
@@ -378,10 +387,32 @@ def _run_tasks(df, fn, ddl: str):
     return df.mapInArrow(run, schema)
 
 
-def _rows_df(spark, rows: list[tuple], ddl: str):
-    """Driver-held job rows spread over up to defaultParallelism tasks."""
-    par = min(len(rows), spark.sparkContext.defaultParallelism) or 1
-    return spark.createDataFrame(rows, ddl).repartition(par)
+def _arrow_rows(rows: list[dict], ddl: str, n_slices: int = 1):
+    """Driver-held rows (dicts keyed by the ``ddl`` column names) as an
+    Arrow table of ``ddl``'s schema with one record batch per slice:
+    slice k of m = ``n_slices`` is ``rows[k*n//m:(k+1)*n//m]``."""
+    import pyarrow as pa
+
+    arrow_schema = _schemas(ddl)[1]
+    n = len(rows)
+    return pa.Table.from_batches(
+        [pa.RecordBatch.from_pylist(
+            rows[k * n // n_slices:(k + 1) * n // n_slices],
+            schema=arrow_schema) for k in range(n_slices)],
+        schema=arrow_schema)
+
+
+def _rows_df(spark, rows: list[dict], ddl: str):
+    """The one way driver-held rows become the input of a Python task
+    job: ``_arrow_rows`` in m = min(len(rows), defaultParallelism)
+    slices, read by the JVM, so no Python stage runs before the job.
+    Each slice is one partition on either side of
+    spark.sql.execution.arrow.localRelationThreshold: below it Spark
+    scans the local relation as these m slices, above it it makes each
+    Arrow batch a partition."""
+    par = spark.sparkContext.defaultParallelism
+    return spark.createDataFrame(
+        _arrow_rows(rows, ddl, min(len(rows), par) or 1), ddl)
 
 
 def scan_shards(spark, table_dir: str, shard_files: list[str], fn,
@@ -399,7 +430,7 @@ def scan_shards(spark, table_dir: str, shard_files: list[str], fn,
             yield from fn(_read_shard(table_dir, r))
 
     return _run_tasks(
-        _rows_df(spark, [(f,) for f in shard_files], "file string"),
+        _rows_df(spark, [{"file": f} for f in shard_files], "file string"),
         scan, ddl)
 
 
@@ -578,7 +609,8 @@ def commit_in_tasks(entries_df, table_dir: str, schema_ddl: str,
         prev = load_refs(table_dir)
         final = {r["shard"]: r
                  for r in (prev["manifest_shards"] if prev else [])}
-        work = [(s, final[s]["file"], new_by_shard[s]["file"])
+        work = [{"shard": s, "parent_file": final[s]["file"],
+                 "new_file": new_by_shard[s]["file"]}
                 for s in sorted(set(final) & set(new_by_shard))]
         mtoken = uuid.uuid4().hex[:12]
 
@@ -749,7 +781,7 @@ def expire_snapshots(table_dir: str, keep: int = 2,
             # driver-side list. Only the per-task counts come back.
             from pyspark.sql import functions as F
 
-            doomed = (_run_tasks(spark.createDataFrame([(cdir,)], "d string"),
+            doomed = (_run_tasks(_rows_df(spark, [{"d": cdir}], "d string"),
                                  _list_chunks, "name string, mtime double")
                       .filter(F.col("mtime") < F.lit(floor))
                       .join(scan_shards(spark, table_dir, shard_files,

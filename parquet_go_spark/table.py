@@ -287,7 +287,6 @@ def write_table(
     num_chunks: int | None = None,
     rows_per_chunk: int = DEFAULT_ROWS_PER_CHUNK,
     salt_block: int = DEFAULT_SALT_BLOCK,
-    overrides: dict[str, tuple[str, str]] | None = None,
     resume: bool = True,
     chunk_expr=None,
     chunk_prefix: str = "",
@@ -321,8 +320,7 @@ def write_table(
     schema_json = orig_schema_json or df.schema.json()
     entries_df, extra = _stage_encode(
         df, table_dir, key_cols, num_chunks, rows_per_chunk, salt_block,
-        overrides, resume, chunk_expr, chunk_prefix, bloom_cols,
-        token_bloom_cols,
+        resume, chunk_expr, chunk_prefix, bloom_cols, token_bloom_cols,
     )
     return _commit(entries_df, table_dir, schema_json, extra, append,
                    extra["num_chunks"])
@@ -416,7 +414,6 @@ def _stage_encode(
     num_chunks: int | None,
     rows_per_chunk: int,
     salt_block: int,
-    overrides: dict | None,
     resume: bool,
     chunk_expr,
     chunk_prefix: str,
@@ -489,8 +486,8 @@ def _stage_encode(
     extra = {"num_chunks": num_chunks, "salt_block": salt_block,
              "key_cols": list(key_cols)}
     encode_fn = make_encode_fn(partition_chunks(key_cols, chunk_prefix),
-                               table_dir, key_cols, overrides, resume,
-                               bloom_cols, token_bloom_cols)
+                               table_dir, key_cols, resume, bloom_cols,
+                               token_bloom_cols)
     entries_df = staged.mapInArrow(
         encode_fn, "chunk_id string, entry_json string"
     )
@@ -515,8 +512,9 @@ def _encode_entries(spark, table_dir: str, listing: dict,
     ])[0])
     if affected:
         manifest.check_chunk_layout(affected)
-        old = _decode_df(_rows_files_df(spark, _chunk_rows(
-            table_dir, affected, schema.fieldNames())), schema)
+        old = _decode_df(manifest._rows_df(spark, _chunk_rows(
+            table_dir, affected, schema.fieldNames()), _CHUNK_FILES_DDL),
+            schema)
     else:
         old = spark.createDataFrame([], schema)
     metas = [m for e in (affected or listing["entries"])
@@ -530,7 +528,7 @@ def _encode_entries(spark, table_dir: str, listing: dict,
         key_cols=tuple(extra.get("key_cols") or ["conv_id", "turn_idx"]),
         num_chunks=num_chunks, rows_per_chunk=DEFAULT_ROWS_PER_CHUNK,
         salt_block=extra.get("salt_block", DEFAULT_SALT_BLOCK),
-        overrides=None, resume=False, chunk_expr=None,
+        resume=False, chunk_expr=None,
         chunk_prefix=chunk_prefix, bloom_cols=carried("bloom"),
         token_bloom_cols=carried("token_bloom"),
     )
@@ -585,6 +583,28 @@ def read_table(
     decodes; errors then raise when it runs. Both sites give the same
     rows and schema.
     """
+    if push_row_filter and predicates:
+        from .decode import normalize_predicate
+
+        row_filter = {
+            c: normalize_predicate(p)[:2] for c, p in predicates.items()
+        }
+    else:
+        row_filter = None
+    return _read(spark, table_dir, columns,
+                 lambda entries: prune_entries(entries, predicates),
+                 row_filter, snapshot_id)
+
+
+def _read(spark: SparkSession, table_dir: str, columns: list[str] | None,
+          keep, row_filter: dict | None,
+          snapshot_id: int | None) -> DataFrame:
+    """The reader core of read_table and search_text: decode ``columns``
+    (every column if None; "base.child" projects one child) of the
+    chunks ``keep(entries)`` picks from a snapshot, with the
+    ``row_filter`` ranges applied inside the decoder, on the site
+    ``_decode_snapshot`` picks. Raises KeyError for a column the
+    snapshot's schema lacks."""
     refs = manifest.load_refs(table_dir, snapshot_id=snapshot_id)
     if refs is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
@@ -642,25 +662,15 @@ def read_table(
                             metadata=f.metadata)
             )
     # interval columns: decode as their lowered int form, cast back
-    # JVM-side after the UDF (sub_schema = what the caller receives)
+    # JVM-side after the UDF
     udf_fields, iv_restore = _udf_safe_fields(fields)
-    sub_schema = StructType(fields)
     udf_schema = StructType(udf_fields)
-
-    if push_row_filter and predicates:
-        from .decode import normalize_predicate
-
-        row_filter = {
-            c: normalize_predicate(p)[:2] for c, p in predicates.items()
-        }
-    else:
-        row_filter = None
 
     def surviving(entries):
         # the layout gate comes first: pre-0.2 blooms use another hash
         # scheme, so pruning on them could skip live chunks
         manifest.check_chunk_layout(entries)
-        return _chunk_rows(table_dir, prune_entries(entries, predicates),
+        return _chunk_rows(table_dir, keep(entries),
                            [*columns, *(row_filter or ())])
 
     out = _decode_snapshot(spark, table_dir, refs, surviving, udf_schema,
@@ -728,7 +738,6 @@ def write_table_direct(
     table_dir: str,
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     files_per_chunk: int = 1,
-    overrides: dict[str, tuple[str, str]] | None = None,
     resume: bool = True,
     chunk_prefix: str = "",
     append: bool = False,
@@ -757,22 +766,18 @@ def write_table_direct(
     # parallelism — no random round-robin start, no sampled range
     # bounds. Contiguous blocks keep neighboring chunks (shared
     # vocabulary) in one group, which is what the reuse ratio-guard
-    # wants. One group per row, each row its own Arrow batch: Spark
-    # scans a local relation of ``par`` rows as ``par`` one-row
-    # partitions, and above spark.sql.execution.arrow.
-    # localRelationThreshold makes each batch a partition, so either
-    # way each task runs one group in one Python session, with no
-    # shuffle.
-    ids, paths = [[] for _ in range(par)], [[] for _ in range(par)]
+    # wants. One row per group: ``_rows_df`` stages ``par`` rows as
+    # ``par`` one-row partitions, so each task runs one group in one
+    # Python session, with no shuffle.
+    rows = [{"group": k, "chunk_id": [], "files": []} for k in range(par)]
     for i, g in enumerate(groups):
-        ids[i * par // n].append(make_chunk_id(chunk_prefix, i))
-        paths[i * par // n].append(g)
-    files_df = spark.createDataFrame(pa.Table.from_batches([
-        pa.RecordBatch.from_pydict(
-            {"group": [k], "chunk_id": [ids[k]], "files": [paths[k]]})
-        for k in range(par)]))
+        rows[i * par // n]["chunk_id"].append(make_chunk_id(chunk_prefix, i))
+        rows[i * par // n]["files"].append(g)
+    files_df = manifest._rows_df(
+        spark, rows, "group long, chunk_id array<string>, "
+                     "files array<array<string>>")
     fn = make_encode_fn(file_chunks(key_cols), table_dir, key_cols,
-                        overrides, resume, bloom_cols)
+                        resume, bloom_cols)
     entries_df = files_df.mapInArrow(
         fn, "chunk_id string, entry_json string"
     )
@@ -803,27 +808,6 @@ def _chunk_rows(table_dir: str, entries, columns) -> list[dict]:
             for e in entries]
 
 
-def _files_table(rows: list[dict]):
-    """Driver-held decode rows as the Arrow table of the decoder's
-    input (``_CHUNK_FILES_DDL``)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
-
-    return pa.Table.from_pylist(rows, schema=to_arrow_schema(
-        _parse_datatype_string(_CHUNK_FILES_DDL)))
-
-
-def _rows_files_df(spark, rows: list[dict]) -> DataFrame:
-    """Driver-held decode rows → the files DataFrame the decoder reads:
-    a local relation, which Spark scans as min(rows, cores) contiguous
-    partitions feeding the decoder directly (no Python stage before
-    it). That split holds below spark.sql.execution.arrow.
-    localRelationThreshold (48 MB by default; the driver plane's
-    <4096 rows of ~200 B stay far below it); above it Spark makes one
-    partition per Arrow batch of up to maxRecordsPerBatch rows."""
-    return spark.createDataFrame(_files_table(rows), _CHUNK_FILES_DDL)
-
-
 def _decode_snapshot(spark, table_dir: str, refs: dict, fn,
                      schema: StructType, row_filter: dict | None = None,
                      snapshot_id: int | None = None) -> DataFrame:
@@ -848,25 +832,20 @@ def _decode_snapshot(spark, table_dir: str, refs: dict, fn,
         return spark.createDataFrame([], schema)
     if manifest._driver_decode(sum(r["raw_bytes"] for r in rows)):
         return _decode_local(spark, rows, schema, row_filter)
-    return _decode_df(_rows_files_df(spark, rows), schema, row_filter)
-
-
-def _arrow_types(schema: StructType) -> dict:
-    """{column: arrow type} of ``schema``, for the decoder's
-    schema-evolution null-fill (columns missing from older chunks)."""
-    try:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return {f.name: f.type for f in to_arrow_schema(schema)}
-    except Exception:
-        return {}
+    return _decode_df(manifest._rows_df(spark, rows, _CHUNK_FILES_DDL),
+                      schema, row_filter)
 
 
 def _decode_fn(schema: StructType, row_filter: dict | None):
-    """The decoder both sites run, for the columns of ``schema``."""
+    """The decoder both sites run, for the columns of ``schema``; the
+    column types fill columns missing from older chunks with nulls
+    (schema evolution)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     return make_decode_fn([f.name for f in schema.fields],
                           row_filter=row_filter,
-                          column_types=_arrow_types(schema))
+                          column_types={f.name: f.type
+                                        for f in to_arrow_schema(schema)})
 
 
 def _decode_df(files_df: DataFrame, schema: StructType,
@@ -886,7 +865,7 @@ def _decode_local(spark, rows: list[dict], schema: StructType,
 
     target = to_arrow_schema(schema)
     batches = [b.cast(target) for b in _decode_fn(schema, row_filter)(
-        iter(_files_table(rows).to_batches()))]
+        iter(manifest._arrow_rows(rows, _CHUNK_FILES_DDL).to_batches()))]
     if not batches:
         # the row filter dropped every row; createDataFrame rejects an
         # Arrow table whose nested columns have no chunks at all
@@ -1038,38 +1017,23 @@ def search_text(
     10^12-turn frame this turns "find conversations mentioning X" into
     a handful of chunk decodes instead of a corpus scan.
 
-    Decodes on the same two sites as read_table: small surviving chunk
-    sets decode in this process before search_text returns (errors
-    raise here), larger ones in the returned DataFrame's Spark job."""
+    Reads through read_table's core, so it takes the same ``columns``
+    ("base.child" too), raises the same KeyError for an unknown one,
+    and decodes on the same two sites: small surviving chunk sets
+    decode in this process before search_text returns (errors raise
+    here), larger ones in the returned DataFrame's Spark job."""
     from .kernels.bloom import bloom_contains
-
-    refs = manifest.load_refs(table_dir)
-    if refs is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    schema = StructType.fromJson(json.loads(refs["schema_ddl"]))
-    sel = columns or [f.name for f in schema.fields]
-    # interval-bearing columns decode in their lowered form and are
-    # restored after the residual filter (same contract as read_table)
-    sub_fields, iv_restore = _udf_safe_fields(
-        [StructField(f.name, f.dataType, True, f.metadata)
-         for f in schema.fields if f.name in set(sel + [column])]
-    )
-    sub = StructType(sub_fields)
 
     def may_hold(e):
         tb = e["columns"].get(column, {}).get("token_bloom")
         return tb is None or bloom_contains(tb, token)
 
-    def surviving(entries):
-        # gate first: pre-0.2 blooms use another hash scheme
-        manifest.check_chunk_layout(entries)
-        return _chunk_rows(table_dir, filter(may_hold, entries),
-                           sub.fieldNames())
-
-    decoded = _decode_snapshot(spark, table_dir, refs, surviving, sub)
-    return decoded.filter(
-        F.array_contains(F.split(F.col(column), " "), token)
-    ).select([iv_restore.get(c, F.col(f"`{c}`")) for c in sel])
+    decoded = _read(spark, table_dir,
+                    columns and list(dict.fromkeys([*columns, column])),
+                    lambda entries: filter(may_hold, entries), None, None)
+    hits = decoded.filter(
+        F.array_contains(F.split(F.col(_bt(column)), " "), token))
+    return hits.select([_bt(c) for c in columns]) if columns else hits
 
 
 def _accumulate_column_stats(entries: list[dict], column: str) -> dict:

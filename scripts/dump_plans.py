@@ -128,7 +128,7 @@ def main() -> int:
     from parquet_go_spark.table import _stage_encode
     staged, _ = _stage_encode(
         df, tempfile.mkdtemp(), ("l_orderkey", "l_linenumber"), 8,
-        262_144, 65_536, None, False, None, "", (),
+        262_144, 65_536, False, None, "", (),
     )
 
     plans = [

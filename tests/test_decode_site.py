@@ -135,6 +135,26 @@ def test_search_text_same_on_both_sites(spark, nested, decode_site,
     assert got.column_names == ["conv_id", "turn_idx", "meta"]
 
 
+def test_search_text_reads_like_read_table(spark, nested, decode_site,
+                                          monkeypatch):
+    """search_text reads through read_table's core: a "base.child"
+    column comes back as read_table gives it, and an unknown column
+    raises read_table's KeyError, on both sites."""
+    cols = ["conv_id", "turn_idx", "meta.u"]
+    got = _on_both_sites(decode_site, monkeypatch, lambda: table.search_text(
+        spark, nested, "text", "the", columns=cols))
+    assert got.num_rows > 0 and got.column_names == cols
+    for site in ("job", "driver"):
+        decode_site(site)
+        want = table.read_table(spark, nested, columns=[*cols, "text"]) \
+            .filter(F.array_contains(F.split("text", " "), "the")) \
+            .select([f"`{c}`" for c in cols])
+        assert _sorted(want.toArrow()).equals(got)
+        with pytest.raises(KeyError, match="not in table schema"):
+            table.search_text(spark, nested, "text", "the",
+                              columns=["conv_id", "no_such_col"])
+
+
 def test_fully_pruned_read_same_on_both_sites(spark, nested, decode_site,
                                               monkeypatch):
     got = _on_both_sites(decode_site, monkeypatch, lambda: table.read_table(

@@ -159,15 +159,34 @@ def test_attempt_label_names_one_reuse_group(spark, landed, tmp_path):
 
 
 def test_decode_rows_split_across_cores(spark, landed, tmp_path):
+    """Driver-held job rows stage as min(rows, cores) contiguous slices,
+    one partition each, whether Spark keeps them as a local relation
+    (default threshold) or, above spark.sql.execution.arrow.
+    localRelationThreshold (0), makes each Arrow batch a partition."""
+    from parquet_go_spark import manifest
     from parquet_go_spark import table as T
 
     par = spark.sparkContext.defaultParallelism
     out = str(tmp_path / "t")
     T.write_table(spark.read.parquet(*landed), out, num_chunks=N_CHUNKS)
     rows = T._chunk_rows(out, _entries(out), ["conv_id"])
-    for k in (1, par - 1, N_CHUNKS):
-        files_df = T._rows_files_df(spark, rows[:k])
-        assert files_df.rdd.getNumPartitions() == min(k, par)
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    default = spark.conf.get(key)
+    try:
+        for threshold in (default, "0"):
+            spark.conf.set(key, threshold)
+            for k in (1, par - 1, N_CHUNKS):
+                files_df = manifest._rows_df(spark, rows[:k],
+                                             T._CHUNK_FILES_DDL)
+                m = min(k, par)
+                assert files_df.rdd.getNumPartitions() == m, threshold
+                got = files_df.rdd.glom().map(
+                    lambda part: [r.chunk_id for r in part]).collect()
+                assert got == [[r["chunk_id"]
+                                for r in rows[j * k // m:(j + 1) * k // m]]
+                               for j in range(m)], threshold
+    finally:
+        spark.conf.set(key, default)
 
 
 @pytest.fixture

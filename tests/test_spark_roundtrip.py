@@ -1637,6 +1637,40 @@ def test_task_plane_readers_match_driver_plane(spark, transcripts, tmp_path,
     assert results() == on_driver
 
 
+def test_task_plane_jobs_stage_no_rdd(spark, tmp_path, monkeypatch):
+    """Driver-held task-plane input reaches the tasks as Arrow the JVM
+    reads (manifest._rows_df): the input plans of a read, a
+    column_stats and an expire_snapshots scan no RDD, which here would
+    be a Python RDD unpickling each row in a Python session first."""
+    df = make_transcripts_df(spark, n_conv=60, seed=17)
+    out = str(tmp_path / "tbl")
+    table.write_table(df, out, num_chunks=4)
+    table.write_table(df, out, num_chunks=4)
+    _force_distributed(monkeypatch)
+    plans = []
+
+    def spy(orig):
+        def run(input_df, *a, **k):
+            plans.append(input_df._jdf.queryExecution().toString())
+            return orig(input_df, *a, **k)
+        return run
+
+    monkeypatch.setattr(manifest, "_run_tasks", spy(manifest._run_tasks))
+    monkeypatch.setattr(table, "_decode_df", spy(table._decode_df))
+    ops = {"read": lambda: table.read_table(spark, out).count(),
+           "column_stats": lambda: table.column_stats(out, "turn_idx",
+                                                      spark=spark),
+           "expire": lambda: manifest.expire_snapshots(out, keep=1,
+                                                       spark=spark)}
+    for name, op in ops.items():
+        plans.clear()
+        op()
+        assert plans, name
+        for plan in plans:
+            assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, \
+                (name, plan)
+
+
 @pytest.mark.parametrize("op", ["compact", "delete_rows"])
 def test_rewrite_op_refuses_to_drop_a_concurrent_append(spark, tmp_path,
                                                         monkeypatch, op):
