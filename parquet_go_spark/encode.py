@@ -15,7 +15,8 @@ resume) and skew-bounded (a conversation longer than ``salt_block``
 turns is split across chunks at turn-block boundaries — explicit skew
 handling per north_rule). Each task writes its chunk files directly
 (atomic tmp+rename) and emits one manifest-entry JSON per chunk. The
-direct path runs the same task body over pre-grouped input files.
+direct path runs the same task body over pre-grouped input files, and a
+small write runs it in the driver process (``table._encode``).
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ import json
 import os
 import tempfile
 import time
+import uuid
 import zlib
 
 import numpy as np
@@ -258,13 +260,16 @@ def make_encode_fn(chunks, table_dir: str, key_cols: tuple[str, ...],
     ``chunks(batches)`` yields the task's ``(group, chunk_id, sorted
     table)`` triples (``partition_chunks`` or ``file_chunks``), the
     chunks of one FSST reuse group consecutive and in chunk-id order;
-    each is encoded in that order."""
+    each is encoded in that order. The entry's ``attempt`` names the
+    group and the run: ``task<attempt id>-g<group>`` in a Spark task,
+    ``driver<token>-g<group>`` with a fresh token per driver run."""
 
     def encode_task(batches):
         from pyspark import TaskContext
 
         tc = TaskContext.get()
-        task = f"task{tc.taskAttemptId()}" if tc else "local"
+        task = (f"task{tc.taskAttemptId()}" if tc
+                else f"driver{uuid.uuid4().hex[:12]}")
         group = enc_cache = None
         for g, chunk_id, chunk in chunks(batches):
             if g != group:

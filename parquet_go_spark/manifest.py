@@ -99,6 +99,15 @@ DISTRIBUTED_MANIFEST_MIN_CHUNKS = 4096
 # ``_driver_decode`` reads it, at call time.
 DRIVER_DECODE_MAX_RAW_BYTES = 6 << 20
 
+# A driver-plane write encodes in the driver process, with no exchange
+# or Python task launch, when its input bytes (write_table: Catalyst's
+# estimate; write_table_direct: file bytes) plus DRIVER_ENCODE_CHUNK_BYTES
+# per chunk are at most DRIVER_ENCODE_MAX_BYTES. The driver has one core
+# and spends ~15 ms per chunk: at local[4] it lost at 32 chunks even on
+# 0.2 MB (BENCH/BASELINE.md, "Round 11: encode-site crossover").
+DRIVER_ENCODE_MAX_BYTES = 6 << 20
+DRIVER_ENCODE_CHUNK_BYTES = 320 << 10
+
 # per-shard totals every ref carries (listing totals are their sums)
 _TOTALS = ("n_chunks", "n_rows", "raw_bytes", "enc_bytes")
 
@@ -358,6 +367,14 @@ def _driver_decode(raw_bytes: int) -> bool:
     at or below DRIVER_DECODE_MAX_RAW_BYTES, and in a Spark job above
     it."""
     return raw_bytes <= DRIVER_DECODE_MAX_RAW_BYTES
+
+
+def _driver_encode(size: int | None, n_chunks: int) -> bool:
+    """The encode-site test of a driver-plane write: on the driver when
+    ``size`` input bytes (None: unknown, tasks) and ``n_chunks`` chunks
+    weigh at most DRIVER_ENCODE_MAX_BYTES, in Spark tasks otherwise."""
+    return (size is not None and size + n_chunks * DRIVER_ENCODE_CHUNK_BYTES
+            <= DRIVER_ENCODE_MAX_BYTES)
 
 
 def _schemas(ddl: str):
@@ -778,7 +795,8 @@ def expire_snapshots(table_dir: str, keep: int = 2,
             # list, anti-join and unlink inside tasks (object stores list
             # in parallel by prefix; the local-FS stand-in is one task):
             # a mass crash can leave O(millions) orphans, too many for a
-            # driver-side list. Only the per-task counts come back.
+            # driver-side list. Only the per-task counts come back; the
+            # unlink runs in the listing's tasks, with no exchange.
             from pyspark.sql import functions as F
 
             doomed = (_run_tasks(_rows_df(spark, [{"d": cdir}], "d string"),
@@ -787,9 +805,7 @@ def expire_snapshots(table_dir: str, keep: int = 2,
                       .join(scan_shards(spark, table_dir, shard_files,
                                         referenced, "name string"),
                             "name", "left_anti"))
-            counts = _run_tasks(
-                doomed.repartition(spark.sparkContext.defaultParallelism),
-                unlink, "n long").collect()
+            counts = _run_tasks(doomed, unlink, "n long").collect()
         else:
             keep_files = {r["name"] for f in shard_files
                           for r in referenced(_read_shard(table_dir,

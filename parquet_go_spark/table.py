@@ -315,30 +315,56 @@ def write_table(
     Spark stage and the driver handles only O(shards) summaries. For
     input that is already conversation-grouped in parquet files,
     ``write_table_direct`` skips the exchange.
+
+    A small driver-plane write (Catalyst estimate and chunk count, see
+    ``manifest._driver_encode``) encodes in this process after one job
+    with no exchange, any other in Spark tasks (``_encode``); both
+    sites write the same bytes.
     """
     df, orig_schema_json = _lower_interval_df(df)
     schema_json = orig_schema_json or df.schema.json()
-    entries_df, extra = _stage_encode(
+    entries, extra = _stage_encode(
         df, table_dir, key_cols, num_chunks, rows_per_chunk, salt_block,
         resume, chunk_expr, chunk_prefix, bloom_cols, token_bloom_cols,
     )
-    return _commit(entries_df, table_dir, schema_json, extra, append,
+    return _commit(entries, table_dir, schema_json, extra, append,
                    extra["num_chunks"])
 
 
-def _commit(entries_df: DataFrame, table_dir: str, schema_ddl: str,
+def _encode(spark, fn, size: int | None, n_chunks: int, local, staged):
+    """The encode site of both writers: ``fn`` over the Arrow batches of
+    ``local()`` here, giving the entry list, when the write passes
+    ``manifest._driver_encode``; else the lazy (chunk_id, entry_json)
+    DataFrame of ``fn`` over ``staged()``. Both sites run the same
+    reuse groups in the same chunk order, hence the same bytes."""
+    if (not manifest._task_plane(spark, n_chunks)
+            and manifest._driver_encode(size, n_chunks)):
+        return [json.loads(b.column("entry_json")[0].as_py())
+                for b in fn(local())]
+    return staged().mapInArrow(fn, "chunk_id string, entry_json string")
+
+
+def _entry_list(entries) -> list[dict]:
+    """An ``_encode`` result as its entry list (collects a DataFrame)."""
+    if isinstance(entries, DataFrame):
+        return [json.loads(r.entry_json) for r in entries.collect()]
+    return entries
+
+
+def _commit(entries, table_dir: str, schema_ddl: str,
             extra: dict, append: bool, n_chunks: int) -> dict:
-    """Commit an encode job's (chunk_id, entry_json) rows — the one
-    commit path of both writers. It only picks the manifest plane
-    (manifest._task_plane) and sums the refs the commit returns: the
-    driver plane collects the entries into ``manifest.commit``, the task
-    plane hands the DataFrame to ``manifest.commit_in_tasks``."""
-    if manifest._task_plane(entries_df.sparkSession, n_chunks):
+    """Commit an ``_encode`` result — the one commit path of both
+    writers. It only picks the manifest plane (manifest._task_plane) and
+    sums the refs the commit returns: the task plane hands the job's
+    DataFrame to ``manifest.commit_in_tasks``, the driver plane commits
+    the entry list with ``manifest.commit``."""
+    if (isinstance(entries, DataFrame)
+            and manifest._task_plane(entries.sparkSession, n_chunks)):
         snapshot, refs = manifest.commit_in_tasks(
-            entries_df, table_dir, schema_ddl, extra=extra, append=append,
+            entries, table_dir, schema_ddl, extra=extra, append=append,
         )
     else:
-        entries = [json.loads(r.entry_json) for r in entries_df.collect()]
+        entries = _entry_list(entries)
         snapshot = manifest.commit(
             table_dir, entries, schema_ddl=schema_ddl, extra=extra,
             append=append,
@@ -419,11 +445,11 @@ def _stage_encode(
     chunk_prefix: str,
     bloom_cols: tuple[str, ...],
     token_bloom_cols: tuple[str, ...] = (),
-) -> tuple[DataFrame, dict]:
-    """Build the (lazy) encode job: stage → mapInArrow → one
-    (chunk_id, entry_json) row per chunk. Callers either collect the
-    rows (driver commit, small tables) or pipe them into the
-    shard-writing stage (distributed commit)."""
+) -> tuple[DataFrame | list[dict], dict]:
+    """Tag ``df``'s rows with chunk ``_ck`` and reuse group ``_g`` in
+    the JVM and encode them through ``_encode``: in tasks behind an
+    exchange on ``_ck``, or here. A rewrite's input (``_encode_entries``)
+    is a decode job, of unknown size, so it stays on the tasks."""
     # NOTE: no JVM sortWithinPartitions — the encode kernel sorts each
     # partition with pyarrow (same total order on the unique keys, so
     # chunk bytes and data_crc are identical), which is ~20x cheaper
@@ -441,6 +467,7 @@ def _stage_encode(
             size = est
     except Exception:
         pass
+    site_size = size  # the estimate alone, never the count fallback
     n_rows = None
     if num_chunks is None:
         # prefer Catalyst's size estimate (no extra job); fall back
@@ -480,18 +507,20 @@ def _stage_encode(
         n_tasks = _encode_tasks(n_groups, par, by_size)
     else:
         n_groups = n_tasks = max(1, num_chunks)
-    staged = (df.withColumn("_ck", ck)
-              .withColumn("_g", _reuse_group(n_groups))
-              .repartition(n_tasks, "_ck"))
+    staged = df.withColumn("_ck", ck).withColumn("_g",
+                                                 _reuse_group(n_groups))
     extra = {"num_chunks": num_chunks, "salt_block": salt_block,
              "key_cols": list(key_cols)}
     encode_fn = make_encode_fn(partition_chunks(key_cols, chunk_prefix),
                                table_dir, key_cols, resume, bloom_cols,
                                token_bloom_cols)
-    entries_df = staged.mapInArrow(
-        encode_fn, "chunk_id string, entry_json string"
-    )
-    return entries_df, extra
+    # the driver site reads the JVM's own Arrow batches: toArrow()
+    # re-casts timestamps to UTC, while encode tasks see the session
+    # zone, and a nested type's zone reaches the bytes
+    entries = _encode(df.sparkSession, encode_fn, site_size, num_chunks,
+                      staged._collect_as_arrow,
+                      lambda: staged.repartition(n_tasks, "_ck"))
+    return entries, extra
 
 
 def _encode_entries(spark, table_dir: str, listing: dict,
@@ -523,7 +552,7 @@ def _encode_entries(spark, table_dir: str, listing: dict,
     def carried(kind):
         return tuple(sorted({c for c, m in metas if kind in m}))
 
-    entries_df, _ = _stage_encode(
+    entries, _ = _stage_encode(
         fn(old), table_dir,
         key_cols=tuple(extra.get("key_cols") or ["conv_id", "turn_idx"]),
         num_chunks=num_chunks, rows_per_chunk=DEFAULT_ROWS_PER_CHUNK,
@@ -532,7 +561,7 @@ def _encode_entries(spark, table_dir: str, listing: dict,
         chunk_prefix=chunk_prefix, bloom_cols=carried("bloom"),
         token_bloom_cols=carried("token_bloom"),
     )
-    return [json.loads(r.entry_json) for r in entries_df.collect()]
+    return _entry_list(entries)
 
 
 def _commit_rewrite(table_dir: str, listing: dict, keep: list[dict],
@@ -749,8 +778,11 @@ def write_table_direct(
     cross the boundary). Chunk ids follow the sorted input listing, so
     resume requires a stable listing.
 
-    Commits through the same ``_commit`` as write_table, which picks
-    the manifest plane from the chunk count."""
+    Encodes on write_table's two sites (``_encode``), sized by the
+    summed input-file bytes and the chunk count: a small write runs no
+    Spark job but the schema read. Commits through the same ``_commit``
+    as write_table, which picks the manifest plane from the chunk
+    count."""
     files = sorted(input_files)
     if not files:
         raise ValueError("write_table_direct: input_files is empty; "
@@ -768,22 +800,25 @@ def write_table_direct(
     # vocabulary) in one group, which is what the reuse ratio-guard
     # wants. One row per group: ``_rows_df`` stages ``par`` rows as
     # ``par`` one-row partitions, so each task runs one group in one
-    # Python session, with no shuffle.
+    # Python session, with no shuffle; the driver site runs the same
+    # rows in order.
     rows = [{"group": k, "chunk_id": [], "files": []} for k in range(par)]
     for i, g in enumerate(groups):
         rows[i * par // n]["chunk_id"].append(make_chunk_id(chunk_prefix, i))
         rows[i * par // n]["files"].append(g)
-    files_df = manifest._rows_df(
-        spark, rows, "group long, chunk_id array<string>, "
-                     "files array<array<string>>")
+    ddl = "group long, chunk_id array<string>, files array<array<string>>"
+    try:
+        size = sum(os.path.getsize(f) for f in files)
+    except OSError:
+        size = None  # not a local path: unknown size, task site
     fn = make_encode_fn(file_chunks(key_cols), table_dir, key_cols,
                         resume, bloom_cols)
-    entries_df = files_df.mapInArrow(
-        fn, "chunk_id string, entry_json string"
-    )
+    entries = _encode(spark, fn, size, n,
+                      lambda: manifest._arrow_rows(rows, ddl).to_batches(),
+                      lambda: manifest._rows_df(spark, rows, ddl))
     schema_ddl = spark.read.parquet(files[0]).schema.json()
     extra = {"mode": "direct", "key_cols": list(key_cols)}
-    return _commit(entries_df, table_dir, schema_ddl, extra, append, n)
+    return _commit(entries, table_dir, schema_ddl, extra, append, n)
 
 
 _CHUNK_FILES_DDL = ("file string, chunk_id string, data_crc long, "

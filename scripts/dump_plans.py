@@ -116,9 +116,11 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # the decode plan is the Spark job's: a read this small would
-    # otherwise decode on the driver (manifest._driver_decode)
+    # the encode and decode plans are the Spark jobs': a write or read
+    # this small would otherwise run on the driver
+    # (manifest._driver_encode, manifest._driver_decode)
     from parquet_go_spark import manifest
+    manifest.DRIVER_ENCODE_MAX_BYTES = 0
     manifest.DRIVER_DECODE_MAX_RAW_BYTES = 0
 
     df = spark.read.parquet(f"{SF}/lineitem.parquet")

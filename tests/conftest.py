@@ -39,3 +39,20 @@ def decode_site(monkeypatch):
                             {"job": 0, "driver": 1 << 62}[site])
 
     return force
+
+
+@pytest.fixture
+def encode_site(monkeypatch):
+    """``encode_site(name)`` forces every later write_table /
+    write_table_direct of a driver-plane table onto one encode site:
+    "driver" (encode in this process) or "task" (Spark tasks behind the
+    exchange), by moving the bound the site rule reads. Inputs of
+    unknown size and task-plane writes stay on the task site either
+    way."""
+    from parquet_go_spark import manifest
+
+    def force(site: str) -> None:
+        monkeypatch.setattr(manifest, "DRIVER_ENCODE_MAX_BYTES",
+                            {"task": 0, "driver": 1 << 62}[site])
+
+    return force

@@ -56,9 +56,10 @@ def _task(entry: dict) -> str:
 
 
 def test_shuffle_write_runs_one_wave_with_same_bytes(spark, landed, tmp_path,
-                                                     monkeypatch):
+                                                     monkeypatch, encode_site):
     from parquet_go_spark import table as T
 
+    encode_site("task")     # the input is small enough for the driver
     par = spark.sparkContext.defaultParallelism
     df = spark.read.parquet(*landed)
     wave = str(tmp_path / "wave")
@@ -129,9 +130,11 @@ def _reencode_groups(table_dir: str, entries: list[dict], out_dir: str):
     return mismatched
 
 
-def test_attempt_label_names_one_reuse_group(spark, landed, tmp_path):
+def test_attempt_label_names_one_reuse_group(spark, landed, tmp_path,
+                                             encode_site):
     from parquet_go_spark import table as T
 
+    encode_site("task")     # the input is small enough for the driver
     par = spark.sparkContext.defaultParallelism
     shuffle = str(tmp_path / "shuffle")
     T.write_table(spark.read.parquet(*landed), shuffle, num_chunks=N_CHUNKS)
@@ -156,6 +159,32 @@ def test_attempt_label_names_one_reuse_group(spark, landed, tmp_path):
                                 str(tmp_path / "replay")) == []
     # the direct path runs each group in its own task
     assert len({_task(e) for e in _entries(direct)}) == par
+
+
+def test_driver_site_appends_replay_per_write(spark, landed, tmp_path,
+                                             encode_site):
+    """Each driver-site write labels its chunks with its own run, so a
+    replay that groups chunks by attempt label never puts groups of two
+    writes into one FSST cache."""
+    from parquet_go_spark import table as T
+    from parquet_go_spark.fixtures import make_transcripts
+
+    encode_site("driver")
+    out = str(tmp_path / "t")
+    T.write_table(spark.read.parquet(*landed), out, num_chunks=8)
+    for k in range(3):
+        batch = make_transcripts(120, seed=20 + k, conv_prefix=f"a{k}-")
+        T.write_table(spark.createDataFrame(batch), out, num_chunks=2,
+                      append=True, chunk_prefix=f"a{k}-")
+    entries = _entries(out)
+    runs = defaultdict(set)
+    for e in entries:
+        assert e["attempt"].startswith("driver"), e["attempt"]
+        runs[e["chunk_id"].split("-")[0] if "-" in e["chunk_id"]
+             else "base"].add(_task(e))
+    assert len(runs) == 4 and all(len(r) == 1 for r in runs.values())
+    assert len(set.union(*runs.values())) == 4
+    assert _reencode_groups(out, entries, str(tmp_path / "replay")) == []
 
 
 def test_decode_rows_split_across_cores(spark, landed, tmp_path):
