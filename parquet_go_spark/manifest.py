@@ -377,8 +377,11 @@ def _driver_encode(size: int | None, n_chunks: int) -> bool:
             <= DRIVER_ENCODE_MAX_BYTES)
 
 
+@functools.lru_cache(maxsize=None)
 def _schemas(ddl: str):
-    """``ddl``'s Spark schema and its Arrow form."""
+    """``ddl``'s Spark schema and its Arrow form, parsed once per DDL
+    string (the parse is a py4j call, ~2 ms). Both are shared between
+    callers, so no caller may mutate them."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
@@ -429,7 +432,7 @@ def _rows_df(spark, rows: list[dict], ddl: str):
     Arrow batch a partition."""
     par = spark.sparkContext.defaultParallelism
     return spark.createDataFrame(
-        _arrow_rows(rows, ddl, min(len(rows), par) or 1), ddl)
+        _arrow_rows(rows, ddl, min(len(rows), par) or 1), _schemas(ddl)[0])
 
 
 def scan_shards(spark, table_dir: str, shard_files: list[str], fn,

@@ -16,6 +16,8 @@ import os
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DayTimeIntervalType,
     IntegerType,
@@ -607,10 +609,13 @@ def read_table(
     ``manifest.DRIVER_DECODE_MAX_RAW_BYTES`` (driver-plane tables only),
     it runs in this process before read_table returns: the result is a
     local relation, so a point lookup launches no decode job, and a
-    chunk that fails its checks raises here. Larger reads, and every
-    read of a task-plane table, return a lazy DataFrame whose Spark job
-    decodes; errors then raise when it runs. Both sites give the same
-    rows and schema.
+    chunk that fails its checks raises here. That result keeps the
+    decoded Arrow table, so its ``toArrow()`` runs no Spark job either
+    (unless interval columns need their Spark cast back); every other
+    action, and every transform, runs through Spark. Larger reads, and
+    every read of a task-plane table, return a lazy DataFrame whose
+    Spark job decodes; errors then raise when it runs. Both sites give
+    the same rows and schema.
     """
     if push_row_filter and predicates:
         from .decode import normalize_predicate
@@ -864,7 +869,8 @@ def _decode_snapshot(spark, table_dir: str, refs: dict, fn,
             schema, row_filter)
     rows = fn(manifest.load(table_dir, snapshot_id=snapshot_id)["entries"])
     if not rows:
-        return spark.createDataFrame([], schema)
+        return _local_result(spark, to_arrow_schema(schema).empty_table(),
+                             schema)
     if manifest._driver_decode(sum(r["raw_bytes"] for r in rows)):
         return _decode_local(spark, rows, schema, row_filter)
     return _decode_df(manifest._rows_df(spark, rows, _CHUNK_FILES_DDL),
@@ -875,8 +881,6 @@ def _decode_fn(schema: StructType, row_filter: dict | None):
     """The decoder both sites run, for the columns of ``schema``; the
     column types fill columns missing from older chunks with nulls
     (schema evolution)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     return make_decode_fn([f.name for f in schema.fields],
                           row_filter=row_filter,
                           column_types={f.name: f.type
@@ -893,20 +897,43 @@ def _decode_df(files_df: DataFrame, schema: StructType,
 def _decode_local(spark, rows: list[dict], schema: StructType,
                   row_filter: dict | None) -> DataFrame:
     """Decode the chunks named by the decode ``rows`` into the columns
-    of ``schema`` in this process; the result is a local relation.
-    Each batch is cast to the schema's Arrow form, which is what the
-    JVM reads from the Spark job's output."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    of ``schema`` in this process. Each batch is cast to the schema's
+    Arrow form, which is what the JVM reads from the Spark job's
+    output. The result is a local relation that keeps the decoded
+    table (``_LocalResult``), so its ``toArrow()`` runs no Spark job:
+    a point lookup's collect went from 1 job / 4 tasks to none
+    (BENCH/BASELINE.md, "Round 12: driver-site collect")."""
     target = to_arrow_schema(schema)
     batches = [b.cast(target) for b in _decode_fn(schema, row_filter)(
         iter(manifest._arrow_rows(rows, _CHUNK_FILES_DDL).to_batches()))]
-    if not batches:
-        # the row filter dropped every row; createDataFrame rejects an
-        # Arrow table whose nested columns have no chunks at all
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(
-        pa.Table.from_batches(batches, schema=target), schema)
+    return _local_result(spark, pa.Table.from_batches(batches, schema=target),
+                         schema)
+
+
+class _LocalResult(ClassicDataFrame):
+    """A driver-site read's result: a local relation built from
+    ``_table``, the decoded Arrow table, which ``toArrow()`` hands back
+    with no Spark job, cast as PySpark's own ``toArrow`` casts the
+    JVM's batches. Every transform returns a plain DataFrame and runs
+    through Spark."""
+
+    _table: pa.Table
+
+    def toArrow(self) -> pa.Table:
+        return self._table.cast(to_arrow_schema(
+            self.schema, error_on_duplicated_field_names_in_struct=True,
+            prefers_large_types=self.sparkSession._jconf
+            .arrowUseLargeVarTypes()))
+
+
+def _local_result(spark, table: pa.Table, schema: StructType) -> DataFrame:
+    """``table`` (``schema``'s Arrow form) as a ``_LocalResult``."""
+    # createDataFrame rejects an Arrow table whose nested columns have
+    # no chunks at all, which is what an empty decode gives
+    df = _LocalResult(spark.createDataFrame(
+        table if table.num_rows else [], schema)._jdf, spark)
+    df._table = table
+    return df
 
 
 def _predicate_cond(predicates: dict):
@@ -1002,18 +1029,19 @@ def upsert_table(spark: SparkSession, table_dir: str,
     key_cols = tuple(extra.get("key_cols") or ["conv_id", "turn_idx"])
     ck = _hash_chunk(key_cols, extra.get("salt_block", DEFAULT_SALT_BLOCK),
                      num_chunks)
-    touched_df = df.select(ck.alias("_ck")).distinct()
-    n_touched = touched_df.count()
-    if n_touched > UPSERT_MAX_TOUCHED_CHUNKS:
+    # one collect gives the touched set, the guard and the row count
+    counts = df.groupBy(ck.alias("_ck")).count() \
+        .limit(UPSERT_MAX_TOUCHED_CHUNKS + 1).collect()
+    if len(counts) > UPSERT_MAX_TOUCHED_CHUNKS:
         raise ValueError(
-            f"upsert touches {n_touched} chunks "
-            f"(> UPSERT_MAX_TOUCHED_CHUNKS={UPSERT_MAX_TOUCHED_CHUNKS}): "
+            f"upsert touches more than {UPSERT_MAX_TOUCHED_CHUNKS} chunks "
+            f"(UPSERT_MAX_TOUCHED_CHUNKS={UPSERT_MAX_TOUCHED_CHUNKS}): "
             "that is effectively a full-table rewrite whose touched-chunk "
             "set no longer fits the O(batch) driver contract — re-encode "
             "with write_table() (distributed commit) or compact() instead, "
             "or raise UPSERT_MAX_TOUCHED_CHUNKS explicitly"
         )
-    touched = {make_chunk_id("", r[0]) for r in touched_df.collect()}
+    touched = {make_chunk_id("", r["_ck"]) for r in counts}
     affected = [e for e in listing["entries"] if e["chunk_id"] in touched]
     # interval columns merge in their lowered int form (both the stored
     # chunks and the incoming batch), original DDL stays in the commit
@@ -1034,7 +1062,7 @@ def upsert_table(spark: SparkSession, table_dir: str,
         "snapshot_id": snap,
         "rewritten_chunks": len(affected),
         "new_chunks": len(new_entries) - len(affected),
-        "upserted_rows": df.count(),
+        "upserted_rows": sum(r["count"] for r in counts),
     }
 
 

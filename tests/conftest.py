@@ -56,3 +56,39 @@ def encode_site(monkeypatch):
                             {"task": 0, "driver": 1 << 62}[site])
 
     return force
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn()`` under a fresh job group and
+    returns ``(fn's result, the ids of the Spark jobs it ran)``, read
+    from the status tracker once every job of the group has settled."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(fn):
+        group = f"counted-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+        def settled():
+            return all(tracker.getJobInfo(j) is not None
+                       and tracker.getJobInfo(j).status == "SUCCEEDED"
+                       for j in tracker.getJobIdsForGroup(group))
+
+        # the status store fills from the listener bus, after the job
+        # returns
+        deadline = time.time() + 30
+        while not settled() and time.time() < deadline:
+            time.sleep(0.05)
+        time.sleep(0.5)
+        return out, tracker.getJobIdsForGroup(group)
+
+    return run

@@ -271,3 +271,87 @@ def test_point_lookup_skips_the_spark_job(spark, tmp_path, monkeypatch):
     full = table.read_table(spark, out)
     assert len(calls) == 1
     assert full.count() == sum(e["n_rows"] for e in entries)
+
+
+def test_driver_site_to_arrow_runs_no_spark_job(spark, nested, decode_site,
+                                                spark_jobs):
+    """A driver-site result keeps the table the driver decoded, so its
+    toArrow() runs no Spark job: a bloom hit, a fully pruned read and a
+    row filter that empties every surviving chunk. The job site still
+    runs the decode job."""
+    gap = {"conv_id": ("conv-00000007a", "conv-00000007b")}
+    reads = {
+        "bloom hit": dict(predicates={"conv_id": "conv-00000007"},
+                          push_row_filter=True),
+        "fully pruned": dict(predicates={"conv_id": "no-such-conv"}),
+        "row filter empties": dict(predicates=gap, push_row_filter=True),
+    }
+    assert table.prune_entries(manifest.load(nested)["entries"], gap)
+    decode_site("driver")
+    for name, kw in reads.items():
+        got, jobs = spark_jobs(
+            lambda: table.read_table(spark, nested, **kw).toArrow())
+        assert jobs == [], name
+        assert (got.num_rows > 0) == (name == "bloom hit"), name
+    decode_site("job")
+    _, jobs = spark_jobs(lambda: table.read_table(
+        spark, nested, **reads["bloom hit"]).toArrow())
+    assert len(jobs) >= 1
+
+
+@pytest.mark.parametrize("conf", [
+    {"spark.sql.session.timeZone": "UTC"},
+    {"spark.sql.session.timeZone": "America/Los_Angeles"},
+    {"spark.sql.execution.arrow.useLargeVarTypes": "true"},
+])
+def test_held_to_arrow_equals_the_jvm_collect(spark, nested, decode_site,
+                                              conf):
+    """The held table's toArrow() is what PySpark's own toArrow()
+    collects from the same relation through the JVM, in schema and
+    values: struct, list<struct>, map and timestamp columns, in a UTC
+    and a non-UTC session and with large var types."""
+    from pyspark.sql import DataFrame
+
+    decode_site("driver")
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        for kw in ({}, {"predicates": {"conv_id": "conv-00000007"},
+                        "push_row_filter": True},
+                   {"predicates": {"conv_id": "no-such-conv"}}):
+            df = table.read_table(spark, nested, **kw)
+            assert isinstance(df, table._LocalResult), kw
+            held, jvm = df.toArrow(), DataFrame(df._jdf, spark).toArrow()
+            assert held.schema == jvm.schema, kw
+            assert held.equals(jvm), kw
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def test_transformed_driver_site_result_is_a_plain_dataframe(
+        spark, nested, decode_site):
+    """select, filter, limit and unionByName of a driver-site result
+    give plain DataFrames (their toArrow() collects through Spark) with
+    the rows the same transform of the job-site result gives."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    transforms = {
+        "select": lambda d: d.select("conv_id", "meta"),
+        "filter": lambda d: d.filter(F.col("turn_idx") > 2),
+        "limit": lambda d: d.limit(1 << 20),
+        "unionByName": lambda d: d.unionByName(d),
+    }
+    got = {}
+    for site in ("job", "driver"):
+        decode_site(site)
+        df = table.read_table(spark, nested,
+                              predicates={"conv_id": ("conv-00000000",
+                                                      "conv-00000030")})
+        got[site] = {name: t(df) for name, t in transforms.items()}
+    for name, out in got["driver"].items():
+        assert type(out) is DataFrame, name
+        assert _sorted(out.toArrow()).equals(
+            _sorted(got["job"][name].toArrow())), name
+        assert out.count() > 0

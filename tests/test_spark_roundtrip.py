@@ -562,6 +562,59 @@ def test_upsert_replaces_and_appends(spark, transcripts, tmp_path):
     assert table.count_rows(salted) == transcripts.count()
 
 
+def test_upsert_finds_touched_chunks_in_one_job(spark, transcripts, tmp_path,
+                                                monkeypatch, spark_jobs):
+    """upsert_table reads its touched chunk set, its guard and its row
+    count from one grouped-count collect: outside the re-encode it runs
+    no more Spark jobs than one aggregation collect of the batch (AQE
+    may split either into a map-stage job and a result job). Three
+    queries over the batch ran there before (7 jobs at local[4], 10 in
+    all; now 2, 5 in all), and returned the same dict as below."""
+    import pyspark.sql.functions as F
+
+    out = str(tmp_path / "tbl")
+    table.write_table(transcripts, out, num_chunks=6)
+    fixes = transcripts.filter(F.col("conv_id") == "conv-00000001") \
+        .withColumn("text", F.lit("REDACTED"))
+    new_rows = transcripts.filter(F.col("conv_id") == "conv-00000002") \
+        .withColumn("conv_id", F.lit("conv-99999999"))
+    batch = fixes.unionByName(new_rows)
+    sc = spark.sparkContext
+    encode_jobs = []
+    orig = table._encode_entries
+
+    def encode_in_own_group(*a, **k):
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        res, jobs = spark_jobs(lambda: orig(*a, **k))
+        encode_jobs.extend(jobs)
+        sc.setJobGroup(group, group)
+        return res
+
+    monkeypatch.setattr(table, "_encode_entries", encode_in_own_group)
+    info, jobs = spark_jobs(lambda: table.upsert_table(spark, out, batch))
+    assert info == {"snapshot_id": 1, "rewritten_chunks": 2,
+                    "new_chunks": 0, "upserted_rows": 57}
+    assert info["upserted_rows"] == batch.count()
+    assert encode_jobs
+    _, one_collect = spark_jobs(
+        lambda: batch.groupBy("conv_id").count().collect())
+    assert 1 <= len(jobs) <= len(one_collect), (jobs, one_collect)
+
+
+def test_schemas_parses_each_ddl_once(spark, monkeypatch):
+    """manifest._schemas memoizes its py4j DDL parse per DDL string."""
+    import pyspark.sql.types as T
+
+    ddl = "file string, chunk_id string, n long, tags array<string>"
+    first = manifest._schemas(ddl)
+
+    def refuse(_):
+        raise AssertionError("DDL parsed again")
+
+    monkeypatch.setattr(T, "_parse_datatype_string", refuse)
+    assert manifest._schemas(ddl) == first
+
+
 def _chunks_holding(table_dir: str, conv_id: str) -> int:
     """How many of the table's chunk files hold a row of ``conv_id``,
     found by decoding each chunk's conv_id column."""
