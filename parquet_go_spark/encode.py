@@ -200,10 +200,14 @@ def _encode_or_reuse(chunk: pa.Table, chunk_id: str, table_dir: str,
                      resume: bool, bloom_cols: tuple[str, ...],
                      attempt: str,
                      token_bloom_cols: tuple[str, ...] = (),
-                     cache: dict | None = None) -> dict:
+                     cache: dict | None = None,
+                     file_token: str = "") -> dict:
     """Encode one chunk table → write its file → manifest entry; reuse
-    a committed fingerprint-identical chunk when ``resume``."""
-    fpath = os.path.join(table_dir, "chunks", f"chunk-{chunk_id}.parquet")
+    a committed fingerprint-identical chunk when ``resume``. A rewrite
+    passes ``file_token``, so its file overwrites none a snapshot reads."""
+    fname = (f"chunk-{chunk_id}-{file_token}.parquet" if file_token
+             else f"chunk-{chunk_id}.parquet")
+    fpath = os.path.join(table_dir, "chunks", fname)
     if resume and os.path.exists(fpath):
         prev = read_chunk_entry(fpath)
         if (prev is not None and prev["n_rows"] == chunk.num_rows
@@ -232,7 +236,7 @@ def _encode_or_reuse(chunk: pa.Table, chunk_id: str, table_dir: str,
         blobs[BLOB_COL_PREFIX + name] = blob
     entry = {
         "chunk_id": chunk_id,
-        "file": os.path.join("chunks", f"chunk-{chunk_id}.parquet"),
+        "file": os.path.join("chunks", fname),
         "n_rows": chunk.num_rows,
         "data_crc": chunk_content_crc(chunk),
         "sort_order": list(key_cols),
@@ -254,7 +258,8 @@ def _encode_or_reuse(chunk: pa.Table, chunk_id: str, table_dir: str,
 
 def make_encode_fn(chunks, table_dir: str, key_cols: tuple[str, ...],
                    resume: bool = True, bloom_cols: tuple[str, ...] = (),
-                   token_bloom_cols: tuple[str, ...] = ()):
+                   token_bloom_cols: tuple[str, ...] = (),
+                   file_token: str = ""):
     """Build the mapInArrow UDF both write paths run, the one encode
     task body: iterator[RecordBatch] → (chunk_id, entry_json) rows.
     ``chunks(batches)`` yields the task's ``(group, chunk_id, sorted
@@ -282,7 +287,7 @@ def make_encode_fn(chunks, table_dir: str, key_cols: tuple[str, ...],
             entry = _encode_or_reuse(
                 chunk, chunk_id, table_dir, key_cols, {}, resume,
                 bloom_cols, f"{task}-g{g}", token_bloom_cols,
-                cache=enc_cache,
+                cache=enc_cache, file_token=file_token,
             )
             yield pa.RecordBatch.from_pydict(
                 {"chunk_id": pa.array([chunk_id]),

@@ -66,7 +66,7 @@ from typing import Any
 
 __all__ = ["commit", "commit_shards", "commit_in_tasks", "load",
            "load_refs", "scan_shards", "expire_snapshots",
-           "list_chunk_files", "stat_value", "check_chunk_layout",
+           "stat_value", "check_chunk_layout",
            "ENGINE_VERSION", "IncompatibleTableError"]
 
 ENGINE_VERSION = "parquet_go_spark-0.2.0"
@@ -901,15 +901,3 @@ def _unlink_chunks(cdir: str, rows):
             pass
     yield {"n": n}
 
-
-def list_chunk_files(table_dir: str) -> dict[str, str]:
-    """chunk_id → absolute chunk file path for files physically present
-    (used for checkpoint resume before any snapshot was committed)."""
-    cdir = os.path.join(table_dir, "chunks")
-    if not os.path.isdir(cdir):
-        return {}
-    out = {}
-    for fn in os.listdir(cdir):
-        if fn.startswith("chunk-") and fn.endswith(".parquet"):
-            out[fn[len("chunk-") : -len(".parquet")]] = os.path.join(cdir, fn)
-    return out

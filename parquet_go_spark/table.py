@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import uuid
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -447,11 +448,13 @@ def _stage_encode(
     chunk_prefix: str,
     bloom_cols: tuple[str, ...],
     token_bloom_cols: tuple[str, ...] = (),
+    file_token: str = "",
 ) -> tuple[DataFrame | list[dict], dict]:
     """Tag ``df``'s rows with chunk ``_ck`` and reuse group ``_g`` in
     the JVM and encode them through ``_encode``: in tasks behind an
-    exchange on ``_ck``, or here. A rewrite's input (``_encode_entries``)
-    is a decode job, of unknown size, so it stays on the tasks."""
+    exchange on ``_ck``, or here. A rewrite's input (``_encode_entries``,
+    which names its files by ``file_token``) is a decode job, of
+    unknown size, so it stays on the tasks."""
     # NOTE: no JVM sortWithinPartitions — the encode kernel sorts each
     # partition with pyarrow (same total order on the unique keys, so
     # chunk bytes and data_crc are identical), which is ~20x cheaper
@@ -515,7 +518,7 @@ def _stage_encode(
              "key_cols": list(key_cols)}
     encode_fn = make_encode_fn(partition_chunks(key_cols, chunk_prefix),
                                table_dir, key_cols, resume, bloom_cols,
-                               token_bloom_cols)
+                               token_bloom_cols, file_token)
     # the driver site reads the JVM's own Arrow batches: toArrow()
     # re-casts timestamps to UTC, while encode tasks see the session
     # zone, and a nested type's zone reaches the bytes
@@ -525,14 +528,51 @@ def _stage_encode(
     return entries, extra
 
 
+def _rewrite(spark, table_dir: str, plan, tag: str):
+    """The one rewrite of compact, delete_rows and upsert_table: load
+    the listing, gate every entry's layout, and ask ``plan(listing)``
+    for the op's part, ``(affected entries, fn, num_chunks,
+    chunk_prefix)`` or None for a no-op that commits nothing. Re-encode
+    (``_encode_entries``) into ``chunk-<id>-<token>.parquet`` files, one
+    token per op, that no snapshot references; commit keep + new
+    against the listing (CommitConflict if a commit landed since:
+    nothing dropped, no referenced file touched, a retry is safe),
+    recording the replaced ids under ``tag``; then unlink the replaced
+    files. Returns ``(snapshot id, affected, keep, new entries)``."""
+    listing = manifest.load(table_dir)
+    if listing is None:
+        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    # gate before planning: pre-0.2 blooms use another hash scheme
+    manifest.check_chunk_layout(listing["entries"])
+    op = plan(listing)
+    if op is None:
+        return listing["snapshot_id"], [], listing["entries"], []
+    affected, fn, num_chunks, chunk_prefix = op
+    new = _encode_entries(spark, table_dir, listing, affected, fn,
+                          num_chunks, chunk_prefix, uuid.uuid4().hex[:12])
+    replaced = {e["chunk_id"] for e in affected}
+    keep = [e for e in listing["entries"] if e["chunk_id"] not in replaced]
+    snap = manifest.commit(
+        table_dir, keep + new, schema_ddl=listing["schema_ddl"],
+        extra={**listing["extra"], tag: sorted(replaced)},
+        expect_parent=listing["snapshot_id"],
+    )
+    for e in affected:
+        try:
+            os.unlink(os.path.join(table_dir, e["file"]))
+        except OSError:
+            pass
+    return snap, affected, keep, new
+
+
 def _encode_entries(spark, table_dir: str, listing: dict,
                     affected: list[dict], fn, num_chunks: int,
-                    chunk_prefix: str) -> list[dict]:
-    """The one re-encode of compact, delete_rows and upsert_table:
-    decode the ``affected`` entries (all fields nullable, as in
-    read_table; interval columns in the lowered int form chunk bytes
-    store), apply ``fn`` (DataFrame → DataFrame) and encode the result
-    into ``num_chunks`` hash chunks, collecting the new entries on the
+                    chunk_prefix: str, file_token: str) -> list[dict]:
+    """The re-encode step of ``_rewrite``: decode the ``affected``
+    entries (all fields nullable, as in read_table; interval columns in
+    the lowered int form chunk bytes store), apply ``fn`` (DataFrame →
+    DataFrame) and encode the result into ``num_chunks`` hash chunks
+    whose files carry ``file_token``, collecting the new entries on the
     driver (touched sets are O(batch)). Key columns and salt block come
     from the listing; a column keeps its bloom or token bloom when an
     affected entry (any entry, when none is affected) has one."""
@@ -542,7 +582,6 @@ def _encode_entries(spark, table_dir: str, listing: dict,
         for f in StructType.fromJson(json.loads(listing["schema_ddl"])).fields
     ])[0])
     if affected:
-        manifest.check_chunk_layout(affected)
         old = _decode_df(manifest._rows_df(spark, _chunk_rows(
             table_dir, affected, schema.fieldNames()), _CHUNK_FILES_DDL),
             schema)
@@ -561,29 +600,9 @@ def _encode_entries(spark, table_dir: str, listing: dict,
         salt_block=extra.get("salt_block", DEFAULT_SALT_BLOCK),
         resume=False, chunk_expr=None,
         chunk_prefix=chunk_prefix, bloom_cols=carried("bloom"),
-        token_bloom_cols=carried("token_bloom"),
+        token_bloom_cols=carried("token_bloom"), file_token=file_token,
     )
     return _entry_list(entries)
-
-
-def _commit_rewrite(table_dir: str, listing: dict, keep: list[dict],
-                    new_entries: list[dict], replaced: list[dict],
-                    tag: str) -> int:
-    """Commit keep + new_entries over the listing's snapshot (raising
-    CommitConflict if another commit landed since), recording the
-    replaced chunk ids under ``tag``; then unlink the replaced files."""
-    snap = manifest.commit(
-        table_dir, keep + new_entries, schema_ddl=listing["schema_ddl"],
-        extra={**listing["extra"],
-               tag: sorted(e["chunk_id"] for e in replaced)},
-        expect_parent=listing["snapshot_id"],
-    )
-    for e in replaced:
-        try:
-            os.unlink(os.path.join(table_dir, e["file"]))
-        except OSError:
-            pass
-    return snap
 
 
 def read_table(
@@ -729,39 +748,30 @@ def compact(
     rewrite-data-files parity). Streaming ingestion leaves one chunk
     set per micro-batch; compaction decodes the small ones, re-encodes
     them under a fresh chunk namespace, and commits keep + new minus
-    superseded in ONE snapshot — a crash before the commit leaves the
-    table exactly as it was (the orphaned new files are overwritten by
-    the retry), never an intermediate snapshot with duplicate rows.
+    superseded in ONE snapshot through ``_rewrite``: a crash before the
+    commit leaves the table exactly as it was, and a concurrent commit
+    makes it raise CommitConflict before any chunk is unlinked.
 
     At scale this is a normal Spark job over only the small chunks —
-    the large ones are untouched (no read amplification). A commit
-    landing between the listing read and this op's commit makes it
-    raise CommitConflict before any chunk is unlinked; its new chunk
-    files are left for expire_snapshots."""
-    listing = manifest.load(table_dir)
-    if listing is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    entries = listing["entries"]
-    manifest.check_chunk_layout(entries)
-    small = [e for e in entries if e["n_rows"] < min_rows]
-    if len(small) < 2:
-        return {"compacted_chunks": 0, "n_chunks": len(entries)}
-    keep = [e for e in entries if e["n_rows"] >= min_rows]
-    n_small_rows = sum(e["n_rows"] for e in small)
-    new_entries = _encode_entries(
-        spark, table_dir, listing, small, lambda d: d,
-        max(1, math.ceil(n_small_rows / rows_per_chunk)),
-        f"c{listing['snapshot_id'] + 1:04d}-",
-    )
-    final_entries = keep + new_entries
-    snap = _commit_rewrite(table_dir, listing, keep, new_entries, small,
-                           "compacted_from")
+    the large ones are untouched (no read amplification)."""
+
+    def plan(listing):
+        small = [e for e in listing["entries"] if e["n_rows"] < min_rows]
+        if len(small) < 2:
+            return None
+        n_rows = sum(e["n_rows"] for e in small)
+        return (small, lambda d: d,
+                max(1, math.ceil(n_rows / rows_per_chunk)),
+                f"c{listing['snapshot_id'] + 1:04d}-")
+
+    snap, small, keep, new = _rewrite(spark, table_dir, plan,
+                                      "compacted_from")
     return {
         "snapshot_id": snap,
         "compacted_chunks": len(small),
-        "new_chunks": len(new_entries),
-        "n_chunks": len(final_entries),
-        "n_rows": sum(e["n_rows"] for e in final_entries),
+        "new_chunks": len(new),
+        "n_chunks": len(keep) + len(new),
+        "n_rows": sum(e["n_rows"] for e in keep + new),
     }
 
 
@@ -963,37 +973,29 @@ def delete_rows(spark: SparkSession, table_dir: str,
     """Row-level delete (Iceberg delete-with-rewrite parity): chunks
     whose stats overlap the predicate are decoded, surviving rows
     re-encoded under a fresh namespace, and ONE snapshot commits
-    keep + rewritten — untouched chunks (the overwhelming majority at
-    scale, thanks to manifest pruning) are not read at all. Raises
-    CommitConflict, as compact does, if another commit lands first."""
-    listing = manifest.load(table_dir)
-    if listing is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    # gate before pruning: pre-0.2 blooms use another hash scheme
-    manifest.check_chunk_layout(listing["entries"])
-    affected = prune_entries(listing["entries"], predicates)
-    affected_ids = {e["chunk_id"] for e in affected}
-    keep = [e for e in listing["entries"]
-            if e["chunk_id"] not in affected_ids]
-    if not affected:
-        return {"snapshot_id": listing["snapshot_id"],
-                "rewritten_chunks": 0, "untouched_chunks": len(keep),
-                "n_chunks": len(keep)}
+    keep + rewritten through ``_rewrite`` — untouched chunks (the
+    overwhelming majority at scale, thanks to manifest pruning) are not
+    read at all. Raises CommitConflict, as compact does, if another
+    commit lands first."""
     # NULL predicate values are "unknown" → NOT deleted (keep the row)
     dropped = F.coalesce(_predicate_cond(predicates), F.lit(False))
-    n_rows = sum(e["n_rows"] for e in affected)
-    new_entries = _encode_entries(
-        spark, table_dir, listing, affected, lambda d: d.filter(~dropped),
-        max(1, math.ceil(n_rows / DEFAULT_ROWS_PER_CHUNK)),
-        f"d{listing['snapshot_id'] + 1:04d}-",
-    )
-    snap = _commit_rewrite(table_dir, listing, keep, new_entries, affected,
-                           "deleted_from")
+
+    def plan(listing):
+        affected = prune_entries(listing["entries"], predicates)
+        if not affected:
+            return None
+        n_rows = sum(e["n_rows"] for e in affected)
+        return (affected, lambda d: d.filter(~dropped),
+                max(1, math.ceil(n_rows / DEFAULT_ROWS_PER_CHUNK)),
+                f"d{listing['snapshot_id'] + 1:04d}-")
+
+    snap, affected, keep, new = _rewrite(spark, table_dir, plan,
+                                         "deleted_from")
     return {
         "snapshot_id": snap,
         "rewritten_chunks": len(affected),
         "untouched_chunks": len(keep),
-        "n_chunks": len(keep) + len(new_entries),
+        "n_chunks": len(keep) + len(new),
     }
 
 
@@ -1004,64 +1006,67 @@ def upsert_table(spark: SparkSession, table_dir: str,
     replace same-key rows; new keys append. Hash chunking is
     deterministic, so each upserted key maps to exactly one chunk id —
     only those chunks are decoded, merged (anti-join on the key) and
-    re-encoded under their SAME ids; the append-mode commit swaps them
-    in. Untouched chunks: zero I/O. Requires a hash-chunked table
-    (default write mode). Historical snapshots referencing a replaced
-    chunk fail loudly on read (data_crc verify), as with compaction."""
-    listing = manifest.load(table_dir)
-    if listing is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    extra = listing["extra"]
-    if "num_chunks" not in extra:
-        raise ValueError("upsert requires a hash-chunked table")
-    # prefixed chunk ids (streaming appends, compaction namespaces) may
-    # hold the same keys outside the hash mapping — an upsert would
-    # then leave duplicates. Compact to a uniform namespace first.
-    prefixed = [e["chunk_id"] for e in listing["entries"]
-                if not e["chunk_id"].isdigit()]
-    if prefixed:
-        raise ValueError(
-            "upsert requires a uniformly hash-chunked table; found "
-            f"prefixed chunks (e.g. {prefixed[0]!r}) — run compact() "
-            "or rewrite first"
-        )
-    num_chunks = extra["num_chunks"]
-    key_cols = tuple(extra.get("key_cols") or ["conv_id", "turn_idx"])
-    ck = _hash_chunk(key_cols, extra.get("salt_block", DEFAULT_SALT_BLOCK),
-                     num_chunks)
-    # one collect gives the touched set, the guard and the row count
-    counts = df.groupBy(ck.alias("_ck")).count() \
-        .limit(UPSERT_MAX_TOUCHED_CHUNKS + 1).collect()
-    if len(counts) > UPSERT_MAX_TOUCHED_CHUNKS:
-        raise ValueError(
-            f"upsert touches more than {UPSERT_MAX_TOUCHED_CHUNKS} chunks "
-            f"(UPSERT_MAX_TOUCHED_CHUNKS={UPSERT_MAX_TOUCHED_CHUNKS}): "
-            "that is effectively a full-table rewrite whose touched-chunk "
-            "set no longer fits the O(batch) driver contract — re-encode "
-            "with write_table() (distributed commit) or compact() instead, "
-            "or raise UPSERT_MAX_TOUCHED_CHUNKS explicitly"
-        )
-    touched = {make_chunk_id("", r["_ck"]) for r in counts}
-    affected = [e for e in listing["entries"] if e["chunk_id"] in touched]
+    re-encoded under their SAME ids into new files (``_rewrite``; live
+    files are never overwritten). Untouched chunks: zero I/O. Requires
+    a hash-chunked table (default write mode). An empty batch commits
+    nothing. A commit landing between the listing read and this op's
+    commit makes it raise CommitConflict, with nothing dropped or
+    touched: a retry is safe."""
     # interval columns merge in their lowered int form (both the stored
     # chunks and the incoming batch), original DDL stays in the commit
     df, _ = _lower_interval_df(df)
+    counts = []
 
-    def merge(old):
-        new = df.select(*old.columns)
-        return old.join(new, on=list(key_cols), how="left_anti") \
-            .unionByName(new)
+    def plan(listing):
+        extra = listing["extra"]
+        if "num_chunks" not in extra:
+            raise ValueError("upsert requires a hash-chunked table")
+        # prefixed chunk ids (streaming appends, compaction namespaces)
+        # may hold the same keys outside the hash mapping, and an upsert
+        # would then leave duplicates: compact to one namespace first
+        prefixed = [e["chunk_id"] for e in listing["entries"]
+                    if not e["chunk_id"].isdigit()]
+        if prefixed:
+            raise ValueError(
+                "upsert requires a uniformly hash-chunked table; found "
+                f"prefixed chunks (e.g. {prefixed[0]!r}) — run compact() "
+                "or rewrite first"
+            )
+        num_chunks = extra["num_chunks"]
+        key_cols = tuple(extra.get("key_cols") or ["conv_id", "turn_idx"])
+        ck = _hash_chunk(key_cols, extra.get("salt_block", DEFAULT_SALT_BLOCK),
+                         num_chunks)
+        # one collect gives the touched set, the guard and the row count
+        counts.extend(df.groupBy(ck.alias("_ck")).count()
+                      .limit(UPSERT_MAX_TOUCHED_CHUNKS + 1).collect())
+        if len(counts) > UPSERT_MAX_TOUCHED_CHUNKS:
+            raise ValueError(
+                f"upsert touches more than {UPSERT_MAX_TOUCHED_CHUNKS} "
+                f"chunks (UPSERT_MAX_TOUCHED_CHUNKS="
+                f"{UPSERT_MAX_TOUCHED_CHUNKS}): that is effectively a "
+                "full-table rewrite whose touched-chunk set no longer fits "
+                "the O(batch) driver contract — re-encode with "
+                "write_table() (distributed commit) or compact() instead, "
+                "or raise UPSERT_MAX_TOUCHED_CHUNKS explicitly"
+            )
+        if not counts:
+            return None
+        touched = {make_chunk_id("", r["_ck"]) for r in counts}
 
-    new_entries = _encode_entries(spark, table_dir, listing, affected,
-                                  merge, num_chunks, "")
-    snap = manifest.commit(
-        table_dir, new_entries, schema_ddl=listing["schema_ddl"],
-        extra=extra, append=True,
-    )
+        def merge(old):
+            new = df.select(*old.columns)
+            return old.join(new, on=list(key_cols), how="left_anti") \
+                .unionByName(new)
+
+        return ([e for e in listing["entries"] if e["chunk_id"] in touched],
+                merge, num_chunks, "")
+
+    snap, affected, _, new = _rewrite(spark, table_dir, plan,
+                                      "upserted_from")
     return {
         "snapshot_id": snap,
         "rewritten_chunks": len(affected),
-        "new_chunks": len(new_entries) - len(affected),
+        "new_chunks": len(new) - len(affected),
         "upserted_rows": sum(r["count"] for r in counts),
     }
 

@@ -1724,11 +1724,11 @@ def test_task_plane_jobs_stage_no_rdd(spark, tmp_path, monkeypatch):
                 (name, plan)
 
 
-@pytest.mark.parametrize("op", ["compact", "delete_rows"])
+@pytest.mark.parametrize("op", ["compact", "delete_rows", "upsert_table"])
 def test_rewrite_op_refuses_to_drop_a_concurrent_append(spark, tmp_path,
                                                         monkeypatch, op):
-    """compact and delete_rows commit keep + rewritten with
-    append=False: an append landing between their listing read and
+    """compact, delete_rows and upsert_table commit keep + rewritten
+    with append=False: an append landing between their listing read and
     their commit must make them raise CommitConflict (nothing dropped,
     nothing unlinked), not vanish from the table."""
     df = make_transcripts_df(spark, n_conv=30, seed=41)
@@ -1748,13 +1748,108 @@ def test_rewrite_op_refuses_to_drop_a_concurrent_append(spark, tmp_path,
     with pytest.raises(manifest.CommitConflict):
         if op == "compact":
             table.compact(spark, out)
-        else:
+        elif op == "delete_rows":
             table.delete_rows(spark, out, {"conv_id": ("conv-00000001",
                                                        "conv-00000004")})
+        else:
+            table.upsert_table(spark, out, df.limit(5))
     monkeypatch.undo()
     want = n0 + batch.count()
     assert table.count_rows(out) == want
     assert table.read_table(spark, out).count() == want
+
+
+def _rewrite_table(spark, out: str, op: str):
+    """A bloom-indexed table for ``op`` (compact needs small prefixed
+    chunks, upsert a uniformly hash-chunked table) and the op's call."""
+    import pyspark.sql.functions as F
+
+    df = make_transcripts_df(spark, n_conv=40, seed=53)
+    target = "conv-00000007"
+    if op == "compact":
+        first = F.col("conv_id") < "conv-00000020"
+        for prefix, part in (("a-", first), ("b-", ~first)):
+            table.write_table(df.filter(part), out, num_chunks=3,
+                              chunk_prefix=prefix, append=True,
+                              bloom_cols=("conv_id",))
+        return target, lambda: table.compact(spark, out, min_rows=10**6)
+    table.write_table(df, out, num_chunks=4, bloom_cols=("conv_id",))
+    if op == "delete_rows":
+        return target, lambda: table.delete_rows(spark, out,
+                                                 {"conv_id": target})
+    fix = df.filter(F.col("conv_id") == target) \
+        .withColumn("text", F.lit("x y"))
+    return target, lambda: table.upsert_table(spark, out, fix)
+
+
+@pytest.mark.parametrize("op", ["compact", "delete_rows", "upsert_table"])
+def test_rewrite_op_crash_before_commit_keeps_snapshot(spark, tmp_path,
+                                                       monkeypatch, op):
+    """A rewrite that dies after its re-encode and before its commit
+    leaves the current snapshot reading the same rows, by a full count
+    and by a bloom lookup: its new chunk files overwrite no file a
+    snapshot references. A retry then lands the op once."""
+    out = str(tmp_path / "tbl")
+    target, run = _rewrite_table(spark, out, op)
+
+    def lookup():
+        return sorted(table.read_table(
+            spark, out, predicates={"conv_id": target},
+            push_row_filter=True).collect())
+
+    n0, rows0 = table.read_table(spark, out).count(), lookup()
+    snap0 = manifest.load_refs(out)["snapshot_id"]
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(manifest, "commit", crash)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        run()
+    monkeypatch.undo()
+    assert manifest.load_refs(out)["snapshot_id"] == snap0
+    assert table.read_table(spark, out).count() == n0
+    assert lookup() == rows0 and rows0
+
+    res = run()
+    assert res["snapshot_id"] == manifest.load_refs(out)["snapshot_id"] \
+        == snap0 + 1
+    want = n0 - len(rows0) if op == "delete_rows" else n0
+    assert table.count_rows(out) == table.read_table(spark, out).count() \
+        == want
+    after = lookup()
+    if op == "delete_rows":
+        assert after == []
+    elif op == "upsert_table":
+        assert len(after) == len(rows0)
+        assert {r["text"] for r in after} == {"x y"}
+    else:
+        assert after == rows0
+
+
+@pytest.mark.parametrize("op", ["compact", "delete_rows", "upsert_table"])
+def test_rewrite_op_noop_commits_nothing(spark, transcripts, tmp_path,
+                                         spark_jobs, op):
+    """A rewrite op with nothing to do (an empty upsert batch among
+    them) leaves the snapshot where it was, runs no Spark job beyond
+    one grouped-count collect of the batch, and returns the current
+    ``snapshot_id``, as every rewrite op's result does."""
+    out = str(tmp_path / "tbl")
+    table.write_table(transcripts, out, num_chunks=16)
+    batch = transcripts.limit(0)
+    res, jobs = spark_jobs({
+        "compact": lambda: table.compact(spark, out, min_rows=1),
+        "delete_rows": lambda: table.delete_rows(spark, out,
+                                                 {"conv_id": "zz-none"}),
+        "upsert_table": lambda: table.upsert_table(spark, out, batch),
+    }[op])
+    touched = {"compact": "compacted_chunks", "delete_rows":
+               "rewritten_chunks", "upsert_table": "rewritten_chunks"}[op]
+    assert res[touched] == res.get("upserted_rows", 0) == 0
+    assert res["snapshot_id"] == manifest.load_refs(out)["snapshot_id"] == 0
+    _, one_collect = spark_jobs(
+        lambda: batch.groupBy("conv_id").count().collect())
+    assert len(jobs) <= len(one_collect), (jobs, one_collect)
 
 
 def test_task_plane_resume_reports_reused_chunks(spark, tmp_path,
