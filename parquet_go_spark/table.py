@@ -449,12 +449,12 @@ def _stage_encode(
     bloom_cols: tuple[str, ...],
     token_bloom_cols: tuple[str, ...] = (),
     file_token: str = "",
+    n_rows: int | None = None,
 ) -> tuple[DataFrame | list[dict], dict]:
     """Tag ``df``'s rows with chunk ``_ck`` and reuse group ``_g`` in
     the JVM and encode them through ``_encode``: in tasks behind an
-    exchange on ``_ck``, or here. A rewrite's input (``_encode_entries``,
-    which names its files by ``file_token``) is a decode job, of
-    unknown size, so it stays on the tasks."""
+    exchange on ``_ck``, or here. ``n_rows`` (a rewrite's manifest row
+    count) sizes the staging when Catalyst has no estimate."""
     # NOTE: no JVM sortWithinPartitions — the encode kernel sorts each
     # partition with pyarrow (same total order on the unique keys, so
     # chunk bytes and data_crc are identical), which is ~20x cheaper
@@ -473,7 +473,6 @@ def _stage_encode(
     except Exception:
         pass
     site_size = size  # the estimate alone, never the count fallback
-    n_rows = None
     if num_chunks is None:
         # prefer Catalyst's size estimate (no extra job); fall back
         # to an exact count. Both are deterministic for the same
@@ -497,21 +496,15 @@ def _stage_encode(
     # - n_tasks encode tasks (``_encode_tasks``): one wave for a small
     #   input, one task per group from one 128 MB task per core up, so
     #   no task takes more than ~128 MB of input (python-worker
-    #   working set).
-    # With no size info at all (explicit num_chunks, no estimate) both
-    # are one per chunk, so a task stays bounded at chunk size (the
-    # kernel materializes its whole partition via Arrow).
+    #   working set). Unknown size counts as one 128 MB task per chunk.
     par = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     if size is None and n_rows is not None:
         # no Catalyst estimate (post-shuffle/UDF sources): bound the
-        # per-task working set from the exact count already taken
+        # per-task working set from the row count
         size = n_rows * EST_ROW_BYTES
-    if size is not None:
-        by_size = math.ceil(size / (128 << 20))
-        n_groups = max(1, min(num_chunks, max(4 * par, by_size)))
-        n_tasks = _encode_tasks(n_groups, par, by_size)
-    else:
-        n_groups = n_tasks = max(1, num_chunks)
+    by_size = num_chunks if size is None else math.ceil(size / (128 << 20))
+    n_groups = max(1, min(num_chunks, max(4 * par, by_size)))
+    n_tasks = _encode_tasks(n_groups, par, by_size)
     staged = df.withColumn("_ck", ck).withColumn("_g",
                                                  _reuse_group(n_groups))
     extra = {"num_chunks": num_chunks, "salt_block": salt_block,
@@ -532,13 +525,14 @@ def _rewrite(spark, table_dir: str, plan, tag: str):
     """The one rewrite of compact, delete_rows and upsert_table: load
     the listing, gate every entry's layout, and ask ``plan(listing)``
     for the op's part, ``(affected entries, fn, num_chunks,
-    chunk_prefix)`` or None for a no-op that commits nothing. Re-encode
-    (``_encode_entries``) into ``chunk-<id>-<token>.parquet`` files, one
-    token per op, that no snapshot references; commit keep + new
-    against the listing (CommitConflict if a commit landed since:
-    nothing dropped, no referenced file touched, a retry is safe),
-    recording the replaced ids under ``tag``; then unlink the replaced
-    files. Returns ``(snapshot id, affected, keep, new entries)``."""
+    chunk_prefix, n_rows ≥ fn's rows)`` or None for a no-op that
+    commits nothing. Re-encode (``_encode_entries``) into
+    ``chunk-<id>-<token>.parquet`` files, one token per op, that no
+    snapshot references; commit keep + new against the listing
+    (CommitConflict if a commit landed since: nothing dropped, no
+    referenced file touched, a retry is safe), recording the replaced
+    ids under ``tag``; then unlink the replaced files. Returns
+    ``(snapshot id, affected, keep, new entries)``."""
     listing = manifest.load(table_dir)
     if listing is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
@@ -547,9 +541,10 @@ def _rewrite(spark, table_dir: str, plan, tag: str):
     op = plan(listing)
     if op is None:
         return listing["snapshot_id"], [], listing["entries"], []
-    affected, fn, num_chunks, chunk_prefix = op
+    affected, fn, num_chunks, chunk_prefix, n_rows = op
     new = _encode_entries(spark, table_dir, listing, affected, fn,
-                          num_chunks, chunk_prefix, uuid.uuid4().hex[:12])
+                          num_chunks, n_rows, chunk_prefix,
+                          uuid.uuid4().hex[:12])
     replaced = {e["chunk_id"] for e in affected}
     keep = [e for e in listing["entries"] if e["chunk_id"] not in replaced]
     snap = manifest.commit(
@@ -566,27 +561,23 @@ def _rewrite(spark, table_dir: str, plan, tag: str):
 
 
 def _encode_entries(spark, table_dir: str, listing: dict,
-                    affected: list[dict], fn, num_chunks: int,
+                    affected: list[dict], fn, num_chunks: int, n_rows: int,
                     chunk_prefix: str, file_token: str) -> list[dict]:
     """The re-encode step of ``_rewrite``: decode the ``affected``
-    entries (all fields nullable, as in read_table; interval columns in
-    the lowered int form chunk bytes store), apply ``fn`` (DataFrame →
-    DataFrame) and encode the result into ``num_chunks`` hash chunks
-    whose files carry ``file_token``, collecting the new entries on the
-    driver (touched sets are O(batch)). Key columns and salt block come
-    from the listing; a column keeps its bloom or token bloom when an
-    affected entry (any entry, when none is affected) has one."""
+    entries on read_table's site (all fields nullable; intervals in the
+    lowered int form chunk bytes store), apply ``fn`` (DataFrame →
+    DataFrame), and encode the result as write_table does, sized by
+    ``n_rows`` if unsized, into ``num_chunks`` hash chunks whose files carry
+    ``file_token``; returns the new entries. Key columns and salt block
+    come from the listing; a column keeps its bloom or token bloom when
+    an affected entry (any entry, when none is affected) has one."""
     extra = listing["extra"]
     schema = StructType(_udf_safe_fields([
         StructField(f.name, f.dataType, True, f.metadata)
         for f in StructType.fromJson(json.loads(listing["schema_ddl"])).fields
     ])[0])
-    if affected:
-        old = _decode_df(manifest._rows_df(spark, _chunk_rows(
-            table_dir, affected, schema.fieldNames()), _CHUNK_FILES_DDL),
-            schema)
-    else:
-        old = spark.createDataFrame([], schema)
+    old = _decode_rows(spark, _chunk_rows(table_dir, affected,
+                                          schema.fieldNames()), schema)
     metas = [m for e in (affected or listing["entries"])
              for m in e["columns"].items()]
 
@@ -598,7 +589,7 @@ def _encode_entries(spark, table_dir: str, listing: dict,
         key_cols=tuple(extra.get("key_cols") or ["conv_id", "turn_idx"]),
         num_chunks=num_chunks, rows_per_chunk=DEFAULT_ROWS_PER_CHUNK,
         salt_block=extra.get("salt_block", DEFAULT_SALT_BLOCK),
-        resume=False, chunk_expr=None,
+        resume=False, chunk_expr=None, n_rows=n_rows,
         chunk_prefix=chunk_prefix, bloom_cols=carried("bloom"),
         token_bloom_cols=carried("token_bloom"), file_token=file_token,
     )
@@ -762,7 +753,7 @@ def compact(
         n_rows = sum(e["n_rows"] for e in small)
         return (small, lambda d: d,
                 max(1, math.ceil(n_rows / rows_per_chunk)),
-                f"c{listing['snapshot_id'] + 1:04d}-")
+                f"c{listing['snapshot_id'] + 1:04d}-", n_rows)
 
     snap, small, keep, new = _rewrite(spark, table_dir, plan,
                                       "compacted_from")
@@ -865,11 +856,9 @@ def _decode_snapshot(spark, table_dir: str, refs: dict, fn,
     columns of ``schema``, choosing where the decoder runs. On the task
     plane ``manifest.scan_shards`` runs ``fn`` per shard file and a
     Spark job decodes its rows; the driver never sees an entry. On the
-    driver plane ``fn`` runs over the loaded entry list: no surviving
-    chunk → an empty DataFrame; surviving raw bytes that pass
-    ``manifest._driver_decode`` → the decoder runs here, eagerly, and
-    the result is a local relation; otherwise a Spark job decodes them.
-    Every site runs the same decoder over the same decode rows."""
+    driver plane ``fn`` runs over the loaded entry list and
+    ``_decode_rows`` picks the site of its rows. Every site runs the
+    same decoder over the same decode rows."""
     if manifest._task_plane(spark, refs["n_chunks"]):
         files_df = manifest.scan_shards(
             spark, table_dir, [r["file"] for r in refs["manifest_shards"]],
@@ -877,7 +866,16 @@ def _decode_snapshot(spark, table_dir: str, refs: dict, fn,
         return _decode_df(
             files_df.repartition(spark.sparkContext.defaultParallelism),
             schema, row_filter)
-    rows = fn(manifest.load(table_dir, snapshot_id=snapshot_id)["entries"])
+    return _decode_rows(spark, fn(manifest.load(
+        table_dir, snapshot_id=snapshot_id)["entries"]), schema, row_filter)
+
+
+def _decode_rows(spark, rows: list[dict], schema: StructType,
+                 row_filter: dict | None = None) -> DataFrame:
+    """The decode site of driver-held decode ``rows`` (``_chunk_rows``),
+    for reads and rewrites alike: none → an empty local relation; raw
+    bytes that pass ``manifest._driver_decode`` → ``_decode_local``,
+    here and eagerly; otherwise a Spark job (``_decode_df``)."""
     if not rows:
         return _local_result(spark, to_arrow_schema(schema).empty_table(),
                              schema)
@@ -987,7 +985,7 @@ def delete_rows(spark: SparkSession, table_dir: str,
         n_rows = sum(e["n_rows"] for e in affected)
         return (affected, lambda d: d.filter(~dropped),
                 max(1, math.ceil(n_rows / DEFAULT_ROWS_PER_CHUNK)),
-                f"d{listing['snapshot_id'] + 1:04d}-")
+                f"d{listing['snapshot_id'] + 1:04d}-", n_rows)
 
     snap, affected, keep, new = _rewrite(spark, table_dir, plan,
                                          "deleted_from")
@@ -1005,8 +1003,9 @@ def upsert_table(spark: SparkSession, table_dir: str,
     """Key-based upsert (the corrected-transcript case): rows in ``df``
     replace same-key rows; new keys append. Hash chunking is
     deterministic, so each upserted key maps to exactly one chunk id —
-    only those chunks are decoded, merged (anti-join on the key) and
-    re-encoded under their SAME ids into new files (``_rewrite``; live
+    only those chunks are decoded (on read_table's site), merged
+    (anti-join on the key) and re-encoded (staged as write_table
+    stages) under their SAME ids into new files (``_rewrite``; live
     files are never overwritten). Untouched chunks: zero I/O. Requires
     a hash-chunked table (default write mode). An empty batch commits
     nothing. A commit landing between the listing read and this op's
@@ -1058,8 +1057,9 @@ def upsert_table(spark: SparkSession, table_dir: str,
             return old.join(new, on=list(key_cols), how="left_anti") \
                 .unionByName(new)
 
-        return ([e for e in listing["entries"] if e["chunk_id"] in touched],
-                merge, num_chunks, "")
+        affected = [e for e in listing["entries"] if e["chunk_id"] in touched]
+        return (affected, merge, num_chunks, "", sum(
+            e["n_rows"] for e in affected) + sum(r["count"] for r in counts))
 
     snap, affected, _, new = _rewrite(spark, table_dir, plan,
                                       "upserted_from")

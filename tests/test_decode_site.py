@@ -245,6 +245,80 @@ def test_timestamps_same_on_both_sites_in_non_utc_session(
     assert isinstance(got["job"][0]["ts"], datetime.datetime)
 
 
+def _chunk_digests(table_dir: str) -> dict:
+    """{chunk id: {blob column: sha256}} of a table's current chunks."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for e in manifest.load(table_dir)["entries"]:
+        t = pq.read_table(os.path.join(table_dir, e["file"]))
+        out[e["chunk_id"]] = {
+            c: hashlib.sha256(t.column(c)[0].as_py()).hexdigest()
+            for c in t.column_names}
+    return out
+
+
+@pytest.mark.parametrize("zone", ["UTC", "America/Los_Angeles"])
+@pytest.mark.parametrize("op", ["compact", "delete_rows", "upsert_table"])
+def test_rewrite_same_on_both_sites(spark, tmp_path, decode_site,
+                                    monkeypatch, op, zone):
+    """compact, delete_rows and upsert_table decode the chunks they
+    rewrite on read_table's site. Forced to the driver or to a Spark
+    job, each op writes the same blob bytes under the same chunk ids
+    and leaves the same rows, in any session zone."""
+    df = make_transcripts_df(spark, n_conv=40, seed=61).withColumn(
+        "meta", F.struct(F.col("turn_idx").alias("u"),
+                         F.col("role").alias("r")))
+    target = "conv-00000007"
+    fix = df.filter(F.col("conv_id") == target) \
+        .withColumn("text", F.lit("x y")) \
+        .unionByName(df.filter(F.col("conv_id") == "conv-00000008")
+                     .withColumn("conv_id", F.lit("conv-99999999")))
+    calls = _job_calls(monkeypatch)
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, zone)
+    got = {}
+    try:
+        for site in ("job", "driver"):
+            out = str(tmp_path / site)
+            if op == "compact":
+                first = F.col("conv_id") < "conv-00000020"
+                for prefix, part in (("a-", first), ("b-", ~first)):
+                    table.write_table(df.filter(part), out, num_chunks=3,
+                                      chunk_prefix=prefix, append=True,
+                                      bloom_cols=("conv_id",))
+            else:
+                table.write_table(df, out, num_chunks=4,
+                                  bloom_cols=("conv_id",))
+            decode_site(site)
+            calls.clear()
+            {"compact": lambda: table.compact(spark, out, min_rows=1 << 30,
+                                              rows_per_chunk=200),
+             "delete_rows": lambda: table.delete_rows(
+                 spark, out, {"conv_id": target}),
+             "upsert_table": lambda: table.upsert_table(spark, out, fix),
+             }[op]()
+            assert bool(calls) == (site == "job"), site
+            got[site] = (_chunk_digests(out),
+                         _sorted(table.read_table(spark, out).toArrow()))
+    finally:
+        spark.conf.set(key, prev)
+    (job_blobs, job_rows), (driver_blobs, driver_rows) = \
+        got["job"], got["driver"]
+    assert job_blobs == driver_blobs
+    assert job_rows.equals(driver_rows) and job_rows.num_rows > 0
+    texts = {r["text"] for r in job_rows.to_pylist()
+             if r["conv_id"] == target}
+    if op == "compact":
+        assert len(job_blobs) > 1
+        assert all(c.startswith("c") for c in job_blobs)
+    else:
+        assert texts == {"delete_rows": set(), "upsert_table": {"x y"}}[op]
+
+
 def test_point_lookup_skips_the_spark_job(spark, tmp_path, monkeypatch):
     """The site rule at its real bound: a bloom point lookup on a
     50-chunk table decodes on the driver, and a read whose decoded raw

@@ -246,14 +246,14 @@ def test_decoded_input_stages_as_unknown_size(spark, landed, tmp_path,
     assert info["n_rows"] == n_rows
     assert info["n_chunks"] == -(-n_rows // 500) > 1
 
-    # compact re-encodes a decode with an explicit chunk count: one
-    # chunk per exchange partition, as with no size info at all
+    # compact re-encodes a decode with an explicit chunk count: its
+    # manifest row count sizes the staging (one wave of tasks), and the
+    # encode stays on the tasks
     per_chunk = -(-n_rows // 12)
     T.compact(spark, src, min_rows=1 << 30, rows_per_chunk=per_chunk)
     nc = -(-n_rows // per_chunk)
     new = [e for e in _entries(src) if e["chunk_id"].startswith("c")]
-    parts = {r.p for r in spark.createDataFrame(
-        [(int(e["chunk_id"][-6:]),) for e in new], "ck long").select(
-        F.pmod(F.hash("ck"), F.lit(nc)).alias("p")).collect()}
-    assert len(parts) > spark.sparkContext.defaultParallelism
-    assert len({_task(e) for e in new}) == len(parts)
+    assert len(new) == nc > spark.sparkContext.defaultParallelism
+    assert all(e["attempt"].startswith("task") for e in new)
+    assert len({_task(e) for e in new}) <= \
+        spark.sparkContext.defaultParallelism

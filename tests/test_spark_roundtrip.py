@@ -1852,6 +1852,67 @@ def test_rewrite_op_noop_commits_nothing(spark, transcripts, tmp_path,
     assert len(jobs) <= len(one_collect), (jobs, one_collect)
 
 
+@pytest.mark.parametrize("op", ["upsert_table", "delete_rows", "compact"])
+def test_rewrite_encode_runs_one_wave(spark, tmp_path, monkeypatch,
+                                      spark_jobs, op):
+    """A rewrite decodes on read_table's site and stages its re-encode
+    by write_table's rule, sized from the manifest row count of the
+    chunks it touches (plus upsert's batch). At local[4] on a 64-chunk
+    table no stage of it runs one task per table chunk, its encode
+    stage (the result stage of the re-encode's collect job) runs at
+    most defaultParallelism tasks, and its small decode runs no Spark
+    job. Staging one task per table chunk, a one-conversation upsert
+    ran a 64-task encode stage whose tasks but one got no rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from parquet_go_spark.fixtures import make_transcripts
+
+    tbl = make_transcripts(600, seed=5)
+    out = str(tmp_path / "tbl")
+    table.write_table(spark.createDataFrame(tbl, table.TRANSCRIPT_DDL), out,
+                      num_chunks=64, bloom_cols=("conv_id",))
+    target = "conv-00000042"
+    fix = tbl.filter(pc.equal(tbl["conv_id"], target))
+    fix = fix.set_column(fix.schema.get_field_index("text"), "text",
+                         pa.array(["fixed"] * fix.num_rows))
+    run = {
+        "upsert_table": lambda: table.upsert_table(
+            spark, out, spark.createDataFrame(fix, table.TRANSCRIPT_DDL)),
+        "delete_rows": lambda: table.delete_rows(spark, out,
+                                                 {"conv_id": target}),
+        "compact": lambda: table.compact(spark, out, min_rows=1 << 30,
+                                         rows_per_chunk=tbl.num_rows // 12),
+    }[op]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    encode_jobs, decode_jobs = [], []
+    orig_encode, orig_decode = table._encode_entries, table._decode_df
+
+    def encode_in_own_group(*a, **k):
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        res, jobs = spark_jobs(lambda: orig_encode(*a, **k))
+        encode_jobs.extend(jobs)
+        sc.setJobGroup(group, group)
+        return res
+
+    def decode_job(*a, **k):
+        decode_jobs.append(1)
+        return orig_decode(*a, **k)
+
+    monkeypatch.setattr(table, "_encode_entries", encode_in_own_group)
+    monkeypatch.setattr(table, "_decode_df", decode_job)
+    res, jobs = spark_jobs(run)
+    assert res["snapshot_id"] == 1 and encode_jobs
+    stages = {s for j in [*jobs, *encode_jobs]
+              for s in tracker.getJobInfo(j).stageIds}
+    tasks = {s: tracker.getStageInfo(s).numTasks for s in stages}
+    encode_stage = max(tracker.getJobInfo(max(encode_jobs)).stageIds)
+    assert tasks[encode_stage] <= sc.defaultParallelism, tasks
+    assert max(tasks.values()) < 64, tasks
+    assert not decode_jobs
+
+
 def test_task_plane_resume_reports_reused_chunks(spark, tmp_path,
                                                  monkeypatch):
     """A resume rerun on the task plane reuses every chunk file and says
