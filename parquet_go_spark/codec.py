@@ -301,10 +301,11 @@ def _decode_nested(body: memoryview, dt: int, n: int) -> pa.Array:
             (blen,) = struct.unpack_from("<I", body, pos)
             children.append(decode_array(body[pos + 4 : pos + 4 + blen]))
             pos += 4 + blen
-        fields = [typ.field(i) for i in range(typ.num_fields)]
         if n_rows == 0:
             return pa.array([], type=typ)
-        out = pa.StructArray.from_arrays(children, fields=fields)
+        # children keep their types (a timestamp decodes as UTC), one cast
+        out = pa.StructArray.from_arrays(children, fields=[
+            f.with_type(c.type) for f, c in zip(typ, children)])
         return out.cast(typ)
     if dt == _DT_MAP:
         n_rows, len_blob_len = struct.unpack_from("<QI", body, 0)

@@ -79,14 +79,20 @@ ENGINE_VERSION = "parquet_go_spark-0.2.0"
 # bloom whose hash scheme changed between layouts).
 MIN_READABLE_LAYOUT = (0, 2)
 
-# Above this many chunks the manifest plane goes DISTRIBUTED: commits
+# From this many chunks on the manifest plane goes DISTRIBUTED: commits
 # write shard files from executor tasks (driver sees O(shards)
 # summaries), and reads, column stats and expire_snapshots handle the
 # per-chunk entries inside tasks through ``scan_shards`` (the driver
-# never materializes them). Below it, the driver path is cheaper (no
-# extra Spark stage) and easier to debug. Only ``_task_plane`` reads
-# it, at call time.
-DISTRIBUTED_MANIFEST_MIN_CHUNKS = 4096
+# never materializes them). Tasks split the work by shard file (10⁴
+# chunk ids, ``_shard_of``), so a one-shard table stays on the driver.
+# BENCH/BASELINE.md, "Round 15: manifest-plane crossover" (4 vCPU,
+# local[4], medians of 6 alternating runs): up to 10,000 chunks (one
+# shard) the driver won every op, e.g. lookup 1.71 vs 2.39 s; at 16,384
+# (2 shards) the planes tie (commit, lookup, stats and expire sum to
+# 8.5 s on the driver, 8.7 on tasks); at 65,536 (7 shards) tasks look
+# up in 3.9 s vs 9.7 and keep the driver at 144 MB RSS vs 1.36 GB.
+# Only ``_task_plane`` reads it, at call time.
+DISTRIBUTED_MANIFEST_MIN_CHUNKS = 10**4 + 1
 
 # A driver-plane read whose surviving chunks hold at most this many raw
 # bytes in the columns it decodes runs the decoder in the driver process
@@ -356,8 +362,9 @@ def _task_plane(spark, n_chunks: int) -> bool:
     """The plane test: per-chunk entries of a table with ``n_chunks``
     chunks are handled inside Spark tasks (shard-writing commits,
     ``scan_shards`` reads) at or above DISTRIBUTED_MANIFEST_MIN_CHUNKS,
-    and only when there is a session to run them (``spark`` is None for
-    driver-only calls of column_stats and expire_snapshots)."""
+    one more than a shard holds, so a one-shard table never takes the
+    task plane; and only when there is a session to run them (``spark``
+    is None for driver-only calls of column_stats and expire_snapshots)."""
     return spark is not None and n_chunks >= DISTRIBUTED_MANIFEST_MIN_CHUNKS
 
 
@@ -767,11 +774,13 @@ def expire_snapshots(table_dir: str, keep: int = 2,
     marker (see begin_inflight) or the current commit — those belong to
     an encode job that has not committed yet (resume checkpoint files).
 
-    Pass ``spark`` to let large tables (≥ DISTRIBUTED_MANIFEST_MIN_CHUNKS
-    chunks) build their keep-sets INSIDE Spark tasks (``scan_shards``)
-    and list and unlink the chunks dir there too, so the driver handles
-    only O(shards) refs — never the per-chunk entry JSON (GBs at the
-    10¹²-turn frame) or the unlink list."""
+    Pass ``spark`` to let tables of more than one manifest shard
+    (≥ DISTRIBUTED_MANIFEST_MIN_CHUNKS chunks) build their keep-sets
+    INSIDE Spark tasks (``scan_shards``) and list and unlink the chunks
+    dir there too, so the driver handles only O(shards) refs — never the
+    per-chunk entry JSON (GBs at the 10¹²-turn frame) or the unlink
+    list. Expiry took 0.46 s on the driver vs 1.28 s on tasks at 10,000
+    chunks, 2.59 vs 2.08 s at 65,536 (BENCH/BASELINE.md, Round 15)."""
     with _commit_lock(table_dir, lock_timeout):
         current = load_refs(table_dir)
         if current is None:

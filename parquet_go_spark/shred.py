@@ -201,8 +201,9 @@ def _struct(st: pa.StructType, meta: dict, child, valid, count: int):
     arrays = [child(k) for k in kids]
     if count == 0 or (valid is not None and not valid.any()):
         return pa.nulls(count, pa.struct(fields))
-    return expand_nulls(pa.StructArray.from_arrays(arrays, fields=fields),
-                        valid)
+    # children keep their types (a timestamp decodes as UTC); callers cast
+    return expand_nulls(pa.StructArray.from_arrays(arrays, fields=[
+        f.with_type(a.type) for f, a in zip(fields, arrays)]), valid)
 
 
 def unshred(meta: dict, shell: bytes, child, sub: str = "",

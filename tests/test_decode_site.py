@@ -245,6 +245,42 @@ def test_timestamps_same_on_both_sites_in_non_utc_session(
     assert isinstance(got["job"][0]["ts"], datetime.datetime)
 
 
+@pytest.mark.parametrize("site", ["job", "driver"])
+def test_nested_timestamps_read_back_in_non_utc_session(spark, tmp_path,
+                                                        decode_site, site):
+    """A timestamp inside a struct, a struct in a struct and a
+    list<struct>, written and read in an America/Los_Angeles session,
+    reads back as written on both sites: each child decodes as UTC
+    whatever zone the stored type names, and the rebuilt column is cast
+    once to that type."""
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        df = make_transcripts_df(spark, n_conv=40, seed=61).withColumn(
+            "meta", F.struct(
+                F.col("ts").alias("t"), F.col("role").alias("r"),
+                F.when(F.col("turn_idx") % 5 > 0,
+                       F.struct(F.col("ts").alias("t"))).alias("s")),
+        ).withColumn(
+            "calls", F.when(F.col("turn_idx") % 3 == 0, F.lit(None))
+            .otherwise(F.array(F.struct(F.col("ts").alias("t"),
+                                        F.col("tool").alias("name")))))
+        out = str(tmp_path / "tbl")
+        table.write_table(df, out, num_chunks=4)
+        decode_site(site)
+        got = table.read_table(spark, out).collect()
+        want = df.collect()
+    finally:
+        spark.conf.set(key, prev)
+
+    def order(rows):
+        return sorted(rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
+
+    assert got and order(got) == order(want)
+    assert isinstance(got[0]["meta"]["t"], datetime.datetime)
+
+
 def _chunk_digests(table_dir: str) -> dict:
     """{chunk id: {blob column: sha256}} of a table's current chunks."""
     import hashlib
@@ -270,6 +306,7 @@ def test_rewrite_same_on_both_sites(spark, tmp_path, decode_site,
     and leaves the same rows, in any session zone."""
     df = make_transcripts_df(spark, n_conv=40, seed=61).withColumn(
         "meta", F.struct(F.col("turn_idx").alias("u"),
+                         F.col("ts").alias("t"),
                          F.col("role").alias("r")))
     target = "conv-00000007"
     fix = df.filter(F.col("conv_id") == target) \

@@ -1163,6 +1163,48 @@ def test_distributed_column_stats_matches_driver(spark, tmp_path):
     assert via_tasks["count"] == 20_000 * 10 + df.count()
 
 
+def test_one_full_shard_stays_on_the_driver_plane(spark, tmp_path,
+                                                  monkeypatch, spark_jobs):
+    """The plane rule: a table that fits in one manifest shard (10,000
+    unprefixed chunk ids, copied from a real conv_id-bloom table) never
+    takes the task plane, so column_stats and a point read of an absent
+    key run no Spark job, with the forced task plane's answers."""
+    from parquet_go_spark.decode import prune_entries
+    from parquet_go_spark.encode import make_chunk_id
+
+    real = str(tmp_path / "real")
+    table.write_table(make_transcripts_df(spark, n_conv=60, seed=23), real,
+                      num_chunks=4, bloom_cols=("conv_id",))
+    listing = manifest.load(real)
+    src = listing["entries"]
+    # a key no chunk holds: stats and blooms prune every chunk, so no
+    # chunk file is needed
+    absent = next(k for k in (f"conv-{i:08d}x" for i in range(30, 60))
+                  if not prune_entries(src, {"conv_id": k}))
+    entries = [{**src[i % len(src)], "chunk_id": make_chunk_id("", i),
+                "file": f"chunks/chunk-{make_chunk_id('', i)}.parquet"}
+               for i in range(10_000)]
+    out = str(tmp_path / "tbl")
+    manifest.commit(out, entries, listing["schema_ddl"],
+                    extra=listing["extra"])
+    assert len(manifest.load_refs(out)["manifest_shards"]) == 1
+
+    def answers():
+        stats = table.column_stats(out, "conv_id", spark=spark)
+        rows = table.read_table(spark, out,
+                                predicates={"conv_id": absent}).toArrow()
+        return stats, rows.schema, rows.num_rows
+
+    on_driver, jobs = spark_jobs(answers)
+    assert jobs == []
+    assert on_driver[0]["count"] == sum(e["n_rows"] for e in entries)
+    assert on_driver[2] == 0
+    _force_distributed(monkeypatch)
+    on_tasks, jobs = spark_jobs(answers)
+    assert jobs
+    assert on_tasks == on_driver
+
+
 def test_direct_path_distributed_commit(spark, tmp_path, monkeypatch):
     """write_table_direct on the distributed plane: shard files written
     by tasks, snapshot equivalent to the driver commit, round-trip
