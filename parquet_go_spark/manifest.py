@@ -96,13 +96,14 @@ DISTRIBUTED_MANIFEST_MIN_CHUNKS = 10**4 + 1
 
 # A driver-plane read whose surviving chunks hold at most this many raw
 # bytes in the columns it decodes runs the decoder in the driver process
-# and hands Spark a local relation; larger reads (and every task-plane
-# read) decode in a Spark job. A point lookup then skips the job launch,
+# and keeps the decoded table, which Spark gets as a local relation when
+# an action first needs one; larger reads (and every task-plane read)
+# decode in a Spark job. A point lookup then skips the job launch,
 # which costs several times its ~60 KB decode. The worst case for the
-# driver is an unfiltered read, which ships every decoded row to the
-# JVM: on a 4-core host at local[4] both sites took ~0.85 s for one of
-# ~16.5 MB raw, so the bound sits below half that. Only
-# ``_driver_decode`` reads it, at call time.
+# driver is an unfiltered read that then runs a Spark action, which
+# ships every decoded row to the JVM: on a 4-core host at local[4] both
+# sites took ~0.85 s for one of ~16.5 MB raw, so the bound sits below
+# half that. Only ``_driver_decode`` reads it, at call time.
 DRIVER_DECODE_MAX_RAW_BYTES = 6 << 20
 
 # A driver-plane write encodes in the driver process, with no exchange

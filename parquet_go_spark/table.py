@@ -158,9 +158,11 @@ def _contains_iv(dt) -> bool:
 
 def _all_nullable(dt):
     """``dt`` with nullability forced on at every level — the decode
-    path is all-nullable (schema evolution null-fills), so the restore
-    cast target must not carry NOT NULL constraints from the writer's
-    schema (Spark refuses nullable→non-null struct casts)."""
+    path is all-nullable (schema evolution null-fills), so neither the
+    decoded schema nor the restore cast target may carry NOT NULL
+    constraints from the writer's schema (Spark refuses nullable→non-null
+    struct casts, and createDataFrame rebuilds nested columns as
+    nullable)."""
     from pyspark.sql.types import ArrayType
 
     if isinstance(dt, StructType):
@@ -564,7 +566,7 @@ def _encode_entries(spark, table_dir: str, listing: dict,
                     affected: list[dict], fn, num_chunks: int, n_rows: int,
                     chunk_prefix: str, file_token: str) -> list[dict]:
     """The re-encode step of ``_rewrite``: decode the ``affected``
-    entries on read_table's site (all fields nullable; intervals in the
+    entries on read_table's site (nullable at every level; intervals in the
     lowered int form chunk bytes store), apply ``fn`` (DataFrame →
     DataFrame), and encode the result as write_table does, sized by
     ``n_rows`` if unsized, into ``num_chunks`` hash chunks whose files carry
@@ -572,10 +574,8 @@ def _encode_entries(spark, table_dir: str, listing: dict,
     come from the listing; a column keeps its bloom or token bloom when
     an affected entry (any entry, when none is affected) has one."""
     extra = listing["extra"]
-    schema = StructType(_udf_safe_fields([
-        StructField(f.name, f.dataType, True, f.metadata)
-        for f in StructType.fromJson(json.loads(listing["schema_ddl"])).fields
-    ])[0])
+    schema = StructType(_udf_safe_fields(_all_nullable(StructType.fromJson(
+        json.loads(listing["schema_ddl"]))).fields)[0])
     old = _decode_rows(spark, _chunk_rows(table_dir, affected,
                                           schema.fieldNames()), schema)
     metas = [m for e in (affected or listing["entries"])
@@ -617,12 +617,13 @@ def read_table(
     The decoder runs on one of two sites. When the surviving chunks'
     raw bytes in the decoded columns are at most
     ``manifest.DRIVER_DECODE_MAX_RAW_BYTES`` (driver-plane tables only),
-    it runs in this process before read_table returns: the result is a
-    local relation, so a point lookup launches no decode job, and a
-    chunk that fails its checks raises here. That result keeps the
-    decoded Arrow table, so its ``toArrow()`` runs no Spark job either
-    (unless interval columns need their Spark cast back); every other
-    action, and every transform, runs through Spark. Larger reads, and
+    it runs in this process before read_table returns, so a point
+    lookup launches no decode job, and a chunk that fails its checks
+    raises here, before any action. The result keeps the decoded Arrow
+    table: its ``toArrow()`` runs no Spark job and builds no JVM
+    relation (unless interval columns need their Spark cast back). It
+    is a local relation built on its first other Spark action or
+    transform, which then runs through Spark. Larger reads, and
     every read of a task-plane table, return a lazy DataFrame whose
     Spark job decodes; errors then raise when it runs. Both sites give
     the same rows and schema.
@@ -656,8 +657,10 @@ def _read(spark: SparkSession, table_dir: str, columns: list[str] | None,
     by_name = {f.name: f for f in schema.fields}
     all_cols = list(by_name)
     columns = columns or all_cols
-    # all fields nullable: schema evolution null-fills columns that
-    # predate a chunk, regardless of the writer-side nullability.
+    # all fields nullable, at every level: schema evolution null-fills
+    # columns that predate a chunk, regardless of the writer-side
+    # nullability, and createDataFrame rebuilds a driver-site result's
+    # nested columns as nullable ones (_all_nullable below).
     # "base.child" projects ONE struct child as a flat column (shredded
     # structs then read only that child's bytes from storage).
     fields = []
@@ -707,7 +710,8 @@ def _read(spark: SparkSession, table_dir: str, columns: list[str] | None,
             )
     # interval columns: decode as their lowered int form, cast back
     # JVM-side after the UDF
-    udf_fields, iv_restore = _udf_safe_fields(fields)
+    udf_fields, iv_restore = _udf_safe_fields(
+        _all_nullable(StructType(fields)).fields)
     udf_schema = StructType(udf_fields)
 
     def surviving(entries):
@@ -873,7 +877,7 @@ def _decode_snapshot(spark, table_dir: str, refs: dict, fn,
 def _decode_rows(spark, rows: list[dict], schema: StructType,
                  row_filter: dict | None = None) -> DataFrame:
     """The decode site of driver-held decode ``rows`` (``_chunk_rows``),
-    for reads and rewrites alike: none → an empty local relation; raw
+    for reads and rewrites alike: none → an empty ``_local_result``; raw
     bytes that pass ``manifest._driver_decode`` → ``_decode_local``,
     here and eagerly; otherwise a Spark job (``_decode_df``)."""
     if not rows:
@@ -905,12 +909,13 @@ def _decode_df(files_df: DataFrame, schema: StructType,
 def _decode_local(spark, rows: list[dict], schema: StructType,
                   row_filter: dict | None) -> DataFrame:
     """Decode the chunks named by the decode ``rows`` into the columns
-    of ``schema`` in this process. Each batch is cast to the schema's
-    Arrow form, which is what the JVM reads from the Spark job's
-    output. The result is a local relation that keeps the decoded
-    table (``_LocalResult``), so its ``toArrow()`` runs no Spark job:
-    a point lookup's collect went from 1 job / 4 tasks to none
-    (BENCH/BASELINE.md, "Round 12: driver-site collect")."""
+    of ``schema`` in this process, before the caller returns, so a chunk
+    that fails its checks raises here. Each batch is cast to the
+    schema's Arrow form, which is what the JVM reads from the Spark
+    job's output. The result keeps the decoded table
+    (``_LocalResult``), so its ``toArrow()`` runs no Spark job and
+    builds no JVM relation (BENCH/BASELINE.md, "Round 12: driver-site
+    collect" and "Round 16: lazy local relation")."""
     target = to_arrow_schema(schema)
     batches = [b.cast(target) for b in _decode_fn(schema, row_filter)(
         iter(manifest._arrow_rows(rows, _CHUNK_FILES_DDL).to_batches()))]
@@ -919,28 +924,45 @@ def _decode_local(spark, rows: list[dict], schema: StructType,
 
 
 class _LocalResult(ClassicDataFrame):
-    """A driver-site read's result: a local relation built from
-    ``_table``, the decoded Arrow table, which ``toArrow()`` hands back
-    with no Spark job, cast as PySpark's own ``toArrow`` casts the
-    JVM's batches. Every transform returns a plain DataFrame and runs
-    through Spark."""
+    """A driver-site read's result: ``_table``, the decoded Arrow table
+    of the StructType ``_struct``. ``toArrow()`` hands the table back
+    with no Spark job and no JVM relation, cast as PySpark's own
+    ``toArrow`` casts the JVM's batches. The local relation that every
+    other action and every transform runs through is built from the
+    table on the first access to ``_jdf``, once; every transform
+    returns a plain DataFrame."""
 
     _table: pa.Table
+    _struct: StructType
+
+    @property
+    def _jdf(self):
+        if self._built is None:
+            # createDataFrame rejects an Arrow table whose nested columns
+            # have no chunks at all, which is what an empty decode gives
+            self._built = self.sparkSession.createDataFrame(
+                self._table if self._table.num_rows else [],
+                self._struct)._jdf
+        return self._built
+
+    @_jdf.setter
+    def _jdf(self, jdf):
+        # ClassicDataFrame.__init__ assigns it (None: not built yet)
+        self._built = jdf
 
     def toArrow(self) -> pa.Table:
         return self._table.cast(to_arrow_schema(
-            self.schema, error_on_duplicated_field_names_in_struct=True,
+            self._struct, error_on_duplicated_field_names_in_struct=True,
             prefers_large_types=self.sparkSession._jconf
             .arrowUseLargeVarTypes()))
 
 
 def _local_result(spark, table: pa.Table, schema: StructType) -> DataFrame:
-    """``table`` (``schema``'s Arrow form) as a ``_LocalResult``."""
-    # createDataFrame rejects an Arrow table whose nested columns have
-    # no chunks at all, which is what an empty decode gives
-    df = _LocalResult(spark.createDataFrame(
-        table if table.num_rows else [], schema)._jdf, spark)
-    df._table = table
+    """``table`` (``schema``'s Arrow form) as a ``_LocalResult``, whose
+    JVM relation is not built until a Spark action or transform needs
+    it. ``DataFrame.__new__`` takes ``(jdf, session)``."""
+    df = _LocalResult(None, spark)
+    df._table, df._struct = table, schema
     return df
 
 

@@ -466,3 +466,107 @@ def test_transformed_driver_site_result_is_a_plain_dataframe(
         assert _sorted(out.toArrow()).equals(
             _sorted(got["job"][name].toArrow())), name
         assert out.count() > 0
+
+
+def _builds(monkeypatch, spark) -> list:
+    """A list that grows by one each time the session builds a
+    relation with ``createDataFrame``."""
+    calls = []
+    cls = type(spark)
+    orig = cls.createDataFrame
+
+    def spy(self, *a, **k):
+        calls.append(1)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(cls, "createDataFrame", spy)
+    return calls
+
+
+def test_driver_site_builds_its_relation_on_the_first_spark_action(
+        spark, nested, decode_site, monkeypatch, spark_jobs):
+    """A driver-site result's toArrow() builds no JVM relation: a bloom
+    hit, a fully pruned read and a row filter that empties every
+    surviving chunk. Its schema, count() and collect() build it once
+    between them and give the job site's schema and rows."""
+    gap = {"conv_id": ("conv-00000007a", "conv-00000007b")}
+    hit = dict(predicates={"conv_id": "conv-00000007"}, push_row_filter=True)
+    builds = _builds(monkeypatch, spark)
+    decode_site("driver")
+    for name, kw in {"bloom hit": hit,
+                     "fully pruned": dict(predicates={"conv_id": "none"}),
+                     "row filter empties": dict(predicates=gap,
+                                                push_row_filter=True)}.items():
+        got, jobs = spark_jobs(
+            lambda: table.read_table(spark, nested, **kw).toArrow())
+        assert (builds, jobs) == ([], []), name
+        assert (got.num_rows > 0) == (name == "bloom hit"), name
+    df = table.read_table(spark, nested, **hit)
+    assert builds == []
+    schema, n, rows = df.schema, df.count(), df.collect()
+    assert len(builds) == 1
+    decode_site("job")
+    want = table.read_table(spark, nested, **hit)
+    assert schema == want.schema
+    assert n == len(rows) > 0
+    assert sorted(rows) == sorted(want.collect())
+
+
+def test_driver_site_decode_errors_raise_in_read_table(spark, tmp_path,
+                                                       decode_site):
+    """The driver site decodes before read_table returns: a flipped blob
+    byte and a chunk rewritten in place after the read snapshot raise
+    from read_table itself, before any action on its result."""
+    import pyarrow.parquet as pq
+
+    df = make_transcripts_df(spark, n_conv=30, seed=17)
+    decode_site("driver")
+    stale = str(tmp_path / "stale")
+    table.write_table(df.limit(100), stale, num_chunks=2)
+    # un-prefixed rewrite: same chunk ids, files replaced in place
+    table.write_table(df, stale, num_chunks=2, resume=False)
+    with pytest.raises(Exception, match="rewritten after this snapshot"):
+        table.read_table(spark, stale, snapshot_id=0)
+    out = str(tmp_path / "flipped")
+    table.write_table(df, out, num_chunks=2)
+    victim = os.path.join(out, manifest.load(out)["entries"][0]["file"])
+    t = pq.read_table(victim)
+    name = t.column_names[0]
+    b = bytearray(t.column(name)[0].as_py())
+    b[len(b) // 2] ^= 0xFF
+    cols = {n: t.column(n) for n in t.column_names}
+    cols[name] = pa.array([bytes(b)], pa.large_binary())
+    pq.write_table(pa.table(cols).replace_schema_metadata(t.schema.metadata),
+                   victim, compression="none")
+    with pytest.raises(Exception, match="CRC mismatch"):
+        table.read_table(spark, out)
+
+
+def test_non_nullable_nested_struct_same_on_both_sites(spark, tmp_path,
+                                                      decode_site):
+    """A struct whose child is a non-nullable struct reads back on both
+    sites with one schema and the written rows, through toArrow(),
+    count() and collect(), and a rewrite of it leaves the same rows on
+    both sites."""
+    df = make_transcripts_df(spark, n_conv=10, seed=61).withColumn(
+        "meta", F.struct(F.col("turn_idx").alias("u"),
+                         F.struct(F.col("role").alias("v")).alias("s")))
+    assert not df.schema["meta"].dataType["s"].nullable
+    want = sorted(df.collect())
+    got = {}
+    for site in ("job", "driver"):
+        out = str(tmp_path / site)
+        table.write_table(df, out, num_chunks=2, bloom_cols=("conv_id",))
+        decode_site(site)
+        back = table.read_table(spark, out)
+        t = back.toArrow()
+        assert back.count() == t.num_rows == len(want), site
+        assert sorted(back.collect()) == want, site
+        table.delete_rows(spark, out, {"conv_id": "conv-00000003"})
+        got[site] = (_sorted(t), _sorted(table.read_table(spark, out)
+                                         .toArrow()))
+    assert got["job"][0].schema == got["driver"][0].schema
+    assert got["job"][0].equals(got["driver"][0])
+    assert got["job"][1].equals(got["driver"][1])
+    gone = got["job"][1].column("conv_id").to_pylist()
+    assert 0 < len(gone) < len(want) and "conv-00000003" not in gone
