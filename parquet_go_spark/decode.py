@@ -139,21 +139,20 @@ def make_decode_fn(columns: list[str], row_filter: dict | None = None,
 
         for b in batches:
             names = set(b.schema.names)
-            expect_cols = [c for c in ("chunk_id", "data_crc", "enc_bytes")
-                           if c in names]
-            for row in range(b.num_rows):
-                fpath = b.column("file")[row].as_py()
+            expects = {c: b.column(c).to_pylist()
+                       for c in ("chunk_id", "data_crc", "enc_bytes")
+                       if c in names}
+            for row, fpath in enumerate(b.column("file").to_pylist()):
                 # ONE file handle per chunk: the embedded entry comes
-                # from the footer already parsed by ParquetFile, and
+                # from the footer's key-value metadata, already parsed
+                # by ParquetFile (no Arrow schema is built for it), and
                 # the blob column read below reuses the same handle
-                # (the old read_schema + read_table pair opened and
-                # footer-parsed every file twice)
                 pf = pq.ParquetFile(fpath)
-                entry = embedded_entry(pf.schema_arrow) or {}
-                if expect_cols:
+                entry = embedded_entry(pf.metadata.metadata) or {}
+                if expects:
                     _verify_entry(
                         entry, fpath,
-                        {c: b.column(c)[row].as_py() for c in expect_cols},
+                        {c: vals[row] for c, vals in expects.items()},
                     )
                 ecols = entry.get("columns", {})
                 present = [c for c in fetch_cols

@@ -44,8 +44,8 @@ __all__ = ["make_encode_fn", "partition_chunks", "file_chunks",
 # 2 of 11 columns reads only those columns' bytes from storage — the
 # on-disk counterpart of P1 projection pushdown. All per-column
 # metadata (codec chain, stats, CRC) lives in the embedded manifest
-# entry (schema metadata), which read_schema fetches without touching
-# data pages.
+# entry (schema metadata, stored in the footer's key-value metadata),
+# which the footer read fetches without touching data pages.
 
 _MANIFEST_META_KEY = b"pgs_manifest_entry"
 BLOB_COL_PREFIX = "b_"
@@ -149,16 +149,17 @@ def _write_chunk_file(path: str, tbl: pa.Table, entry: dict) -> None:
             os.unlink(tmp)
 
 
-def embedded_entry(schema: pa.Schema) -> dict | None:
-    """Manifest entry embedded in a chunk file's schema metadata."""
-    raw = (schema.metadata or {}).get(_MANIFEST_META_KEY)
+def embedded_entry(footer_kv: dict | None) -> dict | None:
+    """Manifest entry embedded in a chunk file, from its footer's
+    key-value metadata (``pq.FileMetaData.metadata``)."""
+    raw = (footer_kv or {}).get(_MANIFEST_META_KEY)
     return json.loads(raw) if raw else None
 
 
 def read_chunk_entry(path: str) -> dict | None:
     """Manifest entry embedded in an existing chunk file (resume path)."""
     try:
-        return embedded_entry(pq.read_schema(path))
+        return embedded_entry(pq.read_metadata(path).metadata)
     except Exception:
         return None  # unreadable/partial file → re-encode
 

@@ -3,8 +3,9 @@
 Semantics: fixed-width LSB-first bit packing as used by Parquet's
 RLE/bit-packed hybrid and DELTA_BINARY_PACKED encodings
 (parquet.thrift:591-604 — the reference decodes/encodes these in its
-Go ``decode.go``/``encode.go``; we re-express them as whole-array numpy
-transforms, never per-value Python).
+Go ``decode.go``/``encode.go``). The bit kernels work a ``uint64`` word
+at a time, as a compiled unpacker does: a value spans at most two words,
+so a pack or unpack is a fixed count of numpy calls whatever the width.
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ __all__ = [
     "uleb128_decode_stream",
 ]
 
+_1, _63 = np.uint64(1), np.uint64(63)
+
 
 def bit_width(max_val: int) -> int:
     """Bits needed to represent ``max_val`` (>=0). bit_width(0) == 0."""
@@ -29,85 +32,89 @@ def bit_width(max_val: int) -> int:
     return int(max_val).bit_length()
 
 
+def _mask(width: int) -> np.uint64:
+    if width < 0 or width > 64:
+        raise ValueError(f"width out of range: {width}")
+    return np.uint64((1 << width) - 1)
+
+
+def _scatter(vals: np.ndarray, width: int, bitstart: np.ndarray,
+             nbytes: int) -> bytes:
+    """Write each value's low ``width`` bits at its ``bitstart``
+    (non-decreasing, disjoint) into ``nbytes`` zero bytes. A word's
+    values are a contiguous run, OR-reduced as ``v << off``; the next
+    word takes the spill ``v >> (64 - off)``, split into two shifts so
+    that ``off == 0`` never shifts by 64."""
+    mask = _mask(width)
+    if nbytes == 0:
+        return b""
+    v = np.ascontiguousarray(vals, dtype=np.uint64) & mask
+    k, off = bitstart >> 6, (bitstart & 63).astype(np.uint64)
+    runs = np.flatnonzero(np.diff(k, prepend=-1))
+    words = np.zeros(nbytes // 8 + 2, dtype="<u8")
+    words[k[runs]] = np.bitwise_or.reduceat(v << off, runs)
+    words[k[runs] + 1] |= np.bitwise_or.reduceat((v >> _1) >> (_63 - off),
+                                                 runs)
+    return words.view(np.uint8)[:nbytes].tobytes()
+
+
+def _gather(buf: bytes | np.ndarray, width: int,
+            bitstart: np.ndarray) -> np.ndarray:
+    """Inverse of :func:`_scatter`, as uint64. Bits past the end of
+    ``buf`` read as 0."""
+    mask = _mask(width)
+    if width == 0 or len(bitstart) == 0:  # no bits to read
+        return np.zeros(len(bitstart), dtype=np.uint64)
+    raw = buf if isinstance(buf, np.ndarray) else np.frombuffer(buf, np.uint8)
+    k, off = bitstart >> 6, (bitstart & 63).astype(np.uint64)
+    padded = np.zeros(8 * (int(k[-1]) + 2), dtype=np.uint8)
+    used = min(len(raw), len(padded))
+    padded[:used] = raw[:used]
+    w = padded.view("<u8")
+    return ((w[k] >> off) | ((w[k + 1] << _1) << (_63 - off))) & mask
+
+
+def _segment_bitstarts(counts: np.ndarray,
+                       width: int) -> tuple[np.ndarray, int]:
+    """Bit starts of values in consecutive pieces, each piece padded to
+    a whole byte, and the total byte length."""
+    counts = np.ascontiguousarray(counts, dtype=np.int64)
+    byte_off = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum((counts * width + 7) // 8, out=byte_off[1:])
+    ccum = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=ccum[1:])
+    idx_in = np.arange(ccum[-1], dtype=np.int64) - np.repeat(ccum[:-1], counts)
+    return (np.repeat(byte_off[:-1], counts) * 8 + idx_in * width,
+            int(byte_off[-1]))
+
+
 def pack_bits(vals: np.ndarray, width: int) -> bytes:
     """Pack uint64 values (< 2**width) into a LSB-first bitstream.
 
     Output is padded with zero bits to a whole number of bytes.
     """
     n = len(vals)
-    if width == 0 or n == 0:
-        return b""
-    if width < 0 or width > 64:
-        raise ValueError(f"width out of range: {width}")
-    v = np.ascontiguousarray(vals, dtype=np.uint64)
-    # (n, width) bit matrix, LSB first per value; built column-by-column to
-    # keep peak memory at n*width bytes.
-    bits = np.empty((n, width), dtype=np.uint8)
-    for j in range(width):
-        bits[:, j] = (v >> np.uint64(j)).astype(np.uint8) & 1
-    return np.packbits(bits.reshape(-1), bitorder="little").tobytes()
+    return _scatter(vals, width, np.arange(n, dtype=np.int64) * width,
+                    (n * width + 7) // 8)
 
 
 def unpack_bits(buf: bytes | np.ndarray, n: int, width: int) -> np.ndarray:
     """Inverse of :func:`pack_bits`; returns uint64 array of length ``n``."""
-    if width == 0 or n == 0:
-        return np.zeros(n, dtype=np.uint64)
-    raw = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
-    nbits = n * width
-    bits = np.unpackbits(raw, count=nbits, bitorder="little").reshape(n, width)
-    out = np.zeros(n, dtype=np.uint64)
-    for j in range(width):
-        out |= bits[:, j].astype(np.uint64) << np.uint64(j)
-    return out
+    return _gather(buf, width, np.arange(n, dtype=np.int64) * width)
 
 
 def pack_bits_segmented(vals: np.ndarray, counts: np.ndarray,
                         width: int) -> bytes:
     """Pack values belonging to consecutive pieces, each piece padded to
-    a whole byte, in ONE vectorized pass (scatter into a global bit
-    buffer, one packbits) — replaces a per-piece pack_bits loop whose
-    Python overhead dominates when pieces are small/many."""
-    counts = np.ascontiguousarray(counts, dtype=np.int64)
-    n = len(vals)
-    if width == 0 or n == 0:
-        return b""
-    v = np.ascontiguousarray(vals, dtype=np.uint64)
-    pay_bytes = (counts * width + 7) // 8
-    byte_off = np.zeros(len(counts) + 1, dtype=np.int64)
-    np.cumsum(pay_bytes, out=byte_off[1:])
-    ccum = np.zeros(len(counts) + 1, dtype=np.int64)
-    np.cumsum(counts, out=ccum[1:])
-    idx_in = np.arange(n, dtype=np.int64) - np.repeat(ccum[:-1], counts)
-    bitstart = (np.repeat(byte_off[:-1], counts) * 8 + idx_in * width)
-    bits = np.empty((n, width), dtype=np.uint8)
-    for j in range(width):
-        bits[:, j] = (v >> np.uint64(j)).astype(np.uint8) & 1
-    bitbuf = np.zeros(int(byte_off[-1]) * 8, dtype=np.uint8)
-    bitbuf[(bitstart[:, None] + np.arange(width)).ravel()] = bits.ravel()
-    return np.packbits(bitbuf, bitorder="little").tobytes()
+    a whole byte, in ONE vectorized pass, whatever the piece count."""
+    return _scatter(vals, width, *_segment_bitstarts(counts, width))
 
 
 def unpack_bits_segmented(buf: np.ndarray, counts: np.ndarray,
                           width: int) -> np.ndarray:
     """Inverse of :func:`pack_bits_segmented`: ``buf`` holds the
     concatenated per-piece byte-padded streams."""
-    counts = np.ascontiguousarray(counts, dtype=np.int64)
-    n = int(counts.sum())
-    if width == 0 or n == 0:
-        return np.zeros(n, dtype=np.uint64)
-    raw = buf if isinstance(buf, np.ndarray) else np.frombuffer(buf, np.uint8)
-    bits = np.unpackbits(raw, bitorder="little")
-    pay_bytes = (counts * width + 7) // 8
-    byte_off = np.zeros(len(counts) + 1, dtype=np.int64)
-    np.cumsum(pay_bytes, out=byte_off[1:])
-    ccum = np.zeros(len(counts) + 1, dtype=np.int64)
-    np.cumsum(counts, out=ccum[1:])
-    idx_in = np.arange(n, dtype=np.int64) - np.repeat(ccum[:-1], counts)
-    bitstart = (np.repeat(byte_off[:-1], counts) * 8 + idx_in * width)
-    out = np.zeros(n, dtype=np.uint64)
-    for j in range(width):
-        out |= bits[bitstart + j].astype(np.uint64) << np.uint64(j)
-    return out
+    return _gather(buf, width, _segment_bitstarts(counts, width)[0])
 
 
 def uleb128_encode_array(vals: np.ndarray) -> bytes:

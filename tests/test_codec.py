@@ -527,7 +527,8 @@ def _nested_wire_table() -> pa.Table:
     })
 
 
-def _nested_wire_digests(tmp_path, chunk: pa.Table, chunk_id: str):
+def _nested_wire_digests(tmp_path, chunk: pa.Table, chunk_id: str,
+                         key_cols=("id",), overrides=None):
     import hashlib
     import json
     import os
@@ -537,8 +538,8 @@ def _nested_wire_digests(tmp_path, chunk: pa.Table, chunk_id: str):
     from parquet_go_spark import encode as E
 
     os.makedirs(os.path.join(tmp_path, "chunks"), exist_ok=True)
-    entry = E._encode_or_reuse(chunk, chunk_id, str(tmp_path), ("id",), {},
-                               False, (), "a0")
+    entry = E._encode_or_reuse(chunk, chunk_id, str(tmp_path), key_cols,
+                               overrides or {}, False, (), "a0")
     entry.pop("encode_s")
     blobs = pq.read_table(os.path.join(tmp_path, entry["file"]))
     return ({c: hashlib.sha256(blobs.column(c)[0].as_py()).hexdigest()
@@ -626,6 +627,80 @@ def test_nested_wire_format_pinned(case, tmp_path):
     blobs, entry = _nested_wire_digests(tmp_path, chunk, chunk_id)
     assert (blobs, entry) == _NESTED_WIRE_PINS[case]
     path = os.path.join(tmp_path, "chunks", f"chunk-{chunk_id}.parquet")
+    batch = pa.RecordBatch.from_pydict({"file": pa.array([path])})
+    out = pa.Table.from_batches(
+        list(make_decode_fn(chunk.column_names)(iter([batch])))
+    )
+    assert out.equals(chunk.combine_chunks())
+
+
+# The flat transcript columns a table write produces by default: deltap
+# ts/turn_idx, dict + RLE-hybrid conv_id/role/tool, fsst text — then
+# each other bit-packing integer codec forced on ts and turn_idx ("auto"
+# already pins deltap there). Same digests as _NESTED_WIRE_PINS; any
+# change here is a wire-format change.
+_FLAT_WIRE_PINS = {
+    "auto": ({
+        "b_conv_id": "af683af3fe498ad9763b0fd5863e515f4794a861e27fae37edc7c00f646b4e82",
+        "b_turn_idx": "4da1be4b66dc6dc2d2bb87149ffbd01e6e67ea8816416dd8d75eaba51029cf5d",
+        "b_role": "0f16a9148a7524256269ca2e84ed961044cf9cadb4b3674bce4b4fab556b02ff",
+        "b_text": "fed7a670999f1c1410add441d3ea0f3c1b8a2861a5537bf0a33a99d255c67477",
+        "b_tool": "0486d7284a49c8d2f274e0c7b2b41d871720e7a989885cb5123188a8b1fe9f24",
+        "b_ts": "da1805ce8929fdc9e646b13cace8262c5b2d60d864998166a835e49cfc190ffb",
+    }, "d2f736ec8c247c72358579883f99caf6063c8069de87b822407392382a31d25d"),
+    "for": ({
+        "b_conv_id": "af683af3fe498ad9763b0fd5863e515f4794a861e27fae37edc7c00f646b4e82",
+        "b_turn_idx": "b44f9b737a07f79d43e6682489e889150a31a12479eb4a16e13a17f48b3c6d6d",
+        "b_role": "0f16a9148a7524256269ca2e84ed961044cf9cadb4b3674bce4b4fab556b02ff",
+        "b_text": "fed7a670999f1c1410add441d3ea0f3c1b8a2861a5537bf0a33a99d255c67477",
+        "b_tool": "0486d7284a49c8d2f274e0c7b2b41d871720e7a989885cb5123188a8b1fe9f24",
+        "b_ts": "677f198e29f44823b2a0dbeaf016be44320cdba8b2b784fd1d2eb902b58ad60a",
+    }, "d52edc437f9362f096a0d76704310d5fd2e23329a40c45039a3c23c5ec2c6596"),
+    "delta": ({
+        "b_conv_id": "af683af3fe498ad9763b0fd5863e515f4794a861e27fae37edc7c00f646b4e82",
+        "b_turn_idx": "ec04863efbd845b7050c58a58f104b61c7c62bb147b5ea53e61b1ea4748808d0",
+        "b_role": "0f16a9148a7524256269ca2e84ed961044cf9cadb4b3674bce4b4fab556b02ff",
+        "b_text": "fed7a670999f1c1410add441d3ea0f3c1b8a2861a5537bf0a33a99d255c67477",
+        "b_tool": "0486d7284a49c8d2f274e0c7b2b41d871720e7a989885cb5123188a8b1fe9f24",
+        "b_ts": "3acc47efe6ead145869cb1aef1b3277116e51ddf9b8cb98fae0dea87bd740ac9",
+    }, "f1f92b02ddb840ec3e53380995592dab711ea49067d458953669dceeed387965"),
+    "pfor": ({
+        "b_conv_id": "af683af3fe498ad9763b0fd5863e515f4794a861e27fae37edc7c00f646b4e82",
+        "b_turn_idx": "30bba170aa146b2f7668201d94acf583b9029287e9bd86055855b9bb1df1983a",
+        "b_role": "0f16a9148a7524256269ca2e84ed961044cf9cadb4b3674bce4b4fab556b02ff",
+        "b_text": "fed7a670999f1c1410add441d3ea0f3c1b8a2861a5537bf0a33a99d255c67477",
+        "b_tool": "0486d7284a49c8d2f274e0c7b2b41d871720e7a989885cb5123188a8b1fe9f24",
+        "b_ts": "63bd5de086fbbf501118ce106266377d5b28930bfa158c6e571f1dd496088aaf",
+    }, "9b5529d6f6a1d5c6d448f8b69c9509a30554d0380a0f809b345ff71767d7a8ec"),
+    "rle": ({
+        "b_conv_id": "af683af3fe498ad9763b0fd5863e515f4794a861e27fae37edc7c00f646b4e82",
+        "b_turn_idx": "11f4c88f64b6c79856339ca98e5de55f69f8c87194081764b91bc2386247de59",
+        "b_role": "0f16a9148a7524256269ca2e84ed961044cf9cadb4b3674bce4b4fab556b02ff",
+        "b_text": "fed7a670999f1c1410add441d3ea0f3c1b8a2861a5537bf0a33a99d255c67477",
+        "b_tool": "0486d7284a49c8d2f274e0c7b2b41d871720e7a989885cb5123188a8b1fe9f24",
+        "b_ts": "33d45b4c58fe0a99af8d1b1b1a1947171248f135272d517ede28f8a230b75cae",
+    }, "cfb1fbdef0afc8636018e7f105840e24768aeeaa72aab614b0617b42098a4038"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FLAT_WIRE_PINS))
+def test_flat_wire_format_pinned(case, tmp_path):
+    """One make_transcripts chunk encodes to fixed blob bytes and a
+    fixed manifest entry under the selector's codecs and under every
+    forced bit-packing codec, and decodes back to the input."""
+    import os
+
+    from parquet_go_spark.decode import make_decode_fn
+    from parquet_go_spark.fixtures import make_transcripts
+
+    chunk = make_transcripts(40, seed=7).sort_by(
+        [("conv_id", "ascending"), ("turn_idx", "ascending")])
+    overrides = ({} if case == "auto" else
+                 {c: (case, "none") for c in ("ts", "turn_idx")})
+    assert _nested_wire_digests(
+        tmp_path, chunk, "f00001", ("conv_id", "turn_idx"), overrides
+    ) == _FLAT_WIRE_PINS[case]
+    path = os.path.join(tmp_path, "chunks", "chunk-f00001.parquet")
     batch = pa.RecordBatch.from_pydict({"file": pa.array([path])})
     out = pa.Table.from_batches(
         list(make_decode_fn(chunk.column_names)(iter([batch])))

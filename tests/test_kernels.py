@@ -10,7 +10,9 @@ from hypothesis import strategies as hst
 from parquet_go_spark.kernels.bitpack import (
     bit_width,
     pack_bits,
+    pack_bits_segmented,
     unpack_bits,
+    unpack_bits_segmented,
     uleb128_decode_stream,
     uleb128_encode_array,
 )
@@ -48,6 +50,93 @@ def test_pack_empty_and_zero_width():
     assert pack_bits(np.zeros(0, np.uint64), 5) == b""
     assert pack_bits(np.zeros(10, np.uint64), 0) == b""
     np.testing.assert_array_equal(unpack_bits(b"", 10, 0), np.zeros(10, np.uint64))
+
+
+# Per-bit oracle: the (n, width) bit-matrix kernels the word-level ones
+# replaced. Pinning pack output to it byte for byte catches a packer that
+# round-trips with its own unpacker but writes a different stream.
+
+def _oracle_bitstart(counts, width):
+    pay = (counts * width + 7) // 8
+    byte_off = np.concatenate([[0], np.cumsum(pay)])
+    ccum = np.concatenate([[0], np.cumsum(counts)])
+    idx_in = np.arange(ccum[-1]) - np.repeat(ccum[:-1], counts)
+    return np.repeat(byte_off[:-1], counts) * 8 + idx_in * width, byte_off[-1]
+
+
+def _oracle_pack(v, width, counts=None):
+    if counts is None:
+        counts = np.array([len(v)], np.int64)
+    if width == 0 or len(v) == 0:
+        return b""
+    bitstart, nbytes = _oracle_bitstart(counts, width)
+    bitbuf = np.zeros(nbytes * 8, np.uint8)
+    for j in range(width):
+        bitbuf[bitstart + j] = (v >> np.uint64(j)).astype(np.uint8) & 1
+    return np.packbits(bitbuf, bitorder="little").tobytes()
+
+
+def _oracle_unpack(buf, width, counts):
+    if width == 0 or counts.sum() == 0:
+        return np.zeros(int(counts.sum()), np.uint64)
+    bits = np.unpackbits(np.frombuffer(buf, np.uint8), bitorder="little")
+    bitstart, _ = _oracle_bitstart(counts, width)
+    out = np.zeros(len(bitstart), np.uint64)
+    for j in range(width):
+        out |= bits[bitstart + j].astype(np.uint64) << np.uint64(j)
+    return out
+
+
+_IDENTITY_NS = [0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 63, 64, 65, 127, 128, 129,
+                999, 4097]
+
+
+def _values(rng, n, width):
+    if width == 0:
+        return np.zeros(n, np.uint64)
+    return rng.integers(0, (1 << width) - 1, n, dtype=np.uint64,
+                        endpoint=True)
+
+
+@pytest.mark.parametrize("width", range(65))
+def test_pack_bits_matches_per_bit_oracle(width):
+    rng = np.random.default_rng(width)
+    for n in _IDENTITY_NS:
+        v = _values(rng, n, width)
+        packed = pack_bits(v, width)
+        assert packed == _oracle_pack(v, width), (n, width)
+        np.testing.assert_array_equal(
+            _oracle_unpack(packed, width, np.array([n])), v)
+        for buf in (packed, np.frombuffer(packed, np.uint8)):
+            np.testing.assert_array_equal(unpack_bits(buf, n, width), v)
+
+
+@pytest.mark.parametrize("width", range(65))
+def test_pack_bits_segmented_matches_per_bit_oracle(width):
+    rng = np.random.default_rng(1000 + width)
+    for _ in range(6):
+        counts = rng.integers(0, 70, int(rng.integers(1, 40)))
+        v = _values(rng, int(counts.sum()), width)
+        packed = pack_bits_segmented(v, counts, width)
+        assert packed == _oracle_pack(v, width, counts), (counts, width)
+        for buf in (packed, np.frombuffer(packed, np.uint8)):
+            np.testing.assert_array_equal(
+                unpack_bits_segmented(buf, counts, width), v)
+
+
+def test_unpack_short_payload_reads_zeros():
+    """Bits past the end of the payload read as 0 — an empty payload
+    gives zeros, and a stream cut mid-value keeps its whole values."""
+    np.testing.assert_array_equal(unpack_bits(b"", 10, 5), np.zeros(10))
+    np.testing.assert_array_equal(
+        unpack_bits_segmented(np.zeros(0, np.uint8), np.array([3, 4]), 9),
+        np.zeros(7))
+    v = _values(np.random.default_rng(7), 100, 13)
+    cut = pack_bits(v, 13)[:50]
+    want = _oracle_unpack(cut + bytes(200), 13, np.array([100]))
+    np.testing.assert_array_equal(unpack_bits(cut, 100, 13), want)
+    np.testing.assert_array_equal(want[:30], v[:30])
+    np.testing.assert_array_equal(want[31:], np.zeros(69))
 
 
 def test_bit_width():
